@@ -994,11 +994,11 @@ object ModelQueries {
     },
 
     // ORDER-5 — CCNet's production KenLM order (r18): the generic
-    // order-N kernel (one token-stream projection + 2(n−1)+2
-    // vocabulary-scale joins; hand-written 2/3 forms are spec-pinned
-    // equal to it row-for-row). In-memory plain form over the standard
-    // split, with 1- and 4-token strata pinning the exact-length
-    // context arrays at every prefix depth.
+    // order-N kernel (one token-stream projection + n vocabulary-scale
+    // joins + the totals, one lag window; hand-written 2/3 forms are
+    // spec-pinned equal to it row-for-row). In-memory plain form over
+    // the standard split, with 1- and 4-token strata pinning the
+    // exact-length context arrays at every prefix depth.
     QueryDef("txt_lm5_ppl")({
       val sc =
         s"""(SELECT doc_id, text FROM documents WHERE $bktSql < 20

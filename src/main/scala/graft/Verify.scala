@@ -32,7 +32,7 @@ object Verify {
     // abort the remaining dumps. Width 4 fills job tails without
     // multiplying peak memory; override with SPARK_GRAFT_VERIFY_PAR=1 to
     // reproduce the sequential wall.
-    val width = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt
+    val width = parWidth(sys.env.get("SPARK_GRAFT_VERIFY_PAR"))
     graft.operators.Par.runUnit(
       SparkEntry.queries.toSeq
         .filter { case (name, _) => only.isEmpty || only(name) }
@@ -61,4 +61,13 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** The dump pool width from `SPARK_GRAFT_VERIFY_PAR`: default 4,
+    * clamped to >= 1; a non-integer warns and falls back to 4. */
+  private[graft] def parWidth(raw: Option[String]): Int =
+    raw.fold(4)(r => r.trim.toIntOption.fold {
+      System.err.println(
+        s"[verify] SPARK_GRAFT_VERIFY_PAR='$r' is not an integer; using 4")
+      4
+    }(math.max(1, _)))
 }

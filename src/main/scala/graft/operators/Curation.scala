@@ -541,9 +541,9 @@ object Curation {
     * train corpus's ORDER-5 self-scores (which sit LOWER than order-2 —
     * deeper contexts are attested in-corpus — so the offset is its own
     * MlGateProbe-measured constant, not order-2's). Five vocabulary-
-    * scale count tables pinned eagerly (they feed 2(n−1)+2 = 10 join
-    * sides in each of the two scoring chains — the [[release]] pinning
-    * argument, deeper). */
+    * scale count tables pinned eagerly, then ONE scoring pass over the
+    * train self-scores and the corpus ([[release5Scores]]), pinned once:
+    * the cuts come from side 0, the corpus scores from side 1. */
   def release5(corpus: DataFrame, lmTrain: DataFrame,
       offsetMicro: Long): DataFrame = {
     // the train corpus is tokenized ONCE (r19 shared-tokenization seam):
@@ -579,18 +579,34 @@ object Curation {
     // per token position), so the salted first level emits ≈ its input
     // and the extra exchange + second aggregate only ADD peak state;
     // there is no hot-key reducer to split — the hash of the full
-    // (lang, w1..wk) key already spreads. See
-    // LangModel.gramCountsFromTsTwoLevel for the measured-negative form.
+    // (lang, w1..wk) key already spreads. The salted form is deleted;
+    // EXPLAIN.md keeps the measurement.
     val tables = Par.run((1 to 5).map(k => () =>
       if (k <= 2) LangModelMl.gramCountsMlFromTs(toked, k).localCheckpoint(true)
       else LangModelMl.gramCountsMlFromTs(toked, k).localCheckpoint(true, disk)),
       maxThreads = 2)
-    val cuts = LangModelMl.cutsFromSelfScores(
-        LangModelMl.scoreStreamNMlFromTs(toked, tables, 5), offsetMicro)
-      .localCheckpoint(true)
-    releaseWith(corpus, cuts, b =>
-      LangModelMl.scoreStreamNMl(b, tables, 5)
-        .select(col("doc_id"), col("xent")))
+    releaseWith(corpus, scoreable => {
+      // pinned: the cuts and the corpus scores both read it. DISK_ONLY —
+      // one narrow row per train + corpus doc (the flag-table argument)
+      val scored = release5Scores(toked, tables, scoreable)
+        .localCheckpoint(true, disk)
+      (scored.where(col("side") === 1),
+        LangModelMl.cutsFromSelfScores(scored.where(col("side") === 0),
+          offsetMicro))
+    })
+  }
+
+  /** [[release5]]'s one scoring pass, unpinned: the tokenized train
+    * frame (`side = 0`) and the scoreable corpus docs (`side = 1`)
+    * through one order-5 chain — (side, doc_id, lang, xent). `side`
+    * keeps a train doc and a corpus doc sharing a doc_id apart
+    * ([[LangModel.scoreStreamN]]'s one-sequence-per-key precondition). */
+  private[graft] def release5Scores(toked: DataFrame, tables: Seq[DataFrame],
+      scoreable: DataFrame): DataFrame = {
+    val sides = toked.select(lit(0).as("side"), col("*")).unionAll(
+      LangModelMl.tokenizedMl(scoreable).select(lit(1).as("side"), col("*")))
+    LangModelMl.scoreStreamNMlFromTs(sides, tables, 5)
+      .select(col("side"), col("doc_id"), col("lang"), col("xent"))
   }
 
   /** The release funnel against GIVEN order-2 model tables and
@@ -598,27 +614,28 @@ object Curation {
     * (the r16–r18 shape; [[release]] derives its tables into this). */
   private[graft] def releaseAgainst(corpus: DataFrame, uni: DataFrame,
       bi: DataFrame, cuts: DataFrame): DataFrame =
-    releaseWith(corpus, cuts, b =>
-      LangModelMl.scoreWithMl(b, uni, bi).select(col("doc_id"), col("xent")))
+    releaseWith(corpus, b => (LangModelMl.scoreWithMl(b, uni, bi), cuts))
 
-  /** THE pinned release kernel against calibrated cuts and a pluggable
-    * per-language scorer (r19 — one kernel, every model order): `scorer`
-    * maps the quality-surviving scoreable docs (doc_id, text, lang) to
-    * (doc_id, xent) under each doc's own language's model. All release
-    * rows — column-keyed, prediction-keyed, streaming, order-2 and
-    * order-5 — ride THIS function, so the funnel semantics can never
+  /** THE pinned release kernel against a pluggable per-language scorer
+    * (r19 — one kernel, every model order): `scorer` maps the
+    * quality-surviving scoreable docs (doc_id, text, lang) to their
+    * (doc_id, xent) under each doc's own language's model and the
+    * per-lang cuts (lang, cut_micro) — fixed for [[release]] and the
+    * stream monitors, derived in the scoring pass for [[release5]]. All
+    * release rows — column-keyed, prediction-keyed, streaming, order-2
+    * and order-5 — ride THIS function, so the funnel semantics can never
     * fork by entry point. Pure function of its inputs: one batch scan +
     * vocabulary-scale model joins. */
-  private[graft] def releaseWith(corpus: DataFrame, cuts: DataFrame,
-      scorer: DataFrame => DataFrame): DataFrame = {
+  private[graft] def releaseWith(corpus: DataFrame,
+      scorer: DataFrame => (DataFrame, DataFrame)): DataFrame = {
     val flagged = corpus.select(col("doc_id"), col("text"), col("lang"),
       (TextAnalysis.lrScore() >= 0.5).cast("int").as("q_pass"),
       LangModelMl.zeroTok(col("text")).as("zt"))
-    val scored = scorer(
+    val (scores, cuts) = scorer(
         flagged.where(col("q_pass") === 1 && col("zt") === 0)
           .select(col("doc_id"), col("text"), col("lang")))
-      .select(col("doc_id"), col("xent"))
-    val st = flagged.join(scored, Seq("doc_id"), "left")
+    val st = flagged.join(scores.select(col("doc_id"), col("xent")),
+        Seq("doc_id"), "left")
       // null-safe on lang, matching releaseSql's IS NOT DISTINCT FROM —
       // see the LangModelMl.gateMl cut-join note (r18)
       .join(broadcast(cuts.withColumnRenamed("lang", "lang_cut")),

@@ -169,10 +169,10 @@ object LangModel {
   // CCNet's production KenLM is an ORDER-5 model on the same Stupid
   // Backoff recursion the order-2/3 forms implement by hand above. The
   // generic kernel expresses any order n ≤ 5 (plain or lang-keyed) as
-  // one token-stream projection + 2(n−1)+2 vocabulary-scale joins + one
-  // aggregate — the hand-written order-2/3 paths stay untouched (their
-  // rows pin them), and the persisted lifecycle is already order- and
-  // shape-generic through tableSpecs.
+  // one token-stream projection + n vocabulary-scale joins + the totals,
+  // one lag window and one aggregate — the hand-written order-2/3 paths
+  // stay untouched (their rows pin them), and the persisted lifecycle is
+  // already order- and shape-generic through tableSpecs.
 
   /** Highest supported n-gram order (table name space + oracle CASE). */
   val maxOrder: Int = 5
@@ -183,23 +183,15 @@ object LangModel {
   private def alphaPow(k: Int): Double =
     Iterator.fill(k)(alpha).foldLeft(1.0)(_ * _)
 
-  /** Generic exact-length token stream: (key…, pos, w, ctx1..ctx(n−1))
-    * with ctxK = the token K positions back (null while the position
-    * lacks that much history). Every context array is
-    * `slice(concat(nulls, ts), 1, size(ts))` — exact length, never a
-    * padded prefix (the r17-ADVICE phantom-row trap). */
-  private[operators] def tokenStreamNFrom(docs: DataFrame,
-      toksOf: Column => Column, n: Int, keyCols: Seq[String]): DataFrame =
-    tokenStreamNFromTs(
-      docs.select((keyCols.map(col) :+ toksOf(col("text")).as("ts")): _*),
-      n, keyCols)
-
-  /** [[tokenStreamNFrom]] over an ALREADY-TOKENIZED frame (key…, ts) —
-    * the r19 shared-tokenization seam: an order-5 chain needs the token
-    * arrays six times (five gram tables + the score stream), and
-    * re-running the regex tokenizer per consumer dominated the measured
-    * wall; callers tokenize once, pin the (key…, ts) frame, and derive
-    * everything from it. Same construction, identical rows. */
+  /** Generic exact-length token stream over an already-tokenized
+    * (key…, ts) frame: (key…, pos, w, ctx1..ctx(n−1)) with ctxK = the
+    * token K positions back (null while the position lacks that much
+    * history). Every context array is `slice(concat(nulls, ts), 1,
+    * size(ts))` — exact length, never a padded prefix (the r17-ADVICE
+    * phantom-row trap). Callers tokenize once (the r19
+    * shared-tokenization seam: an order-5 chain needs the token arrays
+    * six times, and re-running the regex tokenizer per consumer
+    * dominated the measured wall). */
   private[operators] def tokenStreamNFromTs(toked: DataFrame, n: Int,
       keyCols: Seq[String]): DataFrame = {
     require(n >= 1 && n <= maxOrder, s"order $n outside [1, $maxOrder]")
@@ -248,39 +240,8 @@ object LangModel {
     }
   }
 
-  /** [[gramCountsFromTs]] as a TWO-LEVEL aggregation (guide §2.5) —
-    * kept as the r20 MEASURED-NEGATIVE form, not wired anywhere: at
-    * 10×/8 g the salted order-4/5 release5 tables heap-OOM'd on their
-    * first rep while the one-level form passed 3 consecutive reps
-    * (160–171 s). Why the prescription inverts here: a deep-order gram
-    * table is count-1-tail (near one row per token position), so the
-    * level-1 (salt, key…, gram) aggregate emits ≈ its input — the extra
-    * exchange and second aggregate only ADD peak execution state, and
-    * there is no hot-key reducer to split because the final aggregate
-    * hash-partitions on the full (key…, w1..wk) tuple, which is already
-    * near-unique. Two-level aggregation pays off when the UNsalted key
-    * is low-cardinality/hot (e.g. per-lang totals), not for count-1-tail
-    * key spaces. Output is ROW-IDENTICAL to the one-level form (counts
-    * are additive, exact integers; `pos % salts` is deterministic —
-    * never rand, guide §2.5's retry-duplication trap). */
-  private[operators] def gramCountsFromTsTwoLevel(toked: DataFrame, k: Int,
-      keyCols: Seq[String], salts: Int = 16): DataFrame = {
-    require(k >= 2, s"two-level gram counts need order >= 2, got $k")
-    require(salts >= 2, s"salts must be >= 2, got $salts")
-    val st = tokenStreamNFromTs(toked, k, keyCols)
-      .where(col(s"ctx${k - 1}").isNotNull)
-    val renames = (1 until k).map(i => col(s"ctx${k - i}").as(s"w$i")) :+
-      col("w").as(s"w$k")
-    st.select((keyCols.map(col) ++ renames :+
-        pmod(col("pos"), lit(salts)).as("gsalt")): _*)
-      .groupBy((keyCols ++ (1 to k).map(i => s"w$i") :+ "gsalt").map(col): _*)
-      .agg(count(lit(1)).as("c1"))
-      .groupBy((keyCols ++ (1 to k).map(i => s"w$i")).map(col): _*)
-      .agg(sum(col("c1")).as("c"))
-  }
-
   /** The generic order-n Stupid Backoff scorer over a prepared token
-    * stream ([[tokenStreamNFrom]] with the same n) and the n count
+    * stream ([[tokenStreamNFromTs]] with the same n) and the n count
     * tables (`tables(k-1)` = the (k)-gram table, lowest order first,
     * each keyed by `key` ++ its word columns). Per token with m
     * available context tokens: the highest order o ≤ m+1 whose o-gram
@@ -288,7 +249,21 @@ object LangModel {
     * attested scores `α^m ·` the add-one unigram — exactly the
     * published recursion the order-2/3 forms implement, generalized.
     * `n_backoff` counts context-bearing tokens that did not score at
-    * their full available order. */
+    * their full available order.
+    *
+    * Context counts come from `lag`, not joins: the context of the
+    * o-gram at position p is the (o−1)-gram at p−1 of the same
+    * sequence, so `c_x{o} = lag(c_g{o−1})` and `c_x2 = lag(c_w)`. One
+    * table join per order plus the totals (order 5: 5 + 1); the window
+    * partitions by the output grouping key, so its exchange is the one
+    * the final aggregate reuses.
+    *
+    * The grouping key is every stream column other than `pos`, `w` and
+    * the `ctx` columns — (doc_id) plain, (doc_id, lang) per-language,
+    * plus any pass-through tag such as [[Curation.release5]]'s `side`.
+    * PRECONDITION: each grouping-key value names ONE token sequence
+    * (one row per `pos`); two documents sharing a key would interleave
+    * in the window and read each other's counts. */
   private[operators] def scoreStreamN(st0: DataFrame, tables: Seq[DataFrame],
       key: Seq[String], n: Int): DataFrame = {
     // n = 1 would leave the lp when-chain unbuilt (NullPointerException on
@@ -296,6 +271,8 @@ object LangModel {
     // contract instead (mirrors pplNSqlGeneric's [2, maxOrder] bound)
     require(n >= 2 && n <= maxOrder, s"order $n outside [2, $maxOrder]")
     require(tables.size == n, s"need $n tables, got ${tables.size}")
+    val streamCols = Set("pos", "w") ++ (1 until n).map(k => s"ctx$k")
+    val grp = st0.columns.toSeq.filterNot(streamCols)
     val uni = tables.head
     // per-key totals: broadcast join when keyed, 1-row cross join when not
     val totAgg = Seq(sum(col("c")).cast("double").as("n"),
@@ -303,24 +280,22 @@ object LangModel {
     var st = st0
       .join(uni.select((key.map(col) :+ col("w") :+ col("c").as("c_w")): _*),
         key :+ "w", "left")
-    // for each order o ≥ 2: the o-gram lookup (c_g{o}) and its context
-    // denominator from the (o−1)-gram table (c_x{o}; o = 2 reads uni)
+    // for each order o ≥ 2: the o-gram lookup (c_g{o})
     for (o <- 2 to n) {
-      val ctxNames = (1 until o).map(i => s"ctx$i")
       val gram = tables(o - 1).select((key.map(col) ++
         (1 until o).map(i => col(s"w$i").as(s"ctx${o - i}")) :+
         col(s"w$o").as("w") :+ col("c").as(s"c_g$o")): _*)
-      st = st.join(gram, key ++ ctxNames :+ "w", "left")
-      val ctxTbl =
-        if (o == 2)
-          uni.select((key.map(col) :+ col("w").as("ctx1") :+
-            col("c").as("c_x2")): _*)
-        else
-          tables(o - 2).select((key.map(col) ++
-            (1 until o).map(i => col(s"w$i").as(s"ctx${o - i}")) :+
-            col("c").as(s"c_x$o")): _*)
-      st = st.join(ctxTbl, key ++ ctxNames, "left")
+      st = st.join(gram, key ++ (1 until o).map(i => s"ctx$i") :+ "w", "left")
     }
+    // context denominators: the previous position's lookup one order down
+    val bySeq = org.apache.spark.sql.expressions.Window
+      .partitionBy(grp.map(col): _*).orderBy(col("pos"))
+    st = st.select((col("*") +: (2 to n).map { o =>
+      lag(col(if (o == 2) "c_w" else s"c_g${o - 1}"), 1).over(bySeq)
+        .as(s"c_x$o")
+    }): _*)
+    // the totals join AFTER the window: a broadcast keeps the window's
+    // partitioning, and (n, v) stay off the window exchange
     st =
       if (key.isEmpty)
         st.crossJoin(broadcast(uni.agg(totAgg.head, totAgg.tail: _*)))
@@ -330,8 +305,11 @@ object LangModel {
           key, "left")
     val uniP = (coalesce(col("c_w"), lit(0L)).cast("double") + 1.0) /
       (col("n") + col("v"))
-    // branch on available context m (ctx{m+1} null ⇒ exactly m), then
-    // inside each branch try orders m+1 down to 2, else backed-off uni
+    // branch on available context m (ctx{m+1} null ⇒ exactly m, i.e.
+    // pos ≤ m+1 — the stream's exact-length context arrays), then inside
+    // each branch try orders m+1 down to 2, else backed-off uni. Branching
+    // on pos lets the token and context columns drop before the window
+    // exchange.
     def chainFor(m: Int): Column = {
       val base = log10(lit(alphaPow(m)) * uniP)
       // descending order chain (when-chains evaluate in order, so the
@@ -346,21 +324,20 @@ object LangModel {
       }
       if (e == null) base else e.otherwise(base)
     }
+    def ctxAtMost(m: Int): Column = col("pos") <= m + 1
     var lp: Column = null
     for (m <- 0 until (n - 1)) {
-      val cond = col(s"ctx${m + 1}").isNull
-      lp = if (lp == null) when(cond, chainFor(m))
-           else lp.when(cond, chainFor(m))
+      lp = if (lp == null) when(ctxAtMost(m), chainFor(m))
+           else lp.when(ctxAtMost(m), chainFor(m))
     }
     val lpFull = lp.otherwise(chainFor(n - 1))
     // highest-available-order gram absent ⇒ backoff (m ≥ 1 only)
-    var bko: Column = when(col("ctx1").isNull, 0L)
+    var bko: Column = when(ctxAtMost(0), 0L)
     for (m <- 1 until (n - 1))
-      bko = bko.when(col(s"ctx${m + 1}").isNull,
+      bko = bko.when(ctxAtMost(m),
         when(col(s"c_g${m + 1}").isNull, 1L).otherwise(0L))
     val bkoFull = bko.otherwise(
       when(col(s"c_g$n").isNull, 1L).otherwise(0L))
-    val grp = ("doc_id" +: key).distinct
     st.groupBy(grp.map(col): _*).agg(
       count(lit(1)).as("n_tokens"),
       sum(when(col("c_w").isNull, 1L).otherwise(0L)).as("n_oov"),
@@ -371,10 +348,16 @@ object LangModel {
   /** Plain in-memory order-n form (n ≤ [[maxOrder]]): train the n count
     * tables on `train`, score `batch` through the generic recursion. */
   def pplN(train: DataFrame, batch: DataFrame, n: Int): DataFrame =
-    scoreStreamN(
-      tokenStreamNFrom(batch, toks, n, Seq("doc_id")),
-      (1 to n).map(k => gramCountsFrom(train, toks, k, Nil)),
-      Nil, n)
+    scoreDocsN(batch, (1 to n).map(k => gramCountsFrom(train, toks, k, Nil)),
+      n, ml = false)
+
+  /** Score (doc_id, text) docs — (doc_id, text, lang) when `ml` — at
+    * order n against given count tables, lowest order first. */
+  private def scoreDocsN(batch: DataFrame, tables: Seq[DataFrame], n: Int,
+      ml: Boolean): DataFrame =
+    if (ml) LangModelMl.scoreStreamNMl(batch, tables, n)
+    else scoreStreamN(tokenStreamNFromTs(batch.select(col("doc_id"),
+      toks(col("text")).as("ts")), n, Seq("doc_id")), tables, Nil, n)
 
   /** Per-document cross-entropy under the Stupid Backoff bigram model
     * given explicitly as count tables — the pure scoring kernel shared by
@@ -1113,12 +1096,7 @@ object LangModel {
     val tables = tableSpecs(Shape(n, ml)).map { case (sub, keys) =>
       liveTable(spark, indexDir, sub, keys, excludeIngestBatch)
     }
-    if (ml)
-      scoreStreamN(
-        LangModelMl.tokenStreamNMl(batch, n), tables, Seq("lang"), n)
-    else
-      scoreStreamN(
-        tokenStreamNFrom(batch, toks, n, Seq("doc_id")), tables, Nil, n)
+    scoreDocsN(batch, tables, n, ml)
   }
 
   // ---- LM session: standing-model cache for streaming loops (r19) --------
@@ -1226,12 +1204,7 @@ object LangModel {
         case (true, 2) => LangModelMl.scoreWithMl(batch, ts(0), ts(1))
         case (false, 3) => scoreWith3(batch, ts(0), ts(1), ts(2))
         case (true, 3) => LangModelMl.scoreWith3Ml(batch, ts(0), ts(1), ts(2))
-        case (false, n) =>
-          scoreStreamN(tokenStreamNFrom(batch, toks, n, Seq("doc_id")),
-            ts, Nil, n)
-        case (true, n) =>
-          scoreStreamN(LangModelMl.tokenStreamNMl(batch, n),
-            ts, Seq("lang"), n)
+        case (ml, n) => scoreDocsN(batch, ts, n, ml)
       }
     }
     /** Grow the persisted layout (identical commit machinery) and pin the

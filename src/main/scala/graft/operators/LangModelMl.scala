@@ -225,10 +225,6 @@ object LangModelMl {
   def gramCountsMl(docs: DataFrame, k: Int): DataFrame =
     LangModel.gramCountsFrom(docs, toksMl, k, Seq("lang"))
 
-  /** The generic lang-keyed token stream for order n (r18). */
-  private[operators] def tokenStreamNMl(docs: DataFrame, n: Int): DataFrame =
-    LangModel.tokenStreamNFrom(docs, toksMl, n, Seq("doc_id", "lang"))
-
   /** In-memory generic order-n per-language form (n ≤
     * [[LangModel.maxOrder]] — n = 5 is CCNet's production KenLM order). */
   def pplNMl(train: DataFrame, batch: DataFrame, n: Int): DataFrame =
@@ -240,7 +236,7 @@ object LangModelMl {
     * ([[Curation.release5]]) pins its tables through (r19). */
   private[graft] def scoreStreamNMl(batch: DataFrame, tables: Seq[DataFrame],
       n: Int): DataFrame =
-    LangModel.scoreStreamN(tokenStreamNMl(batch, n), tables, Seq("lang"), n)
+    scoreStreamNMlFromTs(tokenizedMl(batch), tables, n)
 
   /** (doc_id, lang, ts) — the corpus tokenized ONCE for the shared-
     * tokenization consumers below (r19). */
@@ -252,20 +248,15 @@ object LangModelMl {
   private[graft] def gramCountsMlFromTs(toked: DataFrame, k: Int): DataFrame =
     LangModel.gramCountsFromTs(toked, k, Seq("lang"))
 
-  /** [[gramCountsMlFromTs]] computed TWO-LEVEL (salted partial on
-    * (gsalt, lang, gram), exact final on (lang, gram) — guide §2.5,
-    * r20). Row-identical counts; see
-    * [[LangModel.gramCountsFromTsTwoLevel]]. */
-  private[graft] def gramCountsMlFromTsTwoLevel(toked: DataFrame, k: Int,
-      salts: Int = 16): DataFrame =
-    LangModel.gramCountsFromTsTwoLevel(toked, k, Seq("lang"), salts)
-
   /** [[scoreStreamNMl]] over an already-tokenized [[tokenizedMl]]
-    * frame. */
+    * frame. Every column but `ts` passes through as part of the output
+    * grouping key (a `side` tag, say — see [[LangModel.scoreStreamN]]'s
+    * one-sequence-per-key precondition). */
   private[graft] def scoreStreamNMlFromTs(toked: DataFrame,
       tables: Seq[DataFrame], n: Int): DataFrame =
     LangModel.scoreStreamN(
-      LangModel.tokenStreamNFromTs(toked, n, Seq("doc_id", "lang")),
+      LangModel.tokenStreamNFromTs(toked, n,
+        toked.columns.toSeq.filterNot(_ == "ts")),
       tables, Seq("lang"), n)
 
   /** Per-language CALIBRATED cuts: each language's threshold derives

@@ -17,7 +17,8 @@ package graft.operators
   * Determinism: results return in INPUT order regardless of completion
   * order, so callers' outputs cannot depend on scheduling. Failure: the
   * first thrown cause is rethrown (after all threads settle), matching
-  * the sequential loop's fail-loud behavior.
+  * the sequential loop's fail-loud behavior. An interrupted caller
+  * interrupts the thunks and rethrows once every thunk has finished.
   *
   * The default pool width (4) is deliberately small — enough to fill
   * straggler tails, not enough to thrash the scheduler or multiply peak
@@ -47,14 +48,22 @@ private[graft] object Par {
         catch {
           case e: java.util.concurrent.ExecutionException =>
             Left(Option(e.getCause).getOrElse(e))
+          // the CALLER was interrupted: interrupt the running thunks, drop
+          // the queued ones, and rethrow only once every thunk has finished
+          case ie: InterruptedException =>
+            pool.shutdownNow()
+            while (!pool.isTerminated)
+              try pool.awaitTermination(1, java.util.concurrent.TimeUnit.SECONDS)
+              catch { case _: InterruptedException => () }
+            throw ie
         }
       }
       outs.collectFirst { case Left(e) => e }.foreach(throw _)
       outs.collect { case Right(a) => a }
     } finally {
       pool.shutdown()
-      // threads are settled (every future was get()-awaited above); this
-      // only reaps the idle pool, so termination is immediate
+      // threads are settled (every future was get()-awaited above, or the
+      // pool drained on interrupt); this only reaps the idle pool
       pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
       ()
     }

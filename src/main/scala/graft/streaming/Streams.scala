@@ -715,8 +715,7 @@ object Streams {
                   .as("lang"))
             else batch.select(col("doc_id"), col("text"), col("lang"))
           graft.operators.Curation
-            .releaseWith(b, cuts,
-              sb => model.score(sb).select(col("doc_id"), col("xent")))
+            .releaseWith(b, sb => (model.score(sb), cuts))
             .write.mode("overwrite").parquet(s"$outDir/micro_batch=$batchId")
         }
       }

@@ -220,6 +220,61 @@ class LangModelMlSpec extends TestBase {
     } finally deleteRecursively(tmp)
   }
 
+  test("pplNMl: lag-derived context counts reproduce the join form's " +
+      "rows at orders 4 and 5; a fused two-side pass scores each side " +
+      "under its own key") {
+    // expected rows captured from the context-table-join form of
+    // scoreStreamN before the lag rewrite
+    val train = docs((1L, "a b c d e", "en"), (2L, "a b c d e", "en"),
+      (3L, "f b c d g", "en"), (4L, "中文中文中", "zh"),
+      (5L, "a a a b c", "en"))
+    val batch = docs(
+      (10L, "b", "en"), // one token
+      (11L, "a a a a a", "en"), // repeated token
+      // "f b c d" attested only as the prefix of "f b c d g"
+      (12L, "f b c d e", "en"),
+      (13L, "中", "zh"), // one char-level token
+      (14L, "中中中中中", "zh"), // repeated char-level token
+      (15L, "a b c", "xx")) // unmodeled: no table row, no totals row
+    type R = (Long, String, Long, Long, Long, Option[Double])
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[R] =
+      df.orderBy("doc_id")
+        .select("doc_id", "lang", "n_tokens", "n_oov", "n_backoff", "xent")
+        .collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), Option(r.get(5)).map(_ => r.getDouble(5))))
+    val want: Map[Int, Seq[R]] = Map(
+      4 -> Seq((10L, "en", 1L, 0L, 0L, Some(0.732394)),
+        (11L, "en", 5L, 0L, 2L, Some(0.550025)),
+        (12L, "en", 5L, 0L, 0L, Some(0.261285)),
+        (13L, "zh", 1L, 0L, 0L, Some(0.243038)),
+        (14L, "zh", 5L, 0L, 4L, Some(0.95933)),
+        (15L, "xx", 3L, 3L, 2L, None)),
+      5 -> Seq((10L, "en", 1L, 0L, 0L, Some(0.732394)),
+        (11L, "en", 5L, 0L, 2L, Some(0.629613)),
+        (12L, "en", 5L, 0L, 1L, Some(0.340873)),
+        (13L, "zh", 1L, 0L, 0L, Some(0.243038)),
+        (14L, "zh", 5L, 0L, 4L, Some(1.038918)),
+        (15L, "xx", 3L, 3L, 2L, None)))
+    want.foreach { case (n, w) =>
+      assert(rows(LangModelMl.pplNMl(train, batch, n)) == w, s"order $n")
+    }
+    // the release5 fused pass: doc 1 on side 0 (a train self-score) and
+    // doc 1 on side 1 (a different corpus text) share (doc_id, lang);
+    // `side` in the grouping key keeps the two sequences apart
+    val tables = (1 to 5).map(k => LangModelMl.gramCountsMl(train, k))
+    val sides = LangModelMl.tokenizedMl(train.where(col("doc_id") === 1))
+      .select(lit(0).as("side"), col("*"))
+      .unionAll(LangModelMl.tokenizedMl(docs((1L, "f b c d e", "en")))
+        .select(lit(1).as("side"), col("*")))
+    val fused = LangModelMl.scoreStreamNMlFromTs(sides, tables, 5)
+      .orderBy("side")
+      .select("side", "doc_id", "lang", "n_tokens", "n_oov", "n_backoff",
+        "xent")
+      .as[(Int, Long, String, Long, Long, Long, Double)].collect().toSeq
+    assert(fused == Seq((0, 1L, "en", 5L, 0L, 0L, 0.210231),
+      (1, 1L, "en", 5L, 0L, 1L, 0.340873)))
+  }
+
   test("NULL-lang strata: cut join is null-safe (IS NOT DISTINCT FROM " +
       "semantics); NULL-lang docs land in the funnel, never vanish") {
     // The oracle's cut join is IS NOT DISTINCT FROM, so a NULL-lang cut

@@ -486,6 +486,36 @@ class LangModelSpec extends TestBase {
     } finally deleteRecursively(tmp)
   }
 
+  test("pplN: lag-derived context counts reproduce the join form's rows " +
+      "at orders 4 and 5") {
+    // expected rows captured from the context-table-join form of
+    // scoreStreamN (c_x{o} joined from the (o−1)-gram table) before the
+    // lag rewrite; the lag form must reproduce every one
+    val t = docs(1L -> "a b c d e", 2L -> "a b c d e", 3L -> "f b c d g",
+      4L -> "a a a b c")
+    val b = docs(
+      10L -> "b", // one token: no context, no lag row
+      11L -> "a a a a a", // repeated token: every context is "a…a"
+      // "f b c d" is attested only as the prefix of "f b c d g"; the
+      // 5-gram "f b c d e" is not, so pos 5 backs off to "b c d e"
+      12L -> "f b c d e",
+      13L -> "a b c d g",
+      14L -> "q") // one OOV token
+    val want = Map(
+      4 -> Seq((10L, 1L, 0L, 0L, 0.732394), (11L, 5L, 0L, 2L, 0.550025),
+        (12L, 5L, 0L, 0L, 0.261285), (13L, 5L, 0L, 0L, 0.305655),
+        (14L, 1L, 1L, 0L, 1.431364)),
+      5 -> Seq((10L, 1L, 0L, 0L, 0.732394), (11L, 5L, 0L, 2L, 0.629613),
+        (12L, 5L, 0L, 1L, 0.340873), (13L, 5L, 0L, 1L, 0.385243),
+        (14L, 1L, 1L, 0L, 1.431364)))
+    want.foreach { case (n, rows) =>
+      assert(LangModel.pplN(t, b, n).orderBy("doc_id")
+        .select("doc_id", "n_tokens", "n_oov", "n_backoff", "xent")
+        .as[(Long, Long, Long, Long, Double)].collect().toSeq == rows,
+        s"order $n")
+    }
+  }
+
   test("order-3 persisted lifecycle: grown == union; order marker gates " +
       "the entry points") {
     val d = Tables(spark, sf(), "documents").select(col("doc_id"), col("text"))

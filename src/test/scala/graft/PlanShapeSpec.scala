@@ -334,4 +334,54 @@ class PlanShapeSpec extends TestBase {
         s"no cartesian anywhere in the release funnel ($name)")
     }
   }
+  test("release5 scoring: each count table joined once, no context-table " +
+      "joins, one Window sharing the scoring aggregate's exchange") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.{SparkPlan, window}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.operators.{Curation, LangModelMl}
+    val d = Tables(spark, sf("sf0.001"), "documents")
+      .select(col("doc_id"), col("text"), col("lang"))
+    val toked = LangModelMl.tokenizedMl(d.where("doc_id < 300"))
+      .localCheckpoint(true)
+    // pinned like release5's, so the plan under test is the scorer alone
+    val tables = (1 to 5).map(k =>
+      LangModelMl.gramCountsMlFromTs(toked, k).localCheckpoint(true))
+    val scored = Curation.release5Scores(toked, tables,
+      d.where("doc_id >= 300"))
+    scored.collect() // settle the adaptive plan
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    val all = nodes(scored.queryExecution.executedPlan)
+    val joins = all.collect { case j: BaseJoinExec => j }
+    // 5 count tables + the per-lang totals; the join form added n−1 = 4
+    // context-table joins (10)
+    assert(joins.size == 6, s"want 6 joins, got ${joins.size}:\n" +
+      joins.map(_.simpleString(200)).mkString("\n"))
+    // a context lookup would key on ctx… without the scored token w
+    val keys = joins.map(_.leftKeys.flatMap(_.references.map(_.name)).toSet)
+    assert(keys.count(_ == Set("lang")) == 1 && keys.count(_("w")) == 5,
+      s"want 5 count-table joins on w + the totals on lang, got $keys")
+    val windows = all.collect { case w: window.WindowExec => w }
+    assert(windows.size == 1, s"want one Window, got ${windows.size}")
+    // walk from the scoring aggregate down to the Window: no shuffle
+    def reachesWindowUnshuffled(p: SparkPlan): Boolean = p match {
+      case _: window.WindowExec => true
+      case _: ShuffleExchangeLike => false
+      case _ => kids(p).exists(reachesWindowUnshuffled)
+    }
+    val scoring = all.collect {
+      case a: HashAggregateExec if a.output.exists(_.name == "xent") => a
+    }
+    assert(scoring.nonEmpty && scoring.forall(reachesWindowUnshuffled),
+      "no Exchange may sit between the lag Window and the scoring aggregate")
+  }
 }

@@ -297,10 +297,6 @@ object Dedup {
       baseHexWidth: Int = 15): DataFrame =
     capBuckets(bandBuckets(sh, numHashes, bandSize, baseHexWidth), maxBucket)
 
-  /** UNCAPPED banded minhash bucket rows — one row per (doc, band). The
-    * persisted index stores these raw (cap applied at probe time over the
-    * whole stored union — see `crossNearDupIndexed`), so row volume is
-    * exactly docs × bands regardless of boilerplate density. */
   /** Wide per-doc minhash signatures (doc_id, h0..h{numHashes-1}) in ONE
     * aggregation pass — numHashes parallel min-aggs, map-side combined, one
     * md5 per shingle ROW (seed hashes derive from the digest prefix by
@@ -308,20 +304,34 @@ object Dedup {
     * agreement gate (`editSimilarityGated`). */
   private def minhashSigsWide(
       sh: DataFrame, numHashes: Int, baseHexWidth: Int = 15): DataFrame = {
-    require(numHashes <= 64, s"numHashes $numHashes > 64: minhashAB precomputes 64 seed constants")
-    val minCols = (0 until numHashes).map(s =>
-      min((col("bh") * minhashA(s) + minhashB(s)) % MinhashP).as(s"h$s"))
+    val minCols = minhashMins(numHashes)
     sh.select(col("doc_id"), shingleBaseHash(baseHexWidth).as("bh"))
       .groupBy(col("doc_id"))
       .agg(minCols.head, minCols.tail: _*)
   }
 
+  /** The signature aggregates `h0..h{numHashes-1}` over a base-hash
+    * column `bh` — duplicate-insensitive mins. */
+  private def minhashMins(numHashes: Int): Seq[org.apache.spark.sql.Column] = {
+    require(numHashes <= 64, s"numHashes $numHashes > 64: minhashAB precomputes 64 seed constants")
+    (0 until numHashes).map(s =>
+      min((col("bh") * minhashA(s) + minhashB(s)) % MinhashP).as(s"h$s"))
+  }
+
+  /** UNCAPPED banded minhash bucket rows — one row per (doc, band). The
+    * persisted index stores these raw (cap applied at probe time over the
+    * whole stored union — see `crossNearDupIndexed`), so row volume is
+    * exactly docs × bands regardless of boilerplate density. */
   private def bandBuckets(
       sh: DataFrame,
       numHashes: Int,
       bandSize: Int,
-      baseHexWidth: Int = 15): DataFrame = {
-    val sigs = minhashSigsWide(sh, numHashes, baseHexWidth)
+      baseHexWidth: Int = 15): DataFrame =
+    bands(minhashSigsWide(sh, numHashes, baseHexWidth), numHashes, bandSize)
+
+  /** Band rows (doc_id, band, sig) of wide per-doc signatures
+    * (doc_id, h0..h{numHashes-1}): one narrow explode, no aggregate. */
+  private def bands(sigs: DataFrame, numHashes: Int, bandSize: Int): DataFrame = {
     val bandCols = (0 until numHashes / bandSize).map { b =>
       struct(lit(b.toLong).as("band"),
         concat_ws("|", (0 until bandSize).map(i => col(s"h${b * bandSize + i}")): _*).as("sig"))
@@ -403,6 +413,13 @@ object Dedup {
     * shared by the in-memory and persisted-index cross-dedup forms. */
   private def hashedShingleKey: org.apache.spark.sql.Column =
     conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long")
+
+  /** Rounded Jaccard of the per-doc key-set columns `ka`, `kb` — the
+    * [[ngramJaccardFromShingles]] ratio, counted by array intersection. */
+  private def keySetJaccard: org.apache.spark.sql.Column = {
+    val inter = size(array_intersect(col("ka"), col("kb")))
+    round(inter / (size(col("ka")) + size(col("kb")) - inter), 6)
+  }
 
   /** Cross-side candidate pairs: the two sides' capped band buckets joined
     * on (band, sig) — never within a side. */
@@ -661,8 +678,9 @@ object Dedup {
 
   /** Per-batch artifacts of [[CrossIndexSession.scoreBatch]]: the fused
     * edge set (eagerly checkpointed, output-scale) plus the batch's own
-    * index-side rows — kept persisted so [[CrossIndexSession.append]] can
-    * write them verbatim instead of re-shingling the batch. */
+    * index-side rows — narrow explodes of the checkpointed per-doc batch
+    * row, so [[CrossIndexSession.append]] writes them without
+    * re-shingling the batch. */
   final class BatchScore private[Dedup] (
       val edges: DataFrame,
       private[Dedup] val sk: DataFrame,
@@ -694,22 +712,20 @@ object Dedup {
     *
     * [[scoreBatch]] additionally FUSES the loop's two scorers — cross-
     * vs-index ([[crossNearDupIndexed]]) and within-batch
-    * ([[nearDupScores]] ≥ threshold) — onto ONE batch-side chain: one
-    * shingle scan, one banded-minhash aggregate and one hashed-key pass
-    * feed both candidate generators and both exact scorers, and the index
-    * append rides the same chain (the uncapped bucket rows and hashed
-    * shingle keys are byproducts [[append]] writes verbatim — the
-    * `writeIndexSide` rows exactly, same crash discipline). The two
-    * scoring passes stay SEPARATE above the shared chain: a fully unified
-    * pairs-union overlap pass was measured 2–10× slower at micro-batch
-    * scale (it defeats the per-side broadcast shapes — LoopProbe r16
-    * A/B). Edge-set identity with the unfused pair is pinned by
-    * StreamingSpec's batch-pipeline-convergence asserts and the
-    * dd_curation_stream / dd_purge_stream oracles; cap semantics are
-    * preserved exactly (batch side caps over batch rows, rep side caps
-    * over REP rows post-filter, standing side caps over the stored union
-    * after the purge mask — each from the same uncapped aggregates the
-    * unfused operators cap).
+    * ([[nearDupScores]] ≥ threshold) — onto ONE per-doc batch row: one
+    * shingle scan into one `doc_id` aggregate carrying the doc's hashed
+    * shingle-key SET and its minhash mins, beside its text hash. Both
+    * candidate generators band that row, both exact scorers intersect key
+    * sets (no per-shingle join), and the index append rides the same row
+    * (the uncapped bucket rows and hashed shingle keys are narrow explodes
+    * [[append]] writes — the `writeIndexSide` rows up to duplicate rows,
+    * same crash discipline). Edge-set identity with the unfused pair is
+    * pinned by DedupSpec's fused-equals-unfused case, StreamingSpec's
+    * batch-pipeline-convergence asserts and the dd_curation_stream /
+    * dd_purge_stream oracles; cap semantics are preserved exactly (batch
+    * side caps over batch rows, rep side caps over REP rows post-filter,
+    * standing side caps over the stored union after the purge mask —
+    * each from the same uncapped rows the unfused operators cap).
     *
     * The purge tombstone set is re-read per batch (takedown-scale, one
     * tiny broadcast): only bucket ROWS are cached, so even a
@@ -719,25 +735,23 @@ object Dedup {
     * [[close]] releases every cache this session owns;
     * [[graft.streaming.Streams.curationLoop]] wires it to the query-
     * termination listener so loop caches never outlive the loop. */
-  final class CrossIndexSession private[operators] (
+  final class CrossIndexSession private[graft] (
       spark: SparkSession, dir: String, cacheRebaseEvery: Int = 32) {
     private val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // lazy: opening a session must not touch the FS before the loop's
     // first batch (curationLoop constructs the session at stream setup)
     private lazy val m = readIndexManifest(spark, dir)
     private var standing: DataFrame = null
-    private var leaves: List[DataFrame] = Nil // persisted nodes backing `standing`
-    private var outstanding: List[DataFrame] = Nil // scored-not-yet-appended caches
+    private var base: Option[DataFrame] = None // persisted read under `standing`
     private var extensions = 0
     private var oversized: DataFrame = null // (band, sig) over-cap list, tiny
     private var knownIds: DataFrame = null // distinct indexed doc ids
 
     private def standingBuckets(): DataFrame = {
       if (standing == null) {
-        val base = spark.read.schema("doc_id LONG, band LONG, sig STRING")
+        standing = spark.read.schema("doc_id LONG, band LONG, sig STRING")
           .parquet(s"$dir/buckets").persist(sl)
-        standing = base
-        leaves = base :: Nil
+        base = Some(standing)
       }
       standing
     }
@@ -788,138 +802,115 @@ object Dedup {
     /** Fused cross + within scoring of one micro-batch: returns the edge
       * set `crossNearDupIndexed(batch) ∪ (nearDupScores(batch) ≥
       * threshold)` as canonical (doc_a, doc_b) rows, eagerly checkpointed.
-      * The batch's index rows ride along persisted for [[append]]. */
+      * The batch's index rows ride along for [[append]].
+      *
+      * Pairs score as `|ka ∩ kb| / (|ka| + |kb| − |ka ∩ kb|)` over per-doc
+      * sets of 60-bit hashed shingle keys. The unfused scorers count
+      * DISTINCT SHINGLES per doc instead; the two agree unless two distinct
+      * shingles of one doc share a key (p ≈ n²/2⁶¹ per doc).
+      *
+      * Batch-scale frames — the per-doc row, the cross candidates and the
+      * text-hash groups — are eager checkpoints, so every later reference
+      * is a plain RDD scan, not a cache query stage nested in the edge
+      * plan. */
     def scoreBatch(batch: DataFrame, threshold: Double): BatchScore = {
       // cast once at the boundary (the writeIndexSide discipline): the
       // index and the loop's label graph are LONG-keyed
       val b = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      // batch-scoped caches, released together (success or failure)
-      var pinned: List[DataFrame] = Nil
-      def pin(df: DataFrame): DataFrame = { df.persist(sl); pinned ::= df; df }
-      // ---- shared batch-side chain: one text scan for shingles, one for
-      // text hashes; one banding aggregate; one hashed-key projection
-      val shAll = pin(shingles(b, m.n))
-      val allBuckets = bandBuckets(shAll, m.numHashes, m.bandSize).persist(sl)
-      val skAll = shAll.select(col("doc_id"), hashedShingleKey.as("sk")).persist(sl)
-      val keyed = pin(b.select(col("doc_id"), md5(col("text")).as("th")))
-      outstanding = skAll :: allBuckets :: outstanding
-      try {
-        // ---- candidate generation: cross pairs (batch vs the cached
-        // standing side, crossNearDupIndexed's masked read-time cap) and
-        // within-batch REP pairs (dedupPrelude's band self-join)
-        val purged = crossIndexPurged(spark, dir)
-        val masked = standingBuckets()
-          .join(broadcast(purged), Seq("doc_id"), "left_anti")
-        // the cap rides the session's touched-only oversize list — the
-        // same broadcast anti-join shape capBuckets ends in, without its
-        // per-batch full-union aggregate
-        val bucketsC = masked.join(broadcast(oversizedBuckets(masked)),
-          Seq("band", "sig"), "left_anti")
-        val cand = pin(
-          crossCandidates(capBuckets(allBuckets, m.maxBucket), bucketsC))
-        // one text-hash aggregate serves BOTH the mega-group cap and rep
-        // selection (dedupPrelude runs two): the group min is the min over
-        // capped rows exactly because the cap drops whole groups
-        val g = pin(keyed.groupBy(col("th"))
-          .agg(count(lit(1)).as("k"), min(col("doc_id")).as("rep")))
-        val bigGroups = g.where(col("k") > m.maxBucket).select(col("th"))
-        val capped = keyed.join(broadcast(bigGroups), Seq("th"), "left_anti")
-        val rep = g.where(col("k") <= m.maxBucket)
-          .select(col("th"), col("rep"))
-        val repIds = rep.select(col("rep").as("doc_id"))
-        // rep buckets are the per-doc rows of `allBuckets` filtered to
-        // reps (identical by per-doc construction), capped over REP rows
-        // only — dedupPrelude's cap semantics exactly
-        val repBuckets = capBuckets(
-          allBuckets.join(repIds, Seq("doc_id"), "left_semi"), m.maxBucket)
-        val repPairs = repBuckets.as("a")
-          .join(repBuckets.as("b"),
-            col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
+      // ---- the per-doc batch row (doc_id, ks, h0.., th): one shingle scan
+      // into one aggregate — the key set and the minhash mins both ignore
+      // duplicate shingles, so no distinct shuffle precedes it
+      val mins = minhashMins(m.numHashes)
+      val docs = checkpointed(shingles(b, m.n, dedup = false)
+        .select(col("doc_id"), hashedShingleKey.as("sk"))
+        .select(col("doc_id"), col("sk"), (col("sk") % MinhashP).as("bh"))
+        .groupBy(col("doc_id"))
+        .agg(collect_set(col("sk")).as("ks"), mins: _*)
+        .join(b.select(col("doc_id"), md5(col("text")).as("th")), "doc_id"))
+      val allBuckets = bands(docs, m.numHashes, m.bandSize)
+      def keySets(side: String) =
+        docs.select(col("doc_id").as(s"doc_$side"), col("ks").as(s"k$side"))
 
-        // ---- two scoring passes off the shared chain (measured: a single
-        // unified pairs∪repPairs overlap pass plans FEWER stages but runs
-        // 2–10× slower at micro-batch scale — the union defeats the
-        // per-side broadcast shapes AQE picks when the two candidate sets
-        // stay separate; LoopProbe r16 A/B)
-        val skB = skAll.join(cand.select(col("batch_id").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_semi")
-        val skC = pin(spark.read.schema("doc_id LONG, sk LONG")
-          .parquet(s"$dir/shingle_keys")
-          .join(cand.select(col("corpus_id").as("doc_id")).distinct(),
-            Seq("doc_id"), "left_semi")
-          .distinct())
-        val crossEdges = scoreCrossCandidates(cand, skB, skC, threshold)
-          .select(col("batch_id").as("doc_a"), col("corpus_id").as("doc_b"))
-        // within-batch: pairOverlapStats over the PRE-hashed key set
-        // (candidate docs are reps, so pruning skAll ≡ pruning the rep
-        // shingle table)
-        val repPairsP = pin(repPairs)
-        val candDocs = repPairsP.select(col("doc_a").as("doc_id"))
-          .union(repPairsP.select(col("doc_b").as("doc_id"))).distinct()
-        val shc = pin(skAll.join(candDocs, Seq("doc_id"), "left_semi"))
-        val sizes = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-        val inter = repPairsP
-          .join(shc.as("sa"), col("doc_a") === col("sa.doc_id"))
-          .join(shc.as("sb"), col("doc_b") === col("sb.doc_id") &&
-            col("sa.sk") === col("sb.sk"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("n_inter"))
-        val repOut = repPairsP
-          .join(inter, Seq("doc_a", "doc_b"), "left")
-          .na.fill(0L, Seq("n_inter"))
-          .join(sizes.select(col("doc_id"), col("n_sh").as("n_a")),
-            col("doc_a") === col("doc_id"))
-          .drop("doc_id")
-          .join(sizes.select(col("doc_id"), col("n_sh").as("n_b")),
-            col("doc_b") === col("doc_id"))
-          .drop("doc_id")
-          .select(col("doc_a"), col("doc_b"),
-            round(col("n_inter") / (col("n_a") + col("n_b") - col("n_inter")), 6)
-              .as("jaccard"))
-          .where(col("jaccard") >= threshold)
-          .select(col("doc_a"), col("doc_b"))
-        // member-pair expansion (dedupFirst's jaccard-mode tail; the carry
-        // is symmetric, and thresholding BEFORE expansion is sound because
-        // expansion carries jaccard unchanged)
-        val crossExp = repOut
-          .join(rep.select(col("rep").as("doc_a"), col("th").as("tha")), "doc_a")
-          .join(rep.select(col("rep").as("doc_b"), col("th").as("thb")), "doc_b")
-          .join(capped.select(col("th").as("tha"), col("doc_id").as("ia")), "tha")
-          .join(capped.select(col("th").as("thb"), col("doc_id").as("ib")), "thb")
-          .select(least(col("ia"), col("ib")).as("doc_a"),
-            greatest(col("ia"), col("ib")).as("doc_b"))
-        // equal-text pairs score 1.0 by identity — they pass any threshold
-        // a 1.0-scoring pair passes (dedupFirst emits lit(1.0))
-        val withinEq = capped.as("x")
-          .join(capped.as("y"),
-            col("x.th") === col("y.th") && col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-          .where(lit(1.0) >= threshold)
-        // ONE materialization barrier for the whole batch (vs one per
-        // scorer + one for the union): the checkpoint consumes every
-        // branch, warming skAll/allBuckets for `append` on the way
-        val edges = checkpointed(
-          crossEdges.unionAll(crossExp.unionAll(withinEq)))
-        pinned.foreach(_.unpersist(false))
-        new BatchScore(edges, skAll, allBuckets)
-      } catch {
-        case e: Throwable =>
-          (skAll :: allBuckets :: pinned).foreach(_.unpersist(false))
-          outstanding = outstanding.filterNot(d => (d eq skAll) || (d eq allBuckets))
-          throw e
-      }
+      // ---- cross pairs: batch vs the cached standing side under
+      // crossNearDupIndexed's masked read-time cap, scored against the
+      // candidate corpus docs' key sets (one aggregate over the semi-pruned
+      // index keys; a replayed append's duplicate rows collapse in it)
+      val purged = crossIndexPurged(spark, dir)
+      val masked = standingBuckets()
+        .join(broadcast(purged), Seq("doc_id"), "left_anti")
+      // the cap rides the session's touched-only oversize list — the
+      // same broadcast anti-join shape capBuckets ends in, without its
+      // per-batch full-union aggregate
+      val bucketsC = masked.join(broadcast(oversizedBuckets(masked)),
+        Seq("band", "sig"), "left_anti")
+      val cand = checkpointed(
+        crossCandidates(capBuckets(allBuckets, m.maxBucket), bucketsC)
+          .select(col("batch_id").as("doc_a"), col("corpus_id").as("doc_b")))
+      val corpusSets = spark.read.schema("doc_id LONG, sk LONG")
+        .parquet(s"$dir/shingle_keys")
+        .join(cand.select(col("doc_b").as("doc_id")), Seq("doc_id"), "left_semi")
+        .groupBy(col("doc_id").as("doc_b"))
+        .agg(collect_set(col("sk")).as("kb"))
+      val crossEdges = cand.join(keySets("a"), "doc_a").join(corpusSets, "doc_b")
+        .where(keySetJaccard >= threshold)
+        .select(col("doc_a"), col("doc_b"))
+
+      // ---- within-batch REP pairs (dedupPrelude + dedupFirst): one
+      // text-hash aggregate serves BOTH the mega-group cap and rep
+      // selection — the group min is the min over capped rows exactly
+      // because the cap drops whole groups
+      val g = checkpointed(docs.groupBy(col("th"))
+        .agg(count(lit(1)).as("k"), min(col("doc_id")).as("rep")))
+      val bigGroups = g.where(col("k") > m.maxBucket).select(col("th"))
+      val capped = docs.select(col("doc_id"), col("th"))
+        .join(broadcast(bigGroups), Seq("th"), "left_anti")
+      val rep = g.where(col("k") <= m.maxBucket).select(col("th"), col("rep"))
+      // rep buckets are the per-doc rows of `allBuckets` filtered to reps,
+      // capped over REP rows only — dedupPrelude's cap semantics exactly
+      val repBuckets = capBuckets(allBuckets.join(
+        rep.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi"), m.maxBucket)
+      val repOut = repBuckets.as("a")
+        .join(repBuckets.as("b"),
+          col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
+            col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .distinct()
+        .join(keySets("a"), "doc_a").join(keySets("b"), "doc_b")
+        .where(keySetJaccard >= threshold)
+        .select(col("doc_a"), col("doc_b"))
+      // member-pair expansion (dedupFirst's jaccard-mode tail; the carry
+      // is symmetric, and thresholding BEFORE expansion is sound because
+      // expansion carries jaccard unchanged)
+      val crossExp = repOut
+        .join(rep.select(col("rep").as("doc_a"), col("th").as("tha")), "doc_a")
+        .join(rep.select(col("rep").as("doc_b"), col("th").as("thb")), "doc_b")
+        .join(capped.select(col("th").as("tha"), col("doc_id").as("ia")), "tha")
+        .join(capped.select(col("th").as("thb"), col("doc_id").as("ib")), "thb")
+        .select(least(col("ia"), col("ib")).as("doc_a"),
+          greatest(col("ia"), col("ib")).as("doc_b"))
+      // equal-text pairs score 1.0 by identity — they pass any threshold
+      // a 1.0-scoring pair passes (dedupFirst emits lit(1.0))
+      val withinEq = capped.as("x")
+        .join(capped.as("y"),
+          col("x.th") === col("y.th") && col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+        .where(lit(1.0) >= threshold)
+      val edges = checkpointed(
+        crossEdges.unionAll(crossExp.unionAll(withinEq)))
+      new BatchScore(edges,
+        docs.select(col("doc_id"), explode(col("ks")).as("sk")), allBuckets)
     }
 
-    /** Write the scored batch's index rows — `writeIndexSide`'s exact rows
-      * and crash discipline (keys first, buckets second; probes dedup, a
+    /** Write the scored batch's index rows — `writeIndexSide`'s rows and
+      * crash discipline (keys first, buckets second; probes dedup, a
       * replayed append converges) — then extend the standing-bucket cache
       * in place with the rows just written. */
     def append(score: BatchScore): Unit = {
       score.sk.write.mode("append").parquet(s"$dir/shingle_keys")
-      score.buckets.write.mode("append").parquet(s"$dir/buckets")
+      // materialized apart from the per-doc batch row: the session keeps
+      // these narrow rows until the next rebase, never the key sets
+      val buckets = checkpointed(score.buckets)
+      buckets.write.mode("append").parquet(s"$dir/buckets")
       // touched-only oversize delta (see oversizedBuckets): count the
       // batch's keys on both sides — standing counts semi-pruned to the
       // broadcast touched-key set and excluding the batch's own ids (an
@@ -927,10 +918,12 @@ object Dedup {
       // keys whose union count crosses the cap into the monotone list.
       // BEFORE the cache extension, so the standing side is pre-batch.
       val purged = crossIndexPurged(spark, dir)
-      val batchCounts = checkpointed(score.buckets
+      val batchCounts = checkpointed(buckets
         .groupBy(col("band"), col("sig"))
         .agg(countDistinct(col("doc_id")).as("nb")))
-      val batchIds = score.buckets.select(col("doc_id")).distinct()
+      // every doc has exactly one band-0 row: the batch's distinct ids
+      // without an aggregate
+      val batchIds = buckets.where(col("band") === 0L).select(col("doc_id"))
       val maskedPre = standingBuckets()
         .join(broadcast(purged), Seq("doc_id"), "left_anti")
       val ns = maskedPre
@@ -949,24 +942,17 @@ object Dedup {
       if (!newOver.isEmpty)
         oversized = checkpointed(
           oversizedBuckets(maskedPre).unionAll(newOver).distinct())
-      // guard-side id cache rides the same fold (checkpoint: the rows
-      // must outlive the batch caches backing them)
-      if (knownIds != null)
-        knownIds = knownIds.unionAll(
-          checkpointed(score.sk.select(col("doc_id")).distinct()))
-      standing = standing.unionAll(score.buckets)
-      leaves = score.buckets :: leaves
-      score.sk.unpersist(false)
-      outstanding = outstanding.filterNot(d =>
-        (d eq score.sk) || (d eq score.buckets))
+      // guard-side id cache rides the same fold
+      if (knownIds != null) knownIds = knownIds.unionAll(batchIds)
+      standing = standing.unionAll(buckets)
       extensions += 1
       if (extensions % cacheRebaseEvery == 0) {
         // collapse the union trees: one O(standing) materialization per
         // `cacheRebaseEvery` batches keeps plan depth and leaf count flat
         val rebased = standing.localCheckpoint(true)
-        leaves.foreach(_.unpersist(false))
+        base.foreach(_.unpersist(false))
+        base = None // checkpoint blocks are GC-reclaimed once dropped
         standing = rebased
-        leaves = Nil // checkpoint blocks are GC-reclaimed once dropped
         if (knownIds != null) knownIds = knownIds.localCheckpoint(true)
       }
       ()
@@ -974,9 +960,8 @@ object Dedup {
 
     /** Release every cache this session owns (loop-termination hook). */
     def close(): Unit = {
-      (leaves ++ outstanding).foreach(_.unpersist(false))
-      leaves = Nil
-      outstanding = Nil
+      base.foreach(_.unpersist(false))
+      base = None
       standing = null
       oversized = null // checkpoint blocks are GC-reclaimed once dropped
       knownIds = null

@@ -258,7 +258,7 @@ object Streams {
 
   /** Right-size shuffle parallelism to the MICRO-BATCH for the duration
     * of one foreachBatch body — the r15 loop-overhead shave (LoopProbe):
-    * a 10-doc curation batch runs ~115 Spark jobs, and at the session's
+    * a 10-doc curation batch runs ~80 Spark jobs, and at the session's
     * 32 shuffle partitions most stages are 32 near-empty tasks whose
     * scheduling IS the batch's cost (interleaved A/B: ~8.6→5.7 s cold,
     * 5.1–6.7→4.3–4.8 s warm at 1 partition, identical results — every
@@ -967,7 +967,7 @@ object Streams {
     // bucket side and the index manifest are cached across micro-batches
     // (the loop owns the index while it runs — cache invalidation is the
     // session's own append), and each batch's cross + within scoring and
-    // index append share one shingle/banding/key chain instead of three.
+    // index append share one per-doc batch row instead of three chains.
     val scorer = graft.operators.Dedup.openCrossIndexSession(
       docs.sparkSession, indexDir)
     val query = docs.writeStream
@@ -981,50 +981,49 @@ object Streams {
         val prevEager = spark.conf.getOption("graft.eagerRelease")
         spark.conf.set("graft.eagerRelease", "true")
         try {
-          // Duplicate ids WITHIN a batch always mean corrupt input (two
-          // different docs would silently merge under one id).
-          val dupInBatch = b.groupBy(col("doc_id")).agg(count(lit(1)).as("k"))
-            .where(col("k") > 1).limit(1).collect()
-          require(dupInBatch.isEmpty,
-            s"batch $batchId carries duplicate doc_id ${dupInBatch.head.getLong(0)}")
-          // Batch-vs-index collision guard — but ONLY for a batch's FIRST
-          // delivery: a committed v<batchId> snapshot marks a replay, and
-          // a replayed batch legitimately collides with its own prior
+          // The index and registry guards below apply ONLY to a batch's
+          // FIRST delivery: a committed v<batchId> snapshot marks a replay,
+          // and a replayed batch legitimately collides with its own prior
           // index append (foreachBatch is at-least-once); replays rely on
-          // probe-side dedup instead. The guard streams the index's id
-          // column against a BROADCAST of the batch's ids — no shuffle,
-          // no aggregate, one column scan.
+          // probe-side dedup instead.
           val replay = committedSnapshots(spark, labelsDir)._2
             .exists(_.getName == s"v$batchId")
           val regPath = new org.apache.hadoop.fs.Path(s"$labelsDir/registry")
-          val regFs = regPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!replay) {
-            // probe the session's 8-bytes-per-DOC id cache, not the
-            // per-shingle-row parquet column (r16: the guard was the
-            // loop's last full-table per-batch scan)
-            val collisions = scorer.indexedIds()
-              .join(broadcast(b.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-              .limit(1).collect()
-            require(collisions.isEmpty,
-              s"batch $batchId reuses already-indexed doc_id ${collisions.head.getLong(0)}: " +
-                "curationLoop requires globally unique doc_ids")
-            // takedown registry (purgeCurationState): a NEW batch carrying
-            // an ever-purged id is refused — re-ingesting taken-down
-            // content is exactly what the registry exists to stop. Replays
-            // of pre-purge batches are exempt (detected above) and
-            // converge through the purged-batch filter below.
-            if (regFs.exists(regPath)) {
-              val resurrected = b.select(col("doc_id"))
-                .join(broadcast(spark.read.schema("doc_id LONG")
-                  .parquet(regPath.toString)), Seq("doc_id"), "left_semi")
-                .limit(1).collect()
-              require(resurrected.isEmpty,
-                s"batch $batchId carries doc_id ${resurrected.headOption
-                  .map(_.getLong(0)).getOrElse(-1L)}, which was purged from " +
-                  "this state — re-ingesting a taken-down doc is refused " +
-                  "(new id required if intentional)")
-            }
-          }
+          val registry =
+            if (!regPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+                .exists(regPath)) None
+            else Some(spark.read.schema("doc_id LONG").parquet(regPath.toString))
+          // The guards, in firing order, run as ONE Spark action: each
+          // contributes its lowest offending id under its own tag.
+          //   0: a duplicate id WITHIN the batch always means corrupt input
+          //      (two different docs would silently merge under one id);
+          //   1: an already-indexed id, probed on the session's 8-bytes-
+          //      per-DOC id cache against a broadcast of the batch's ids;
+          //   2: an id in the takedown registry (purgeCurationState) —
+          //      re-ingesting taken-down content is exactly what the
+          //      registry exists to stop. Replays of pre-purge batches are
+          //      exempt and converge through the purged-batch filter below.
+          val ids = b.select(col("doc_id").cast("long").as("doc_id"))
+          val dups = ids.groupBy(col("doc_id")).count().where(col("count") > 1)
+          val checks =
+            if (replay) Seq(0 -> dups)
+            else Seq(0 -> dups, 1 -> scorer.indexedIds()
+                .join(broadcast(ids), Seq("doc_id"), "left_semi")) ++
+              registry.map(r => 2 -> ids.join(broadcast(r), Seq("doc_id"), "left_semi"))
+          val hit = checks
+            .map { case (tag, d) => d.select(lit(tag).as("guard"), col("doc_id")) }
+            .reduce(_ unionAll _)
+            .groupBy(col("guard")).agg(min(col("doc_id")))
+            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+          require(!hit.contains(0),
+            s"batch $batchId carries duplicate doc_id ${hit(0)}")
+          require(!hit.contains(1),
+            s"batch $batchId reuses already-indexed doc_id ${hit(1)}: " +
+              "curationLoop requires globally unique doc_ids")
+          require(!hit.contains(2),
+            s"batch $batchId carries doc_id ${hit(2)}, which was purged from " +
+              "this state — re-ingesting a taken-down doc is refused " +
+              "(new id required if intentional)")
           // A REPLAY may postdate a purge that cited docs from this very
           // batch (stream crashed mid-batch, takedown ran, restart
           // replays). Recomputing edges / labels / the index append from
@@ -1035,14 +1034,13 @@ object Streams {
           // exactly what purgeCurationState left behind. New batches hit
           // the loud refusal above instead, so the anti-join only ever
           // drops rows on replay.
-          val bLive =
-            if (replay && regFs.exists(regPath))
-              b.join(broadcast(spark.read.schema("doc_id LONG")
-                .parquet(regPath.toString)), Seq("doc_id"), "left_anti")
-            else b
+          val bLive = registry match {
+            case Some(r) if replay => b.join(broadcast(r), Seq("doc_id"), "left_anti")
+            case _ => b
+          }
           val labels = readLatestLabels(spark, labelsDir)
           // Fused scorer (CrossIndexSession): cross-vs-index, within-batch
-          // and the index append share one shingle/banding/key chain, and
+          // and the index append share one per-doc batch row, and
           // the standing bucket side comes from the session cache instead
           // of a per-batch parquet re-scan. Edge-set identity with the
           // unfused pair (crossNearDupIndexed ∪ thresholded nearDupScores)

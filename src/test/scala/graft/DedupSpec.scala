@@ -813,17 +813,27 @@ class DedupSpec extends TestBase {
     // seed holds 2 copies (under cap), batch 1 pushes the stored union to
     // 4 (> 3) — batch 2's probe must see T's corpus-side buckets DROPPED,
     // exactly as crossNearDupIndexed's read-time capBuckets drops them.
+    // Around it: texts shorter than n tokens, empty texts, repeated
+    // shingles and an exact-duplicate pair inside a batch.
     val T = "the quick brown fox jumps over the lazy dog again and again"
+    val R = "red green blue red green blue red green"
     val seed = docs(1L -> T, 2L -> T,
-      10L -> "alpha beta gamma delta epsilon zeta", 11L -> "one two three four five six")
+      10L -> "alpha beta gamma delta epsilon zeta", 11L -> "one two three four five six",
+      12L -> "tiny doc", 13L -> "", 14L -> "la la la la la la la")
     val b1 = docs(101L -> T, 102L -> T,
-      110L -> "alpha beta gamma delta epsilon eta")
+      110L -> "alpha beta gamma delta epsilon eta",
+      111L -> "tiny doc", 112L -> "", 113L -> "la la la la la",
+      114L -> R, 115L -> R)
     val b2 = docs(201L -> T, 202L -> T,
-      210L -> "seven eight nine ten eleven twelve")
+      210L -> "seven eight nine ten eleven twelve",
+      211L -> s"$R red", 212L -> "")
     val st = java.nio.file.Files.createTempDirectory("graft-cisession")
     val dir = s"$st/index"
     Dedup.buildCrossNearDupIndex(seed, dir, maxBucket = 3)
-    val session = Dedup.openCrossIndexSession(spark, dir)
+    // every append rebases the standing cache (the loop specs cover the
+    // default union-extended path), so batch 2 probes a rebased cache and
+    // the replayed append rebases a second time
+    val session = new Dedup.CrossIndexSession(spark, dir, cacheRebaseEvery = 1)
     val t = 0.5
     Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
       // unfused expectation BEFORE the append (same standing state the
@@ -837,13 +847,19 @@ class DedupSpec extends TestBase {
       val got = score.edges.as[(Long, Long)].collect().toSet
       assert(got == (wantCross ++ wantWithin),
         s"batch $i: fused $got != unfused ${wantCross ++ wantWithin}")
-      if (i == 0)
+      if (i == 0) {
         assert(wantCross.exists(_._2 == 1L),
           "batch 1 must still match the under-cap T family")
-      else {
+        assert(Set((111L, 12L), (112L, 13L), (113L, 14L), (114L, 115L))
+          .subsetOf(got), s"short/empty/repeated/in-batch pairs missing: $got")
+        // a replayed append: the same rows land twice in the index and in
+        // the session's standing cache
+        session.append(score)
+      } else {
         assert(!wantCross.exists(p => Set(1L, 2L, 101L, 102L).contains(p._2)),
           "batch 2's T probes must be blocked by the grown-cap boundary")
-        assert(got == wantCross ++ wantWithin)
+        assert(Set((211L, 114L), (212L, 13L), (212L, 112L)).subsetOf(got),
+          s"batch 2 must match batch 1's appended docs: $got")
       }
       session.append(score)
     }

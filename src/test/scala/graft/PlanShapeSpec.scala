@@ -384,4 +384,61 @@ class PlanShapeSpec extends TestBase {
     assert(scoring.nonEmpty && scoring.forall(reachesWindowUnshuffled),
       "no Exchange may sit between the lag Window and the scoring aggregate")
   }
+
+  test("CrossIndexSession.scoreBatch: the edge plan scans checkpoints — " +
+      "no cached relation, no join keyed on the shingle key") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.operators.Dedup
+    val d = Tables(spark, sf("sf0.001"), "documents")
+      .select(col("doc_id"), col("text"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-edgeplan")
+      .resolve("index").toString
+    Dedup.buildCrossNearDupIndex(d.where("doc_id < 40"), dir)
+    val batch = d.where("doc_id < 10").select((col("doc_id") + 1000).as("doc_id"),
+      concat(col("text"), lit(" extra")).as("text"))
+    // every SQL execution in order; the edge set is scoreBatch's last
+    val plans = new java.util.concurrent.LinkedBlockingQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.put(qe.analyzed.output.map(_.name).mkString(",") -> qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val session = Dedup.openCrossIndexSession(spark, dir)
+    spark.listenerManager.register(listener)
+    val seen = try {
+      session.scoreBatch(batch, 0.8)
+      // listener events arrive in order: once the marker query is seen,
+      // every scoreBatch execution has been delivered
+      spark.range(1).select(lit(1).as("edge_plan_marker")).collect()
+      Iterator.continually(plans.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(p => p != null && p._1 != "edge_plan_marker").toVector
+    } finally {
+      spark.listenerManager.unregister(listener)
+      session.close()
+    }
+    val edgePlan = seen.filter(_._1 == "doc_a,doc_b").last._2
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    val all = nodes(edgePlan)
+    val cached = all.collect { case c: InMemoryTableScanExec => c }
+    assert(cached.isEmpty, s"edge plan reads ${cached.size} cached relations")
+    val skJoins = all.collect {
+      case j: BaseJoinExec
+          if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "sk")) => j
+    }
+    assert(skJoins.isEmpty, "edge plan joins on the shingle key:\n" +
+      skJoins.map(_.simpleString(200)).mkString("\n"))
+    assert(all.exists(_.isInstanceOf[RDDScanExec]),
+      "the batch-scale frames must be read as checkpoint scans")
+  }
 }

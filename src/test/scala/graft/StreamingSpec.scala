@@ -732,6 +732,30 @@ class StreamingSpec extends TestBase {
         .awaitTermination()
     }
     assert(ex.getMessage.contains("purged"), ex.getMessage)
+
+    // the other first-delivery refusals, each batch on a fresh checkpoint
+    // (so it is batch 0, whose snapshot v0 is pruned by now: a first
+    // delivery). A batch tripping several guards reports the first in
+    // firing order: duplicate id, already-indexed id, registry hit.
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(lblDir, "v0")))
+    def refusal(name: String, rows: org.apache.spark.sql.DataFrame): String = {
+      val in = java.nio.file.Files.createTempDirectory(s"graft-curation-$name")
+      dropAsFile(rows, in, s"$name.parquet")
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        Streams.curationLoop(
+          Streams.documentsStream(spark, in.toString, maxFilesPerTrigger = 1),
+          idxDir, lblDir, threshold = 0.8, st.resolve(s"ckpt-$name").toString)
+          .awaitTermination()
+      }.getMessage
+    }
+    val indexed = corpus.where(col("doc_id") === 20L) // indexed, never purged
+    val dupMsg = refusal("dup", Seq(6000L -> "fresh words one two three",
+        6000L -> "other words four five six").toDF("doc_id", "text")
+      .unionAll(indexed).unionAll(bad))
+    assert(dupMsg.contains("batch 0 carries duplicate doc_id 6000"), dupMsg)
+    val idxMsg = refusal("indexed", indexed.unionAll(bad))
+    assert(idxMsg.contains("batch 0 reuses already-indexed doc_id 20: " +
+      "curationLoop requires globally unique doc_ids"), idxMsg)
   }
 
   test("loop takedown repairs a crashed edge rewrite BEFORE listing evidence") {

@@ -42,12 +42,14 @@ object ModelQueries {
   /** Spam prefix for the MULTILINGUAL fixtures — longer than [[lmSpam]]
     * (per-language models train on ~70-doc strata, so a twin needs more
     * junk mass to clear the per-lang calibrated cut in every language;
-    * windows measured in MlGateProbe). */
+    * windows measured, EXPLAIN.md "Round 17: the per-language LM gate"
+    * and the r18/r19 lane sections). */
   private val mlSpam = "the a of to and " * 8
   /** Per-lang calibrated-cut offset (micro-units above each language's
-    * train self-score mean) for txt_lm_gate_ml — the MlGateProbe-measured
-    * window (max originals-above-base vs min twins-above-base over ALL
-    * langs at sf0.01 and sf0.001) contains this value with margin. */
+    * train self-score mean) for txt_lm_gate_ml — the measured window
+    * (max originals-above-base vs min twins-above-base over ALL langs at
+    * sf0.01 and sf0.001, EXPLAIN.md "Round 19: Arabic/Devanagari/Thai
+    * lanes") contains this value with margin. */
   private val mlGateOffsetMicro = 255000L
   /** Trigram-gate cut: measured consistent ≈ 0.26, crossed ≈ 0.49 at
     * sf0.01 (the 0.699/3 trigram-backoff gap) — 0.37 splits the gap. */
@@ -56,14 +58,15 @@ object ModelQueries {
     * ≈ 0.200 (= −log10(251/2507)/5) vs crossed ≈ 0.340 (one α·½ backoff
     * at pos 5 — the 0.699/5 gap) — 0.27 splits with ~0.07 margins. */
   private val lm5GateCut = 0.27
-  /** cur_release calibrated-cut offset — same probe, PII-planted
+  /** cur_release calibrated-cut offset — same measurement, PII-planted
     * fixture. */
   private val relOffsetMicro = 255000L
   /** cur_release5 calibrated-cut offset (r19): the order-5 SELF-score
     * mean sits lower than order-2 (deeper contexts are attested
     * in-corpus) while the spam twins' order-5 scores sit HIGHER above it
     * (the OOV spam prefix backs off through more α factors), so the
-    * order-5 funnels carry their own MlGateProbe-measured offset,
+    * order-5 funnels carry their own measured offset (EXPLAIN.md
+    * "Round 19: the release funnel on the order-5 per-language model"),
     * shared by the column-keyed and prediction-keyed rows: the `pii5`
     * arm's windows are (274802, 442203) at sf0.01 / (296372, 452683) at
     * sf0.001 and the `ided5` arm's (274802, 442203) / (348473, 452683)
@@ -307,10 +310,9 @@ object ModelQueries {
 
   /** (train, corpus) of the txt_lm_gate_ml row — four strata: originals,
     * ASCII-spam twins (+1e6), digits-only zero-token docs (+3e6), and an
-    * unmodeled-lang stratum (+4e6, lang 'xx'). Exposed for
-    * [[MlGateProbe]] so the committed cut's margins are measured on the
-    * EXACT fixture. */
-  private[graft] def mlGateFixture(s: SparkSession, dir: String)
+    * unmodeled-lang stratum (+4e6, lang 'xx'). The committed cut's
+    * margins were measured on this EXACT fixture. */
+  private def mlGateFixture(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val d = mlDocs(s, dir)
     val corpus = d
@@ -328,8 +330,8 @@ object ModelQueries {
   /** (lmTrain, corpus) of the cur_release row — originals (PII-planted,
     * zh transliterated), spam twins (+1e6), exact copies (+2e6,
     * doc_id < 20), digits-only zero-token docs (+3e6), unmodeled-lang
-    * 'xx' stratum (+4e6). Exposed for [[MlGateProbe]]. */
-  private[graft] def releaseFixture(s: SparkSession, dir: String)
+    * 'xx' stratum (+4e6). */
+  private def releaseFixture(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val planted = piiPlantLangMl(s, dir)
     val corpus = planted
@@ -453,7 +455,7 @@ object ModelQueries {
          | ORDER BY doc_id""".stripMargin
     ) { (s, dir) =>
       val d = docs(s, dir)
-      LangModel.ppl(idText(d.where(bkt >= 20)), idText(d.where(bkt < 20)))
+      LangModel.pplN(idText(d.where(bkt >= 20)), idText(d.where(bkt < 20)), 2)
         .orderBy("doc_id")
     },
 
@@ -481,8 +483,8 @@ object ModelQueries {
       val d = docs(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-lm-idx")
       LangModel.buildLmIndex(idText(d.where(bkt >= 20)), s"$tmp/model")
-      val out = LangModel.scoreAgainstLmIndex(s"$tmp/model",
-          idText(d.where(bkt < 20)))
+      val out = LangModel.scoreAgainstLmNIndex(s"$tmp/model",
+          idText(d.where(bkt < 20)), 2, ml = false)
         .orderBy("doc_id").localCheckpoint(true)
       deleteRecursively(tmp)
       out
@@ -503,8 +505,8 @@ object ModelQueries {
       LangModel.buildLmIndex(idText(d.where(bkt >= 40)), s"$tmp/model")
       LangModel.appendToLmIndex(idText(d.where(bkt >= 20 && bkt < 40)),
         s"$tmp/model", ingestBatch = 0L)
-      val out = LangModel.scoreAgainstLmIndex(s"$tmp/model",
-          idText(d.where(bkt < 20)))
+      val out = LangModel.scoreAgainstLmNIndex(s"$tmp/model",
+          idText(d.where(bkt < 20)), 2, ml = false)
         .orderBy("doc_id").localCheckpoint(true)
       deleteRecursively(tmp)
       out
@@ -525,8 +527,8 @@ object ModelQueries {
       LangModel.buildLmIndex(idText(d.where(bkt >= 20)), s"$tmp/model")
       LangModel.purgeFromLmIndex(idText(d.where(bkt >= 80)),
         s"$tmp/model", purgeId = 0L)
-      val out = LangModel.scoreAgainstLmIndex(s"$tmp/model",
-          idText(d.where(bkt < 20)))
+      val out = LangModel.scoreAgainstLmNIndex(s"$tmp/model",
+          idText(d.where(bkt < 20)), 2, ml = false)
         .orderBy("doc_id").localCheckpoint(true)
       deleteRecursively(tmp)
       out
@@ -556,8 +558,8 @@ object ModelQueries {
       LangModel.purgeFromLmIndex(idText(d.where(bkt >= 80)),
         model, purgeId = 0L)
       LangModel.compactLmIndex(s, model)
-      val out = LangModel.scoreAgainstLmIndex(model,
-          idText(d.where(bkt < 20)))
+      val out = LangModel.scoreAgainstLmNIndex(model,
+          idText(d.where(bkt < 20)), 2, ml = false)
         .orderBy("doc_id").localCheckpoint(true)
       deleteRecursively(tmp)
       out
@@ -584,8 +586,8 @@ object ModelQueries {
             m, ingestBatch = 0L)
         }, tmp)
       LangModel.pruneLmIndex(s, model, minCount = 30L)
-      val out = LangModel.scoreAgainstLmIndex(model,
-          idText(d.where(bkt < 20)))
+      val out = LangModel.scoreAgainstLmNIndex(model,
+          idText(d.where(bkt < 20)), 2, ml = false)
         .orderBy("doc_id").localCheckpoint(true)
       deleteRecursively(tmp)
       out
@@ -629,7 +631,7 @@ object ModelQueries {
          | ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
       val d = mlDocs(s, dir)
-      LangModelMl.pplMl(d.where(bkt >= 20), d.where(bkt < 20))
+      LangModelMl.pplNMl(d.where(bkt >= 20), d.where(bkt < 20), 2)
         .orderBy("doc_id")
     },
 
@@ -644,7 +646,8 @@ object ModelQueries {
     // counted in n_zero_tok, never silently dropped: the single-model
     // [a-z]+ gate's failure mode), and an unmodeled-lang stratum ('xx' —
     // scored nothing, kept no, visible as n_in − n_zero_tok − n_scored).
-    // Offset window measured at sf0.01 AND sf0.001 (MlGateProbe).
+    // Offset window measured at sf0.01 AND sf0.001 (EXPLAIN.md "Round
+    // 17: the per-language LM gate").
     QueryDef("txt_lm_gate_ml")({
       val corpus =
         s"""(SELECT doc_id, text, lang FROM $mlDocsSql m
@@ -676,11 +679,11 @@ object ModelQueries {
       // standing grown model persisted once per fingerprint (r20); the
       // probe is read-only, so no per-run copy
       val model = cachedModel(dir, "lmml2-b40a20", fpWithLang(d)) { m =>
-        LangModel.buildLmMlIndex(d.where(bkt >= 40), m)
+        LangModel.buildLmIndex(d.where(bkt >= 40), m, ml = true)
         LangModel.appendToLmIndex(d.where(bkt >= 20 && bkt < 40),
           m, ingestBatch = 0L)
       }
-      LangModel.scoreAgainstLmMlIndex(model, d.where(bkt < 20))
+      LangModel.scoreAgainstLmNIndex(model, d.where(bkt < 20), 2, ml = true)
         .orderBy("doc_id")
     },
 
@@ -707,7 +710,7 @@ object ModelQueries {
       // standing model persisted once per fingerprint (r20); the takedown
       // MUTATES it, so each run purges a filesystem COPY
       val built = cachedModel(dir, "lmml2-b20", fpWithLang(d)) { m =>
-        LangModel.buildLmMlIndex(d.where(bkt >= 20), m)
+        LangModel.buildLmIndex(d.where(bkt >= 20), m, ml = true)
       }
       val model = modelCopy(built, tmp)
       val departing = d.where(bkt >= 80).localCheckpoint(true)
@@ -724,8 +727,8 @@ object ModelQueries {
       // applied-purge ledger (committed atomically inside the delta
       // marker) makes the retried family a no-op
       run().count()
-      val out = LangModel.scoreAgainstLmMlIndex(model,
-          d.where(bkt < 20))
+      val out = LangModel.scoreAgainstLmNIndex(model,
+          d.where(bkt < 20), 2, ml = true)
         .orderBy("doc_id").localCheckpoint(true)
       deleteRecursively(tmp)
       out
@@ -767,7 +770,7 @@ object ModelQueries {
       // copy and the two stagings overlap (guide §2.6, r20)
       graft.operators.Par.runUnit(Seq(
         () => modelCopy(cachedModel(dir, "lmml2-b20", fpWithLang(d)) { m =>
-          LangModel.buildLmMlIndex(d.where(bkt >= 20), m)
+          LangModel.buildLmIndex(d.where(bkt >= 20), m, ml = true)
         }, stDir),
         () => stageAsFile(withMeta.where(bkt < 10), inDir, "b0.parquet"),
         () => stageAsFile(withMeta.where(bkt >= 10 && bkt < 20), inDir,
@@ -818,7 +821,7 @@ object ModelQueries {
         .unionAll(d.where(col("doc_id") < 5)
           .select((col("doc_id") + 7000000L).as("doc_id"),
             lit("the a").as("text")))
-      LangModel.ppl3(idText(d.where(bkt >= 20)), score)
+      LangModel.pplN(idText(d.where(bkt >= 20)), score, 3)
         .orderBy("doc_id")
     },
 
@@ -837,11 +840,12 @@ object ModelQueries {
       // standing grown order-3 model fingerprint-cached (r20); the probe
       // is read-only, so no per-run copy
       val model = cachedModel(dir, "lm3-b40a20", idText(d)) { m =>
-        LangModel.buildLm3Index(idText(d.where(bkt >= 40)), m)
+        LangModel.buildLmIndex(idText(d.where(bkt >= 40)), m, 3)
         LangModel.appendToLmIndex(idText(d.where(bkt >= 20 && bkt < 40)),
           m, ingestBatch = 0L)
       }
-      LangModel.scoreAgainstLm3Index(model, idText(d.where(bkt < 20)))
+      LangModel.scoreAgainstLmNIndex(model, idText(d.where(bkt < 20)), 3,
+          ml = false)
         .orderBy("doc_id")
     },
 
@@ -859,13 +863,13 @@ object ModelQueries {
       // txt_lm3_indexed); prune MUTATES, so each run prunes a COPY (r20)
       val model = modelCopy(
         cachedModel(dir, "lm3-b40a20", idText(d)) { m =>
-          LangModel.buildLm3Index(idText(d.where(bkt >= 40)), m)
+          LangModel.buildLmIndex(idText(d.where(bkt >= 40)), m, 3)
           LangModel.appendToLmIndex(idText(d.where(bkt >= 20 && bkt < 40)),
             m, ingestBatch = 0L)
         }, tmp)
       LangModel.pruneLmIndex(s, model, minCount = 30L)
-      val out = LangModel.scoreAgainstLm3Index(model,
-          idText(d.where(bkt < 20)))
+      val out = LangModel.scoreAgainstLmNIndex(model,
+          idText(d.where(bkt < 20)), 3, ml = false)
         .orderBy("doc_id").localCheckpoint(true)
       deleteRecursively(tmp)
       out
@@ -899,9 +903,9 @@ object ModelQueries {
       val probe = base.where(col("doc_id") < 40).select(col("doc_id"),
         when(col("doc_id") % 2 === 0, lit("alpha beta gamma"))
           .otherwise(lit("alpha beta epsilon")).as("text"))
-      LangModel.ppl(train, probe)
+      LangModel.pplN(train, probe, 2)
         .select(col("doc_id"), col("xent").as("xent2"))
-        .join(LangModel.ppl3(train, probe)
+        .join(LangModel.pplN(train, probe, 3)
           .select(col("doc_id"), col("xent").as("xent3")), Seq("doc_id"))
         .withColumn("kept3", (col("xent3") <= lm3GateCut).cast("int"))
         .orderBy("doc_id")
@@ -923,11 +927,11 @@ object ModelQueries {
     }) { (s, dir) =>
       val d = mlDocs(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-lm3-ml-idx")
-      LangModel.buildLmMl3Index(d.where(bkt >= 40), s"$tmp/model")
+      LangModel.buildLmIndex(d.where(bkt >= 40), s"$tmp/model", 3, ml = true)
       LangModel.appendToLmIndex(d.where(bkt >= 20 && bkt < 40),
         s"$tmp/model", ingestBatch = 0L)
-      val out = LangModel.scoreAgainstLmMl3Index(s"$tmp/model",
-          d.where(bkt < 20))
+      val out = LangModel.scoreAgainstLmNIndex(s"$tmp/model",
+          d.where(bkt < 20), 3, ml = true)
         .orderBy("doc_id").localCheckpoint(true)
       deleteRecursively(tmp)
       out
@@ -985,9 +989,9 @@ object ModelQueries {
       }
       val train = strata(crossed = false)
       val probe = strata(crossed = true)
-      LangModelMl.pplMl(train, probe)
+      LangModelMl.pplNMl(train, probe, 2)
         .select(col("doc_id"), col("lang"), col("xent").as("xent2"))
-        .join(LangModelMl.ppl3Ml(train, probe)
+        .join(LangModelMl.pplNMl(train, probe, 3)
           .select(col("doc_id"), col("xent").as("xent3")), Seq("doc_id"))
         .withColumn("kept3", (col("xent3") <= lm3GateCut).cast("int"))
         .orderBy("doc_id")
@@ -1034,7 +1038,7 @@ object ModelQueries {
     }) { (s, dir) =>
       val d = mlDocs(s, dir)
       val tmp = java.nio.file.Files.createTempDirectory("graft-lm5-ml-idx")
-      LangModel.buildLmMl5Index(d.where(bkt >= 40), s"$tmp/model")
+      LangModel.buildLmIndex(d.where(bkt >= 40), s"$tmp/model", 5, ml = true)
       LangModel.appendToLmIndex(d.where(bkt >= 20 && bkt < 40),
         s"$tmp/model", ingestBatch = 0L)
       val out = LangModel.scoreAgainstLmNIndex(s"$tmp/model",
@@ -1061,7 +1065,7 @@ object ModelQueries {
       // so each run prunes a COPY (r20)
       val model = modelCopy(
         cachedModel(dir, "lm5-b40a20", idText(d)) { m =>
-          LangModel.buildLm5Index(idText(d.where(bkt >= 40)), m)
+          LangModel.buildLmIndex(idText(d.where(bkt >= 40)), m, 5)
           LangModel.appendToLmIndex(idText(d.where(bkt >= 20 && bkt < 40)),
             m, ingestBatch = 0L)
         }, tmp)
@@ -1301,7 +1305,7 @@ object ModelQueries {
       graft.operators.Par.runUnit(Seq(
         () => modelRef.set(NorthStarQueries.cachedArtifact(dir,
           s"rel-model-cuts-$relOffsetMicro", fpWithLang(planted)) { out =>
-            LangModel.buildLmMlIndex(planted, s"$out/model")
+            LangModel.buildLmIndex(planted, s"$out/model", ml = true)
             graft.operators.Curation.writeReleaseCuts(planted, s"$out/model",
               relOffsetMicro, s"$out/cuts")
           }),
@@ -1402,7 +1406,7 @@ object ModelQueries {
       graft.operators.Par.runUnit(Seq(
         () => modelRef.set(NorthStarQueries.cachedArtifact(dir,
           s"rel5-model-cuts-$rel5OffsetMicro", fpWithLang(planted)) { out =>
-            LangModel.buildLmMl5Index(planted, s"$out/model")
+            LangModel.buildLmIndex(planted, s"$out/model", 5, ml = true)
             graft.operators.Curation.writeReleaseCuts(planted, s"$out/model",
               rel5OffsetMicro, s"$out/cuts")
           }),
@@ -1486,7 +1490,7 @@ object ModelQueries {
       graft.operators.Par.runUnit(Seq(
         () => modelRef.set(NorthStarQueries.cachedArtifact(dir,
           s"reli-model-cuts-$relOffsetMicro", fpWithLang(keyedTrain)) { out =>
-            LangModel.buildLmMlIndex(keyedTrain, s"$out/model")
+            LangModel.buildLmIndex(keyedTrain, s"$out/model", ml = true)
             graft.operators.Curation.writeReleaseCuts(keyedTrain, s"$out/model",
               relOffsetMicro, s"$out/cuts")
           }),
@@ -1520,7 +1524,8 @@ object ModelQueries {
     // column-keyed × order-5). The mislabeled Han-claiming-en stratum
     // gates in the zh lane under the zh 5-gram; cuts calibrate on the
     // keyed train's order-5 self-scores (same offset window as pii5 —
-    // measured, MlGateProbe ided5 arm).
+    // measured, EXPLAIN.md "Round 19: the release funnel on the order-5
+    // per-language model", ided5 row).
     QueryDef("cur_release5_ided")(
       graft.operators.Curation.releaseIded5Sql(
         s"""(SELECT doc_id, text, lang FROM $piiPlantLangMlSql p
@@ -1562,7 +1567,7 @@ object ModelQueries {
       // prune MUTATES, so each run prunes a COPY (r20)
       val model = modelCopy(
         cachedModel(dir, "lmml5-b40a20", fpWithLang(d)) { m =>
-          LangModel.buildLmMl5Index(d.where(bkt >= 40), m)
+          LangModel.buildLmIndex(d.where(bkt >= 40), m, 5, ml = true)
           LangModel.appendToLmIndex(d.where(bkt >= 20 && bkt < 40),
             m, ingestBatch = 0L)
         }, tmp)

@@ -494,8 +494,9 @@ object Curation {
     *   1. LR quality gate ([[TextAnalysis.lrQuality]] pass) — pure
     *      projection;
     *   2. per-language statistical LM gate — each document scored under
-    *      its OWN language's model ([[LangModelMl.pplMl]]) against that
-    *      language's CALIBRATED cut ([[LangModelMl.calibratedCutsMl]]:
+    *      its OWN language's order-2 model ([[LangModelMl.pplNMl]])
+    *      against that language's CALIBRATED cut
+    *      ([[LangModelMl.cutsFromSelfScores]]:
     *      train self-score mean + `offsetMicro`, exact integer
     *      micro-units — the CCNet shape) with the EXPLICIT zero-token
     *      policy: a quality survivor with no token under the
@@ -513,41 +514,31 @@ object Curation {
     * operator — this row pins the COMPOSITION's exact semantics, not
     * new kernels. */
   def release(corpus: DataFrame, lmTrain: DataFrame,
-      offsetMicro: Long): DataFrame = {
-    // Every stage lands as a FLAG on one per-doc row, so the corpus and
-    // the LM scoring chain each appear in the plan exactly once and the
-    // funnel is ONE aggregate — the naive five-countBy-joins form
-    // replicated the scoring subtree per reference (a ~260-join plan at
-    // fixture scale that recomputed the model chain three times).
-    // model tables + cuts pinned eagerly (vocabulary-scale / per-lang
-    // rows) — see LangModelMl.gateMl: each feeds many join sides and an
-    // unpinned plan re-scans the train corpus per reference. The two
-    // independent count aggregates overlap (guide §2.6 — each is a small
-    // job whose straggler tail would otherwise idle the executors).
-    val unibi = Par.run(Seq(
-      () => LangModelMl.unigramCountsMl(lmTrain).localCheckpoint(true),
-      () => LangModelMl.bigramCountsMl(lmTrain).localCheckpoint(true)))
-    val (uni, bi) = (unibi(0), unibi(1))
-    val cuts = LangModelMl.calibratedCutsMl(lmTrain, uni, bi, offsetMicro)
-      .localCheckpoint(true)
-    releaseAgainst(corpus, uni, bi, cuts)
-  }
+      offsetMicro: Long): DataFrame =
+    releaseN(corpus, lmTrain, offsetMicro, 2)
 
   /** The release funnel RE-BASED on the ORDER-5 per-language model (r19
     * — CCNet's production KenLM order, composed end to end): identical
-    * pinned kernel ([[releaseWith]]), identical stages, but the
-    * statistical gate scores every document under its own language's
-    * 5-gram Stupid Backoff model and the per-lang cuts calibrate on the
-    * train corpus's ORDER-5 self-scores (which sit LOWER than order-2 —
-    * deeper contexts are attested in-corpus — so the offset is its own
-    * MlGateProbe-measured constant, not order-2's). Five vocabulary-
-    * scale count tables pinned eagerly, then ONE scoring pass over the
-    * train self-scores and the corpus ([[release5Scores]]), pinned once:
-    * the cuts come from side 0, the corpus scores from side 1. */
+    * stages, but the statistical gate scores every document under its
+    * own language's 5-gram Stupid Backoff model and the per-lang cuts
+    * calibrate on the train corpus's ORDER-5 self-scores (which sit
+    * LOWER than order-2 — deeper contexts are attested in-corpus — so
+    * the offset is its own measured constant, not order-2's: EXPLAIN.md
+    * "Round 19: the release funnel on the order-5 per-language model"). */
   def release5(corpus: DataFrame, lmTrain: DataFrame,
-      offsetMicro: Long): DataFrame = {
+      offsetMicro: Long): DataFrame =
+    releaseN(corpus, lmTrain, offsetMicro, 5)
+
+  /** The release funnel at model order `n` — ONE body for every order
+    * ([[release]] runs it at 2, [[release5]] at 5): `n` vocabulary-scale
+    * count tables pinned eagerly, then ONE scoring pass over the train
+    * self-scores and the corpus ([[release5Scores]]), pinned once: the
+    * cuts come from side 0, the corpus scores from side 1, and
+    * [[releaseWith]] runs the funnel. */
+  private def releaseN(corpus: DataFrame, lmTrain: DataFrame,
+      offsetMicro: Long, n: Int): DataFrame = {
     // the train corpus is tokenized ONCE (r19 shared-tokenization seam):
-    // the order-5 chain consumes the token arrays six times (five gram
+    // an order-n chain consumes the token arrays n + 1 times (n gram
     // tables + the self-score stream), and re-running the regex
     // tokenizer per consumer was the dominant measured cost (MicroTime:
     // 36 -> 21 s warm at sf0.1). One row per train doc — the reference
@@ -563,9 +554,9 @@ object Curation {
     // uni/bi tables stay memory-resident (genuinely vocabulary-scale).
     val disk = org.apache.spark.storage.StorageLevel.DISK_ONLY
     val toked = LangModelMl.tokenizedMl(lmTrain).localCheckpoint(true, disk)
-    // the five gram aggregates are independent reads of the (eagerly
+    // the gram aggregates are independent reads of the (eagerly
     // materialized) tokenized frame — overlap them (guide §2.6) instead
-    // of paying five sequential stage tails. Width 2, NOT 5: these are
+    // of paying n sequential stage tails. Width 2, NOT n: these are
     // CORPUS-scale aggregates (the count-1 tail makes an order-5 table
     // near one row per token position), and five concurrent deep
     // aggregates exhausted the execution pool at 10× sf0.1 under the
@@ -581,7 +572,7 @@ object Curation {
     // there is no hot-key reducer to split — the hash of the full
     // (lang, w1..wk) key already spreads. The salted form is deleted;
     // EXPLAIN.md keeps the measurement.
-    val tables = Par.run((1 to 5).map(k => () =>
+    val tables = Par.run((1 to n).map(k => () =>
       if (k <= 2) LangModelMl.gramCountsMlFromTs(toked, k).localCheckpoint(true)
       else LangModelMl.gramCountsMlFromTs(toked, k).localCheckpoint(true, disk)),
       maxThreads = 2)
@@ -596,32 +587,26 @@ object Curation {
     })
   }
 
-  /** [[release5]]'s one scoring pass, unpinned: the tokenized train
-    * frame (`side = 0`) and the scoreable corpus docs (`side = 1`)
-    * through one order-5 chain — (side, doc_id, lang, xent). `side`
-    * keeps a train doc and a corpus doc sharing a doc_id apart
-    * ([[LangModel.scoreStreamN]]'s one-sequence-per-key precondition). */
+  /** The release funnel's one scoring pass, unpinned: the tokenized
+    * train frame (`side = 0`) and the scoreable corpus docs (`side = 1`)
+    * through one chain at the order of `tables` (lowest first) — (side,
+    * doc_id, lang, xent). `side` keeps a train doc and a corpus doc
+    * sharing a doc_id apart ([[LangModel.scoreStreamN]]'s
+    * one-sequence-per-key precondition). */
   private[graft] def release5Scores(toked: DataFrame, tables: Seq[DataFrame],
       scoreable: DataFrame): DataFrame = {
     val sides = toked.select(lit(0).as("side"), col("*")).unionAll(
       LangModelMl.tokenizedMl(scoreable).select(lit(1).as("side"), col("*")))
-    LangModelMl.scoreStreamNMlFromTs(sides, tables, 5)
+    LangModelMl.scoreStreamNMlFromTs(sides, tables, tables.size)
       .select(col("side"), col("doc_id"), col("lang"), col("xent"))
   }
-
-  /** The release funnel against GIVEN order-2 model tables and
-    * calibrated cuts — [[releaseWith]] specialized to the bigram scorer
-    * (the r16–r18 shape; [[release]] derives its tables into this). */
-  private[graft] def releaseAgainst(corpus: DataFrame, uni: DataFrame,
-      bi: DataFrame, cuts: DataFrame): DataFrame =
-    releaseWith(corpus, b => (LangModelMl.scoreWithMl(b, uni, bi), cuts))
 
   /** THE pinned release kernel against a pluggable per-language scorer
     * (r19 — one kernel, every model order): `scorer` maps the
     * quality-surviving scoreable docs (doc_id, text, lang) to their
     * (doc_id, xent) under each doc's own language's model and the
-    * per-lang cuts (lang, cut_micro) — fixed for [[release]] and the
-    * stream monitors, derived in the scoring pass for [[release5]]. All
+    * per-lang cuts (lang, cut_micro) — fixed for the stream monitors,
+    * derived in the scoring pass for [[release]]/[[release5]]. All
     * release rows — column-keyed, prediction-keyed, streaming, order-2
     * and order-5 — ride THIS function, so the funnel semantics can never
     * fork by entry point. Pure function of its inputs: one batch scan +
@@ -689,8 +674,8 @@ object Curation {
     * funnel (r18; SHAPE-AWARE r19): the train corpus self-scored under
     * the PERSISTED `tok=ml` model at `modelDir` — at the model's OWN
     * marker-declared order, so an `order=5` layout calibrates on order-5
-    * self-scores (CCNet's production gate) while the r18 order-2 layout
-    * keeps its exact path — per-lang exact-integer-micro means + offset,
+    * self-scores (CCNet's production gate) and an order-2 layout on
+    * order-2 ones — per-lang exact-integer-micro means + offset,
     * a one-row-per-language parquet at `cutsDir`, the artifact
     * [[graft.streaming.Streams.releaseMonitor]] reads once per run.
     * Calibration is a one-time (re)run whenever the standing model is

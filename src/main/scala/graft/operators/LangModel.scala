@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Count-based bigram language model with Stupid Backoff smoothing (Brants
-  * et al., "Large Language Models in Machine Translation", EMNLP 2007) —
+/** Count-based n-gram language model (orders 2–[[LangModel.maxOrder]])
+  * with Stupid Backoff smoothing (Brants et al., "Large Language Models in
+  * Machine Translation", EMNLP 2007) —
   * the CCNet/FineWeb quality rung the LR gate ([[TextAnalysis.lrQuality]])
   * doesn't cover: score every document by its cross-entropy under a
   * reference-corpus n-gram LM and gate on the score. CCNet filters by
@@ -44,142 +45,20 @@ object LangModel {
   private def toks(text: Column): Column =
     regexp_extract_all(lower(text), lit("[a-z]+"), lit(0))
 
-  /** (doc_id, pos, w, w1) token stream: 1-based position, `w1` = previous
-    * token (null at pos 1). Built by zipping the token array against its
-    * own shift — one projection, no self-join, no window shuffle. */
-  private def tokenStream(docs: DataFrame): DataFrame = {
-    val ts = toks(col("text"))
-    docs
-      .select(col("doc_id"), ts.as("ts"))
-      .where(size(col("ts")) > 0)
-      .select(col("doc_id"), posexplode(
-        zip_with(
-          col("ts"),
-          concat(array(lit(null).cast("string")),
-            slice(col("ts"), lit(1), greatest(size(col("ts")) - 1, lit(0)))),
-          (w, p) => struct(w.as("w"), p.as("w1")))))
-      .select(col("doc_id"), (col("pos") + 1).as("pos"),
-        col("col.w").as("w"), col("col.w1").as("w1"))
-  }
-
-  /** Unigram counts of a corpus: (w, c). Map-side combined. */
-  def unigramCounts(docs: DataFrame): DataFrame =
-    docs.select(explode(toks(col("text"))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-
-  /** Bigram counts of a corpus: (w1, w2, c). Derived from the per-doc
-    * token array (adjacent pairs), never a token-table self-join. */
-  def bigramCounts(docs: DataFrame): DataFrame =
-    tokenStream(docs).where(col("w1").isNotNull)
-      .select(col("w1"), col("w").as("w2"))
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-
-  /** (doc_id, pos, w, w1, w2b) token stream with TWO context tokens:
-    * `w1` = previous, `w2b` = two back (null while the position lacks
-    * that much history). Same one-projection zip construction as
-    * [[tokenStream]] — no self-join, no window shuffle.
-    *
-    * Context arrays are built EXACT-LENGTH — `slice(concat(nulls, ts),
-    * 1, size(ts))` — never `concat(nulls, slice(ts, …))`: zip_with pads
-    * the shorter array with nulls, so a 2-null prefix over a 1-token doc
-    * would make the w2b array LONGER than the token array and emit a
-    * phantom (w = null) row the oracle's exactly-len(ts) stream lacks
-    * (r17 ADVICE, verified: a 1-token doc scored n_tokens = 2). */
-  private def tokenStream3(docs: DataFrame): DataFrame = {
-    val ts = toks(col("text"))
-    val nul = lit(null).cast("string")
-    docs
-      .select(col("doc_id"), ts.as("ts"))
-      .where(size(col("ts")) > 0)
-      .select(col("doc_id"), posexplode(
-        zip_with(
-          zip_with(
-            col("ts"),
-            slice(concat(array(nul), col("ts")), lit(1), size(col("ts"))),
-            (w, p) => struct(w.as("w"), p.as("w1"))),
-          slice(concat(array(nul, nul), col("ts")), lit(1), size(col("ts"))),
-          (z, p2) => struct(z.getField("w").as("w"), z.getField("w1").as("w1"),
-            p2.as("w2b")))))
-      .select(col("doc_id"), (col("pos") + 1).as("pos"),
-        col("col.w").as("w"), col("col.w1").as("w1"), col("col.w2b").as("w2b"))
-  }
-
-  /** Trigram counts of a corpus: (w1, w2, w3, c) with w1 the OLDEST
-    * token — derived from the per-doc token array like [[bigramCounts]]. */
-  def trigramCounts(docs: DataFrame): DataFrame =
-    tokenStream3(docs).where(col("w2b").isNotNull)
-      .select(col("w2b").as("w1"), col("w1").as("w2"), col("w").as("w3"))
-      .groupBy(col("w1"), col("w2"), col("w3")).agg(count(lit(1)).as("c"))
-
-  /** Per-document cross-entropy under the ORDER-3 Stupid Backoff model
-    * given as count tables. Per token t_i with context (t_{i-2}, t_{i-1}):
-    *   - pos 1: add-one unigram `(c+1)/(N+V)`;
-    *   - pos 2: seen bigram conditional, else `α ·` unigram;
-    *   - pos ≥ 3: seen trigram `c(t_{i-2} t_{i-1} t_i)/c(t_{i-2} t_{i-1})`,
-    *     else `α ·` bigram conditional, else `α² ·` unigram —
-    * the published Stupid Backoff recursion (Brants et al. 2007, S(w|ctx)).
-    * `n_backoff` counts context-bearing tokens that did NOT score at
-    * their full available order (pos 2 without its bigram, pos ≥ 3
-    * without its trigram). The invariant `c(w1,w2,w3) > 0 ⇒ c(w1,w2) > 0`
-    * holds because every delta is corpus-shaped (the trigram's occurrence
-    * IS an occurrence of its leading bigram), so the seen-trigram
-    * denominator can never be null/zero. */
-  def scoreWith3(batch: DataFrame, uni: DataFrame, bi: DataFrame,
-      tri: DataFrame): DataFrame = {
-    val tot = uni.agg(sum(col("c")).cast("double").as("n"),
-      count(lit(1)).cast("double").as("v"))
-    val st = tokenStream3(batch)
-      .join(tri.select(col("w1").as("w2b"), col("w2").as("w1"),
-          col("w3").as("w"), col("c").as("c_tri")),
-        Seq("w2b", "w1", "w"), "left")
-      .join(bi.select(col("w1").as("w2b"), col("w2").as("w1"),
-          col("c").as("c_bi12")),
-        Seq("w2b", "w1"), "left")
-      .join(bi.select(col("w1"), col("w2").as("w"), col("c").as("c_bi")),
-        Seq("w1", "w"), "left")
-      .join(uni.select(col("w").as("w1"), col("c").as("c_w1")), Seq("w1"), "left")
-      .join(uni.select(col("w"), col("c").as("c_w")), Seq("w"), "left")
-      .crossJoin(broadcast(tot))
-    val uniP = (coalesce(col("c_w"), lit(0L)).cast("double") + 1.0) /
-      (col("n") + col("v"))
-    val biP = col("c_bi").cast("double") / col("c_w1").cast("double")
-    val lp = when(col("w1").isNull, log10(uniP))
-      .when(col("w2b").isNull && col("c_bi").isNotNull, log10(biP))
-      .when(col("w2b").isNull, log10(lit(alpha) * uniP))
-      .when(col("c_tri").isNotNull,
-        log10(col("c_tri").cast("double") / col("c_bi12").cast("double")))
-      .when(col("c_bi").isNotNull, log10(lit(alpha) * biP))
-      .otherwise(log10(lit(alpha * alpha) * uniP))
-    st.groupBy(col("doc_id")).agg(
-      count(lit(1)).as("n_tokens"),
-      sum(when(col("c_w").isNull, 1L).otherwise(0L)).as("n_oov"),
-      sum(when(col("w1").isNotNull &&
-          ((col("w2b").isNull && col("c_bi").isNull) ||
-            (col("w2b").isNotNull && col("c_tri").isNull)), 1L)
-        .otherwise(0L)).as("n_backoff"),
-      round(-sum(lp) / count(lit(1)), 6).as("xent"))
-  }
-
-  /** In-memory order-3 form: train on `train`, score `batch`. */
-  def ppl3(train: DataFrame, batch: DataFrame): DataFrame =
-    scoreWith3(batch, unigramCounts(train), bigramCounts(train),
-      trigramCounts(train))
-
-  // ---- order-N generic kernel (r18) ----------------------------------
-  // CCNet's production KenLM is an ORDER-5 model on the same Stupid
-  // Backoff recursion the order-2/3 forms implement by hand above. The
-  // generic kernel expresses any order n ≤ 5 (plain or lang-keyed) as
-  // one token-stream projection + n vocabulary-scale joins + the totals,
-  // one lag window and one aggregate — the hand-written order-2/3 paths
-  // stay untouched (their rows pin them), and the persisted lifecycle is
-  // already order- and shape-generic through tableSpecs.
+  // ---- the order-N kernel ----------------------------------------------
+  // CCNet's production KenLM is an ORDER-5 model on the Stupid Backoff
+  // recursion. ONE kernel scores every order n ∈ [2, 5], plain or
+  // lang-keyed: one token-stream projection + n vocabulary-scale joins +
+  // the totals, one lag window and one aggregate. Every scorer, count
+  // table, persisted reader and release funnel goes through it, and the
+  // persisted lifecycle is order- and shape-generic through tableSpecs.
 
   /** Highest supported n-gram order (table name space + oracle CASE). */
   val maxOrder: Int = 5
 
-  /** α^k by REPEATED MULTIPLICATION — the same association the
-    * hand-written forms use (`alpha * alpha`); `math.pow` may differ in
-    * the last ulp, and the oracle interpolates this exact double. */
+  /** α^k by REPEATED MULTIPLICATION — the association the order-2/3
+    * oracles use (`alpha * alpha`); `math.pow` may differ in the last
+    * ulp, and the oracles interpolate this exact double. */
   private def alphaPow(k: Int): Double =
     Iterator.fill(k)(alpha).foldLeft(1.0)(_ * _)
 
@@ -246,8 +125,11 @@ object LangModel {
     * each keyed by `key` ++ its word columns). Per token with m
     * available context tokens: the highest order o ≤ m+1 whose o-gram
     * is attested scores `α^(m+1−o) · c(gram)/c(context)`; nothing
-    * attested scores `α^m ·` the add-one unigram — exactly the
-    * published recursion the order-2/3 forms implement, generalized.
+    * attested scores `α^m ·` the add-one unigram — the published
+    * recursion (Brants et al. 2007, S(w|ctx)). At order 2 that is: the
+    * first token scores the add-one unigram `(c+1)/(N+V)`; a seen bigram
+    * the conditional `c(t_{i-1} t_i)/c(t_{i-1})`; an unseen one
+    * `α ·` the add-one unigram.
     * `n_backoff` counts context-bearing tokens that did not score at
     * their full available order.
     *
@@ -345,11 +227,22 @@ object LangModel {
       round(-sum(lpFull) / count(lit(1)), 6).as("xent"))
   }
 
-  /** Plain in-memory order-n form (n ≤ [[maxOrder]]): train the n count
-    * tables on `train`, score `batch` through the generic recursion. */
+  /** Plain k-gram counts of a corpus of (doc_id, text) docs: (w, c) at
+    * k = 1, else (w1..wk, c) with w1 the OLDEST token. Derived from the
+    * per-doc token array (adjacent k-tuples), never a token-table
+    * self-join. */
+  def gramCounts(docs: DataFrame, k: Int): DataFrame =
+    gramCountsFrom(docs, toks, k, Nil)
+
+  /** Plain in-memory order-n form (2 ≤ n ≤ [[maxOrder]]): train the n
+    * count tables on `train`, score `batch` (doc_id, text) through the
+    * order-n recursion ([[scoreStreamN]]). Output per doc: token count,
+    * OOV count, backoff count, `xent = round(-avg log10 p, 6)` (lower =
+    * more like the reference corpus); a doc with no token emits no row.
+    * PRECONDITION: `batch` doc_ids are unique (the kernel keys one token
+    * sequence per doc_id). */
   def pplN(train: DataFrame, batch: DataFrame, n: Int): DataFrame =
-    scoreDocsN(batch, (1 to n).map(k => gramCountsFrom(train, toks, k, Nil)),
-      n, ml = false)
+    scoreDocsN(batch, (1 to n).map(k => gramCounts(train, k)), n, ml = false)
 
   /** Score (doc_id, text) docs — (doc_id, text, lang) when `ml` — at
     * order n against given count tables, lowest order first. */
@@ -359,53 +252,13 @@ object LangModel {
     else scoreStreamN(tokenStreamNFromTs(batch.select(col("doc_id"),
       toks(col("text")).as("ts")), n, Seq("doc_id")), tables, Nil, n)
 
-  /** Per-document cross-entropy under the Stupid Backoff bigram model
-    * given explicitly as count tables — the pure scoring kernel shared by
-    * the in-memory and persisted-index forms.
-    *
-    * Per token t_i: the first token and any token whose preceding bigram
-    * is unseen score the add-one unigram `(c(t_i)+1)/(N+V)` (times
-    * [[alpha]] in the backoff case); a seen bigram scores the conditional
-    * `c(t_{i-1} t_i)/c(t_{i-1})`. Output per doc: token count, OOV count,
-    * backoff count, `xent = round(-avg log10 p, 6)` (lower = more like
-    * the reference corpus). */
-  def scoreWith(batch: DataFrame, uni: DataFrame, bi: DataFrame): DataFrame = {
-    // 1-row totals ride a broadcast cross join (scalar metadata, the
-    // engine's standard pattern for corpus-level constants).
-    val tot = uni.agg(sum(col("c")).cast("double").as("n"),
-      count(lit(1)).cast("double").as("v"))
-    val st = tokenStream(batch)
-      .join(bi.select(col("w1"), col("w2").as("w"), col("c").as("c_bi")),
-        Seq("w1", "w"), "left")
-      .join(uni.select(col("w").as("w1"), col("c").as("c_w1")), Seq("w1"), "left")
-      .join(uni.select(col("w"), col("c").as("c_w")), Seq("w"), "left")
-      .crossJoin(broadcast(tot))
-    val uniP = (coalesce(col("c_w"), lit(0L)).cast("double") + 1.0) /
-      (col("n") + col("v"))
-    val lp = when(col("w1").isNull, log10(uniP))
-      .when(col("c_bi").isNotNull,
-        log10(col("c_bi").cast("double") / col("c_w1").cast("double")))
-      .otherwise(log10(lit(alpha) * uniP))
-    st.groupBy(col("doc_id")).agg(
-        count(lit(1)).as("n_tokens"),
-        sum(when(col("c_w").isNull, 1L).otherwise(0L)).as("n_oov"),
-        sum(when(col("w1").isNotNull && col("c_bi").isNull, 1L).otherwise(0L))
-          .as("n_backoff"),
-        round(-sum(lp) / count(lit(1)), 6).as("xent"))
-  }
-
-  /** In-memory form: train on `train`, score `batch` — two aggregates and
-    * the scoring join chain in one plan. */
-  def ppl(train: DataFrame, batch: DataFrame): DataFrame =
-    scoreWith(batch, unigramCounts(train), bigramCounts(train))
-
   /** Gate form: keep documents whose cross-entropy under the reference
     * model is at most `maxXent`, reporting the per-language funnel
     * (n_in → n_kept) — the CCNet head/middle/tail-style cut as one
     * composable verb. The gate compares the ROUNDED score so both
     * engines cut on the same number. */
   def gate(train: DataFrame, batch: DataFrame, maxXent: Double): DataFrame = {
-    val scored = ppl(train, batch.select(col("doc_id"), col("text")))
+    val scored = pplN(train, batch.select(col("doc_id"), col("text")), 2)
     batch.join(scored.select(col("doc_id"), col("xent")), Seq("doc_id"), "left")
       .groupBy(col("lang")).agg(
         count(lit(1)).as("n_in"),
@@ -418,15 +271,15 @@ object LangModel {
     * score every candidate under an IN-domain model and an OUT-domain
     * model, keep documents whose difference `xent_in − xent_out` clears
     * the cut — the standard trick for mining a huge general corpus for
-    * in-domain-like training data. Both scores come from [[scoreWith]],
-    * so the whole thing is two vocabulary-scale model joins over one
-    * batch scan; the difference is computed from the ROUNDED per-model
+    * in-domain-like training data. Both scores are order-2 [[pplN]]
+    * chains, so the whole thing is two vocabulary-scale model joins over
+    * one batch scan; the difference is computed from the ROUNDED per-model
     * scores, so both engines select on identical numbers. */
   def mooreLewis(inTrain: DataFrame, outTrain: DataFrame, batch: DataFrame,
       cut: Double): DataFrame = {
-    val inScore = ppl(inTrain, batch)
+    val inScore = pplN(inTrain, batch, 2)
       .select(col("doc_id"), col("xent").as("xent_in"))
-    val outScore = ppl(outTrain, batch)
+    val outScore = pplN(outTrain, batch, 2)
       .select(col("doc_id"), col("xent").as("xent_out"))
     inScore.join(outScore, Seq("doc_id"))
       .select(col("doc_id"), col("xent_in"), col("xent_out"),
@@ -455,7 +308,7 @@ object LangModel {
 
   /** Persisted layout version. 1 = alpha-run tokens, per-order count
     * tables under `unigrams/ingest=<id>` + `bigrams/ingest=<id>`
-    * (+ `trigrams/ingest=<id>` when the marker declares `order=3`). */
+    * (+ `trigrams/` … `fivegrams/` up to the marker's `order=n`). */
   private val lmFormatVersion = 1
   val formatMarkerName = "_GRAFT_LM_FORMAT"
 
@@ -517,14 +370,18 @@ object LangModel {
       lines.contains("tok=ml"))
   }
 
+  /** A reader of `want` needs the same tokenizer and AT LEAST
+    * `want.order` tables: order-n scoring over a deeper layout is legal
+    * (its lower-order tables are the same corpus-shaped counts); a
+    * shallower layout or the other tokenizer is refused. */
   private def requireShape(spark: SparkSession, dir: String,
       want: Shape): Unit = {
     val got = requireFormat(spark, dir)
-    require(got == want,
-      s"LM model at $dir is order-${got.order}" +
-        s"${if (got.ml) " per-language" else ""}; this entry point reads " +
-        s"order-${want.order}${if (want.ml) " per-language" else ""} " +
-        "models — use the matching build/score functions")
+    def tok(ml: Boolean) = if (ml) "per-language" else "plain-tokenizer"
+    require(got.ml == want.ml && got.order >= want.order,
+      s"LM model at $dir is an order-${got.order} ${tok(got.ml)} layout; " +
+        s"this reader needs order ≥ ${want.order}, ${tok(want.ml)} — " +
+        "use the matching build/score functions")
   }
 
   // ---- two-phase delta commit --------------------------------------------
@@ -664,9 +521,9 @@ object LangModel {
     * a real web corpus's billion-row bigram table lands as many files
     * (AQE coalesces the range shuffle by SIZE — the closed fixture
     * vocabulary still writes one file, a 100× vocabulary writes many,
-    * measured in LmProbe's vocab arm) and later model joins stay
-    * term-prunable via parquet min/max stats — the Retrieval postings
-    * discipline. */
+    * measured, EXPLAIN.md "Round 17: the per-language LM gate") and
+    * later model joins stay term-prunable via parquet min/max stats —
+    * the Retrieval postings discipline. */
   private def byWordRange(df: DataFrame, keys: Seq[String]): DataFrame =
     df.repartitionByRange(keys.map(col): _*)
 
@@ -683,7 +540,7 @@ object LangModel {
     val rels = deltas.map { case (sub, _, _) => s"$sub/ingest=$ingestId" }
     // Stage writes are pre-commit (the marker rename below is the commit
     // point), so their order is free: first alone (materializes the
-    // order-≥4 shared tokenized frame once), the rest overlapped
+    // shared tokenized frame once), the rest overlapped
     // (guide §2.6).
     val stages = deltas.zip(rels).map { case ((_, keys, df), rel) => () =>
       byWordRange(df, keys).write.mode("overwrite")
@@ -703,87 +560,50 @@ object LangModel {
   }
 
   /** The count tables of `docs` for a model shape, aligned with
-    * [[tableSpecs]] (the ML forms' per-language counts come from
-    * [[LangModelMl]]; tableSpecs already adds the leading `lang` key to
-    * every order's table — the lifecycle is order- AND shape-generic,
-    * r18 adds the lang-keyed trigram cell of the cross product). */
-  private def countTables(docs: DataFrame, shape: Shape): Seq[DataFrame] =
-    if (shape.order <= 3)
-      (1 to shape.order).map { k =>
-        (shape.ml, k) match {
-          // orders 1–3 keep their hand-written derivations (their rows
-          // pin the plans) — identical column names and counts either way
-          case (false, 1) => unigramCounts(docs)
-          case (false, 2) => bigramCounts(docs)
-          case (false, 3) => trigramCounts(docs)
-          case (true, 1) => LangModelMl.unigramCountsMl(docs)
-          case (true, 2) => LangModelMl.bigramCountsMl(docs)
-          case (true, _) => LangModelMl.trigramCountsMl(docs)
-        }
-      }
-    else {
-      // order ≥ 4: ONE tokenization for every table (r19 — the
-      // per-table derivation re-ran the regex tokenizer `order` times
-      // over the corpus, the dominant measured cost of an order-5
-      // build); the pinned frame is one row per doc (token arrays),
-      // checkpoint blocks GC-reclaimed after the caller materializes
-      val keyCols = if (shape.ml) Seq("lang") else Seq.empty[String]
-      val toksOf: Column => Column =
-        if (shape.ml) LangModelMl.toksMlOf else toks
-      // LAZY checkpoint: the first table's materialization tokenizes and
-      // caches; the remaining orders read blocks — no standalone
-      // materialization pass before the writes
-      // DISK_ONLY: the frame is corpus-scale (one token array per doc)
-      // and its consumers are sequential table writes — blocks stay out
-      // of the unified memory pool, re-reads ride the OS page cache
-      val toked = docs
-        .select((keyCols.map(col) :+ toksOf(col("text")).as("ts")): _*)
-        .localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      (1 to shape.order).map(k => gramCountsFromTs(toked, k, keyCols))
-    }
+    * [[tableSpecs]] (per-language shapes key every table by `lang` and
+    * tokenize with [[LangModelMl.mlTokenClass]]). ONE tokenization for
+    * every table, at every order (r19 — the per-table derivation re-ran
+    * the regex tokenizer `order` times over the corpus, the dominant
+    * measured cost of an order-5 build); the pinned frame is one row per
+    * doc (token arrays), checkpoint blocks GC-reclaimed after the caller
+    * materializes. */
+  private def countTables(docs: DataFrame, shape: Shape): Seq[DataFrame] = {
+    val keyCols = if (shape.ml) Seq("lang") else Seq.empty[String]
+    val toksOf: Column => Column =
+      if (shape.ml) LangModelMl.toksMlOf else toks
+    // LAZY checkpoint: the first table's materialization tokenizes and
+    // caches; the remaining orders read blocks — no standalone
+    // materialization pass before the writes
+    // DISK_ONLY: the frame is corpus-scale (one token array per doc)
+    // and its consumers are sequential table writes — blocks stay out
+    // of the unified memory pool, re-reads ride the OS page cache
+    val toked = docs
+      .select((keyCols.map(col) :+ toksOf(col("text")).as("ts")): _*)
+      .localCheckpoint(false,
+        org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    (1 to shape.order).map(k => gramCountsFromTs(toked, k, keyCols))
+  }
 
-  /** Train and persist the model: count tables land under seed partitions
+  /** Train and persist the order-`order` model: the `order` count tables
+    * (`unigrams/` … `fivegrams/`) land under seed partitions
     * (`ingest=-1`), marker written LAST so a crashed build is refused by
-    * every probe rather than scoring against half a vocabulary. */
-  def buildLmIndex(standing: DataFrame, dir: String): Unit =
-    buildIndex(standing, dir, Shape(2, ml = false))
-
-  /** Order-3 form of [[buildLmIndex]]: one extra vocabulary-scale count
-    * table (`trigrams/`), same marker/lifecycle machinery. */
-  def buildLm3Index(standing: DataFrame, dir: String): Unit =
-    buildIndex(standing, dir, Shape(3, ml = false))
-
-  /** PER-LANGUAGE form of [[buildLmIndex]] (the CCNet production
-    * artifact: every language's model in one lang-keyed layout):
-    * `standing` carries (doc_id, text, lang); tables are
-    * (lang, w…, c) under the identical delta/ledger/prune machinery.
-    * The marker records `tok=ml`, so plain and per-language layouts can
-    * never cross-read (different tokenizers — the silent-OOV trap). */
-  def buildLmMlIndex(standing: DataFrame, dir: String): Unit =
-    buildIndex(standing, dir, Shape(2, ml = true))
-
-  /** Lang-keyed ORDER-3 form of [[buildLmMlIndex]] (r18): three
-    * lang-keyed count tables under the identical delta/ledger/prune
-    * machinery, marker `order=3` + `tok=ml`. */
-  def buildLmMl3Index(standing: DataFrame, dir: String): Unit =
-    buildIndex(standing, dir, Shape(3, ml = true))
-
-  /** ORDER-5 forms (r18 — CCNet's production KenLM order): five additive
-    * count tables (to `fivegrams/`) riding the identical lifecycle. */
-  def buildLm5Index(standing: DataFrame, dir: String): Unit =
-    buildIndex(standing, dir, Shape(5, ml = false))
-
-  /** Lang-keyed order-5 form of [[buildLm5Index]]. */
-  def buildLmMl5Index(standing: DataFrame, dir: String): Unit =
-    buildIndex(standing, dir, Shape(5, ml = true))
-
-  private def buildIndex(standing: DataFrame, dir: String, shape: Shape): Unit = {
+    * every probe rather than scoring against half a vocabulary. `ml`:
+    * the PER-LANGUAGE layout (the CCNet production artifact: every
+    * language's model in one lang-keyed layout) — `standing` carries
+    * (doc_id, text, lang), tables are (lang, w…, c) under the identical
+    * delta/ledger/prune machinery, and the marker records `tok=ml`, so
+    * plain and per-language layouts can never cross-read (different
+    * tokenizers — the silent-OOV trap). */
+  def buildLmIndex(standing: DataFrame, dir: String, order: Int = 2,
+      ml: Boolean = false): Unit = {
+    require(order >= 2 && order <= maxOrder,
+      s"model order $order outside [2, $maxOrder]")
+    val shape = Shape(order, ml)
     val spark = standing.sparkSession
     // Independent per-table writes overlap (guide §2.6); the FIRST write
-    // runs alone so the order-≥4 path's shared lazy-checkpointed
-    // tokenized frame (countTables) materializes exactly once before
-    // concurrent readers touch it. Crash safety is unchanged: the marker
+    // runs alone so the shared lazy-checkpointed tokenized frame
+    // (countTables) materializes exactly once before concurrent readers
+    // touch it. Crash safety is unchanged: the marker
     // below is the commit point and is written only after ALL tables
     // land, so write order among tables was never load-bearing.
     val writes = tableSpecs(shape).zip(countTables(standing, shape)).map {
@@ -797,7 +617,7 @@ object LangModel {
     // less concurrent execution-pool state than the release5 checkpoint
     // PINS (which landed at width 2 after widths 3/5 died
     // UNABLE_TO_ACQUIRE_MEMORY at 10×/8 g). The width includes the runs
-    // where buildIndex is itself nested under a fixture-level Par
+    // where the build is itself nested under a fixture-level Par
     // (model build ∥ stagings) — those are the runs the sweep measured.
     writes.head()
     Par.runUnit(writes.tail, maxThreads = 3)
@@ -977,158 +797,72 @@ object LangModel {
     }
   }
 
-  /** Read the live model: sum counts across delta partitions, drop
-    * zeroed n-grams (a never-seen and a fully-purged n-gram must read
-    * identically). Vocabulary-scale work. `excludeIngestBatch`: skip one
-    * ingest partition — the streaming loop's own-partition exclusion, so
-    * a crash-replayed grown micro-batch never scores against counts it
-    * appended itself. */
-  def readModel(spark: SparkSession, dir: String,
-      excludeIngestBatch: Option[Long] = None): (DataFrame, DataFrame) = {
-    val shape = requireFormat(spark, dir)
-    require(!shape.ml,
-      s"LM model at $dir is the per-language layout — read it with " +
-        "readModelMl / scoreAgainstLmMlIndex (different tokenizer)")
+  /** Read the first `n` live tables (unigrams first) of a layout with
+    * the `ml` tokenizer and order ≥ `n` (the lower-order tables of a
+    * deeper layout are the same corpus-shaped counts): sum counts across
+    * delta partitions, drop zeroed n-grams (a never-seen and a
+    * fully-purged n-gram must read identically). Vocabulary-scale work.
+    * `excludeIngestBatch`: skip one ingest partition — the streaming
+    * loop's own-partition exclusion, so a crash-replayed grown
+    * micro-batch never scores against counts it appended itself. */
+  def readModel(spark: SparkSession, dir: String, n: Int, ml: Boolean,
+      excludeIngestBatch: Option[Long] = None): Seq[DataFrame] = {
+    requireShape(spark, dir, Shape(n, ml))
     repairAll(spark, dir)
-    (liveTable(spark, dir, "unigrams", Seq("w"), excludeIngestBatch),
-      liveTable(spark, dir, "bigrams", Seq("w1", "w2"), excludeIngestBatch))
-  }
-
-  /** Order-3 form of [[readModel]] (requires an `order=3` layout). */
-  def readModel3(spark: SparkSession, dir: String,
-      excludeIngestBatch: Option[Long] = None)
-      : (DataFrame, DataFrame, DataFrame) = {
-    requireShape(spark, dir, Shape(3, ml = false))
-    repairAll(spark, dir)
-    (liveTable(spark, dir, "unigrams", Seq("w"), excludeIngestBatch),
-      liveTable(spark, dir, "bigrams", Seq("w1", "w2"), excludeIngestBatch),
-      liveTable(spark, dir, "trigrams", Seq("w1", "w2", "w3"),
-        excludeIngestBatch))
-  }
-
-  /** Per-language form of [[readModel]] (requires a `tok=ml` layout —
-    * any order: the lower-order tables of an `order=3` layout are the
-    * same corpus-shaped counts, mirroring the plain form's rule):
-    * tables carry the leading `lang` key. */
-  def readModelMl(spark: SparkSession, dir: String,
-      excludeIngestBatch: Option[Long] = None): (DataFrame, DataFrame) = {
-    val got = requireFormat(spark, dir)
-    require(got.ml,
-      s"LM model at $dir is the plain-tokenizer layout — read it with " +
-        "readModel / scoreAgainstLmIndex (different tokenizer)")
-    repairAll(spark, dir)
-    (liveTable(spark, dir, "unigrams", Seq("lang", "w"), excludeIngestBatch),
-      liveTable(spark, dir, "bigrams", Seq("lang", "w1", "w2"),
-        excludeIngestBatch))
-  }
-
-  /** Lang-keyed order-3 form of [[readModelMl]] (requires an `order=3
-    * tok=ml` layout). */
-  def readModelMl3(spark: SparkSession, dir: String,
-      excludeIngestBatch: Option[Long] = None)
-      : (DataFrame, DataFrame, DataFrame) = {
-    requireShape(spark, dir, Shape(3, ml = true))
-    repairAll(spark, dir)
-    (liveTable(spark, dir, "unigrams", Seq("lang", "w"), excludeIngestBatch),
-      liveTable(spark, dir, "bigrams", Seq("lang", "w1", "w2"),
-        excludeIngestBatch),
-      liveTable(spark, dir, "trigrams", Seq("lang", "w1", "w2", "w3"),
-        excludeIngestBatch))
-  }
-
-  private def liveTable(spark: SparkSession, dir: String, sub: String,
-      keys: Seq[String], excludeIngestBatch: Option[Long]): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/$sub")
-    val visible = excludeIngestBatch match {
-      case Some(id) => raw.where(col("ingest") =!= id)
-      case None => raw
+    tableSpecs(Shape(n, ml)).map { case (sub, keys) =>
+      val raw = spark.read.parquet(s"$dir/$sub")
+      val visible = excludeIngestBatch match {
+        case Some(id) => raw.where(col("ingest") =!= id)
+        case None => raw
+      }
+      visible.groupBy(keys.map(col): _*).agg(sum(col("c")).as("c"))
+        .where(col("c") > 0)
     }
-    visible.groupBy(keys.map(col): _*).agg(sum(col("c")).as("c"))
-      .where(col("c") > 0)
   }
 
-  /** Score a batch against the PERSISTED model — the per-arrival form:
-    * one scan of the batch, vocabulary-scale reads of the model tables,
-    * nothing training-corpus-scale anywhere. Scores at order 2 — valid
-    * against an order-3 layout too (its lower-order tables are the same
-    * corpus-shaped counts). */
-  def scoreAgainstLmIndex(indexDir: String, batch: DataFrame,
-      excludeIngestBatch: Option[Long] = None): DataFrame = {
-    val (uni, bi) = readModel(batch.sparkSession, indexDir, excludeIngestBatch)
-    scoreWith(batch, uni, bi)
-  }
-
-  /** Order-3 scoring against a persisted `order=3` layout. */
-  def scoreAgainstLm3Index(indexDir: String, batch: DataFrame,
-      excludeIngestBatch: Option[Long] = None): DataFrame = {
-    val (uni, bi, tri) =
-      readModel3(batch.sparkSession, indexDir, excludeIngestBatch)
-    scoreWith3(batch, uni, bi, tri)
-  }
-
-  /** Per-language scoring against a persisted `tok=ml` layout — every
-    * batch doc (doc_id, text, lang) scored under its own language's
-    * standing model. */
-  def scoreAgainstLmMlIndex(indexDir: String, batch: DataFrame,
-      excludeIngestBatch: Option[Long] = None): DataFrame = {
-    val (uni, bi) =
-      readModelMl(batch.sparkSession, indexDir, excludeIngestBatch)
-    LangModelMl.scoreWithMl(batch, uni, bi)
-  }
-
-  /** Lang-keyed order-3 scoring against a persisted `order=3 tok=ml`
-    * layout (r18). */
-  def scoreAgainstLmMl3Index(indexDir: String, batch: DataFrame,
-      excludeIngestBatch: Option[Long] = None): DataFrame = {
-    val (uni, bi, tri) =
-      readModelMl3(batch.sparkSession, indexDir, excludeIngestBatch)
-    LangModelMl.scoreWith3Ml(batch, uni, bi, tri)
-  }
-
-  /** Generic order-n scoring against a persisted layout of EXACTLY that
-    * shape (r18) — reads all n live tables through the standard
-    * repair/fold path and runs the generic recursion. */
+  /** Score a batch against the PERSISTED model at order `n` — the
+    * per-arrival form: one scan of the batch (doc_id, text) — plus
+    * `lang` when `ml` — vocabulary-scale reads of the first n live
+    * tables ([[readModel]]: any layout of the same tokenizer and order
+    * ≥ n), nothing training-corpus-scale anywhere. PRECONDITION: batch
+    * doc_ids are unique ([[pplN]]). */
   def scoreAgainstLmNIndex(indexDir: String, batch: DataFrame, n: Int,
-      ml: Boolean, excludeIngestBatch: Option[Long] = None): DataFrame = {
-    val spark = batch.sparkSession
-    requireShape(spark, indexDir, Shape(n, ml))
-    repairAll(spark, indexDir)
-    val tables = tableSpecs(Shape(n, ml)).map { case (sub, keys) =>
-      liveTable(spark, indexDir, sub, keys, excludeIngestBatch)
-    }
-    scoreDocsN(batch, tables, n, ml)
-  }
+      ml: Boolean, excludeIngestBatch: Option[Long] = None): DataFrame =
+    scoreDocsN(batch,
+      readModel(batch.sparkSession, indexDir, n, ml, excludeIngestBatch),
+      n, ml)
 
   // ---- LM session: standing-model cache for streaming loops (r19) --------
 
   /** Session-cached live model for a SINGLE-OWNER streaming loop — the
     * [[graft.operators.Retrieval.Bm25Session]] discipline applied to the
-    * LM layout. The r18 loops called `readModel*` inside `foreachBatch`,
+    * LM layout. The r18 loops read the model inside `foreachBatch`,
     * re-listing, re-REPAIRING and re-folding every count table from
     * parquet once per MICRO-BATCH (and the repair path could even rewrite
     * a crashed mutation's partitions from inside a documented "pure
     * observer" — r18 ADVICE); the session lists/repairs/loads once per
     * RUN and rolls forward in memory as the loop appends.
     *
-    * Cache shape (measured in LmSessionProbe — the first cut re-folded
-    * and re-CHECKPOINTED every table per append, which at order 5 cost
-    * MORE than the parquet re-read it replaced): a checkpointed BASE
-    * fold per table plus a pending list of per-batch count deltas
-    * (batch-vocabulary-scale, checkpointed once each at append). Scoring
-    * folds base ∪ pending lazily INSIDE the scoring job — the same
-    * aggregate the dir-based path runs, minus the per-batch fs listing,
-    * repair pass and parquet reads; with no pending deltas (the pure
-    * observers: releaseMonitor) the base serves directly, zero per-batch
-    * fold. Every `rebaseEvery` appends the pendings fold into a fresh
+    * Cache shape (measured, EXPLAIN.md "Round 19: LmSession" — the
+    * first cut re-folded and re-CHECKPOINTED every table per append,
+    * which at order 5 cost MORE than the parquet re-read it replaced): a
+    * checkpointed BASE fold per table plus a pending list of per-batch
+    * count deltas (batch-vocabulary-scale, checkpointed once each at
+    * append). Scoring folds base ∪ pending lazily INSIDE the scoring job
+    * — the same aggregate the dir-based path runs, minus the per-batch
+    * fs listing, repair pass and parquet reads; with no pending deltas
+    * (the pure observers: releaseMonitor) the base serves directly, zero
+    * per-batch fold. Every `rebaseEvery` appends the pendings fold into a fresh
     * checkpointed base, bounding plan growth.
     *
     * Correctness contract (spec-pinned in SessionSpec):
-    *   - visible counts == [[readModel]]/[[readModelMl]]'s live fold at
-    *     every point (counts are additive; base ∪ pending re-aggregated
-    *     per key with zeroed n-grams dropped);
-    *   - [[LmSession.score]] dispatches on the marker shape (order ×
-    *     tokenizer) to exactly the scorer that shape's non-session entry
-    *     point uses; `excludeIngestBatch` drops the excluded batch's
+    *   - visible counts == [[readModel]]'s live fold at every point
+    *     (counts are additive; base ∪ pending re-aggregated per key with
+    *     zeroed n-grams dropped);
+    *   - [[LmSession.score]] scores through the one order-n kernel at
+    *     the marker-declared order and tokenizer, row-identical to
+    *     [[scoreAgainstLmNIndex]] at that shape; `excludeIngestBatch`
+    *     drops the excluded batch's
     *     pending delta, or (disk-committed before this run — the crash
     *     replay) subtracts that partition's counts on demand, so a
     *     replayed micro-batch scores against exactly the state its
@@ -1194,19 +928,12 @@ object LangModel {
       }
     }
     /** Score a batch against the cached live model at the layout's own
-      * shape — row-identical to the shape's `scoreAgainst*Index` entry
-      * point over the same layout. */
+      * shape — row-identical to [[scoreAgainstLmNIndex]] at that shape
+      * over the same layout. */
     def score(batch: DataFrame,
-        excludeIngestBatch: Option[Long] = None): DataFrame = {
-      val ts = visibleTables(excludeIngestBatch)
-      (shape.ml, shape.order) match {
-        case (false, 2) => scoreWith(batch, ts(0), ts(1))
-        case (true, 2) => LangModelMl.scoreWithMl(batch, ts(0), ts(1))
-        case (false, 3) => scoreWith3(batch, ts(0), ts(1), ts(2))
-        case (true, 3) => LangModelMl.scoreWith3Ml(batch, ts(0), ts(1), ts(2))
-        case (ml, n) => scoreDocsN(batch, ts, n, ml)
-      }
-    }
+        excludeIngestBatch: Option[Long] = None): DataFrame =
+      scoreDocsN(batch, visibleTables(excludeIngestBatch), shape.order,
+        shape.ml)
     /** Grow the persisted layout (identical commit machinery) and pin the
       * batch's counts as a pending cache delta. A replayed batch id
       * (already on disk or already pending) commits its byte-identical
@@ -1238,8 +965,9 @@ object LangModel {
   /** Open an [[LmSession]] over an existing LM layout (any shape). The
     * rebase cadence scales inversely with order: a pending delta is one
     * frame PER TABLE, so an order-5 layout's score-side union widens 2.5x
-    * faster than order-2's — measured in LmSessionProbe, per-batch wall
-    * grew ~0.15 s/batch at order 5 under the order-2 cadence. */
+    * faster than order-2's — measured (EXPLAIN.md "Round 19:
+    * LmSession"), per-batch wall grew ~0.15 s/batch at order 5 under the
+    * order-2 cadence. */
   def openLmSession(spark: SparkSession, dir: String): LmSession =
     new LmSession(spark, dir)
 
@@ -1263,7 +991,8 @@ object LangModel {
        |     ELSE len(ts) END)""".stripMargin
 
   /** Full scoring SQL: train on `trainSql`, score `scoreSql` (both
-    * parenthesized (doc_id, text) SELECTs) — replays [[ppl]] exactly.
+    * parenthesized (doc_id, text) SELECTs) — replays [[pplN]] at order 2
+    * exactly.
     * `minCount` > 1 replays [[pruneLmIndex]]'s cut on both tables — a
     * bare count floor per table; the left-endpoint implication
     * `c(w1,w2) ≤ c(w1)` makes any endpoint join redundant (see
@@ -1435,9 +1164,9 @@ object LangModel {
        |       '$oracleTokenBound-token oracle bound') AS BIGINT)
        |     ELSE len(ts) END)""".stripMargin
 
-  /** Oracle replaying [[ppl3]] exactly: train the three count tables on
-    * `trainSql`, score `scoreSql` through the order-3 backoff CASE.
-    * `minCount` > 1 replays [[pruneLmIndex]]'s cut on all three tables
+  /** Oracle replaying [[pplN]] at order 3 exactly: train the three count
+    * tables on `trainSql`, score `scoreSql` through the order-3 backoff
+    * CASE. `minCount` > 1 replays [[pruneLmIndex]]'s cut on all three tables
     * (the corpus-shaped count monotonicity `c(w1,w2,w3) ≤ c(w1,w2) ≤
     * c(w1)` keeps every kept n-gram's denominator alive — see
     * [[pruneLmIndex]]). Callers append their own ORDER BY / projection. */

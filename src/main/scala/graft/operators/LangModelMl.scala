@@ -63,177 +63,31 @@ object LangModelMl {
   def zeroTok(text: Column): Column =
     (size(toksMl(text)) === 0).cast("int")
 
-  /** (doc_id, lang, pos, w, w1) token stream — [[LangModel]]'s zip
-    * construction with the language key carried through. */
-  private def tokenStreamMl(docs: DataFrame): DataFrame = {
-    val ts = toksMl(col("text"))
-    docs
-      .select(col("doc_id"), col("lang"), ts.as("ts"))
-      .where(size(col("ts")) > 0)
-      .select(col("doc_id"), col("lang"), posexplode(
-        zip_with(
-          col("ts"),
-          concat(array(lit(null).cast("string")),
-            slice(col("ts"), lit(1), greatest(size(col("ts")) - 1, lit(0)))),
-          (w, p) => struct(w.as("w"), p.as("w1")))))
-      .select(col("doc_id"), col("lang"), (col("pos") + 1).as("pos"),
-        col("col.w").as("w"), col("col.w1").as("w1"))
-  }
-
-  /** (doc_id, lang, pos, w, w1, w2b) token stream with TWO context
-    * tokens — [[LangModel]]'s order-3 zip construction with the language
-    * key carried through and the EXACT-LENGTH context arrays
-    * (`slice(concat(nulls, ts), 1, size(ts))` — see the r17-ADVICE note
-    * on [[LangModel]]'s tokenStream3: a padded 2-null prefix over a
-    * 1-token doc emitted a phantom null row the oracle lacks). */
-  private def tokenStream3Ml(docs: DataFrame): DataFrame = {
-    val ts = toksMl(col("text"))
-    val nul = lit(null).cast("string")
-    docs
-      .select(col("doc_id"), col("lang"), ts.as("ts"))
-      .where(size(col("ts")) > 0)
-      .select(col("doc_id"), col("lang"), posexplode(
-        zip_with(
-          zip_with(
-            col("ts"),
-            slice(concat(array(nul), col("ts")), lit(1), size(col("ts"))),
-            (w, p) => struct(w.as("w"), p.as("w1"))),
-          slice(concat(array(nul, nul), col("ts")), lit(1), size(col("ts"))),
-          (z, p2) => struct(z.getField("w").as("w"),
-            z.getField("w1").as("w1"), p2.as("w2b")))))
-      .select(col("doc_id"), col("lang"), (col("pos") + 1).as("pos"),
-        col("col.w").as("w"), col("col.w1").as("w1"), col("col.w2b").as("w2b"))
-  }
-
-  /** Per-language unigram counts: (lang, w, c). */
-  def unigramCountsMl(docs: DataFrame): DataFrame =
-    docs.select(col("lang"), explode(toksMl(col("text"))).as("w"))
-      .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("c"))
-
-  /** Per-language bigram counts: (lang, w1, w2, c). */
-  def bigramCountsMl(docs: DataFrame): DataFrame =
-    tokenStreamMl(docs).where(col("w1").isNotNull)
-      .select(col("lang"), col("w1"), col("w").as("w2"))
-      .groupBy(col("lang"), col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-
-  /** Per-language trigram counts: (lang, w1, w2, w3, c) with w1 the
-    * OLDEST token (r18 — the lang-keyed order-3 rung). */
-  def trigramCountsMl(docs: DataFrame): DataFrame =
-    tokenStream3Ml(docs).where(col("w2b").isNotNull)
-      .select(col("lang"), col("w2b").as("w1"), col("w1").as("w2"),
-        col("w").as("w3"))
-      .groupBy(col("lang"), col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("c"))
-
-  /** Score every document under ITS OWN language's model — the
-    * [[LangModel.scoreWith]] kernel with `lang` added to every join key
-    * and the (N, V) totals computed PER LANGUAGE (a broadcast join on
-    * `lang` instead of a 1-row cross join; language cardinality is
-    * O(100), always broadcastable). A doc whose `lang` has no model
-    * joins nothing and scores `xent = null` (see the zero-token policy
-    * in the object scaladoc). Output: (doc_id, lang, n_tokens, n_oov,
-    * n_backoff, xent). */
-  def scoreWithMl(batch: DataFrame, uni: DataFrame, bi: DataFrame): DataFrame = {
-    val tot = uni.groupBy(col("lang")).agg(
-      sum(col("c")).cast("double").as("n"),
-      count(lit(1)).cast("double").as("v"))
-    val st = tokenStreamMl(batch)
-      .join(bi.select(col("lang"), col("w1"), col("w2").as("w"),
-          col("c").as("c_bi")),
-        Seq("lang", "w1", "w"), "left")
-      .join(uni.select(col("lang"), col("w").as("w1"), col("c").as("c_w1")),
-        Seq("lang", "w1"), "left")
-      .join(uni.select(col("lang"), col("w"), col("c").as("c_w")),
-        Seq("lang", "w"), "left")
-      .join(broadcast(tot), Seq("lang"), "left")
-    val uniP = (coalesce(col("c_w"), lit(0L)).cast("double") + 1.0) /
-      (col("n") + col("v"))
-    val lp = when(col("w1").isNull, log10(uniP))
-      .when(col("c_bi").isNotNull,
-        log10(col("c_bi").cast("double") / col("c_w1").cast("double")))
-      .otherwise(log10(lit(LangModel.alpha) * uniP))
-    st.groupBy(col("doc_id"), col("lang")).agg(
-      count(lit(1)).as("n_tokens"),
-      sum(when(col("c_w").isNull, 1L).otherwise(0L)).as("n_oov"),
-      sum(when(col("w1").isNotNull && col("c_bi").isNull, 1L).otherwise(0L))
-        .as("n_backoff"),
-      round(-sum(lp) / count(lit(1)), 6).as("xent"))
-  }
-
-  /** In-memory per-language form: train one model per `lang` on `train`,
-    * score each `batch` doc under its own language's model — one plan,
-    * all languages. Both frames carry (doc_id, text, lang). */
-  def pplMl(train: DataFrame, batch: DataFrame): DataFrame =
-    scoreWithMl(batch, unigramCountsMl(train), bigramCountsMl(train))
-
-  /** ORDER-3 per-language scoring (r18 — the lang-keyed trigram rung,
-    * CCNet's KenLM is order 5 on the same recursion):
-    * [[LangModel.scoreWith3]]'s trigram → bigram → unigram Stupid
-    * Backoff CASE with `lang` added to every join key and the (N, V)
-    * totals per language (broadcast join — language cardinality is
-    * O(100)). Same backoff semantics, same `n_backoff` definition
-    * (context-bearing tokens that did not score at their full available
-    * order). */
-  def scoreWith3Ml(batch: DataFrame, uni: DataFrame, bi: DataFrame,
-      tri: DataFrame): DataFrame = {
-    val tot = uni.groupBy(col("lang")).agg(
-      sum(col("c")).cast("double").as("n"),
-      count(lit(1)).cast("double").as("v"))
-    val st = tokenStream3Ml(batch)
-      .join(tri.select(col("lang"), col("w1").as("w2b"), col("w2").as("w1"),
-          col("w3").as("w"), col("c").as("c_tri")),
-        Seq("lang", "w2b", "w1", "w"), "left")
-      .join(bi.select(col("lang"), col("w1").as("w2b"), col("w2").as("w1"),
-          col("c").as("c_bi12")),
-        Seq("lang", "w2b", "w1"), "left")
-      .join(bi.select(col("lang"), col("w1"), col("w2").as("w"),
-          col("c").as("c_bi")),
-        Seq("lang", "w1", "w"), "left")
-      .join(uni.select(col("lang"), col("w").as("w1"), col("c").as("c_w1")),
-        Seq("lang", "w1"), "left")
-      .join(uni.select(col("lang"), col("w"), col("c").as("c_w")),
-        Seq("lang", "w"), "left")
-      .join(broadcast(tot), Seq("lang"), "left")
-    val uniP = (coalesce(col("c_w"), lit(0L)).cast("double") + 1.0) /
-      (col("n") + col("v"))
-    val biP = col("c_bi").cast("double") / col("c_w1").cast("double")
-    val lp = when(col("w1").isNull, log10(uniP))
-      .when(col("w2b").isNull && col("c_bi").isNotNull, log10(biP))
-      .when(col("w2b").isNull, log10(lit(LangModel.alpha) * uniP))
-      .when(col("c_tri").isNotNull,
-        log10(col("c_tri").cast("double") / col("c_bi12").cast("double")))
-      .when(col("c_bi").isNotNull, log10(lit(LangModel.alpha) * biP))
-      .otherwise(log10(lit(LangModel.alpha * LangModel.alpha) * uniP))
-    st.groupBy(col("doc_id"), col("lang")).agg(
-      count(lit(1)).as("n_tokens"),
-      sum(when(col("c_w").isNull, 1L).otherwise(0L)).as("n_oov"),
-      sum(when(col("w1").isNotNull &&
-          ((col("w2b").isNull && col("c_bi").isNull) ||
-            (col("w2b").isNotNull && col("c_tri").isNull)), 1L)
-        .otherwise(0L)).as("n_backoff"),
-      round(-sum(lp) / count(lit(1)), 6).as("xent"))
-  }
-
-  /** In-memory order-3 per-language form. */
-  def ppl3Ml(train: DataFrame, batch: DataFrame): DataFrame =
-    scoreWith3Ml(batch, unigramCountsMl(train), bigramCountsMl(train),
-      trigramCountsMl(train))
-
-  /** Generic per-language k-gram counts (lang, w1..wk, c) — the ML face
-    * of [[LangModel.gramCountsFrom]] (r18, orders up to
-    * [[LangModel.maxOrder]]). */
+  /** Per-language k-gram counts: (lang, w, c) at k = 1, else (lang,
+    * w1..wk, c) with w1 the OLDEST token — the ML face of
+    * [[LangModel.gramCounts]] (orders up to [[LangModel.maxOrder]]). */
   def gramCountsMl(docs: DataFrame, k: Int): DataFrame =
     LangModel.gramCountsFrom(docs, toksMl, k, Seq("lang"))
 
-  /** In-memory generic order-n per-language form (n ≤
-    * [[LangModel.maxOrder]] — n = 5 is CCNet's production KenLM order). */
+  /** In-memory order-n per-language form (2 ≤ n ≤ [[LangModel.maxOrder]]
+    * — n = 5 is CCNet's production KenLM order): train one model per
+    * `lang` on `train`, score each `batch` doc under its own language's
+    * model through [[LangModel.scoreStreamN]] with `lang` added to every
+    * join key and the (N, V) totals computed PER LANGUAGE (a broadcast
+    * join on `lang`; language cardinality is O(100)) — one plan, all
+    * languages. Both frames carry (doc_id, text, lang). A doc whose
+    * `lang` has no model (or is NULL — the model joins are equi-joins,
+    * as in the oracle) joins nothing and scores `xent = null` (see the
+    * zero-token policy in the object scaladoc). Output: (doc_id, lang,
+    * n_tokens, n_oov, n_backoff, xent). PRECONDITION: `batch` doc_ids
+    * are unique ([[LangModel.pplN]]). */
   def pplNMl(train: DataFrame, batch: DataFrame, n: Int): DataFrame =
     scoreStreamNMl(batch, (1 to n).map(k => gramCountsMl(train, k)), n)
 
-  /** The generic order-n per-language scorer against GIVEN count tables
-    * (lowest order first) — the kernel [[pplNMl]] derives its tables
-    * into, and the one the order-5 release funnel
-    * ([[Curation.release5]]) pins its tables through (r19). */
+  /** The order-n per-language scorer against GIVEN count tables (lowest
+    * order first) — the kernel [[pplNMl]] derives its tables into, and
+    * the one [[gateMl]] and the release funnels ([[Curation.release]],
+    * [[Curation.release5]]) pin their tables through. */
   private[graft] def scoreStreamNMl(batch: DataFrame, tables: Seq[DataFrame],
       n: Int): DataFrame =
     scoreStreamNMlFromTs(tokenizedMl(batch), tables, n)
@@ -259,35 +113,31 @@ object LangModelMl {
         toked.columns.toSeq.filterNot(_ == "ts")),
       tables, Seq("lang"), n)
 
-  /** Per-language CALIBRATED cuts: each language's threshold derives
-    * from ITS OWN model's score distribution (CCNet thresholds come from
-    * the reference corpus's per-language perplexity distribution — a
-    * single global number is structurally wrong when zh scores ~0.9
-    * where latin languages score ~1.5, measured in MlGateProbe). The
-    * base is the per-lang MEAN of the train corpus self-scored under its
-    * own model, computed in INTEGER MICRO-UNITS: each doc's already
-    * 6-dp-rounded `xent` quantizes exactly to `round(xent·10⁶)` (a
-    * BIGINT), the per-lang sum is exact integer arithmetic, and the mean
-    * is one deterministic IEEE division + floor — so both engines derive
-    * the IDENTICAL cut with no float-accumulation race (the PSI
+  /** Per-language CALIBRATED cuts from an ALREADY-SCORED self-score
+    * frame (doc-level `lang` + 6-dp `xent`): each language's threshold
+    * derives from ITS OWN model's score distribution (CCNet thresholds
+    * come from the reference corpus's per-language perplexity
+    * distribution — a single global number is structurally wrong when
+    * zh scores ~0.9 where latin languages score ~1.5, measured,
+    * EXPLAIN.md "Round 17: the per-language LM gate"). The base is the
+    * per-lang MEAN of the train corpus self-scored under its own model,
+    * computed in INTEGER MICRO-UNITS: each doc's already 6-dp-rounded
+    * `xent` quantizes exactly to `round(xent·10⁶)` (a BIGINT), the
+    * per-lang sum is exact integer arithmetic, and the mean is one
+    * deterministic IEEE division + floor — so both engines derive the
+    * IDENTICAL cut with no float-accumulation race (the PSI
     * quantize-before-sum discipline). Output: (lang, cut_micro) where
-    * `cut_micro = floor(avg(xent·10⁶)) + offsetMicro`. */
-  def calibratedCutsMl(train: DataFrame, uni: DataFrame, bi: DataFrame,
-      offsetMicro: Long): DataFrame =
-    cutsFromSelfScores(scoreWithMl(train, uni, bi), offsetMicro)
-
-  /** The per-lang calibrated cut from an ALREADY-SCORED self-score frame
-    * (doc-level `lang` + 6-dp `xent`) — the exact-integer-micro formula
-    * factored out so any order's scorer calibrates identically (the
-    * order-5 release funnel and the shape-aware
-    * [[Curation.writeReleaseCuts]], r19). */
+    * `cut_micro = floor(avg(xent·10⁶)) + offsetMicro`. Every order's
+    * scorer calibrates through it ([[gateMl]], [[Curation.release]],
+    * [[Curation.release5]], [[Curation.writeReleaseCuts]]). */
   def cutsFromSelfScores(scored: DataFrame, offsetMicro: Long): DataFrame =
     scored.groupBy(col("lang")).agg(
       (floor(sum(round(col("xent") * 1e6).cast("long")).cast("double") /
         count(lit(1))).cast("long") + offsetMicro).as("cut_micro"))
 
-  /** The per-language LM GATE: calibrated per-lang cut ([[
-    * calibratedCutsMl]]) plus the explicit zero-token policy. Per
+  /** The per-language order-2 LM GATE: calibrated per-lang cut
+    * ([[cutsFromSelfScores]] over the train self-scores) plus the
+    * explicit zero-token policy. Per
     * language — `n_in` arrivals, `n_zero_tok` unscorable docs
     * (PASS-THROUGH, counted), `n_scored` docs with a score under their
     * language's model, `n_kept` = zero-token pass-throughs + scored docs
@@ -297,21 +147,18 @@ object LangModelMl {
     * `n_in − n_zero_tok − n_scored` (scored nothing, kept no — counted,
     * never silent; their `cut_micro` is null). */
   def gateMl(train: DataFrame, batch: DataFrame, offsetMicro: Long): DataFrame = {
-    // The model tables feed SIX join sides (three in the self-score
-    // chain, three in the batch chain) and the cuts feed one more —
-    // pinned eagerly (vocabulary-scale / one-row-per-lang) so Catalyst
-    // reads them from memory instead of re-deriving each reference from
-    // a fresh corpus scan (measured: the unpinned cur_release plan grew
-    // to 64 parquet scans).
-    // the two independent count aggregates overlap (guide §2.6)
-    val unibi = Par.run(Seq(
-      () => unigramCountsMl(train).localCheckpoint(true),
-      () => bigramCountsMl(train).localCheckpoint(true)))
-    val (uni, bi) = (unibi(0), unibi(1))
-    val cuts = calibratedCutsMl(train, uni, bi, offsetMicro)
-      .localCheckpoint(true)
-    val scored = scoreWithMl(
-        batch.select(col("doc_id"), col("text"), col("lang")), uni, bi)
+    // The model tables feed both scoring chains (the self-score and the
+    // batch) and the cuts feed one more join — pinned eagerly
+    // (vocabulary-scale / one-row-per-lang) so Catalyst reads them from
+    // memory instead of re-deriving each reference from a fresh corpus
+    // scan (measured: the unpinned cur_release plan grew to 64 parquet
+    // scans). The two independent count aggregates overlap (guide §2.6).
+    val tables = Par.run((1 to 2).map(k => () =>
+      gramCountsMl(train, k).localCheckpoint(true)))
+    val cuts = cutsFromSelfScores(scoreStreamNMl(train, tables, 2),
+      offsetMicro).localCheckpoint(true)
+    val scored = scoreStreamNMl(
+        batch.select(col("doc_id"), col("text"), col("lang")), tables, 2)
       .select(col("doc_id"), col("xent"))
     batch.select(col("doc_id"), col("lang"),
         zeroTok(col("text")).as("zt"))
@@ -320,7 +167,7 @@ object LangModelMl {
       // NULL-keyed cut row, and the oracle matches it via IS NOT DISTINCT
       // FROM — an equi-join here would silently drop it (the one
       // Spark/oracle asymmetry the r17 verdict flagged). The MODEL joins
-      // in scoreWithMl stay equi-joins on purpose: the oracle's table
+      // in scoreStreamNMl stay equi-joins on purpose: the oracle's table
       // joins use `=`, so NULL-lang docs score xent = null on BOTH sides
       // (the n_unmodeled residue).
       .join(broadcast(cuts.withColumnRenamed("lang", "lang_cut")),
@@ -358,8 +205,9 @@ object LangModelMl {
        |       '${LangModel.oracleTokenBound}-token oracle bound') AS BIGINT)
        |     ELSE len(ts) END)""".stripMargin
 
-  /** Oracle replaying [[pplMl]]: per-lang count tables and totals, every
-    * join keyed by lang. Callers append ORDER BY / projection. */
+  /** Oracle replaying [[pplNMl]] at order 2: per-lang count tables and
+    * totals, every join keyed by lang. Callers append ORDER BY /
+    * projection. */
   def pplMlSql(trainSql: String, scoreSql: String): String =
     s"""WITH ttok AS (SELECT * FROM ${tokenStreamMlSql(trainSql)}),
        | uni AS (SELECT lang, w, CAST(count(*) AS BIGINT) AS c
@@ -406,7 +254,7 @@ object LangModelMl {
        |       '${LangModel.oracleTokenBound}-token oracle bound') AS BIGINT)
        |     ELSE len(ts) END)""".stripMargin
 
-  /** Oracle replaying [[ppl3Ml]]: the three per-lang count tables,
+  /** Oracle replaying [[pplNMl]] at order 3: the three per-lang count tables,
     * per-lang totals, and the order-3 backoff CASE — every join keyed by
     * lang. Callers append ORDER BY / projection. */
   def pplMl3Sql(trainSql: String, scoreSql: String): String =
@@ -461,7 +309,7 @@ object LangModelMl {
     s"CASE WHEN len(regexp_extract_all(lower($textExpr), " +
       s"'$mlTokenClassSql')) = 0 THEN 1 ELSE 0 END"
 
-  /** Oracle CTE body for [[calibratedCutsMl]] given a scored-self CTE
+  /** Oracle CTE body for [[cutsFromSelfScores]] given a scored-self CTE
     * name: per-lang exact integer mean + offset. Public so composition
     * oracles ([[Curation.releaseSql]]) reuse it. */
   def cutsSqlOver(selfScored: String, offsetMicro: Long): String =

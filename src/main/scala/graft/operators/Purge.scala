@@ -85,28 +85,22 @@ object Purge {
     // cost one job submission instead of 10⁴ sequential ones (the r17
     // driver-loop flag; HealthProbe measures jobs vs partitions).
     val partCol = partitionPrefix.stripSuffix("=")
-    // Partition type inference OFF for this read (restored after): the
-    // reconstruction s"$prefix${value}" must round-trip the DIRECTORY
-    // name exactly — an inferred type that reformats the value (leading
-    // zeros, non-numeric shapes) would silently map to no directory and
-    // report 0 rows instead of failing (r18 ADVICE). As strings the
-    // value IS the raw dir suffix, and the loud check below guarantees
-    // every counted key maps back to a listed partition.
+    // The partition column is read through a USER-GIVEN schema that
+    // declares it a string: Spark then takes the raw directory suffix
+    // without type inference, so the reconstruction s"$prefix${value}"
+    // round-trips the DIRECTORY name exactly — an inferred type that
+    // reformats the value (leading zeros, non-numeric shapes) would
+    // silently map to no directory and report 0 rows instead of failing
+    // (r18 ADVICE). No session conf is touched: Verify runs several
+    // dumps on one shared session, and a conf bracket here raced them.
+    // The loud check below guarantees every counted key maps back to a
+    // listed partition.
     val counted: Map[String, Long] =
       if (allFiles.isEmpty) Map.empty
-      else {
-        val infKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        val prev = spark.conf.getOption(infKey)
-        spark.conf.set(infKey, "false")
-        try spark.read.parquet(root)
-          .groupBy(col(partCol)).agg(count(lit(1)).as("n"))
-          .collect()
-          .map(r => (s"$partitionPrefix${r.get(0)}", r.getLong(1))).toMap
-        finally prev match {
-          case Some(v) => spark.conf.set(infKey, v)
-          case None => spark.conf.unset(infKey)
-        }
-      }
+      else spark.read.schema(s"`$partCol` STRING").parquet(root)
+        .groupBy(col(partCol)).agg(count(lit(1)).as("n"))
+        .collect()
+        .map(r => (s"$partitionPrefix${r.getString(0)}", r.getLong(1))).toMap
     val nameSet = parts.map(_.getName).toSet
     counted.keys.foreach(k => require(nameSet.contains(k),
       s"indexHealth: counted partition value '$k' matches no listed " +

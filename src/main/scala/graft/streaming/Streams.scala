@@ -296,6 +296,20 @@ object Streams {
     }
   }
 
+  /** Refuse a micro-batch that carries a doc_id twice: two documents
+    * under one id always mean corrupt input, and the LM loops score one
+    * token sequence per doc_id ([[graft.operators.LangModel.pplN]]'s
+    * precondition — two docs sharing an id would interleave in the
+    * scoring window and read each other's counts). One Spark action over
+    * the batch's ids; the message names the lowest repeated id, worded
+    * as [[curationLoop]]'s guard. */
+  private def requireUniqueIds(b: DataFrame, batchId: Long): Unit = {
+    val dup = b.groupBy(col("doc_id")).count().where(col("count") > 1)
+      .agg(min(col("doc_id").cast("long"))).head()
+    require(dup.isNullAt(0),
+      s"batch $batchId carries duplicate doc_id ${dup.getLong(0)}")
+  }
+
   /** Standing-state size signal for [[withBatchParallelism]]: the max
     * scan parallelism across the given parquet dirs, read from the plan
     * (file listing only, no job). A path that doesn't exist yet (first
@@ -592,11 +606,13 @@ object Streams {
     * exactly the state its failed attempt saw and rewrites identical
     * bytes. Per-batch cost: one batch scan + vocabulary-scale model
     * reads — the seed corpus is never rescanned. The model must be
-    * owned by this single loop (batch-API appends use disjoint ids). */
+    * owned by this single loop (batch-API appends use disjoint ids), and
+    * a batch carrying a doc_id twice is refused before anything is
+    * scored or appended. */
   def lmIngest(docs: DataFrame, modelDir: String, scoresDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     // ONE model session per loop run (r19, the bm25Ingest discipline):
-    // the per-batch scoreAgainstLmIndex path re-listed, re-repaired and
+    // the per-batch dir-based scorer re-listed, re-repaired and
     // re-folded every count table from parquet once per micro-batch;
     // the session loads once and rolls the cache forward as the loop
     // appends — scores are row-identical (SessionSpec).
@@ -608,6 +624,7 @@ object Streams {
         val b = batch.select(col("doc_id"), col("text"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
+          requireUniqueIds(b, batchId)
           model.score(b, excludeIngestBatch = Some(batchId))
             .write.mode("overwrite").parquet(s"$scoresDir/micro_batch=$batchId")
           model.append(b, batchId)
@@ -629,9 +646,8 @@ object Streams {
     * marker and counts per-language automatically. */
   def lmMlIngest(docs: DataFrame, modelDir: String, scoresDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    // ONE model session per loop run (r19) — see lmIngest; the session's
-    // shape dispatch reads the tok=ml marker, so the per-lang scorer is
-    // picked once per run, not once per batch.
+    // ONE model session per loop run (r19) — see lmIngest; the session
+    // reads the tok=ml marker once per run and scores per language.
     val model = graft.operators.LangModel.openLmSession(
       docs.sparkSession, modelDir)
     val query = docs.writeStream
@@ -640,6 +656,7 @@ object Streams {
         val b = batch.select(col("doc_id"), col("text"), col("lang"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
+          requireUniqueIds(b, batchId)
           model.score(b, excludeIngestBatch = Some(batchId))
             .write.mode("overwrite").parquet(s"$scoresDir/micro_batch=$batchId")
           model.append(b, batchId)
@@ -671,7 +688,7 @@ object Streams {
     * r18 ADVICE "observer that can mutate" wart; the session repairs
     * once at open, before the stream starts). Per-batch cost: one batch
     * scan + vocabulary-scale model joins + the within-batch dedup
-    * aggregate. */
+    * aggregate. A batch carrying a doc_id twice is refused. */
   def releaseMonitor(docs: DataFrame, modelDir: String, cutsDir: String,
       outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -714,6 +731,7 @@ object Streams {
                 graft.operators.TextAnalysis.langIdPred(col("text"))
                   .as("lang"))
             else batch.select(col("doc_id"), col("text"), col("lang"))
+          requireUniqueIds(b, batchId)
           graft.operators.Curation
             .releaseWith(b, sb => (model.score(sb), cuts))
             .write.mode("overwrite").parquet(s"$outDir/micro_batch=$batchId")
@@ -1343,10 +1361,7 @@ object Streams {
           .as[graft.operators.MediaRow]
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val dupInBatch = b.groupBy(col("doc_id")).agg(count(lit(1)).as("k"))
-            .where(col("k") > 1).limit(1).collect()
-          require(dupInBatch.isEmpty,
-            s"batch $batchId carries duplicate doc_id ${dupInBatch.head.getLong(0)}")
+          requireUniqueIds(b.toDF(), batchId)
           // First-delivery id-collision guard against the standing index
           // (broadcast semi-join over the hash table's id column — the
           // curationLoop guard verbatim); replays legitimately collide

@@ -14,7 +14,7 @@ class LangModelMlSpec extends TestBase {
       "digits are no token at all") {
     // 中文 = two Han tokens; Ab → 'ab'; 42 → nothing
     val d = docs((1L, "Ab 中文 42", "zh"))
-    val uni = LangModelMl.unigramCountsMl(d)
+    val uni = LangModelMl.gramCountsMl(d, 1)
       .orderBy("w").select("lang", "w", "c")
       .as[(String, String, Long)].collect().toSeq
     assert(uni == Seq(("zh", "ab", 1L), ("zh", "中", 1L), ("zh", "文", 1L)))
@@ -35,7 +35,7 @@ class LangModelMlSpec extends TestBase {
       (1L, "كتاب جديد", "ar"),
       (2L, "नमस्ते ok", "hi"),
       (3L, "ไทย", "th"))
-    val uni = LangModelMl.unigramCountsMl(d)
+    val uni = LangModelMl.gramCountsMl(d, 1)
       .groupBy("lang").agg(count(lit(1)).as("n"))
       .orderBy("lang").as[(String, Long)].collect().toSeq
     assert(uni == Seq(("ar", 2L), ("hi", 2L), ("th", 3L)),
@@ -55,8 +55,8 @@ class LangModelMlSpec extends TestBase {
     // zh model: "中 文"  → uni 中:1 文:1 (N=2, V=2); bi (中,文):1
     val train = docs((1L, "a b", "en"), (2L, "a b", "en"), (3L, "中文", "zh"))
     // NOTE "中文" has no space: char-level tokens 中,文 — adjacency intact
-    val got = LangModelMl.pplMl(train,
-        docs((10L, "a b", "en"), (11L, "中文", "zh"), (12L, "a b", "zh")))
+    val got = LangModelMl.pplNMl(train,
+        docs((10L, "a b", "en"), (11L, "中文", "zh"), (12L, "a b", "zh")), 2)
       .orderBy("doc_id")
       .select("doc_id", "lang", "n_tokens", "n_oov", "n_backoff", "xent")
       .as[(Long, String, Long, Long, Long, Double)].collect().toSeq
@@ -96,7 +96,7 @@ class LangModelMlSpec extends TestBase {
       ("zh", 1L, 0L, 1L, 1L)))
     // cut_micro is the exact integer mean + offset (en self-xent is the
     // same doc twice → mean == the doc's micro score)
-    val enSelf = LangModelMl.pplMl(train, train.where(col("lang") === "en"))
+    val enSelf = LangModelMl.pplNMl(train, train.where(col("lang") === "en"), 2)
       .select(round(col("xent") * 1e6).cast("long")).as[Long].collect().head
     val cutRow = LangModelMl.gateMl(train, batch, offsetMicro = 10000L)
       .where(col("lang") === "en").select("cut_micro").as[Long].collect().head
@@ -111,27 +111,28 @@ class LangModelMlSpec extends TestBase {
     val batch = docs((10L, "a b", "en"), (11L, "中文", "zh"))
     val tmp = java.nio.file.Files.createTempDirectory("graft-lm-ml-spec")
     try {
-      LangModel.buildLmMlIndex(a, s"$tmp/m")
-      def score() = LangModel.scoreAgainstLmMlIndex(s"$tmp/m", batch)
+      LangModel.buildLmIndex(a, s"$tmp/m", ml = true)
+      def score() = LangModel.scoreAgainstLmNIndex(s"$tmp/m", batch, 2,
+          ml = true)
         .orderBy("doc_id").collect().toSeq
       assert(score() ==
-        LangModelMl.pplMl(a, batch).orderBy("doc_id").collect().toSeq)
+        LangModelMl.pplNMl(a, batch, 2).orderBy("doc_id").collect().toSeq)
       LangModel.appendToLmIndex(b, s"$tmp/m", 0L) // marker says ml
       assert(score() ==
-        LangModelMl.pplMl(a.unionAll(b), batch).orderBy("doc_id")
+        LangModelMl.pplNMl(a.unionAll(b), batch, 2).orderBy("doc_id")
           .collect().toSeq)
       LangModel.purgeFromLmIndex(b, s"$tmp/m", 0L)
       assert(score() ==
-        LangModelMl.pplMl(a, batch).orderBy("doc_id").collect().toSeq)
+        LangModelMl.pplNMl(a, batch, 2).orderBy("doc_id").collect().toSeq)
       // cross-reading refused BOTH ways (different tokenizers — the
       // silent-OOV trap the marker exists to prevent)
       intercept[IllegalArgumentException] {
-        LangModel.scoreAgainstLmIndex(s"$tmp/m",
-          batch.select(col("doc_id"), col("text")))
+        LangModel.scoreAgainstLmNIndex(s"$tmp/m",
+          batch.select(col("doc_id"), col("text")), 2, ml = false)
       }
       LangModel.buildLmIndex(a.select(col("doc_id"), col("text")), s"$tmp/plain")
       intercept[IllegalArgumentException] {
-        LangModel.scoreAgainstLmMlIndex(s"$tmp/plain", batch)
+        LangModel.scoreAgainstLmNIndex(s"$tmp/plain", batch, 2, ml = true)
       }
     } finally deleteRecursively(tmp)
   }
@@ -146,7 +147,7 @@ class LangModelMlSpec extends TestBase {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val probe = docs((10L, "a b c", "en"), (11L, "中文中", "zh"),
       (12L, "b", "en"))
-    val got = LangModelMl.ppl3Ml(train, probe).orderBy("doc_id")
+    val got = LangModelMl.pplNMl(train, probe, 3).orderBy("doc_id")
       .select("doc_id", "lang", "n_tokens", "n_oov", "n_backoff", "xent")
       .as[(Long, String, Long, Long, Long, Double)].collect().toSeq
     // en "a b c": uni N=9 V=5, p(a)=3/14, p(b|a)=2/2, tri p(c|a b)=2/2
@@ -163,25 +164,26 @@ class LangModelMlSpec extends TestBase {
     // persisted ml3: build+grow == direct recompute; order/tok gates hold
     val tmp = java.nio.file.Files.createTempDirectory("graft-lm3-ml-spec")
     try {
-      LangModel.buildLmMl3Index(train.where(col("doc_id") <= 2), s"$tmp/m")
+      LangModel.buildLmIndex(train.where(col("doc_id") <= 2), s"$tmp/m", 3,
+          ml = true)
       LangModel.appendToLmIndex(train.where(col("doc_id") >= 3), s"$tmp/m", 0L)
-      assert(LangModel.scoreAgainstLmMl3Index(s"$tmp/m", probe)
+      assert(LangModel.scoreAgainstLmNIndex(s"$tmp/m", probe, 3, ml = true)
         .orderBy("doc_id").collect().toSeq ==
-        LangModelMl.ppl3Ml(train, probe).orderBy("doc_id").collect().toSeq)
+        LangModelMl.pplNMl(train, probe, 3).orderBy("doc_id").collect().toSeq)
       // order-2 ml scoring over the ml3 layout is legal (same
       // corpus-shaped lower-order tables), like the plain form
-      assert(LangModel.scoreAgainstLmMlIndex(s"$tmp/m", probe)
+      assert(LangModel.scoreAgainstLmNIndex(s"$tmp/m", probe, 2, ml = true)
         .orderBy("doc_id").collect().toSeq ==
-        LangModelMl.pplMl(train, probe).orderBy("doc_id").collect().toSeq)
+        LangModelMl.pplNMl(train, probe, 2).orderBy("doc_id").collect().toSeq)
       // the plain order-3 reader refuses the ml layout (tokenizers)
       intercept[IllegalArgumentException] {
-        LangModel.scoreAgainstLm3Index(s"$tmp/m",
-          probe.select(col("doc_id"), col("text")))
+        LangModel.scoreAgainstLmNIndex(s"$tmp/m",
+          probe.select(col("doc_id"), col("text")), 3, ml = false)
       }
       // an order-2 ml layout refuses the order-3 ml scorer
-      LangModel.buildLmMlIndex(train, s"$tmp/m2")
+      LangModel.buildLmIndex(train, s"$tmp/m2", ml = true)
       intercept[IllegalArgumentException] {
-        LangModel.scoreAgainstLmMl3Index(s"$tmp/m2", probe)
+        LangModel.scoreAgainstLmNIndex(s"$tmp/m2", probe, 3, ml = true)
       }
     } finally deleteRecursively(tmp)
   }
@@ -193,15 +195,66 @@ class LangModelMlSpec extends TestBase {
       (3L, "f b c d g", "en"), (4L, "中文中文中", "zh"))
     val batch = docs((10L, "a b c d e", "en"), (11L, "a b c d g", "en"),
       (12L, "中文中文中", "zh"), (13L, "b", "en"))
-    assert(LangModelMl.pplNMl(train, batch, 2).orderBy("doc_id")
-      .collect().toSeq ==
-      LangModelMl.pplMl(train, batch).orderBy("doc_id").collect().toSeq)
-    assert(LangModelMl.pplNMl(train, batch, 3).orderBy("doc_id")
-      .collect().toSeq ==
-      LangModelMl.ppl3Ml(train, batch).orderBy("doc_id").collect().toSeq)
+    // expected rows captured from the hand-written lang-keyed order-2/3
+    // kernels (`pplMl`/`ppl3Ml`, since deleted); the generic kernel
+    // reproduced every one before they went
+    val tm = docs((1L, "a b c d e", "en"), (2L, "a b c d e", "en"),
+      (3L, "f b c d g", "en"), (4L, "a a a b c", "en"),
+      (5L, "中文中文中", "zh"), (6L, "a b", null))
+    val bm = docs(
+      (10L, "b", "en"), // one token
+      (11L, "", "en"), // empty text: no token, no row
+      (12L, "a a a", "en"), // repeated token
+      // "f b" attested only as the prefix of "f b c"
+      (13L, "f b e", "en"),
+      (14L, "f c", "en"), // context "f" attested, bigram "f c" not
+      (15L, "q", "en"), // one OOV token
+      (16L, "中文q", "zh"), // char-level tokens plus an OOV latin run
+      (17L, "a b c", "xx"), // unmodeled lang: no table or totals row
+      (18L, "a b", null), // NULL lang: the model joins never match it
+      (19L, "文中中", "zh"))
+    type R = (Long, String, Long, Long, Long, Option[Double])
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[R] =
+      df.orderBy("doc_id")
+        .select("doc_id", "lang", "n_tokens", "n_oov", "n_backoff", "xent")
+        .collect().toSeq.map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+          r.getLong(3), r.getLong(4), Option(r.get(5)).map(_ => r.getDouble(5))))
+    val want: Map[Int, Seq[R]] = Map(
+      2 -> Seq((10L, "en", 1L, 0L, 0L, Some(0.732394)),
+        (12L, "en", 3L, 0L, 0L, Some(0.483031)),
+        (13L, "en", 3L, 0L, 1L, Some(0.827505)),
+        (14L, "en", 2L, 0L, 1L, Some(1.130334)),
+        (15L, "en", 1L, 1L, 0L, Some(1.431364)),
+        (16L, "zh", 3L, 1L, 1L, Some(0.554056)),
+        (17L, "xx", 3L, 3L, 2L, None),
+        (18L, null, 2L, 2L, 1L, None),
+        (19L, "zh", 3L, 0L, 1L, Some(0.336318))),
+      3 -> Seq((10L, "en", 1L, 0L, 0L, Some(0.732394)),
+        (12L, "en", 3L, 0L, 0L, Some(0.450728)),
+        (13L, "en", 3L, 0L, 1L, Some(0.960152)),
+        (14L, "en", 2L, 0L, 1L, Some(1.130334)),
+        (15L, "en", 1L, 1L, 0L, Some(1.431364)),
+        (16L, "zh", 3L, 1L, 1L, Some(0.686702)),
+        (17L, "xx", 3L, 3L, 2L, None),
+        (18L, null, 2L, 2L, 1L, None),
+        (19L, "zh", 3L, 0L, 1L, Some(0.468965))))
+    want.foreach { case (n, w) =>
+      assert(rows(LangModelMl.pplNMl(tm, bm, n)) == w, s"order $n")
+    }
+    // the real corpus: row count and MD5 over the ordered rows
+    // ([[TestBase.lmRowDigest]]), captured from the same kernels
+    val d = Tables(spark, sf(), "documents")
+      .select(col("doc_id"), col("text"), col("lang"))
+    val dTrain = d.where(col("doc_id") % 3 =!= 2)
+    val dBatch = d.where(col("doc_id") % 3 === 2 && col("doc_id") < 150)
+    assert(lmRowDigest(LangModelMl.pplNMl(dTrain, dBatch, 2)) ==
+      ((50, "c9a270e68b8e7b5cfbfbad2e9efbccc6")))
+    assert(lmRowDigest(LangModelMl.pplNMl(dTrain, dBatch, 3)) ==
+      ((50, "2c02f2d8ff64f9b167d196ebf4b29322")))
     val tmp = java.nio.file.Files.createTempDirectory("graft-lm5-ml-spec")
     try {
-      LangModel.buildLmMl5Index(train.where(col("doc_id") <= 2), s"$tmp/m")
+      LangModel.buildLmIndex(train.where(col("doc_id") <= 2), s"$tmp/m", 5,
+          ml = true)
       LangModel.appendToLmIndex(train.where(col("doc_id") >= 3), s"$tmp/m", 0L)
       assert(LangModel.scoreAgainstLmNIndex(s"$tmp/m", batch, 5, ml = true)
         .orderBy("doc_id").collect().toSeq ==
@@ -209,9 +262,9 @@ class LangModelMlSpec extends TestBase {
           .collect().toSeq)
       // order-2 ml scoring over the ml5 layout stays legal (lower-order
       // tables are the same corpus-shaped counts)
-      assert(LangModel.scoreAgainstLmMlIndex(s"$tmp/m", batch)
+      assert(LangModel.scoreAgainstLmNIndex(s"$tmp/m", batch, 2, ml = true)
         .orderBy("doc_id").collect().toSeq ==
-        LangModelMl.pplMl(train, batch).orderBy("doc_id").collect().toSeq)
+        LangModelMl.pplNMl(train, batch, 2).orderBy("doc_id").collect().toSeq)
       // the plain order-5 reader refuses the ml layout
       intercept[IllegalArgumentException] {
         LangModel.scoreAgainstLmNIndex(s"$tmp/m",
@@ -301,7 +354,7 @@ class LangModelMlSpec extends TestBase {
     // under the old single-model tokenizer this doc had zero tokens and
     // silently vanished at the gate; under the ML class it scores
     val train = docs((1L, "中文中文", "zh"))
-    val scored = LangModelMl.pplMl(train, docs((9L, "中文", "zh")))
+    val scored = LangModelMl.pplNMl(train, docs((9L, "中文", "zh")), 2)
       .select("n_tokens").as[Long].collect()
     assert(scored.toSeq == Seq(2L))
   }

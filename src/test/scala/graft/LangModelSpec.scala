@@ -14,7 +14,7 @@ class LangModelSpec extends TestBase {
     // bi: (a,b):2 (b,a):1 (a,c):1
     val train = docs(1L -> "a b a b", 2L -> "a c")
     // score "a b": p(a)=uni add-one=(3+1)/9, p(b|a)=2/3
-    val got = LangModel.ppl(train, docs(10L -> "a b"))
+    val got = LangModel.pplN(train, docs(10L -> "a b"), 2)
       .select("n_tokens", "n_oov", "n_backoff", "xent").as[(Long, Long, Long, Double)]
       .collect().head
     val expect = -(math.log10(4.0 / 9) + math.log10(2.0 / 3)) / 2
@@ -27,7 +27,7 @@ class LangModelSpec extends TestBase {
     val train = docs(1L -> "a b a b", 2L -> "a c")
     // "c a z": p(c)=add-one (1+1)/9; (c,a) unseen → backoff 0.4*(3+1)/9;
     // z OOV → backoff 0.4*(0+1)/9
-    val got = LangModel.ppl(train, docs(10L -> "c a z"))
+    val got = LangModel.pplN(train, docs(10L -> "c a z"), 2)
       .select("n_tokens", "n_oov", "n_backoff", "xent").as[(Long, Long, Long, Double)]
       .collect().head
     val expect = -(math.log10(2.0 / 9) + math.log10(0.4 * 4 / 9) +
@@ -42,7 +42,7 @@ class LangModelSpec extends TestBase {
     val head = d.where(col("doc_id") < 50)
     val junk = head.select(col("doc_id") + 1000000L as "doc_id",
       concat(lit("the a of to and " * 3), col("text")) as "text")
-    val scored = LangModel.ppl(d, head.unionAll(junk))
+    val scored = LangModel.pplN(d, head.unionAll(junk), 2)
       .select(col("doc_id"), col("xent")).as[(Long, Double)].collect()
     val (twin, orig) = scored.partition(_._1 >= 1000000L)
     assert(orig.nonEmpty && twin.nonEmpty)
@@ -57,14 +57,18 @@ class LangModelSpec extends TestBase {
     val tmp = java.nio.file.Files.createTempDirectory("graft-lm-spec")
     try {
       LangModel.buildLmIndex(a, s"$tmp/m")
-      def score() = LangModel.scoreAgainstLmIndex(s"$tmp/m", batch)
+      def score() = LangModel.scoreAgainstLmNIndex(s"$tmp/m", batch, 2,
+          ml = false)
         .orderBy("doc_id").collect().toSeq
-      assert(score() == LangModel.ppl(a, batch).orderBy("doc_id").collect().toSeq)
+      assert(score() == LangModel.pplN(a, batch, 2)
+        .orderBy("doc_id").collect().toSeq)
       LangModel.appendToLmIndex(b, s"$tmp/m", 0L)
       assert(score() ==
-        LangModel.ppl(a.unionAll(b), batch).orderBy("doc_id").collect().toSeq)
+        LangModel.pplN(a.unionAll(b), batch, 2)
+          .orderBy("doc_id").collect().toSeq)
       LangModel.purgeFromLmIndex(b, s"$tmp/m", 0L)
-      assert(score() == LangModel.ppl(a, batch).orderBy("doc_id").collect().toSeq)
+      assert(score() == LangModel.pplN(a, batch, 2)
+        .orderBy("doc_id").collect().toSeq)
     } finally deleteRecursively(tmp)
   }
 
@@ -73,12 +77,14 @@ class LangModelSpec extends TestBase {
     val tmp = java.nio.file.Files.createTempDirectory("graft-lm-spec2")
     try {
       LangModel.buildLmIndex(train, s"$tmp/m")
-      val before = LangModel.scoreAgainstLmIndex(s"$tmp/m", docs(9L -> "a b c"))
+      val before = LangModel.scoreAgainstLmNIndex(s"$tmp/m",
+          docs(9L -> "a b c"), 2, ml = false)
         .collect().toSeq
       intercept[IllegalArgumentException] {
         LangModel.purgeFromLmIndex(docs(5L -> "a b b b b"), s"$tmp/m", 1L)
       }
-      assert(LangModel.scoreAgainstLmIndex(s"$tmp/m", docs(9L -> "a b c"))
+      assert(LangModel.scoreAgainstLmNIndex(s"$tmp/m", docs(9L -> "a b c"), 2,
+          ml = false)
         .collect().toSeq == before)
       // unigram bag balances but bigram orientation differs: "b a" was
       // never trained, and the mismatch MUST be caught on the bigram
@@ -86,7 +92,8 @@ class LangModelSpec extends TestBase {
       intercept[IllegalArgumentException] {
         LangModel.purgeFromLmIndex(docs(6L -> "b a"), s"$tmp/m", 2L)
       }
-      assert(LangModel.scoreAgainstLmIndex(s"$tmp/m", docs(9L -> "a b c"))
+      assert(LangModel.scoreAgainstLmNIndex(s"$tmp/m", docs(9L -> "a b c"), 2,
+          ml = false)
         .collect().toSeq == before)
     } finally deleteRecursively(tmp)
   }
@@ -103,13 +110,15 @@ class LangModelSpec extends TestBase {
       // doc 3 contributes the ONLY 'c a' bigram — a naive revalidation
       // of the retry would see it at -1
       LangModel.purgeFromLmIndex(docs(3L -> "c a"), s"$tmp/m", 0L)
-      val after = LangModel.scoreAgainstLmIndex(s"$tmp/m", docs(9L -> "a b c"))
+      val after = LangModel.scoreAgainstLmNIndex(s"$tmp/m",
+          docs(9L -> "a b c"), 2, ml = false)
         .collect().toSeq
       LangModel.purgeFromLmIndex(docs(3L -> "c a"), s"$tmp/m", 0L) // retry
-      assert(LangModel.scoreAgainstLmIndex(s"$tmp/m", docs(9L -> "a b c"))
+      assert(LangModel.scoreAgainstLmNIndex(s"$tmp/m", docs(9L -> "a b c"), 2,
+          ml = false)
         .collect().toSeq == after)
-      assert(after == LangModel.ppl(train.where(col("doc_id") =!= 3L),
-        docs(9L -> "a b c")).collect().toSeq)
+      assert(after == LangModel.pplN(train.where(col("doc_id") =!= 3L),
+        docs(9L -> "a b c"), 2).collect().toSeq)
     } finally deleteRecursively(tmp)
   }
 
@@ -123,7 +132,8 @@ class LangModelSpec extends TestBase {
       LangModel.buildLmIndex(a, s"$tmp/m")
       LangModel.appendToLmIndex(b, s"$tmp/m", 0L)
       LangModel.purgeFromLmIndex(b.where(col("doc_id") < 200), s"$tmp/m", 0L)
-      val before = LangModel.scoreAgainstLmIndex(s"$tmp/m", batch)
+      val before = LangModel.scoreAgainstLmNIndex(s"$tmp/m", batch, 2,
+          ml = false)
         .orderBy("doc_id").collect().toSeq
       def parts(sub: String) =
         new java.io.File(s"$tmp/m/$sub").listFiles().map(_.getName)
@@ -131,7 +141,7 @@ class LangModelSpec extends TestBase {
       assert(parts("unigrams") == 3 && parts("bigrams") == 3)
       LangModel.compactLmIndex(spark, s"$tmp/m")
       assert(parts("unigrams") == 1 && parts("bigrams") == 1)
-      assert(LangModel.scoreAgainstLmIndex(s"$tmp/m", batch)
+      assert(LangModel.scoreAgainstLmNIndex(s"$tmp/m", batch, 2, ml = false)
         .orderBy("doc_id").collect().toSeq == before)
       // no negative or zero counts survive the fold
       assert(spark.read.parquet(s"$tmp/m/unigrams")
@@ -188,16 +198,16 @@ class LangModelSpec extends TestBase {
         .orderBy("micro_batch", "doc_id").collect().toSeq
       def seq(train: org.apache.spark.sql.DataFrame,
           batch: org.apache.spark.sql.DataFrame, mb: Long) =
-        LangModel.ppl(train.select(col("doc_id"), col("text")),
-            batch.select(col("doc_id"), col("text")))
+        LangModel.pplN(train.select(col("doc_id"), col("text")),
+            batch.select(col("doc_id"), col("text")), 2)
           .select(lit(mb).as("micro_batch"), col("doc_id"), col("xent"))
       val want = seq(seed, b0, 0L).unionAll(seq(seed.unionAll(b0), b1, 1L))
         .orderBy("micro_batch", "doc_id").collect().toSeq
       assert(got == want)
       // the model kept learning: both batches' counts are in the store
-      val (uni, _) = LangModel.readModel(spark, s"$st/m")
-      val wantUni = LangModel.unigramCounts(
-        seed.unionAll(b0).unionAll(b1).select(col("doc_id"), col("text")))
+      val uni = LangModel.readModel(spark, s"$st/m", 1, ml = false).head
+      val wantUni = LangModel.gramCounts(
+        seed.unionAll(b0).unionAll(b1).select(col("doc_id"), col("text")), 1)
       assert(uni.orderBy("w").collect().toSeq ==
         wantUni.orderBy("w").collect().toSeq)
     } finally { deleteRecursively(st); deleteRecursively(in) }
@@ -212,7 +222,8 @@ class LangModelSpec extends TestBase {
       LangModel.pruneLmIndex(spark, s"$tmp/m", minCount = 2L)
       // score "c a b": c pruned → OOV add-one (0+1)/7;
       // (c,a) unseen → backoff 0.4*(3+1)/7; (a,b) pruned → backoff 0.4*(2+1)/7
-      val got = LangModel.scoreAgainstLmIndex(s"$tmp/m", docs(9L -> "c a b"))
+      val got = LangModel.scoreAgainstLmNIndex(s"$tmp/m", docs(9L -> "c a b"),
+          2, ml = false)
         .select("n_tokens", "n_oov", "n_backoff", "xent")
         .as[(Long, Long, Long, Double)].collect().head
       val expect = -(math.log10(1.0 / 7) + math.log10(0.4 * 4 / 7) +
@@ -238,7 +249,8 @@ class LangModelSpec extends TestBase {
     try {
       LangModel.buildLmIndex(train, m)
       LangModel.appendToLmIndex(docs(3L -> "c a"), m, 0L)
-      val healthy = LangModel.scoreAgainstLmIndex(m, batch).collect().toSeq
+      val healthy = LangModel.scoreAgainstLmNIndex(m, batch, 2, ml = false)
+        .collect().toSeq
       // committed crash mid-roll-forward: bigram delta back in the stage,
       // marker present (unigrams already swapped in) — the exact window
       // where a bare two-write scheme would leave c(w1) without c(w1,w2)
@@ -252,13 +264,15 @@ class LangModelSpec extends TestBase {
       out.write("unigrams/ingest=0\nbigrams/ingest=0\n".getBytes("UTF-8"))
       out.close()
       // next read repairs: scores return to the healthy state
-      assert(LangModel.scoreAgainstLmIndex(m, batch).collect().toSeq == healthy)
+      assert(LangModel.scoreAgainstLmNIndex(m, batch, 2, ml = false)
+        .collect().toSeq == healthy)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$m/_GRAFT_LM_DELTA")))
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$m/_graft_lm_delta_stage")))
       // uncommitted crash: a stray stage with no marker is discarded whole
-      LangModel.unigramCounts(docs(7L -> "z z z")).repartition(1).write
+      LangModel.gramCounts(docs(7L -> "z z z"), 1).repartition(1).write
         .parquet(s"$m/_graft_lm_delta_stage/unigrams/ingest=9")
-      assert(LangModel.scoreAgainstLmIndex(m, batch).collect().toSeq == healthy)
+      assert(LangModel.scoreAgainstLmNIndex(m, batch, 2, ml = false)
+        .collect().toSeq == healthy)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$m/_graft_lm_delta_stage")))
     } finally deleteRecursively(tmp)
   }
@@ -267,10 +281,11 @@ class LangModelSpec extends TestBase {
     val tmp = java.nio.file.Files.createTempDirectory("graft-lm-spec4")
     try {
       // markerless layout (crashed build): refused
-      LangModel.unigramCounts(docs(1L -> "a b")).write
+      LangModel.gramCounts(docs(1L -> "a b"), 1).write
         .parquet(s"$tmp/m/unigrams/ingest=-1")
       intercept[IllegalArgumentException] {
-        LangModel.scoreAgainstLmIndex(s"$tmp/m", docs(9L -> "a"))
+        LangModel.scoreAgainstLmNIndex(s"$tmp/m", docs(9L -> "a"), 2,
+            ml = false)
       }
       intercept[IllegalArgumentException] {
         LangModel.appendToLmIndex(docs(2L -> "b"), s"$tmp/m", 0L)
@@ -290,13 +305,15 @@ class LangModelSpec extends TestBase {
       // folds ingest=-2 into the seed — the own-partition exclusion
       // alone would now see nothing and double-subtract
       LangModel.compactLmIndex(spark, m)
-      val after = LangModel.scoreAgainstLmIndex(m, docs(9L -> "a b c"))
+      val after = LangModel.scoreAgainstLmNIndex(m, docs(9L -> "a b c"), 2,
+          ml = false)
         .collect().toSeq
       LangModel.purgeFromLmIndex(docs(3L -> "c a"), m, 0L) // end-to-end retry
-      assert(LangModel.scoreAgainstLmIndex(m, docs(9L -> "a b c"))
+      assert(LangModel.scoreAgainstLmNIndex(m, docs(9L -> "a b c"), 2,
+          ml = false)
         .collect().toSeq == after)
-      assert(after == LangModel.ppl(train.where(col("doc_id") =!= 3L),
-        docs(9L -> "a b c")).collect().toSeq)
+      assert(after == LangModel.pplN(train.where(col("doc_id") =!= 3L),
+        docs(9L -> "a b c"), 2).collect().toSeq)
     } finally deleteRecursively(tmp)
   }
 
@@ -311,7 +328,7 @@ class LangModelSpec extends TestBase {
         val m2 = s"$tmp/m2"
         LangModel.buildLmIndex(train, m2)
         LangModel.pruneLmIndex(spark, m2, minCount = 2L)
-        LangModel.scoreAgainstLmIndex(m2, docs(9L -> "a b c"))
+        LangModel.scoreAgainstLmNIndex(m2, docs(9L -> "a b c"), 2, ml = false)
           .collect().toSeq
       }
       // crash simulation: the marker landed but neither fold ran
@@ -320,7 +337,8 @@ class LangModelSpec extends TestBase {
       val out = fs.create(new org.apache.hadoop.fs.Path(m, "_GRAFT_LM_PRUNE"), true)
       out.write("2\n".getBytes("UTF-8")); out.close()
       // the next read path repairs: finishes the prune, clears the marker
-      assert(LangModel.scoreAgainstLmIndex(m, docs(9L -> "a b c"))
+      assert(LangModel.scoreAgainstLmNIndex(m, docs(9L -> "a b c"), 2,
+          ml = false)
         .collect().toSeq == want)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(m, "_GRAFT_LM_PRUNE")))
     } finally deleteRecursively(tmp)
@@ -344,10 +362,10 @@ class LangModelSpec extends TestBase {
     val tmp = java.nio.file.Files.createTempDirectory("graft-lm5ml-prune")
     try {
       val m = s"$tmp/m"
-      LangModel.buildLmMl5Index(train, m)
+      LangModel.buildLmIndex(train, m, 5, ml = true)
       val want = {
         val m2 = s"$tmp/m2"
-        LangModel.buildLmMl5Index(train, m2)
+        LangModel.buildLmIndex(train, m2, 5, ml = true)
         LangModel.pruneLmIndex(spark, m2, minCount = 2L)
         LangModel.scoreAgainstLmNIndex(m2, probe, 5, ml = true)
           .collect().map(_.toSeq).toSet
@@ -379,7 +397,7 @@ class LangModelSpec extends TestBase {
     val train = docs(1L -> "a b c", 2L -> "a b c", 3L -> "d b e")
     // consistent "a b c": p(a)=add-one (2+1)/14; p(b|a)=2/2;
     //   p(c|a b)=tri 2/2 = 1
-    val gotC = LangModel.ppl3(train, docs(10L -> "a b c"))
+    val gotC = LangModel.pplN(train, docs(10L -> "a b c"), 3)
       .select("n_tokens", "n_oov", "n_backoff", "xent")
       .as[(Long, Long, Long, Double)].collect().head
     val expectC = -(math.log10(3.0 / 14) + 0.0 + 0.0) / 3
@@ -388,7 +406,7 @@ class LangModelSpec extends TestBase {
       BigDecimal.RoundingMode.HALF_UP).toDouble) < 1e-9)
     // crossed "a b e": tri (a,b,e) unseen → α·p(e|b) = 0.4·(1/3);
     // the bigram model CANNOT see this (both (b,c) and (b,e) trained)
-    val gotX = LangModel.ppl3(train, docs(11L -> "a b e"))
+    val gotX = LangModel.pplN(train, docs(11L -> "a b e"), 3)
       .select("n_tokens", "n_oov", "n_backoff", "xent")
       .as[(Long, Long, Long, Double)].collect().head
     val expectX = -(math.log10(3.0 / 14) + 0.0 + math.log10(0.4 / 3)) / 3
@@ -397,7 +415,7 @@ class LangModelSpec extends TestBase {
       BigDecimal.RoundingMode.HALF_UP).toDouble) < 1e-9)
     // double backoff "a z e": (a,z) pos-2 backoff to α·uni(z)=α·1/14;
     // (a,z,e)→(z,e) unseen → α²·uni(e)=α²·2/14
-    val gotZ = LangModel.ppl3(train, docs(12L -> "a z e"))
+    val gotZ = LangModel.pplN(train, docs(12L -> "a z e"), 3)
       .select("n_tokens", "n_oov", "n_backoff", "xent")
       .as[(Long, Long, Long, Double)].collect().head
     val expectZ = -(math.log10(3.0 / 14) + math.log10(0.4 * 1 / 14) +
@@ -415,7 +433,7 @@ class LangModelSpec extends TestBase {
     // exact-length slice(concat(nulls, ts), 1, size(ts)) arrays fix it.
     val train = docs(1L -> "a b c", 2L -> "a b c", 3L -> "d b e")
     // 1 token, in-vocab: pos-1 add-one unigram only
-    val got1 = LangModel.ppl3(train, docs(20L -> "b"))
+    val got1 = LangModel.pplN(train, docs(20L -> "b"), 3)
       .select("n_tokens", "n_oov", "n_backoff", "xent")
       .as[(Long, Long, Long, Double)].collect().head
     assert(got1._1 == 1 && got1._2 == 0 && got1._3 == 0)
@@ -423,7 +441,7 @@ class LangModelSpec extends TestBase {
     assert(math.abs(got1._4 - BigDecimal(expect1).setScale(6,
       BigDecimal.RoundingMode.HALF_UP).toDouble) < 1e-9)
     // 2 tokens: pos-1 unigram + pos-2 seen-bigram conditional (2/2 = 1)
-    val got2 = LangModel.ppl3(train, docs(21L -> "a b"))
+    val got2 = LangModel.pplN(train, docs(21L -> "a b"), 3)
       .select("n_tokens", "n_oov", "n_backoff", "xent")
       .as[(Long, Long, Long, Double)].collect().head
     assert(got2._1 == 2 && got2._2 == 0 && got2._3 == 0)
@@ -434,14 +452,44 @@ class LangModelSpec extends TestBase {
 
   test("pplN: the generic order-N kernel reproduces the hand-written " +
       "order-2/3 forms exactly, and order-5 matches hand computation") {
+    // expected rows captured from the hand-written order-2/3 kernels
+    // (`ppl`/`ppl3`, since deleted); the generic kernel reproduced every
+    // one before they went
+    val t = docs(1L -> "a b c d e", 2L -> "a b c d e", 3L -> "f b c d g",
+      4L -> "a a a b c")
+    val b = docs(
+      10L -> "b", // one token
+      11L -> "", // empty text: no token, no row
+      12L -> "a a a", // repeated token
+      // "f b" is attested only as the prefix of "f b c"; "f b e" and
+      // "b e" are not, so pos 3 backs off (twice at order 3)
+      13L -> "f b e",
+      14L -> "f c", // context "f" attested, bigram "f c" not
+      15L -> "q", // one OOV token
+      16L -> "A, q b!") // case, punctuation and a mid-doc OOV
+    val want = Map(
+      2 -> Seq((10L, 1L, 0L, 0L, 0.732394), (12L, 3L, 0L, 0L, 0.483031),
+        (13L, 3L, 0L, 1L, 0.827505), (14L, 2L, 0L, 1L, 1.130334),
+        (15L, 1L, 1L, 0L, 1.431364), (16L, 3L, 1L, 2L, 1.204283)),
+      3 -> Seq((10L, 1L, 0L, 0L, 0.732394), (12L, 3L, 0L, 0L, 0.450728),
+        (13L, 3L, 0L, 1L, 0.960152), (14L, 2L, 0L, 1L, 1.130334),
+        (15L, 1L, 1L, 0L, 1.431364), (16L, 3L, 1L, 2L, 1.33693)))
+    want.foreach { case (n, rows) =>
+      assert(LangModel.pplN(t, b, n).orderBy("doc_id")
+        .select("doc_id", "n_tokens", "n_oov", "n_backoff", "xent")
+        .as[(Long, Long, Long, Long, Double)].collect().toSeq == rows,
+        s"order $n")
+    }
+    // the real corpus: row count and an MD5 over the ordered rows
+    // ("doc_id,n_tokens,n_oov,n_backoff,xent" joined by ";"), captured
+    // from the same hand-written kernels
     val d = Tables(spark, sf(), "documents").select(col("doc_id"), col("text"))
     val train = d.where(col("doc_id") % 3 =!= 2)
     val batch = d.where(col("doc_id") % 3 === 2 && col("doc_id") < 150)
-    // generic n=2 / n=3 == the pinned hand-written kernels, row for row
-    assert(LangModel.pplN(train, batch, 2).orderBy("doc_id").collect().toSeq ==
-      LangModel.ppl(train, batch).orderBy("doc_id").collect().toSeq)
-    assert(LangModel.pplN(train, batch, 3).orderBy("doc_id").collect().toSeq ==
-      LangModel.ppl3(train, batch).orderBy("doc_id").collect().toSeq)
+    assert(lmRowDigest(LangModel.pplN(train, batch, 2)) ==
+      ((50, "1654ce848debcfb62cb6ad10368c8b78")))
+    assert(lmRowDigest(LangModel.pplN(train, batch, 3)) ==
+      ((50, "12ecba86461183a1947ffc6e4bde1631")))
     // order-5 hand computation: train "a b c d e"×2, "f b c d g" —
     // uni a:2 b:3 c:3 d:3 e:2 f:1 g:1 (N=15, V=7); all 2..4-grams of the
     // two variants; 5-grams (a,b,c,d,e):2, (f,b,c,d,g):1
@@ -472,14 +520,14 @@ class LangModelSpec extends TestBase {
     // persisted order-5 lifecycle: build+grow == direct recompute
     val tmp = java.nio.file.Files.createTempDirectory("graft-lm5-spec")
     try {
-      LangModel.buildLm5Index(t5.where(col("doc_id") <= 2), s"$tmp/m5")
+      LangModel.buildLmIndex(t5.where(col("doc_id") <= 2), s"$tmp/m5", 5)
       LangModel.appendToLmIndex(t5.where(col("doc_id") === 3), s"$tmp/m5", 0L)
       val probe = docs(10L -> "a b c d e", 11L -> "a b c d g")
       assert(LangModel.scoreAgainstLmNIndex(s"$tmp/m5", probe, 5, ml = false)
         .orderBy("doc_id").collect().toSeq ==
         LangModel.pplN(t5, probe, 5).orderBy("doc_id").collect().toSeq)
       // an order-3 layout refuses the order-5 scorer
-      LangModel.buildLm3Index(t5, s"$tmp/m3")
+      LangModel.buildLmIndex(t5, s"$tmp/m3", 3)
       intercept[IllegalArgumentException] {
         LangModel.scoreAgainstLmNIndex(s"$tmp/m3", probe, 5, ml = false)
       }
@@ -524,24 +572,28 @@ class LangModelSpec extends TestBase {
     val batch = d.where(col("doc_id") % 3 === 2 && col("doc_id") < 120)
     val tmp = java.nio.file.Files.createTempDirectory("graft-lm3-spec")
     try {
-      LangModel.buildLm3Index(a, s"$tmp/m3")
-      def score() = LangModel.scoreAgainstLm3Index(s"$tmp/m3", batch)
+      LangModel.buildLmIndex(a, s"$tmp/m3", 3)
+      def score() = LangModel.scoreAgainstLmNIndex(s"$tmp/m3", batch, 3,
+          ml = false)
         .orderBy("doc_id").collect().toSeq
-      assert(score() == LangModel.ppl3(a, batch).orderBy("doc_id").collect().toSeq)
+      assert(score() == LangModel.pplN(a, batch, 3)
+        .orderBy("doc_id").collect().toSeq)
       LangModel.appendToLmIndex(b, s"$tmp/m3", 0L) // marker says order 3
       assert(score() ==
-        LangModel.ppl3(a.unionAll(b), batch).orderBy("doc_id").collect().toSeq)
+        LangModel.pplN(a.unionAll(b), batch, 3)
+          .orderBy("doc_id").collect().toSeq)
       // an order-2 layout refuses the order-3 scorer (never silently
       // scores without its trigram table)
       LangModel.buildLmIndex(a, s"$tmp/m2")
       intercept[IllegalArgumentException] {
-        LangModel.scoreAgainstLm3Index(s"$tmp/m2", batch)
+        LangModel.scoreAgainstLmNIndex(s"$tmp/m2", batch, 3, ml = false)
       }
       // order-2 scoring over the order-3 layout is legal (same
       // corpus-shaped lower-order tables)
-      assert(LangModel.scoreAgainstLmIndex(s"$tmp/m3", batch)
+      assert(LangModel.scoreAgainstLmNIndex(s"$tmp/m3", batch, 2, ml = false)
         .orderBy("doc_id").collect().toSeq ==
-        LangModel.ppl(a.unionAll(b), batch).orderBy("doc_id").collect().toSeq)
+        LangModel.pplN(a.unionAll(b), batch, 2)
+          .orderBy("doc_id").collect().toSeq)
     } finally deleteRecursively(tmp)
   }
 

@@ -3,6 +3,7 @@ package graft
 import graft.operators.{Dedup, Multimodal, Purge, Retrieval, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The deletion/takedown lifecycle (r15): purged == rebuilt-without on
   * every persisted artifact family, plus the two-phase rewrite's crash
@@ -468,6 +469,44 @@ class PurgeSpec extends TestBase {
     } finally deleteRecursively(root)
   }
 
+  test("indexHealth: a zero-padded partition value round-trips with " +
+      "partition type inference left on; the session conf is never written") {
+    import graft.operators.{LangModel, Purge}
+    val infKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    assert(spark.conf.get(infKey) == "true")
+    val root = java.nio.file.Files.createTempDirectory("graft-health-pad")
+    try {
+      LangModel.buildLmIndex(docs(1L -> "a b c"), s"$root/lm")
+      LangModel.appendToLmIndex(docs(2L -> "c d"), s"$root/lm", 7L)
+      // an `ingest=007`-style directory: inferred as an int it would
+      // read back as `ingest=7`, a name no listed directory carries
+      assert(new java.io.File(s"$root/lm/unigrams/ingest=7")
+        .renameTo(new java.io.File(s"$root/lm/unigrams/ingest=007")))
+      // a concurrent observer of the shared session: a conf bracket
+      // inside indexHealth (the race with Verify's overlapped dumps)
+      // shows up as a value other than "true"
+      @volatile var stop = false
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val watcher = new Thread(() =>
+        while (!stop) {
+          seen.add(spark.conf.getOption(infKey).getOrElse("unset"))
+          Thread.sleep(1)
+        })
+      watcher.start()
+      val h = try (1 to 3).map(_ =>
+          Purge.indexHealth(spark, "lm_unigrams", s"$root/lm/unigrams",
+            "ingest=", compactAfter = 2)
+            .select("n_partitions", "n_delta_partitions", "n_rows_seed",
+              "n_rows_delta")
+            .as[(Long, Long, Long, Long)].collect().head)
+        finally { stop = true; watcher.join() }
+      // seed: a b c = 3 rows; delta 007: c d = 2 rows
+      assert(h.forall(_ == ((2L, 1L, 3L, 2L))))
+      assert(seen.asScala.toSet == Set("true"),
+        s"indexHealth wrote the session conf: saw ${seen.asScala.toSet}")
+    } finally deleteRecursively(root)
+  }
+
   test("discoverArtifacts: a keyed layout whose batch=0 is absent is " +
       "still recognized at its ROOT (any batch=* child bears the meta)") {
     import graft.operators.{Layout, Takedown}
@@ -508,14 +547,16 @@ class PurgeSpec extends TestBase {
       // bytes untouched
       val lmOnly = Seq[Takedown.Target](Takedown.LmModel(s"$root/lm",
         purgedRows = d.where(col("doc_id") === 1L), purgeId = 0L))
-      val before = LangModel.scoreAgainstLmIndex(s"$root/lm", docs(9L -> "a b"))
+      val before = LangModel.scoreAgainstLmNIndex(s"$root/lm",
+          docs(9L -> "a b"), 2, ml = false)
         .collect().toSeq
       val ex = intercept[IllegalArgumentException] {
         Takedown.purgeEverywhere(spark, d.select(col("doc_id")),
           lmOnly, deploymentRoot = Some(root.toString))
       }
       assert(ex.getMessage.contains("drift"))
-      assert(LangModel.scoreAgainstLmIndex(s"$root/lm", docs(9L -> "a b"))
+      assert(LangModel.scoreAgainstLmNIndex(s"$root/lm", docs(9L -> "a b"), 2,
+          ml = false)
         .collect().toSeq == before)
       // declaring the drift index too → the guard passes and the
       // takedown runs

@@ -104,24 +104,24 @@ class SessionSpec extends TestBase {
     LangModel.buildLmIndex(train, s"$st/m2")
     val s2 = LangModel.openLmSession(spark, s"$st/m2")
     assert(rows(s2.score(probe)) ==
-      rows(LangModel.scoreAgainstLmIndex(s"$st/m2", probe)),
+      rows(LangModel.scoreAgainstLmNIndex(s"$st/m2", probe, 2, ml = false)),
       "fresh session must equal the dir-based scorer")
     val b0 = docs(20L -> "quick quick brown fox")
     s2.append(b0, 0L)
     assert(rows(s2.score(probe)) ==
-      rows(LangModel.scoreAgainstLmIndex(s"$st/m2", probe)),
+      rows(LangModel.scoreAgainstLmNIndex(s"$st/m2", probe, 2, ml = false)),
       "after append the rolled-forward cache must equal the re-read layout")
     // replay exclusion: a FRESH session over a layout already holding
     // batch 0 must subtract it on demand — equal to liveTable's filter
     val s2b = LangModel.openLmSession(spark, s"$st/m2")
     assert(rows(s2b.score(probe, excludeIngestBatch = Some(0L))) ==
-      rows(LangModel.scoreAgainstLmIndex(s"$st/m2", probe,
+      rows(LangModel.scoreAgainstLmNIndex(s"$st/m2", probe, 2, ml = false,
         excludeIngestBatch = Some(0L))),
       "exclusion through the cache must equal the partition filter")
     // and a retried append (same id) leaves the cache untouched
     s2b.append(b0, 0L)
     assert(rows(s2b.score(probe)) ==
-      rows(LangModel.scoreAgainstLmIndex(s"$st/m2", probe)),
+      rows(LangModel.scoreAgainstLmNIndex(s"$st/m2", probe, 2, ml = false)),
       "a replayed append must not double-fold the cache")
     s2.close(); s2b.close()
     // lang-keyed order-2 and order-5: shape dispatch picks the per-lang
@@ -130,13 +130,13 @@ class SessionSpec extends TestBase {
       rows2.toDF("doc_id", "text", "lang")
     val mtr = ldocs((1L, "the quick brown fox", "en"), (2L, "uno dos tres cuatro", "es"))
     val mpr = ldocs((10L, "the brown fox", "en"), (11L, "dos tres", "es"))
-    LangModel.buildLmMlIndex(mtr, s"$st/mml")
+    LangModel.buildLmIndex(mtr, s"$st/mml", ml = true)
     val sml = LangModel.openLmSession(spark, s"$st/mml")
     assert(sml.ml && sml.order == 2)
     assert(rows(sml.score(mpr)) ==
-      rows(LangModel.scoreAgainstLmMlIndex(s"$st/mml", mpr)))
+      rows(LangModel.scoreAgainstLmNIndex(s"$st/mml", mpr, 2, ml = true)))
     sml.close()
-    LangModel.buildLmMl5Index(mtr, s"$st/mml5")
+    LangModel.buildLmIndex(mtr, s"$st/mml5", 5, ml = true)
     val sml5 = LangModel.openLmSession(spark, s"$st/mml5")
     assert(sml5.order == 5)
     assert(rows(sml5.score(mpr)) ==

@@ -1050,7 +1050,7 @@ class StreamingSpec extends TestBase {
     val inDir = java.nio.file.Files.createTempDirectory("graft-relmon-in")
     dropAsFile(b0, inDir, "b0.parquet")
     dropAsFile(b1, inDir, "b1.parquet")
-    LangModel.buildLmMlIndex(train, s"$st/model")
+    LangModel.buildLmIndex(train, s"$st/model", ml = true)
     Curation.writeReleaseCuts(train, s"$st/model", 255000L, s"$st/cuts")
     def run(ckpt: String) = {
       val q = Streams.releaseMonitor(
@@ -1062,11 +1062,12 @@ class StreamingSpec extends TestBase {
     val got = spark.read.parquet(s"$st/rel")
     assert(got.select("micro_batch").distinct().count() == 2)
     // per batch == the batch-side kernel over the same persisted tables
-    val (uni, bi) = LangModel.readModelMl(spark, s"$st/model")
     val cuts = spark.read.parquet(s"$st/cuts")
+    def kernel(b: org.apache.spark.sql.DataFrame) = Curation.releaseWith(b,
+      sb => (LangModel.scoreAgainstLmNIndex(s"$st/model", sb, 2, ml = true),
+        cuts))
     Seq(0 -> b0, 1 -> b1).foreach { case (id, b) =>
-      val want = Curation.releaseAgainst(
-        b.select(col("doc_id"), col("text"), col("lang")), uni, bi, cuts)
+      val want = kernel(b.select(col("doc_id"), col("text"), col("lang")))
       val g = got.where(col("micro_batch") === id)
         .select(want.columns.map(col): _*)
       assert(g.exceptAll(want).isEmpty && want.exceptAll(g).isEmpty,
@@ -1080,6 +1081,51 @@ class StreamingSpec extends TestBase {
     assert(spark.read.parquet(s"$st/rel")
       .orderBy("micro_batch", "lang").collect().toSeq == before,
       "replaying every batch must rewrite identical funnel rows")
+  }
+
+  test("LM loops refuse a batch carrying a duplicate doc_id " +
+      "(lmIngest, lmMlIngest, releaseMonitor)") {
+    import graft.operators.{Curation, LangModel}
+    import spark.implicits._
+    // the one-sequence-per-doc_id kernel would interleave two documents
+    // sharing an id and score each against the other's counts — refused
+    // before anything is scored or appended
+    def rows(r: (Long, String)*) = r.map { case (id, t) =>
+      (id, t, "en", "web", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    val train = rows(1L -> "a b c d", 2L -> "b c d e", 3L -> "c d e a")
+    val dup = rows(7L -> "a b c", 7L -> "e d c", 8L -> "b c d")
+    val st = java.nio.file.Files.createTempDirectory("graft-lm-dup")
+    val in = java.nio.file.Files.createTempDirectory("graft-lm-dup-in")
+    try {
+      dropAsFile(dup, in, "b0.parquet")
+      LangModel.buildLmIndex(train.select(col("doc_id"), col("text")),
+        s"$st/plain")
+      val ml = train.select(col("doc_id"), col("text"), col("lang"))
+      LangModel.buildLmIndex(ml, s"$st/ml", ml = true)
+      Curation.writeReleaseCuts(ml, s"$st/ml", 255000L, s"$st/cuts")
+      def refused(name: String)(
+          run: org.apache.spark.sql.DataFrame =>
+            org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+        val msg = intercept[
+            org.apache.spark.sql.streaming.StreamingQueryException] {
+          run(Streams.documentsStream(spark, in.toString,
+            maxFilesPerTrigger = 1)).awaitTermination()
+        }.getMessage
+        assert(msg.contains("batch 0 carries duplicate doc_id 7"),
+          s"$name: $msg")
+      }
+      refused("lmIngest")(Streams.lmIngest(_, s"$st/plain", s"$st/s1",
+        s"$st/c1"))
+      refused("lmMlIngest")(Streams.lmMlIngest(_, s"$st/ml", s"$st/s2",
+        s"$st/c2"))
+      refused("releaseMonitor")(Streams.releaseMonitor(_, s"$st/ml",
+        s"$st/cuts", s"$st/rel", s"$st/c3"))
+      // nothing was appended to either grown model
+      Seq("plain", "ml").foreach { m =>
+        assert(!new java.io.File(s"$st/$m/unigrams/ingest=0").exists(), m)
+      }
+    } finally { deleteRecursively(st); deleteRecursively(in) }
   }
 
   test("releaseMonitorIded: arrivals keyed on langIdPred — a mislabeled " +
@@ -1109,7 +1155,7 @@ class StreamingSpec extends TestBase {
     val inDir = java.nio.file.Files.createTempDirectory("graft-relmon-ided-in")
     dropAsFile(b0, inDir, "b0.parquet")
     dropAsFile(b1, inDir, "b1.parquet")
-    LangModel.buildLmMlIndex(train, s"$st/model")
+    LangModel.buildLmIndex(train, s"$st/model", ml = true)
     Curation.writeReleaseCuts(train, s"$st/model", 255000L, s"$st/cuts")
     def run(ckpt: String) = {
       val q = Streams.releaseMonitorIded(
@@ -1121,10 +1167,12 @@ class StreamingSpec extends TestBase {
     val got = spark.read.parquet(s"$st/rel")
     assert(got.select("micro_batch").distinct().count() == 2)
     // per batch == the batch-side kernel over the PREDICTION-KEYED batch
-    val (uni, bi) = LangModel.readModelMl(spark, s"$st/model")
     val cuts = spark.read.parquet(s"$st/cuts")
+    def kernel(b: org.apache.spark.sql.DataFrame) = Curation.releaseWith(b,
+      sb => (LangModel.scoreAgainstLmNIndex(s"$st/model", sb, 2, ml = true),
+        cuts))
     Seq(0 -> b0, 1 -> b1).foreach { case (id, b) =>
-      val want = Curation.releaseAgainst(keyed(b), uni, bi, cuts)
+      val want = kernel(keyed(b))
       val g = got.where(col("micro_batch") === id)
         .select(want.columns.map(col): _*)
       assert(g.exceptAll(want).isEmpty && want.exceptAll(g).isEmpty,
@@ -1133,9 +1181,8 @@ class StreamingSpec extends TestBase {
     // the mislabeled docs appear in batch 1's zh lane (never an en lane
     // inflation): zh n_in grows by exactly the stratum size vs the
     // keyed batch WITHOUT the stratum
-    val zhWithout = Curation.releaseAgainst(
-        keyed(d.where(col("doc_id") % 3 === 2 && col("doc_id") < 200)),
-        uni, bi, cuts)
+    val zhWithout = kernel(
+        keyed(d.where(col("doc_id") % 3 === 2 && col("doc_id") < 200)))
       .where(col("lang") === "zh").select("n_in")
       .collect().headOption.map(_.getLong(0)).getOrElse(0L)
     val zhWith = got.where(col("micro_batch") === 1 && col("lang") === "zh")

@@ -11,6 +11,18 @@ trait TestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** (row count, MD5 hex) of an LM-scored frame's rows ordered by
+    * doc_id, each rendered "doc_id,n_tokens,n_oov,n_backoff,xent" and
+    * joined by ";" — a compact fingerprint for captured expected rows. */
+  def lmRowDigest(df: org.apache.spark.sql.DataFrame): (Int, String) = {
+    val rows = df.orderBy("doc_id")
+      .select("doc_id", "n_tokens", "n_oov", "n_backoff", "xent")
+      .collect().map(_.toSeq.mkString(","))
+    val md = java.security.MessageDigest.getInstance("MD5")
+      .digest(rows.mkString(";").getBytes("UTF-8"))
+    (rows.length, md.map("%02x".format(_)).mkString)
+  }
+
   /** Shared temp-dir cleanup (one copy for every spec). */
   def deleteRecursively(root: java.nio.file.Path): Unit = {
     import java.nio.file.Files

@@ -238,9 +238,10 @@ object CoreQueries {
 
     // R19's chunk assignment as a window computation (chunkSize=100,
     // LASERInputValidator.java:18). The global-order window is correct here
-    // because chunk identity IS a global property; the distributed writer in
-    // operators/ChunkSink.scala (`ChunkSink.write`) avoids the
-    // single-partition sort by repartitioning on the chunk id.
+    // because chunk identity IS a global property; the chunk writer in
+    // operators/ChunkSink.scala (`ChunkSink.scan`) needs no sort at all: it
+    // writes in the captured line order, in the one pass that also
+    // validates the rows.
     QueryDef("q14_window_chunk")(
       """SELECT o_orderkey,
         |   CAST(FLOOR((ROW_NUMBER() OVER (ORDER BY o_orderkey) - 1) / 100) AS BIGINT) AS chunk

@@ -16,7 +16,8 @@ object LayoutQueries {
 
   /** Overwritten every run (no staleness, no /tmp accumulation): the
     * write IS the operator under measurement — one metadata-scale min/max
-    * agg + one range shuffle + local sorts; see `operators/Layout.scala`. */
+    * agg + a quantile pass + one shuffle + local sorts; see
+    * `operators/Layout.scala`. */
   private def layoutDir(dir: String, tag: String): String =
     s"/tmp/graft-lay-$tag-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
 

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * (`LASERInputValidator.java:157-183`, `TRACEJobGenerator.java:44-93`);
   * study meta JSON (`TRACEInputValidator.java:240-247`).
   *
-  * Descriptor sets are metadata-scale DataFrames; the file writes are
-  * driver-side by design.
+  * Descriptor sets are metadata-scale DataFrames; `writeKeyed` writes
+  * their files from the tasks, one exactly-named file per row.
   */
 object Descriptors {
 
@@ -81,14 +81,18 @@ object Descriptors {
         // the same content.
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.taskAttemptId()).getOrElse(0L)
+        var files, bytes = 0L
         rows.foreach { r =>
           val target = new org.apache.hadoop.fs.Path(outDir, r.getString(2))
           val tmp = new org.apache.hadoop.fs.Path(outDir,
             s".${r.getString(2)}.$attempt.tmp")
           try {
             val out = fs.create(tmp, true)
-            try out.write(s"${r.getLong(0)}\t${r.getString(1)}\n".getBytes("UTF-8"))
+            val content = s"${r.getLong(0)}\t${r.getString(1)}\n".getBytes("UTF-8")
+            try out.write(content)
             finally out.close()
+            files += 1
+            bytes += content.length
             // rename refuses an existing destination on some filesystems.
             // All attempts of a row write identical bytes, so an existing
             // target IS the committed result — drop the tmp and move on
@@ -108,6 +112,7 @@ object Descriptors {
               throw e
           }
         }
+        org.apache.spark.graft.TaskOutput.add(bytes, files)
       }
   }
 }

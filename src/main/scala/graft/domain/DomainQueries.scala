@@ -62,13 +62,16 @@ object DomainQueries {
          |     THEN 1 ELSE 0 END) AS BIGINT) AS shared
          | FROM site s""".stripMargin
     ) { (s, _) =>
-      SharedLoci.counts(
-        SiteReader.parse(Lines.of(s, Fixtures.slSiteLines)),
-        PanelReader.parse(Lines.of(s, Fixtures.slPanelLines)))
+      import s.implicits._
+      val panel = PanelReader.broadcast(Lines.of(s, Fixtures.slPanelLines))
+      val site = try SharedLoci.site(Lines.of(s, Fixtures.slSiteLines), panel)
+        finally panel.destroy()
+      Seq((site.total, site.shared)).toDF("total", "shared")
     },
 
     // R5/R10/R12/R13/R14 + R22: the full wired validation set over broken
-    // inputs, reported as (code, ordinal, cnt) in precedence order.
+    // inputs, reported as (code, ordinal, cnt) in precedence order — the
+    // complete per-code counts of the LASER pipeline's own scans.
     QueryDef("laser_validate")(
       """SELECT * FROM (VALUES
         |  ('GROUPS_FILE_TOO_MANY_COLUMNS',  4, CAST(1 AS BIGINT)),
@@ -80,12 +83,12 @@ object DomainQueries {
         |  ('SITE_FILE_HEADER_NO_ID',       13, CAST(1 AS BIGINT))
         |) t(code, ordinal, cnt) ORDER BY ordinal""".stripMargin
     ) { (s, _) =>
-      val groups = Lines.of(s, Fixtures.badGroupsLines)
-      val errs = GroupsReader.validate(groups)
-        .union(SeqReader.validate(Lines.of(s, Fixtures.badSeqLines),
-          Some(GroupsReader.parse(groups))))
-        .union(SiteReader.validate(Lines.of(s, Fixtures.badSiteLines)))
-      errs.groupBy("code", "ordinal").agg(count(lit(1)).as("cnt")).orderBy("ordinal")
+      import s.implicits._
+      val r = graft.laser.LaserPipeline.run(
+        Lines.of(s, Fixtures.badSeqLines), Lines.of(s, Fixtures.badSiteLines),
+        Lines.of(s, Fixtures.slPanelLines), Some(Lines.of(s, Fixtures.badGroupsLines)))
+      r.errorCounts.toSeq.map { case (code, n) => (code, Errors.ordinal(code), n) }
+        .toDF("code", "ordinal", "cnt").orderBy("ordinal")
     },
 
     // R22: precedence = enum declaration order; first error wins.

@@ -82,8 +82,8 @@ object ValidationError {
   *
   * Scale: the error channel is exactly where pathological inputs live — a
   * seq file where EVERY row is arity-broken must not collect billions of
-  * findings to the driver. `of` reduces the error set distributedly to
-  * O(#codes × sampleK) rows before anything reaches the driver.
+  * findings to the driver. Each scan task folds its findings into a
+  * `Partial` of O(#codes × sampleK) rows; only those reach the driver.
   */
 final case class ErrorSummary(
     counts: Map[String, Long],
@@ -96,51 +96,44 @@ final case class ErrorSummary(
 }
 
 object ErrorSummary {
-  import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-  import org.apache.spark.sql.expressions.Aggregator
-
   val empty: ErrorSummary = ErrorSummary(Map.empty, Nil)
 
   /** For driver-side error seqs (pre-scan gzip sniffs, cross-checks). */
   def ofSeq(errs: Seq[ValidationError]): ErrorSummary =
     ErrorSummary(errs.groupBy(_.code).map { case (c, es) => c -> es.size.toLong }, errs)
 
+  /** Samples kept per code. */
+  val sampleK = 10
+
+  private def key(e: ValidationError) = (e.line, e.file, e.detail)
+
   /** Bounded per-code state: complete count + the ≤ k smallest samples by
     * (line, file, detail). */
-  final case class Bounded(cnt: Long, samples: Seq[ValidationError])
-
-  /** Typed aggregator whose BUFFER is bounded at k samples — partial
-    * aggregation (map-side combine) keeps every task's state at O(k), so a
-    * hot code (every row broken the same way) never funnels its full row
-    * set through one task. (A `Window.partitionBy(code)` + row_number
-    * formulation would: one partition per code = single-task sort of the
-    * entire pathological input.) Sample selection — k smallest by
-    * (line, file, detail) — is order-insensitive, hence deterministic. */
-  private final class BoundedAgg(k: Int)
-      extends Aggregator[ValidationError, Bounded, Bounded] {
-    private def key(e: ValidationError) = (e.line, e.file, e.detail)
-    def zero: Bounded = Bounded(0L, Vector.empty)
-    def reduce(b: Bounded, e: ValidationError): Bounded =
-      Bounded(b.cnt + 1, (b.samples :+ e).sortBy(key).take(k))
-    def merge(a: Bounded, b: Bounded): Bounded =
-      Bounded(a.cnt + b.cnt, (a.samples ++ b.samples).sortBy(key).take(k))
-    def finish(r: Bounded): Bounded = r
-    def bufferEncoder: Encoder[Bounded] = Encoders.product[Bounded]
-    def outputEncoder: Encoder[Bounded] = Encoders.product[Bounded]
+  final case class Bounded(cnt: Long, samples: Seq[ValidationError]) {
+    def merge(o: Bounded, k: Int): Bounded =
+      Bounded(cnt + o.cnt, (samples ++ o.samples).sortBy(key).take(k))
   }
 
-  /** Distributed reduction in ONE job: groupByKey(code) with the bounded
-    * aggregator — shuffle volume O(partitions × codes × k), driver result
-    * O(codes × k), complete counts regardless. */
-  def of(errs: Dataset[ValidationError], sampleK: Int = 10): ErrorSummary = {
-    val spark = errs.sparkSession
-    import spark.implicits._
-    val rows = errs.groupByKey(_.code)
-      .agg(new BoundedAgg(sampleK).toColumn.name("b"))
-      .collect()
-    val counts = rows.map { case (code, b) => code -> b.cnt }.toMap
-    val samples = rows.flatMap(_._2.samples)
-      .sortBy(e => (e.ordinal, e.file, e.line, e.detail)).toSeq
-    ErrorSummary(counts, samples)
-  }
+  /** Per-code bounded states: what a task-side scan accumulates and the
+    * driver merges, O(#codes × k) whatever the input. */
+  type Partial = Map[String, Bounded]
+
+  def add(p: Partial, e: ValidationError, k: Int = sampleK): Partial =
+    merge(p, Map(e.code -> Bounded(1L, Vector(e))), k)
+
+  def merge(a: Partial, b: Partial, k: Int = sampleK): Partial =
+    b.foldLeft(a) { case (acc, (code, x)) =>
+      acc.updated(code, acc.get(code).fold(x)(_.merge(x, k)))
+    }
+
+  /** Complete counts; samples in reporting order (ordinal, file, line,
+    * detail). */
+  def fromPartial(p: Partial): ErrorSummary = ErrorSummary(
+    p.map { case (code, b) => code -> b.cnt },
+    p.values.flatMap(_.samples).toSeq.sortBy(e => (e.ordinal, e.file, e.line, e.detail)))
+
+  /** Driver-side error sets of unbounded size (e.g. one finding per sample
+    * column), bounded the same way. */
+  def bounded(errs: IterableOnce[ValidationError], k: Int = sampleK): ErrorSummary =
+    fromPartial(errs.iterator.foldLeft(Map.empty: Partial)((p, e) => add(p, e, k)))
 }

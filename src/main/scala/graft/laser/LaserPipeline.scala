@@ -4,7 +4,6 @@ import graft.domain.{ErrorSummary, Errors, ValidationError}
 import graft.operators.{ChunkSink, SharedLoci}
 import graft.sources._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The LASER input-check workflow (`LASERInputValidator.run`,
   * `LASERInputCheckMapper.java:272-301`): validate groups → seq → site
@@ -41,9 +40,16 @@ object LaserPipeline {
     def ok: Boolean = firstError.isEmpty && gateMessages.isEmpty
   }
 
-  /** Pure-DataFrame core shared by the file pipeline and the inline-fixture
-    * query: all inputs already as line sets. `chunksOut = None` skips the
-    * side-effecting chunk write (validation-only runs). */
+  /** Core shared by the file pipeline and the inline-fixture queries: all
+    * inputs already as line sets. `chunksOut = None` skips the chunk write.
+    *
+    * One map-only Spark job per file, no shuffle (the reference's
+    * `setNumReduceTasks(0)` input check, `LASERInputCheckMapper.java:121-162`):
+    * groups (R5, sample set), panel lookup, site (header, TOTAL, SHARED) and
+    * seq, whose one pass checks every row, collects individuals and locus
+    * counts and stages the chunks. The driver merges the bounded summaries,
+    * adds the R20 cross-check, and promotes the chunks only when no error
+    * was found. */
   def run(
       seqLines: DataFrame,
       siteLines: DataFrame,
@@ -53,59 +59,43 @@ object LaserPipeline {
       chunkSize: Int = 100,
       preErrors: Seq[ValidationError] = Nil): Result = {
 
-    val spark = seqLines.sparkSession
+    val sc = seqLines.sparkSession.sparkContext
+    val conf = sc.hadoopConfiguration
+    val groups = groupsLines.map(GroupsReader.summarize)
+    val samples = groups.map(g => sc.broadcast(g.samples))
+    val panel = PanelReader.broadcast(panelLines)
+    val staging = chunksOut.map(ChunkSink.staging)
+    try {
+      val site = SharedLoci.site(siteLines, panel)
+      val seq = ChunkSink.scan(seqLines, staging, chunkSize)(
+        rows => SeqReader.summarize(rows, samples.map(_.value)))
 
-    val groupsDf = groupsLines.map(GroupsReader.parse)
-    // Bounded error channel: the three validators UNION into one dataset
-    // and reduce to per-code counts + capped samples in a single job
-    // (ErrorSummary.of) — an input where every row is broken stays
-    // O(#codes × k) on the driver, and the happy path pays one validation
-    // job, not three.
-    val fileSum = ErrorSummary.of(
-      groupsLines.map(GroupsReader.validate)
-        .getOrElse(seqLines.sparkSession.emptyDataset[ValidationError](
-          org.apache.spark.sql.Encoders.product[ValidationError]))
-        .union(SeqReader.validate(seqLines, groupsDf))
-        .union(SiteReader.validate(siteLines)))
+      val siteErrs = site.header.toSeq.flatMap(h => SiteReader.validateHeader(h._2))
+      val rowErrs = ErrorSummary.merge(
+        groups.fold(Map.empty: ErrorSummary.Partial)(_.errors), seq.findings)
+      val fileSum = ErrorSummary.fromPartial(siteErrs.foldLeft(rowErrs)(ErrorSummary.add(_, _)))
+      // R20: site row count must equal the seq locus count — only when the
+      // site file itself validated (the reference aborts the site scan on a
+      // header error before ever counting, `LASERInputCheckMapper.java:203-235`).
+      val crossSum =
+        if (siteErrs.isEmpty && site.total != seq.minLoci)
+          ErrorSummary.ofSeq(Seq(ValidationError("SITE_FILE_LOCI_NOT_IN_SEQ",
+            detail = s"site rows ${site.total} != seq loci ${seq.minLoci}")))
+        else ErrorSummary.empty
+      val all = ErrorSummary.ofSeq(preErrors) ++ fileSum ++ crossSum
 
-    val seqParsed = SeqReader.parse(seqLines)
-    // One aggregate pass: individuals (distinct) + locus-count consensus
-    // (TreeSet-min semantics, `LASERInputCheckMapper.java:254-258` uses
-    // `.first()` = the minimum).
-    val seqAgg = seqParsed.agg(
-      countDistinct(col("indiv_id")).as("individuals"),
-      min(col("n_loci")).as("min_loci")).collect()(0)
-    val individuals = seqAgg.getLong(0)
-    val minLoci = if (seqAgg.isNullAt(1)) 0L else seqAgg.getLong(1)
-
-    val site = SiteReader.parse(siteLines)
-    val panel = PanelReader.parse(panelLines)
-    val countsRow = SharedLoci.counts(site.select("chr", "pos", "ref", "alt"), panel).collect()(0)
-    val (totalLoci, sharedLoci) = (countsRow.getLong(0), countsRow.getLong(1))
-
-    // R20: site row count must equal the seq locus count — only when the
-    // site file itself validated (the reference aborts the site scan on a
-    // header error before ever counting, `LASERInputCheckMapper.java:203-235`).
-    val siteFailed = fileSum.counts.keys.exists(SiteReader.codes)
-    val crossSum =
-      if (!siteFailed && totalLoci != minLoci)
-        ErrorSummary.ofSeq(Seq(ValidationError("SITE_FILE_LOCI_NOT_IN_SEQ",
-          detail = s"site rows $totalLoci != seq loci $minLoci")))
-      else ErrorSummary.empty
-
-    val all = ErrorSummary.ofSeq(preErrors) ++ fileSum ++ crossSum
-
-    val chunks = chunksOut match {
-      case Some(dir) if all.firstError.isEmpty =>
-        ChunkSink.write(seqLines, dir, chunkSize)
-      case _ =>
-        // chunk count is still well-defined without the write
-        val n = seqLines.count()
-        (n + chunkSize - 1) / chunkSize
+      val chunks = (chunksOut, staging) match {
+        case (Some(dir), Some(st)) if all.firstError.isEmpty => ChunkSink.promote(st, dir, conf)
+        // the chunk count is well-defined without the write
+        case _ => (seq.rows + chunkSize - 1) / chunkSize
+      }
+      Result(all.firstError, all.samples, all.counts,
+        seq.individuals.size.toLong, site.total, site.shared, chunks)
+    } finally {
+      staging.foreach(ChunkSink.discard(_, conf))
+      panel.destroy()
+      samples.foreach(_.destroy())
     }
-
-    Result(all.firstError, all.samples, all.counts,
-      individuals, totalLoci, sharedLoci, chunks)
   }
 
   /** Post-gate descriptor emission (`LASERInputValidator.java:157-183`):

@@ -1,22 +1,32 @@
 package graft.operators
 
+import graft.sources.{HadoopConf, Lines}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.io.{BufferedWriter, OutputStreamWriter}
+import java.io.{BufferedWriter, IOException, OutputStreamWriter}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.GZIPOutputStream
+import scala.reflect.ClassTag
 
 /** R19: fixed-size, input-ordered chunking into exactly-named gzip files
   * `<i>.chunk.seq.gz` of `chunkSize` rows (writer rotation
   * `LASERInputCheckMapper.java:148-168`, `chunkSize = 100`
   * `LASERInputValidator.java:18`, naming `:149`).
   *
-  * Chunk identity is a pure function of the captured line index
-  * (`chunk = idx / chunkSize`), so assignment is embarrassingly parallel:
-  * one hash shuffle on `chunk` co-locates each chunk's rows, a
-  * within-partition sort restores input order, and each task writes its
-  * chunks' files directly (exact names rule out `df.write`, which owns its
-  * file naming). No global sort, no driver materialization — the shape that
-  * holds at 1000 chunks or 10⁷.
+  * The chunks are written by the same map-only pass that checks the rows,
+  * as the reference's mapper writes them while it validates (`:121-168`).
+  * Input order is chunk order, so the pass runs over one partition: a gzip
+  * file is one partition anyway, and a multi-partition line set is
+  * concatenated in idx order by a narrow coalesce (no shuffle, no sort).
+  * Exact names rule out `df.write`, which owns its file naming.
+  *
+  * Commit discipline: the pass writes into a staging directory beside the
+  * output; the driver promotes the files to their exact names only once
+  * the whole submission has passed, and discards them otherwise. A reject
+  * or a failed pass leaves no chunk file under the output directory, and a
+  * failed promote leaves the source seq file for a re-run.
   */
 object ChunkSink {
 
@@ -24,57 +34,80 @@ object ChunkSink {
   def assign(lines: DataFrame, chunkSize: Int): DataFrame =
     lines.withColumn("chunk", (col("idx") / chunkSize).cast("long"))
 
-  /** Write chunk files under `outDir`; returns the chunk count (the CHUNKS
-    * counter — number of files actually written including the trailing
-    * partial chunk, `LASERInputCheckMapper.java:156-168`). */
-  def write(lines: DataFrame, outDir: String, chunkSize: Int = 100): Long = {
-    val assigned = assign(lines, chunkSize)
-    import org.apache.spark.sql.functions.{coalesce, lit, sum}
-    // session Hadoop conf, not executor-default (see HadoopConf)
-    val hconf = graft.sources.HadoopConf.of(lines)
-    assigned
-      .repartition(col("chunk"))
-      .sortWithinPartitions("chunk", "idx")
-      .select("chunk", "line")
-      .mapPartitions { it =>
-        val conf = hconf.value
-        var current = -1L
-        var writer: BufferedWriter = null
-        var written = 0L
-        def close(): Unit = if (writer != null) { writer.close(); writer = null }
-        for (row <- it) {
-          val chunk = row.getLong(0)
-          if (chunk != current) {
-            close()
-            val path = new org.apache.hadoop.fs.Path(outDir, s"$chunk.chunk.seq.gz")
-            val fs = path.getFileSystem(conf)
-            writer = new BufferedWriter(new OutputStreamWriter(
-              new GZIPOutputStream(fs.create(path, true)), "UTF-8"))
-            current = chunk
-            written += 1
-          }
-          writer.write(row.getString(1)); writer.write('\n')
-        }
-        close()
-        Iterator.single(written)
-      }(org.apache.spark.sql.Encoders.scalaLong)
-      // agg, not reduce: an empty input (zero partitions after AQE) must
-      // yield 0 chunks, not an empty-collection error
-      .agg(coalesce(sum(col("value")), lit(0L)))
-      .collect()(0).getLong(0)
+  /** A fresh staging directory beside `outDir`; the first write creates it. */
+  def staging(outDir: String): String = {
+    val out = new Path(outDir)
+    new Path(out.getParent, s".${out.getName}.staging-${java.util.UUID.randomUUID()}").toString
   }
 
-  /** R29: chunk, then delete the ORIGINAL seq file — but only after the
-    * chunk write completed (`LASERInputValidator.java:186`: `hdfs.delete(
-    * seqFile, false)` runs strictly after job success; a failed write must
-    * leave the original in place, or a re-run has nothing to process).
-    * Non-recursive delete, exactly like the reference. */
-  def writeAndDeleteSource(lines: DataFrame, seqPath: String, outDir: String,
-      chunkSize: Int = 100): Long = {
-    val n = write(lines, outDir, chunkSize)
-    val p = new org.apache.hadoop.fs.Path(seqPath)
-    p.getFileSystem(lines.sparkSession.sparkContext.hadoopConfiguration)
-      .delete(p, false)
-    n
+  /** One map-only pass over `lines` in idx order: every row goes to
+    * `visit`, and into `<idx / chunkSize>.chunk.seq.gz` under `staging`
+    * when one is given. Fails if an idx is not the next one (0, 1, 2, …).
+    * Returns what `visit` returned; the bytes written count as the task's
+    * output metrics. */
+  def scan[A: ClassTag](lines: DataFrame, staging: Option[String], chunkSize: Int)(
+      visit: Iterator[(Long, String)] => A): A = {
+    // session Hadoop conf, not executor-default (see HadoopConf)
+    val hconf = HadoopConf.of(lines)
+    Lines.rows(lines).coalesce(1).mapPartitions { it =>
+      val sink = staging.map { d => val p = new Path(d); (p, p.getFileSystem(hconf.value)) }
+      var next, bytes = 0L
+      var raw: FSDataOutputStream = null
+      var writer: BufferedWriter = null
+      def closeChunk(): Unit = if (writer != null) {
+        val w = writer
+        writer = null
+        w.close()
+        bytes += raw.getPos
+      }
+      val rows = it.map { case row @ (idx, line) =>
+        if (idx != next) throw new IllegalStateException(s"ChunkSink.scan: idx $idx " +
+          s"where $next was due; the line set is not contiguous and ascending")
+        for ((d, fs) <- sink) {
+          if (idx % chunkSize == 0) {
+            closeChunk()
+            raw = fs.create(new Path(d, s"${idx / chunkSize}.chunk.seq.gz"), true)
+            writer = new BufferedWriter(new OutputStreamWriter(new GZIPOutputStream(raw), UTF_8))
+          }
+          writer.write(line); writer.write('\n')
+        }
+        next += 1
+        row
+      }
+      try {
+        val a = visit(rows)
+        rows.foreach(_ => ()) // whatever visit left unread still goes to the chunks
+        closeChunk()
+        org.apache.spark.graft.TaskOutput.add(bytes, if (sink.isEmpty) 0L else next)
+        Iterator.single(a)
+      } finally if (writer != null) { // a failed pass: the driver discards the staging
+        try writer.close() catch { case _: IOException => () }
+      }
+    }.collect().headOption.getOrElse(visit(Iterator.empty))
+  }
+
+  /** Moves the staged chunk files to their exact names under `outDir` and
+    * returns how many; a file of the same name is replaced. */
+  def promote(staging: String, outDir: String, conf: Configuration): Long = {
+    val (src, dst) = (new Path(staging), new Path(outDir))
+    val fs = dst.getFileSystem(conf)
+    val staged =
+      if (!fs.exists(src)) Array.empty[Path]
+      else fs.listStatus(src).map(_.getPath).filter(_.getName.endsWith(".chunk.seq.gz"))
+    if (staged.nonEmpty && !fs.mkdirs(dst))
+      throw new IOException(s"ChunkSink.promote: cannot create $dst")
+    staged.foreach { p =>
+      val target = new Path(dst, p.getName)
+      // rename refuses an existing destination on some filesystems
+      if (!fs.rename(p, target) && !(fs.delete(target, false) && fs.rename(p, target)))
+        throw new IOException(s"ChunkSink.promote: rename $p -> $target failed")
+    }
+    staged.length.toLong
+  }
+
+  /** Deletes a staging directory and whatever is left in it. */
+  def discard(staging: String, conf: Configuration): Unit = {
+    val p = new Path(staging)
+    p.getFileSystem(conf).delete(p, true)
   }
 }

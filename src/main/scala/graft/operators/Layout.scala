@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
   *
   * Plan shape (the whole point): ONE metadata-scale min/max aggregate to
   * fix the per-column scaling, then a single codegen'd projection
-  * computing the Z-value, ONE range shuffle (`repartitionByRange` on the
-  * Z-value, sampled bounds) and a local sort per output file. No window
-  * over the whole table, no global sort bottleneck, no driver data.
+  * computing the Z-value, one quantile pass for the file bounds, ONE
+  * shuffle routing each row to its file and a local sort per output file.
+  * No window over the whole table, no global sort bottleneck, no driver
+  * data beyond the `files - 1` bounds.
   */
 object Layout {
 
@@ -518,10 +519,20 @@ object Layout {
     graft.functions.GraftFunctions.ensure(df.sparkSession)
     val ranks = scaling.map { case (c, mn, mx) =>
       scaledRank(numKey(df, c), mn, mx, bits) }
-    df.withColumn("_z", curveValue(ranks, bits, curve))
-      .repartitionByRange(files, col("_z"))
+    val z = df.withColumn("_z", curveValue(ranks, bits, curve))
+    // File i holds the curve values between the i-th and (i+1)-th
+    // `files`-quantile. repartitionByRange would pick its bounds from a
+    // sample Spark seeds with the RDD id, so the file boxes (and how well
+    // they prune) changed with how many RDDs the JVM had made before.
+    val bounds = if (files <= 1) Array.empty[Double]
+      else z.stat.approxQuantile("_z", Array.tabulate(files - 1)(i => (i + 1.0) / files), 1e-4)
+    val routed = z.withColumn("_f",
+      bounds.foldLeft(lit(0))((f, b) => f + (col("_z") > b).cast("int")))
+    val byFile = routed.rdd.keyBy(_.getAs[Int]("_f"))
+      .partitionBy(new org.apache.spark.HashPartitioner(files)).values // Int key: identity
+    df.sparkSession.createDataFrame(byFile, routed.schema)
       .sortWithinPartitions("_z")
-      .drop("_z")
+      .drop("_z", "_f")
       .write.mode(if (overwrite) "overwrite" else "append").parquet(outDir)
   }
 
@@ -542,8 +553,8 @@ object Layout {
   /** Curve-BUCKETED rewrite: like [[zorderWrite]] but file membership is
     * the DETERMINISTIC static grid `fid = top log₂(bins) bits of the
     * curve value` (equal-width curve cells — a zone map) instead of
-    * sampled range boundaries. Trade: `repartitionByRange` balances file
-    * SIZES from a sample (nondeterministic boundaries); the static grid
+    * quantile boundaries. Trade: [[zorderWrite]] balances file SIZES at
+    * the data's quantiles, which move as data arrives; the static grid
     * fixes every row's file as pure arithmetic on its key — replayable
     * by any engine (the prune row's DuckDB oracle recomputes the whole
     * assignment), stable across runs and appends, at the cost of bins

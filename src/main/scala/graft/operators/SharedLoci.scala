@@ -1,7 +1,8 @@
 package graft.operators
 
+import graft.sources.{Lines, PanelReader, SiteReader}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** THE reference query (R15+R16+R17): count study loci and how many match
   * the reference panel on `chr:pos` with **order-sensitive,
@@ -9,37 +10,51 @@ import org.apache.spark.sql.functions._
   * (`LASERInputCheckMapper.java:239-251`, `compareToIgnoreCase` at `:245`;
   * duplicate logic `TRACEInputCheckMapper.java:221-255`).
   *
-  * Plan shape: ONE scan of the study side, broadcast hash join against the
-  * (already last-wins-deduped) panel, and a single partial+final aggregate —
-  * the Spark-native equivalent of the reference's per-task heap HashMap with
-  * zero shuffles on the big side. At 100 TB the study side streams through
-  * executors while the panel (site lists are ~10⁶ rows) broadcasts.
+  * Shape: the reference's per-task heap HashMap. The panel lookup is
+  * broadcast (`PanelReader.broadcast`) and every study row probes it inside
+  * the same map-only pass that reads the file's header — no join, no
+  * exchange, one Spark job per study file set.
   */
 object SharedLoci {
 
-  /** Residual allele predicate: order-sensitive, case-insensitive. */
-  private def alleleMatch = lower(concat_ws("/", col("ref"), col("alt"))) === lower(col("alleles"))
+  /** Order-sensitive, case-insensitive `"REF/ALT"` equality. */
+  def allelesMatch(study: String, panel: String): Boolean =
+    study.toLowerCase(java.util.Locale.ROOT) == panel.toLowerCase(java.util.Locale.ROOT)
 
-  /** study(chr, pos, ref, alt) × panel(chr, pos, alleles) →
-    * one row (total BIGINT, shared BIGINT). */
-  def counts(study: DataFrame, panel: DataFrame): DataFrame = {
-    val p = broadcast(panel.select(
-      col("chr").as("p_chr"), col("pos").as("p_pos"), col("alleles")))
-    study
-      .join(p, col("chr") === col("p_chr") && col("pos") === col("p_pos") && alleleMatch, "left")
-      .agg(count(lit(1)).as("total"), count(col("p_chr")).as("shared"))
+  /** Is the locus of a site or VCF body row in the panel with matching
+    * alleles? A row without a POS matches nothing. */
+  def isShared(panel: PanelReader.Lookup, line: String): Boolean = {
+    val (chr, pos, alleles) = SiteReader.locus(line)
+    pos != null && panel.get((chr, pos)).exists(allelesMatch(alleles, _))
   }
 
-  /** Per-group counts (e.g. per input file, `groupCol`) in the SAME single
-    * broadcast-join pass — the multi-VCF TRACE shape: one job for any
-    * number of files, mirroring the reference's per-file counter groups
-    * (`TRACEInputCheckMapper.java:267-269`) inside one MapReduce job. */
-  def countsBy(study: DataFrame, panel: DataFrame, groupCol: String): DataFrame = {
-    val p = broadcast(panel.select(
-      col("chr").as("p_chr"), col("pos").as("p_pos"), col("alleles")))
-    study
-      .join(p, col("chr") === col("p_chr") && col("pos") === col("p_pos") && alleleMatch, "left")
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("total"), count(col("p_chr")).as("shared"))
+  /** One partition of a study file in the site layout: its header candidate
+    * with the lowest idx, TOTAL (locus rows) and SHARED loci. */
+  final case class Scan(header: Option[(Long, String)], total: Long, shared: Long) {
+    def ++(o: Scan): Scan =
+      Scan((header ++ o.header).minByOption(_._1), total + o.total, shared + o.shared)
   }
+
+  object Scan { val empty: Scan = Scan(None, 0L, 0L) }
+
+  /** Folds rows into a `Scan`: `isHeader` picks header candidates, `isLocus`
+    * the rows counted against the panel. */
+  def scan(rows: Iterator[(Long, String)], panel: PanelReader.Lookup)(
+      isHeader: ((Long, String)) => Boolean, isLocus: ((Long, String)) => Boolean): Scan = {
+    var header: Option[(Long, String)] = None
+    var total, shared = 0L
+    rows.foreach { row =>
+      if (isHeader(row) && header.forall(_._1 > row._1)) header = Some(row)
+      if (isLocus(row)) {
+        total += 1
+        if (isShared(panel, row._2)) shared += 1
+      }
+    }
+    Scan(header, total, shared)
+  }
+
+  /** A LASER site file — header at idx 0, one locus per later row — in one
+    * map-only pass. */
+  def site(lines: DataFrame, panel: Broadcast[PanelReader.Lookup]): Scan =
+    Lines.fold(lines)(scan(_, panel.value)(_._1 == 0, _._1 > 0))(_ ++ _)
 }

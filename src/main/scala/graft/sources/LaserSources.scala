@@ -1,14 +1,15 @@
 package graft.sources
 
-import graft.domain.{Errors, ValidationError}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import graft.domain.{ErrorSummary, ValidationError}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Readers + validators for the LASER input formats (`SURVEY.md §1.2`).
+/** Readers + row rules for the LASER input formats (`SURVEY.md §1.2`).
   *
-  * Each reader splits into `parse` (lines → typed DataFrame) and `validate`
-  * (lines → `Dataset[ValidationError]`). Validation is computed
-  * set-at-a-time over one scan — the reference's row-at-a-time
+  * Each file is validated in one map-only pass that folds its rows into a
+  * bounded summary (`summarize`; the pipelines merge the per-partition
+  * summaries on the driver). The reference's row-at-a-time
   * short-circuiting (`LASERInputCheckMapper.java:121-144`) is reproduced at
   * the *reporting* layer by min-ordinal precedence (`Errors.firstError`).
   */
@@ -17,8 +18,6 @@ object SeqReader {
   /** Tab-OR-space tokenizer — unique to the seq format
     * (`LASERInputCheckMapper.java:105`); all other formats are tab-only. */
   private val sep = "[\t ]"
-
-  private def toks: Column = split(col("line"), sep)
 
   /** lines(idx, line) → (idx, pop, indiv_id, n_loci, loci ARRAY<STRUCT<a,b,c>>).
     *
@@ -49,58 +48,61 @@ object SeqReader {
           |      'c', CAST(element_at(split(line, '[\t ]'), 5 + i * 3) AS DOUBLE))) END""".stripMargin)
         .as("loci"))
 
-  /** All seq-file rules (R12, R13, R14) over one scan + one small anti-join.
+  /** Seq tokens of one line, exactly as `split(line, '[\t ]')` yields them. */
+  def tokens(line: String): Array[String] = line.split(sep, -1)
+
+  /** R12/R13 for a row at `idx` with `n` tokens: its arity error, or its
+    * locus count.
     *
     * - `< 5` columns → SEQ_FILE_TOO_FEW_COLUMNS (`:124-128`)
     * - `(n-2) % 3 != 0` → SEQ_FILE_MISSING_COLUMNS (`:130-134`)
-    * - locus-count cardinality > 1 → SEQ_FILE_INCONSISTENT_COLUMNS (`:170-174`)
-    * - individual ∉ groups → SEQ_SAMPLE_NOT_IN_GROUP (`:138-144`)
     */
-  def validate(lines: DataFrame, groups: Option[DataFrame]): Dataset[ValidationError] = {
-    val spark = lines.sparkSession
-    import spark.implicits._
+  def arity(idx: Long, n: Int): Either[ValidationError, Long] =
+    if (n < 5) Left(ValidationError("SEQ_FILE_TOO_FEW_COLUMNS", line = idx, detail = s"$n columns"))
+    else if ((n - 2) % 3 != 0)
+      Left(ValidationError("SEQ_FILE_MISSING_COLUMNS", line = idx, detail = s"$n columns"))
+    else Right((n - 2) / 3L)
 
-    val sized = lines.select(col("idx"), size(toks).as("n"),
-      get(toks, lit(1)).as("indiv_id"))
-
-    val arity = sized.flatMap { r =>
-      val (idx, n) = (r.getLong(0), r.getInt(1))
-      if (n < 5)
-        Some(ValidationError("SEQ_FILE_TOO_FEW_COLUMNS", line = idx, detail = s"$n columns"))
-      else if ((n - 2) % 3 != 0)
-        Some(ValidationError("SEQ_FILE_MISSING_COLUMNS", line = idx, detail = s"$n columns"))
-      else None
-    }
-
-    // Cardinality check only over rows that passed arity (the reference
-    // records the locus count before failing mod-3 rows, but a failed row
-    // aborts the scan, so only valid rows ever coexist in the TreeSet).
-    val inconsistent = sized
-      .where(col("n") >= 5 && (col("n") - 2) % 3 === 0)
-      .agg(countDistinct(((col("n") - 2) / 3).cast("long")).as("k"))
-      .as[Long]
-      .flatMap(k => if (k > 1) Some(ValidationError("SEQ_FILE_INCONSISTENT_COLUMNS",
-        detail = s"$k distinct locus counts")) else None)
-
-    // Membership only over arity-valid rows (an arity-broken row aborts the
-    // reference's scan before the group lookup, `:124-144`).
-    val membership = groups match {
-      case Some(g) =>
-        sized.where(col("n") >= 5 && (col("n") - 2) % 3 === 0)
-          .select("idx", "indiv_id")
-          .join(broadcast(g.select(col("sample"))), col("indiv_id") === col("sample"), "left_anti")
-          .select(col("idx"), col("indiv_id"))
-          .map(r => ValidationError("SEQ_SAMPLE_NOT_IN_GROUP", line = r.getLong(0),
-            detail = r.getString(1)))
-      case None => spark.emptyDataset[ValidationError]
-    }
-
-    arity.union(inconsistent).union(membership)
+  /** What one pass over seq rows yields: bounded per-code findings, the
+    * distinct individuals (INDIVIDUALS, `:146,176`), the distinct locus
+    * counts of the arity-valid rows and the row count. */
+  final case class Summary(errors: ErrorSummary.Partial, individuals: Set[String],
+      loci: Set[Long], rows: Long) {
+    /** Row findings plus R14, which only the whole file decides: more than
+      * one distinct locus count → SEQ_FILE_INCONSISTENT_COLUMNS (`:170-174`). */
+    def findings: ErrorSummary.Partial =
+      if (loci.size <= 1) errors
+      else ErrorSummary.add(errors, ValidationError("SEQ_FILE_INCONSISTENT_COLUMNS",
+        detail = s"${loci.size} distinct locus counts"))
+    /** Locus-count consensus: TreeSet-min semantics
+      * (`LASERInputCheckMapper.java:254-258` uses `.first()`). */
+    def minLoci: Long = loci.minOption.getOrElse(0L)
   }
 
-  /** Distinct individuals (INDIVIDUALS counter, `LASERInputCheckMapper.java:146,176`). */
-  def individuals(lines: DataFrame): DataFrame =
-    parse(lines).select(col("indiv_id")).distinct()
+  /** The seq rules (R12–R14) over one partition's rows. Locus counts and
+    * group membership (individual ∉ `groups` → SEQ_SAMPLE_NOT_IN_GROUP,
+    * `:138-144`) only count rows that passed arity: a failed row aborts the
+    * reference's scan before either (`:124-144`). */
+  def summarize(rows: Iterator[(Long, String)], groups: Option[Set[String]]): Summary = {
+    var errors: ErrorSummary.Partial = Map.empty
+    val individuals = scala.collection.mutable.HashSet.empty[String]
+    val loci = scala.collection.mutable.HashSet.empty[Long]
+    var n = 0L
+    rows.foreach { case (idx, line) =>
+      val t = tokens(line)
+      if (t.length >= 2) individuals += t(1)
+      arity(idx, t.length) match {
+        case Left(e) => errors = ErrorSummary.add(errors, e)
+        case Right(k) =>
+          loci += k
+          if (groups.exists(g => !g.contains(t(1))))
+            errors = ErrorSummary.add(errors,
+              ValidationError("SEQ_SAMPLE_NOT_IN_GROUP", line = idx, detail = t(1)))
+      }
+      n += 1
+    }
+    Summary(errors, individuals.toSet, loci.toSet, n)
+  }
 }
 
 /** Study site file: gzip TSV with mandatory positional header
@@ -109,18 +111,14 @@ object SiteReader {
 
   val header: Seq[String] = Seq("CHR", "POS", "ID", "REF", "ALT")
 
-  /** Every code `validate` can emit — lets a merged multi-validator
-    * summary answer "did the SITE file fail" without a separate job. */
-  val codes: Set[String] =
-    Set("SITE_FILE_TOO_FEW_COLUMNS") ++ header.map(h => s"SITE_FILE_HEADER_NO_$h")
-
-  /** lines → (chr, pos, id, ref, alt); header row (idx 0) dropped; `pos`
-    * stays STRING (the reference only ever string-concats `chr:pos`, `:243`). */
-  def parse(lines: DataFrame): DataFrame = {
-    val t = split(col("line"), "\t")
-    lines.where(col("idx") > 0).select(
-      t.getItem(0).as("chr"), get(t, lit(1)).as("pos"), get(t, lit(2)).as("id"),
-      get(t, lit(3)).as("ref"), get(t, lit(4)).as("alt"))
+  /** (chr, pos, "REF/ALT") of one tab-separated row in the `CHR POS ID REF
+    * ALT` layout — site rows, panel rows and VCF body rows alike. A missing
+    * field is null and drops out of the allele string; `pos` stays STRING
+    * (the reference only ever string-concats `chr:pos`, `:243`). */
+  def locus(line: String): (String, String, String) = {
+    val t = line.split("\t", -1)
+    def f(i: Int) = if (i < t.length) t(i) else null
+    (t(0), f(1), Seq(f(3), f(4)).filter(_ != null).mkString("/"))
   }
 
   /** Header rules (R10): `>= 5` columns then positional name equality, one
@@ -134,58 +132,73 @@ object SiteReader {
         ValidationError(s"SITE_FILE_HEADER_NO_$want", detail = s"found '${fields(i)}'")
     }.toSeq
   }
-
-  def validate(lines: DataFrame): Dataset[ValidationError] = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-    val head = lines.where(col("idx") === 0).select("line").as[String].collect()
-    val errs = head.toSeq.flatMap(validateHeader)
-    spark.createDataset(errs)
-  }
 }
 
 /** Optional groups file: exactly two tab-separated columns, sample → group
   * (`LASERInputCheckMapper.java:74-98`). */
 object GroupsReader {
 
-  def parse(lines: DataFrame): DataFrame = {
-    // get() not getItem(): a malformed 1-column line must surface through
-    // validate() as GROUPS_FILE_MISSING_COLUMNS, not as an ANSI
-    // INVALID_ARRAY_INDEX crash in whatever query touches the parse.
-    val t = split(col("line"), "\t")
-    lines.select(t.getItem(0).as("sample"), get(t, lit(1)).as("grp"))
+  /** R5 for a line at `idx` with `n` tab-separated columns (`:80-92`). */
+  def arity(idx: Long, n: Int): Option[ValidationError] =
+    if (n > 2) Some(ValidationError("GROUPS_FILE_TOO_MANY_COLUMNS", line = idx))
+    else if (n < 2) Some(ValidationError("GROUPS_FILE_MISSING_COLUMNS", line = idx))
+    else None
+
+  /** Bounded R5 findings and the sample (first column) of every line — the
+    * reference's in-heap groups set (`:74-98`). */
+  final case class Summary(errors: ErrorSummary.Partial, samples: Set[String]) {
+    def ++(o: Summary): Summary =
+      Summary(ErrorSummary.merge(errors, o.errors), samples ++ o.samples)
   }
 
-  def validate(lines: DataFrame): Dataset[ValidationError] = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-    lines.select(col("idx"), size(split(col("line"), "\t")).as("n")).flatMap { r =>
-      val (idx, n) = (r.getLong(0), r.getInt(1))
-      if (n > 2) Some(ValidationError("GROUPS_FILE_TOO_MANY_COLUMNS", line = idx))
-      else if (n < 2) Some(ValidationError("GROUPS_FILE_MISSING_COLUMNS", line = idx))
-      else None
+  /** One map-only pass over the groups file. */
+  def summarize(lines: DataFrame): Summary = Lines.fold(lines) { rows =>
+    var errors: ErrorSummary.Partial = Map.empty
+    val samples = scala.collection.mutable.HashSet.empty[String]
+    rows.foreach { case (idx, line) =>
+      val t = line.split("\t", -1)
+      arity(idx, t.length).foreach(e => errors = ErrorSummary.add(errors, e))
+      samples += t(0)
     }
-  }
+    Summary(errors, samples.toSet)
+  }(_ ++ _)
 }
 
 /** Reference ancestry panel: site layout, header skipped blindly
   * (`LASERInputCheckMapper.java:64`), duplicate `chr:pos` keys resolved
   * last-occurrence-wins (HashMap.put overwrite, `:66-69`).
   *
-  * The reference ships the whole panel to every task's heap via the
-  * distributed cache; the Spark-native equivalent is a deduped DataFrame
-  * under a `broadcast()` hint — same data movement, but spillable and
-  * planned (`SURVEY.md §4.2`).
+  * The reference loads the whole panel into every mapper's heap via the
+  * distributed cache; here one map-only pass builds the same lookup on the
+  * driver and broadcasts it to the scans that count shared loci — the data
+  * movement of a broadcast hash join (`SURVEY.md §4.2`) without its
+  * planning and exchange jobs.
   */
 object PanelReader {
 
-  /** lines → (chr, pos, alleles "REF/ALT"), last-wins deduped. */
-  def parse(lines: DataFrame): DataFrame = {
-    val t = split(col("line"), "\t")
-    lines.where(col("idx") > 0)
-      .select(col("idx"), t.getItem(0).as("chr"), get(t, lit(1)).as("pos"),
-        concat_ws("/", get(t, lit(3)), get(t, lit(4))).as("alleles"))
-      .groupBy("chr", "pos")
-      .agg(max_by(col("alleles"), col("idx")).as("alleles"))
+  /** (chr, pos) → "REF/ALT". */
+  type Lookup = Map[(String, String), String]
+
+  private type Indexed = Map[(String, String), (Long, String)]
+
+  private def lastWins(a: Indexed, b: Indexed): Indexed =
+    b.foldLeft(a) { case (m, (k, v)) =>
+      if (m.get(k).exists(_._1 > v._1)) m else m.updated(k, v)
+    }
+
+  /** The panel lookup, last occurrence (highest idx) winning, built in one
+    * job and broadcast; the caller destroys it when done. */
+  def broadcast(lines: DataFrame): Broadcast[Lookup] = {
+    val lookup = Lines.fold[Indexed](lines) { rows =>
+      val m = scala.collection.mutable.HashMap.empty[(String, String), (Long, String)]
+      rows.foreach { case (idx, line) =>
+        if (idx > 0) {
+          val (chr, pos, alleles) = SiteReader.locus(line)
+          if (m.get((chr, pos)).forall(_._1 < idx)) m((chr, pos)) = (idx, alleles)
+        }
+      }
+      m.toMap
+    }(lastWins).map { case (k, (_, alleles)) => k -> alleles }
+    lines.sparkSession.sparkContext.broadcast(lookup)
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,8 +13,9 @@ import org.apache.spark.sql.types._
   *
   * The reference streams each file single-threaded
   * (`LASERInputCheckMapper.java:114`); here order is captured once at read
-  * time (`zipWithIndex` — one extra job to count partition sizes, no
-  * shuffle) and every downstream operator is free to parallelize. At 100 TB
+  * time (`zipWithIndex`, no shuffle; its partition-sizing job only runs for
+  * more than one partition, and a gzip file is always one) and every
+  * downstream operator is free to parallelize. At 100 TB
   * the gzip inputs are the bottleneck either way: the runbook step is
   * re-encode to parquet/zstd at the ingest boundary, after which `idx`
   * comes for free from the row group order.
@@ -40,6 +42,19 @@ object Lines {
     }
     spark.createDataFrame(rows.asJava, schema)
   }
+
+  /** The (idx, line) pairs of a line set; builds no job. */
+  def rows(lines: DataFrame): RDD[(Long, String)] =
+    lines.select("idx", "line").rdd.map(r => (r.getLong(0), r.getString(1)))
+
+  /** One map-only pass (the reference's map-only input check,
+    * `setNumReduceTasks(0)`): `f` folds each partition to a summary on the
+    * executor and `merge` combines the summaries on the driver, with
+    * `f(Iterator.empty)` as the zero. One Spark job, no shuffle. */
+  def fold[S: scala.reflect.ClassTag](lines: DataFrame)(f: Iterator[(Long, String)] => S)(
+      merge: (S, S) => S): S =
+    rows(lines).mapPartitions(it => Iterator.single(f(it))).collect()
+      .foldLeft(f(Iterator.empty))(merge)
 
   /** Gzip magic-byte sniff (R1, `LASERInputCheckMapper.java:33-51`): Spark
     * decompresses transparently, but "is actually gzip" is itself a declared

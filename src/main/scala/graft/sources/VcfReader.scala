@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.domain.ValidationError
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** TRACE VCF reader (`TRACEInputCheckMapper.java:117-255`).
@@ -20,19 +20,24 @@ object VcfReader {
 
   final case class Parsed(samples: Seq[String], body: DataFrame)
 
+  /** `##` meta line: skipped before the header (`:120-124`). */
+  def isMeta(line: String): Boolean = line.startsWith("##")
+
+  /** Body row: any line not starting `#` (`:224-226`). */
+  def isBody(line: String): Boolean = !line.startsWith("#")
+
   private def headerLine(lines: DataFrame): Option[String] = {
     import lines.sparkSession.implicits._
-    // First non-`##` line — the reference's skip-then-look sequence
-    // (`TRACEInputCheckMapper.java:120-124`).
-    lines.where(!col("line").startsWith("##"))
-      .orderBy("idx").limit(1).select("line").as[String].collect().headOption
+    // First non-`##` line — the reference's skip-then-look sequence.
+    lines.select("idx", "line").as[(Long, String)].filter(r => !isMeta(r._2))
+      .orderBy("idx").limit(1).map(_._2).collect().headOption
   }
 
   /** Pure header-string rules (R11), in the reference's evaluation order:
     * presence of a `#CHROM`-prefixed header (`:179-183`), then sample count
     * (`:127-131` — checked BEFORE the column names), then positional name
-    * equality (`:133-167`). Shared by the single-file and the unioned
-    * multi-file (one-job) paths. */
+    * equality (`:133-167`). Runs driver-side on the header strings the
+    * TRACE intake scan returns. */
   def validateHeaderString(header: Option[String]): Seq[ValidationError] = header match {
     case None => Seq(ValidationError("VCF_NO_HEADER"))
     case Some(h) if !h.startsWith("#CHROM") => Seq(ValidationError("VCF_NO_HEADER"))
@@ -53,35 +58,13 @@ object VcfReader {
     case _ => Seq.empty
   }
 
-  def validateHeader(lines: DataFrame, groups: Option[DataFrame]): Dataset[ValidationError] = {
-    val spark = lines.sparkSession
-    import spark.implicits._
-    val header = headerLine(lines) // one scan, reused below
-    val headerErrs = spark.createDataset(validateHeaderString(header))
-    // Sample-membership check (`:169-178`): every sample column must appear
-    // in the groups file when one is supplied.
-    val memberErrs = (header, groups) match {
-      case (Some(h), Some(g)) if h.startsWith("#CHROM") =>
-        val samples = h.split("\t", -1).drop(9)
-        spark.createDataset(samples).toDF("s")
-          .join(broadcast(g.select(col("sample"))), col("s") === col("sample"), "left_anti")
-          .select("s").as[String]
-          .map(s => ValidationError("VCF_SAMPLE_NOT_IN_GROUP", detail = s))
-      case _ => spark.emptyDataset[ValidationError]
-    }
-    headerErrs.union(memberErrs)
-  }
-
   /** lines → samples + body(chrom, pos, id, ref, alt, qual, filter, info,
     * format, genotypes ARRAY<STRING>). */
   def parse(lines: DataFrame): Parsed = {
-    val samples = headerLine(lines) match {
-      case Some(h) if h.startsWith("#CHROM") => h.split("\t", -1).drop(9).toSeq
-      case _ => Seq.empty
-    }
+    val samples = samplesOf(headerLine(lines))
     val t = split(col("line"), "\t")
     val body = lines
-      .where(!col("line").startsWith("#"))
+      .filter((r: org.apache.spark.sql.Row) => isBody(r.getString(r.fieldIndex("line"))))
       .select(
         col("idx"),
         // get() not getItem(): truncated body rows parse to NULL fields and

@@ -4,7 +4,6 @@ import graft.domain.{Descriptors, ErrorSummary, Errors, ValidationError}
 import graft.operators.{RangeBatch, SharedLoci}
 import graft.sources._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The TRACE workflow (`TRACEInputValidator.run` +
   * `TRACEInputCheckMapper.java:301-340`): per-VCF validation against the
@@ -37,15 +36,16 @@ object TracePipeline {
     * individual-count agreement (TreeSet-size check,
     * `TRACEInputValidator.java:230-233`), `sharedLoci <= 100` gate (`:235-238`).
     *
-    * ONE distributed pass for any number of files — the reference validates
-    * every VCF inside a single MapReduce job with per-file counter groups
+    * ONE pass over every VCF — the reference validates every VCF inside a
+    * single map-only MapReduce job with per-file counter groups
     * (`TRACEInputCheckMapper.java:267-269`); a file-at-a-time loop would run
-    * O(#files) Spark jobs. Shape: union all line sets with a `file` tag,
-    * then (1) one `min_by` aggregate extracts every header line (#files
-    * rows of driver metadata), (2) header rules run driver-side on those
-    * strings, (3) one anti-join checks every file's samples against the
-    * groups table, (4) one grouped broadcast-join pass counts total/shared
-    * loci for all clean files (`SharedLoci.countsBy`). */
+    * O(#files) Spark jobs. Shape: each partition of each file folds to its
+    * first non-`##` line (by idx), its body row count and its shared-loci
+    * count against the broadcast panel lookup; the driver merges those per
+    * file (#files rows of metadata), runs the header rules and the sample
+    * membership check on the header strings, and discards the counts of
+    * every file that errored. With the groups summary and the panel lookup,
+    * a submission costs three Spark jobs for any number of files. */
   def run(files: Seq[(String, DataFrame)], panelLines: DataFrame,
       groupsLines: Option[DataFrame], format: String = "vcf"): Result = {
 
@@ -62,80 +62,51 @@ object TracePipeline {
 
     // Empty input list (e.g. a glob that matched nothing): a well-formed
     // Result, with the shared-loci gate firing exactly as a zero-stat run
-    // would (sum 0 <= 100) — the union/reduce below would otherwise throw.
+    // would (sum 0 <= 100).
     if (files.isEmpty)
       return Result(None, Nil, Map.empty, Nil,
         Seq("Too few loci shared between study and reference panel! PCA will not be informative!"))
 
-    val spark = panelLines.sparkSession
-    import spark.implicits._
-    val panel = PanelReader.parse(panelLines)
-    val groups = groupsLines.map(GroupsReader.parse)
-    val groupSum = groupsLines.map(g => ErrorSummary.of(GroupsReader.validate(g)))
-      .getOrElse(ErrorSummary.empty)
+    val sc = panelLines.sparkSession.sparkContext
+    val groups = groupsLines.map(GroupsReader.summarize)
+    val groupSum = groups.fold(ErrorSummary.empty)(g => ErrorSummary.fromPartial(g.errors))
 
-    val unioned = files.map { case (id, df) => df.withColumn("file", lit(id)) }
-      .reduce(_ unionByName _)
+    val panel = PanelReader.broadcast(panelLines)
+    val scans: Map[String, SharedLoci.Scan] =
+      try sc.union(files.map { case (id, df) =>
+          Lines.rows(df).mapPartitions(rows => Iterator.single(id ->
+            SharedLoci.scan(rows, panel.value)(r => !VcfReader.isMeta(r._2),
+              r => VcfReader.isBody(r._2))))
+        }).collect().groupMapReduce(_._1)(_._2)(_ ++ _)
+      finally panel.destroy()
 
-    // (1) per-file header line (first non-## line) — bounded metadata.
-    val headerRows = unioned.where(!col("line").startsWith("##"))
-      .groupBy(col("file"))
-      .agg(min_by(col("line"), col("idx")).as("h"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val headers: Seq[(String, Option[String])] =
-      files.map { case (id, _) => id -> headerRows.get(id) }
+      files.map { case (id, _) => id -> scans.get(id).flatMap(_.header).map(_._2) }
 
-    // (2) header-string rules, driver-side on #files strings.
+    // header-string rules, driver-side on #files strings
     val headerErrsByFile: Map[String, Seq[ValidationError]] =
       headers.map { case (id, h) =>
         id -> VcfReader.validateHeaderString(h).map(_.copy(file = id))
       }.toMap
     val headerSum = ErrorSummary.ofSeq(files.flatMap(f => headerErrsByFile(f._1)))
 
-    // (3) sample membership for every clean-header file in one anti-join.
-    val samplePairs = headers.flatMap { case (id, h) =>
-      VcfReader.samplesOf(h).map(s => (id, s))
-    }
-    val (memberSum, memberErrFiles) = groups match {
-      case Some(g) if samplePairs.nonEmpty =>
-        // persist: two consuming actions (summary aggregate + errored-file
-        // collect) over one anti-join; released as soon as both complete so
-        // repeated pipeline runs in one session don't accumulate blocks.
-        val missing = samplePairs.toDF("file", "s")
-          .join(broadcast(g.select(col("sample"))), col("s") === col("sample"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val sum = ErrorSummary.of(missing.as[(String, String)]
-            .map { case (f, s) => ValidationError("VCF_SAMPLE_NOT_IN_GROUP", file = f, detail = s) })
-          val errFiles = missing.select("file").distinct().as[String].collect().toSet
-          (sum, errFiles)
-        } finally missing.unpersist(false)
-      case _ => (ErrorSummary.empty, Set.empty[String])
-    }
-
-    // (4) total/shared loci for all clean files in one grouped pass; a
-    // clean file with zero body rows simply has no group row → (0, 0).
-    val erroredFiles = headerErrsByFile.filter(_._2.nonEmpty).keySet ++ memberErrFiles
-    val cleanIds = files.map(_._1).filterNot(erroredFiles)
-    val statsByFile: Map[String, (Long, Long)] =
-      if (cleanIds.isEmpty) Map.empty
-      else {
-        val t = split(col("line"), "\t")
-        val body = unioned
-          .where(col("file").isin(cleanIds: _*))
-          .where(!col("line").startsWith("#"))
-          .select(col("file"), t.getItem(0).as("chr"), get(t, lit(1)).as("pos"),
-            get(t, lit(3)).as("ref"), get(t, lit(4)).as("alt"))
-        SharedLoci.countsBy(body, panel, "file").collect()
-          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // sample membership (`TRACEInputCheckMapper.java:169-178`) on the same
+    // header strings
+    val missing = groups.toSeq.flatMap { g =>
+      headers.flatMap { case (id, h) =>
+        VcfReader.samplesOf(h).filterNot(g.samples).map(s =>
+          ValidationError("VCF_SAMPLE_NOT_IN_GROUP", file = id, detail = s))
       }
+    }
+    val memberSum = ErrorSummary.bounded(missing)
 
+    val erroredFiles = headerErrsByFile.filter(_._2.nonEmpty).keySet ++ missing.map(_.file)
     val samplesByFile = headers.toMap
     val stats = files.map { case (id, _) =>
       if (erroredFiles.contains(id)) FileStats(id, 0, 0, 0)
       else {
-        val (total, shared) = statsByFile.getOrElse(id, (0L, 0L))
-        FileStats(id, VcfReader.samplesOf(samplesByFile(id)).distinct.size, total, shared)
+        val s = scans.getOrElse(id, SharedLoci.Scan.empty)
+        FileStats(id, VcfReader.samplesOf(samplesByFile(id)).distinct.size, s.total, s.shared)
       }
     }
     val errs = groupSum ++ headerSum ++ memberSum

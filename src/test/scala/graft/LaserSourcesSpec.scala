@@ -3,7 +3,6 @@ package graft
 import graft.domain.Fixtures
 import graft.operators.SharedLoci
 import graft.sources._
-import org.apache.spark.sql.functions._
 
 /** Readers + validation rules (SURVEY §5.3) and the R15 allele-match
   * property battery (SURVEY §5.4 — exhaustive over the allele alphabet
@@ -22,14 +21,16 @@ class LaserSourcesSpec extends TestBase {
   }
 
   test("seq validate: arity rules and group membership (R12, R13, R14)") {
-    val groups = Lines.of(spark, Fixtures.groupsLines)
-    val errs = SeqReader.validate(Lines.of(spark, Fixtures.badSeqLines),
-      Some(GroupsReader.parse(groups))).collect().map(_.code).toSet
-    assert(errs == Set("SEQ_FILE_TOO_FEW_COLUMNS", "SEQ_FILE_MISSING_COLUMNS",
+    val groups = GroupsReader.summarize(Lines.of(spark, Fixtures.groupsLines)).samples
+    def findings(seq: Seq[String]) = SeqReader.summarize(
+      seq.zipWithIndex.iterator.map { case (l, i) => (i.toLong, l) }, Some(groups)).findings
+    val errs = findings(Fixtures.badSeqLines)
+    assert(errs.keySet == Set("SEQ_FILE_TOO_FEW_COLUMNS", "SEQ_FILE_MISSING_COLUMNS",
       "SEQ_FILE_INCONSISTENT_COLUMNS", "SEQ_SAMPLE_NOT_IN_GROUP"))
+    // membership is checked on arity-valid rows only: ind_404 and ind_005
+    assert(errs("SEQ_SAMPLE_NOT_IN_GROUP").samples.map(_.line) == Seq(1L, 4L))
     // a clean file yields no errors
-    assert(SeqReader.validate(Lines.of(spark, Fixtures.seqLines),
-      Some(GroupsReader.parse(groups))).isEmpty)
+    assert(findings(Fixtures.seqLines).isEmpty)
   }
 
   test("site header validation: positional, one code per column (R10)") {
@@ -44,41 +45,45 @@ class LaserSourcesSpec extends TestBase {
   }
 
   test("groups validate: exactly two columns (R5)") {
-    val errs = GroupsReader.validate(Lines.of(spark, Fixtures.badGroupsLines))
-      .collect().map(e => (e.code, e.line)).toSet
+    val g = GroupsReader.summarize(Lines.of(spark, Fixtures.badGroupsLines))
+    val errs = g.errors.values.flatMap(_.samples).map(e => (e.code, e.line)).toSet
     assert(errs == Set(("GROUPS_FILE_MISSING_COLUMNS", 2L), ("GROUPS_FILE_TOO_MANY_COLUMNS", 3L)))
+    assert(g.samples == Set("ind_001", "ind_005", "orphan", "a"))
   }
 
   test("panel parse: last occurrence wins on duplicate chr:pos (R4)") {
-    val panel = PanelReader.parse(Lines.of(spark, Fixtures.slPanelLines))
-      .orderBy("pos").collect().map(r => (r.getString(1), r.getString(2)))
-    assert(panel.toMap.get("500").contains("T/T")) // A/C overwritten
-    assert(panel.toMap.get("600").contains("g/C")) // T/T overwritten
+    val panel = PanelReader.broadcast(Lines.of(spark, Fixtures.slPanelLines))
+    try {
+      assert(panel.value.get(("1", "500")).contains("T/T")) // A/C overwritten
+      assert(panel.value.get(("1", "600")).contains("g/C")) // T/T overwritten
+    } finally panel.destroy()
+  }
+
+  private def shared(site: Seq[String], panel: Seq[String]): SharedLoci.Scan = {
+    val p = PanelReader.broadcast(Lines.of(spark, panel))
+    try SharedLoci.site(Lines.of(spark, site), p) finally p.destroy()
   }
 
   test("shared loci: case-insensitive, order-sensitive (R15-R17)") {
-    val row = SharedLoci.counts(
-      SiteReader.parse(Lines.of(spark, Fixtures.slSiteLines)),
-      PanelReader.parse(Lines.of(spark, Fixtures.slPanelLines))).collect()(0)
-    assert(row.getLong(0) == 6L && row.getLong(1) == 3L)
+    val s = shared(Fixtures.slSiteLines, Fixtures.slPanelLines)
+    assert(s.total == 6L && s.shared == 3L)
   }
 
   test("property: allele match is case-insensitive, swap never matches (R15)") {
-    // One Spark job over the full cross product instead of a job per case.
+    // One Spark job per side over the full cross product instead of a job per case.
     val alleles = Seq("A", "C", "G", "T", "a", "c", "g", "t")
     val cases = for {
       ref <- alleles; alt <- alleles if !ref.equalsIgnoreCase(alt)
     } yield (ref, alt)
-    val site = Lines.of(spark, "CHR\tPOS\tID\tREF\tALT" +: cases.zipWithIndex.map {
-      case ((ref, alt), i) => s"1\t$i\tr\t$ref\t$alt" })
-    val panelSame = Lines.of(spark, "CHR\tPOS\tID\tREF\tALT" +: cases.zipWithIndex.map {
-      case ((ref, alt), i) => s"1\t$i\tx\t${ref.toUpperCase}\t${alt.toLowerCase}" })
-    val panelSwap = Lines.of(spark, "CHR\tPOS\tID\tREF\tALT" +: cases.zipWithIndex.map {
-      case ((ref, alt), i) => s"1\t$i\tx\t$alt\t$ref" })
-    val same = SharedLoci.counts(SiteReader.parse(site), PanelReader.parse(panelSame)).collect()(0)
-    val swap = SharedLoci.counts(SiteReader.parse(site), PanelReader.parse(panelSwap)).collect()(0)
-    assert(same.getLong(1) == cases.size.toLong, "case-folded matches must all count as shared")
-    assert(swap.getLong(1) == 0L, "swapped alleles must NOT count as shared")
+    val site = "CHR\tPOS\tID\tREF\tALT" +: cases.zipWithIndex.map {
+      case ((ref, alt), i) => s"1\t$i\tr\t$ref\t$alt" }
+    val panelSame = "CHR\tPOS\tID\tREF\tALT" +: cases.zipWithIndex.map {
+      case ((ref, alt), i) => s"1\t$i\tx\t${ref.toUpperCase}\t${alt.toLowerCase}" }
+    val panelSwap = "CHR\tPOS\tID\tREF\tALT" +: cases.zipWithIndex.map {
+      case ((ref, alt), i) => s"1\t$i\tx\t$alt\t$ref" }
+    assert(shared(site, panelSame).shared == cases.size.toLong,
+      "case-folded matches must all count as shared")
+    assert(shared(site, panelSwap).shared == 0L, "swapped alleles must NOT count as shared")
   }
 
   test("vcf parse: meta/comment skip, 9 fixed fields, dynamic samples (R6)") {

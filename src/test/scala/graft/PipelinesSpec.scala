@@ -11,6 +11,54 @@ class PipelinesSpec extends TestBase {
 
   private def lines(s: Seq[String]) = Lines.of(spark, s)
 
+  private def gzWrite(dir: java.io.File, name: String, content: Seq[String]): String = {
+    val f = new java.io.File(dir, name)
+    val out = new java.io.PrintWriter(new java.util.zip.GZIPOutputStream(
+      new java.io.FileOutputStream(f)))
+    content.foreach(out.println); out.close()
+    f.getAbsolutePath
+  }
+
+  /** Runs `body` under a job group and returns its result with every Spark
+    * job and task-end event the group produced. The listener bus is
+    * asynchronous, so the count waits for a sentinel job's start event (one
+    * bus queue delivers in order: every earlier event is in by then). */
+  private def observed[A](group: String)(body: => A)
+      : (A, Int, Seq[org.apache.spark.scheduler.SparkListenerTaskEnd]) = {
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerTaskEnd]()
+    val groupOfStage = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val g = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        jobs.add(g)
+        j.stageIds.foreach(groupOfStage.put(_, g))
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (groupOfStage.get(t.stageId) == group) tasks.add(t)
+    }
+    val sc = spark.sparkContext
+    def inGroup[B](g: String)(f: => B): B = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = inGroup(group)(body)
+      val sentinel = s"$group-drained"
+      inGroup(sentinel)(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!jobs.contains(sentinel)) {
+        assert(System.nanoTime() < deadline, "listener bus never delivered the sentinel")
+        Thread.sleep(10)
+      }
+      (a, jobs.asScala.count(_ == group), tasks.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("laser: clean run reports counters, no error; gate fires on low shared loci") {
     val r = LaserPipeline.run(
       lines(Fixtures.seqLines), lines(Fixtures.siteLines),
@@ -161,5 +209,44 @@ class PipelinesSpec extends TestBase {
     assert(last.getAs[String]("vcf2geno_json").contains("\"start\":201"))
     assert(last.getAs[String]("study_pca_json").contains("\"end\":250"))
     assert(last.getAs[String]("study_pca_json").contains("\"batch\":\"00002\""))
+  }
+
+  test("intake job count: LASER runFiles <= 5 jobs, TRACE run <= 4 (one map-only pass per file)") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-intake-jobs").toFile
+    val seq = gzWrite(tmp, "study.seq.gz", Fixtures.seqLines)
+    val site = gzWrite(tmp, "study.site.gz", Fixtures.siteLines)
+    val panel = gzWrite(tmp, "panel.site.gz", Fixtures.slPanelLines)
+    val groups = gzWrite(tmp, "groups.txt.gz", Fixtures.groupsLines)
+    val vcf2 = Fixtures.vcfLines.map(_.replace("ind_00", "ind_10"))
+    val vcfs = Seq(gzWrite(tmp, "a.vcf.gz", Fixtures.vcfLines), gzWrite(tmp, "b.vcf.gz", vcf2))
+    val groups2 = gzWrite(tmp, "groups2.txt.gz",
+      Fixtures.groupsLines ++ Seq("ind_101\tCEU", "ind_102\tYRI"))
+    val chunks = new java.io.File(tmp, "chunks").getAbsolutePath
+
+    val (laser, laserJobs, _) = observed("intake-laser")(LaserPipeline.runFiles(spark,
+      seq, site, panel, Some(groups), Some(chunks), chunkSize = 2))
+    assert(laser.firstError.isEmpty && laser.chunks == 2)
+    assert(laserJobs <= 5, s"LaserPipeline.runFiles ran $laserJobs Spark jobs")
+
+    val (trace, traceJobs, _) = observed("intake-trace")(TracePipeline.run(
+      vcfs.map(f => new java.io.File(f).getName -> Lines.read(spark, f)),
+      Lines.read(spark, panel), Some(Lines.read(spark, groups2))))
+    assert(trace.firstError.isEmpty && trace.perFile.map(_.totalLoci) == Seq(2L, 2L))
+    assert(traceJobs <= 4, s"TracePipeline.run ran $traceJobs Spark jobs")
+  }
+
+  test("chunk writes show in the tasks' output metrics") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-intake-bytes").toFile
+    val seq = gzWrite(tmp, "study.seq.gz", Fixtures.seqLines)
+    val site = gzWrite(tmp, "study.site.gz", Fixtures.siteLines)
+    val panel = gzWrite(tmp, "panel.site.gz", Fixtures.slPanelLines)
+    val chunks = new java.io.File(tmp, "chunks")
+    val (r, _, tasks) = observed("intake-bytes")(LaserPipeline.runFiles(spark,
+      seq, site, panel, None, Some(chunks.getAbsolutePath), chunkSize = 2))
+    assert(r.chunks == 2)
+    val written = tasks.map(_.taskMetrics.outputMetrics.bytesWritten).sum
+    val onDisk = chunks.listFiles().filter(_.getName.endsWith(".chunk.seq.gz")).map(_.length).sum
+    assert(written > 0 && written == onDisk, s"listener saw $written bytes, files hold $onDisk")
+    assert(tasks.map(_.taskMetrics.outputMetrics.recordsWritten).sum == 3L)
   }
 }

@@ -2,8 +2,7 @@ package graft
 
 import graft.domain.Fixtures
 import graft.laser.LaserPipeline
-import graft.operators.ChunkSink
-import graft.sources.{Lines, WorkflowConfig}
+import graft.sources.WorkflowConfig
 
 /** R28 (yaml `version:` scan + panel path derivation) and R29 (post-chunk
   * delete of the original seq file, gated on success). */
@@ -35,29 +34,105 @@ class WorkflowConfigSpec extends TestBase {
     assert(tdir.contains("apps/trace@2/2/references"))
   }
 
-  test("R29: writeAndDeleteSource deletes the original only after a successful write") {
+  /** A clean LASER submission as gzip files under `tmp`: 150 loci, all in
+    * the panel, so every gate passes (R23). `seqLoci` plants an R20
+    * mismatch, `siteHeader` a bad site header. */
+  private def submission(tmp: java.io.File, tag: String, seqLoci: Int = 150,
+      siteHeader: String = "CHR\tPOS\tID\tREF\tALT"): (String, String, String) = {
+    def gzWrite(name: String, content: Seq[String]): String = {
+      val f = new java.io.File(tmp, s"$tag.$name")
+      val out = new java.io.PrintWriter(new java.util.zip.GZIPOutputStream(
+        new java.io.FileOutputStream(f)))
+      content.foreach(out.println); out.close()
+      f.getAbsolutePath
+    }
+    val siteRows = (0 until 150).map(i => s"1\t${100 + i}\tr$i\tG\tA")
+    val seqRows = (0 until 250).map(i => s"POP1 ind_$i " + Seq.fill(seqLoci)("1 1 0.5").mkString(" "))
+    (gzWrite("seq.gz", seqRows), gzWrite("site.gz", siteHeader +: siteRows),
+      gzWrite("panel.gz", "CHR\tPOS\tID\tREF\tALT" +: siteRows))
+  }
+
+  private def gunzipLines(f: java.io.File): Seq[String] = {
+    val in = scala.io.Source.fromInputStream(
+      new java.util.zip.GZIPInputStream(new java.io.FileInputStream(f)), "UTF-8")
+    try in.getLines().toList finally in.close()
+  }
+
+  /** Chunk file name → decompressed lines. */
+  private def chunkSet(dir: java.io.File): Map[String, Seq[String]] =
+    Option(dir.listFiles()).toSeq.flatten.filter(_.getName.endsWith(".chunk.seq.gz"))
+      .map(f => f.getName -> gunzipLines(f)).toMap
+
+  private def staged(dir: java.io.File): Seq[String] =
+    Option(dir.list()).toSeq.flatten.filter(_.contains(".staging-"))
+
+  test("R29: a failed chunk write keeps the seq file (runFiles)") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-r29").toFile
-    val seq = new java.io.File(tmp, "study.seq.gz")
-    java.nio.file.Files.writeString(seq.toPath, "placeholder")
-    val lines = Lines.of(spark, Seq("l0", "l1", "l2"))
-
-    // success: chunks written, original gone
-    val outDir = new java.io.File(tmp, "chunks").getAbsolutePath
-    val n = ChunkSink.writeAndDeleteSource(lines, seq.getAbsolutePath, outDir, chunkSize = 2)
-    assert(n == 2)
-    assert(new java.io.File(outDir, "0.chunk.seq.gz").exists())
-    assert(!seq.exists(), "original seq file must be deleted after successful chunking")
-
-    // failure: out dir nested under a regular FILE → write throws → original kept
-    val seq2 = new java.io.File(tmp, "study2.seq.gz")
-    java.nio.file.Files.writeString(seq2.toPath, "placeholder")
+    val (seq, site, panel) = submission(tmp, "a")
+    // failure: out dir nested under a regular FILE → the scan's write throws
     val blocker = new java.io.File(tmp, "blocker.txt")
     java.nio.file.Files.writeString(blocker.toPath, "i am a file")
     intercept[Exception] {
-      ChunkSink.writeAndDeleteSource(lines, seq2.getAbsolutePath,
-        new java.io.File(blocker, "chunks").getAbsolutePath, chunkSize = 2)
+      LaserPipeline.runFiles(spark, seq, site, panel, None,
+        Some(new java.io.File(blocker, "chunks").getAbsolutePath), deleteSeqAfterChunks = true)
     }
-    assert(seq2.exists(), "a failed chunk write must leave the original in place")
+    assert(new java.io.File(seq).exists(), "a failed chunk write must leave the original in place")
+
+    // success: chunks written, original gone
+    val out = new java.io.File(tmp, "chunks")
+    val r = LaserPipeline.runFiles(spark, seq, site, panel, None, Some(out.getAbsolutePath),
+      chunkSize = 100, deleteSeqAfterChunks = true)
+    assert(r.ok && r.chunks == 3)
+    assert(chunkSet(out).keySet == Set("0.chunk.seq.gz", "1.chunk.seq.gz", "2.chunk.seq.gz"))
+    assert(!new java.io.File(seq).exists(), "original seq file must be deleted after successful chunking")
+  }
+
+  test("staged promote: a reject found after the scan leaves no chunk and no staging") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stage-reject").toFile
+    for ((tag, seqLoci, header, code) <- Seq(
+        ("r20", 149, "CHR\tPOS\tID\tREF\tALT", "SITE_FILE_LOCI_NOT_IN_SEQ"),
+        ("hdr", 150, "CHR\tPOS\tID\tALLELE1\tALT", "SITE_FILE_HEADER_NO_REF"))) {
+      val (seq, site, panel) = submission(tmp, tag, seqLoci, header)
+      val out = new java.io.File(tmp, s"$tag-chunks")
+      val r = LaserPipeline.runFiles(spark, seq, site, panel, None, Some(out.getAbsolutePath),
+        deleteSeqAfterChunks = true)
+      assert(r.firstError.map(_.name).contains(code))
+      assert(r.chunks == 3, "the chunk count is reported without the write")
+      assert(chunkSet(out).isEmpty, s"$tag: a reject must leave no chunk file")
+      assert(staged(tmp).isEmpty, s"$tag: staging residue ${staged(tmp)}")
+      assert(new java.io.File(seq).exists())
+    }
+  }
+
+  test("staged promote: a failed promote keeps the seq; a re-run matches a clean run") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stage-promote").toFile
+    val (seq, site, panel) = submission(tmp, "p")
+    // the output path is a regular file: the scan stages fine, the promote
+    // cannot create the output directory
+    val out = new java.io.File(tmp, "chunks")
+    java.nio.file.Files.writeString(out.toPath, "in the way")
+    intercept[Exception] {
+      LaserPipeline.runFiles(spark, seq, site, panel, None, Some(out.getAbsolutePath),
+        deleteSeqAfterChunks = true)
+    }
+    assert(new java.io.File(seq).exists(), "a failed promote must leave the original in place")
+    assert(staged(tmp).isEmpty, s"staging residue ${staged(tmp)}")
+
+    // the reference output: a clean run of the same files elsewhere
+    val clean = new java.io.File(tmp, "clean")
+    assert(LaserPipeline.runFiles(spark, seq, site, panel, None,
+      Some(clean.getAbsolutePath)).ok)
+    assert(staged(tmp).isEmpty, s"a clean run left staging residue ${staged(tmp)}")
+
+    // re-run once the obstacle is gone
+    assert(out.delete())
+    val r = LaserPipeline.runFiles(spark, seq, site, panel, None, Some(out.getAbsolutePath),
+      deleteSeqAfterChunks = true)
+    assert(r.ok)
+    assert(chunkSet(out) == chunkSet(clean) && chunkSet(out).size == 3)
+    assert(chunkSet(out)("2.chunk.seq.gz").size == 50)
+    assert(!new java.io.File(seq).exists())
+    assert(staged(tmp).isEmpty)
   }
 
   test("R24: distributed descriptor write — exact names, key-TSV-JSON framing") {

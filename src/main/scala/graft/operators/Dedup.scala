@@ -247,79 +247,61 @@ object Dedup {
       sh: DataFrame,
       numHashes: Int = 8,
       bandSize: Int = 2,
-      maxBucket: Int = 1000): DataFrame = {
-    val capped = cappedBandBuckets(sh, numHashes, bandSize, maxBucket)
-    capped.as("a")
-      .join(capped.as("b"),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-  }
+      maxBucket: Int = 1000): DataFrame =
+    bucketPairs(cappedBands(docRows(sh, numHashes, keys = false),
+      numHashes, bandSize, maxBucket))
 
-  /** Banded minhash bucket rows (doc_id, band, sig) with oversized buckets
-    * dropped — the blocking key shared by the self-join candidate generator
-    * above and the cross-corpus generator (`crossNearDup`).
+  /** The per-doc near-dup row `(doc_id, ks, h0..h{numHashes-1})` of a
+    * `(doc_id, shingle)` frame, in ONE aggregate: `ks` is the doc's set of
+    * 60-bit hashed shingle keys ([[hashedShingleKey]]) and `h*` are its
+    * minhash mins over the base hash `sk mod p` (family doc above
+    * `MinhashP`). Both ignore duplicate shingles, so `sh` may carry them
+    * (`shingles(dedup = false)` skips the distinct shuffle). Every
+    * near-dup consumer reads this row: banding ([[bands]]), the overlap
+    * kernel ([[overlap]]) and the index writer ([[writeIndexRows]]).
+    * `keys = false` leaves out `ks` for consumers that only band.
     *
-    * One aggregation pass with numHashes parallel min-aggs (map-side
-    * combined) instead of exploding every shingle numHashes× — the shuffle
-    * carries one row per doc, not numHashes rows per shingle. One md5 per
-    * ROW (not per row × seed): the seed hashes derive from the reduced
-    * digest prefix by integer arithmetic (family doc above `MinhashP`).
-    *
-    * The cap runs via a broadcast anti-join against the OVERSIZED bucket
-    * list: the count aggregate is map-side combined and the blocklist is
-    * tiny (only pathological boilerplate buckets exceed the cap), so the
-    * bucket rows themselves never shuffle — vs a Window.partitionBy(band,
-    * sig) count, which sort-shuffles every row. */
-  private def cappedBandBuckets(
-      sh: DataFrame,
-      numHashes: Int,
-      bandSize: Int,
-      maxBucket: Int): DataFrame =
-    capBuckets(bandBuckets(sh, numHashes, bandSize), maxBucket)
-
-  /** Wide per-doc minhash signatures (doc_id, h0..h{numHashes-1}) in ONE
-    * aggregation pass — numHashes parallel min-aggs, map-side combined, one
-    * md5 per shingle ROW (seed hashes derive from the digest prefix by
-    * integer arithmetic). Shared by the banding chain and the pair-level
-    * agreement gate (`editSimilarityGated`). */
-  private def minhashSigsWide(sh: DataFrame, numHashes: Int): DataFrame = {
-    val minCols = minhashMins(numHashes)
-    sh.select(col("doc_id"), shingleBaseHash.as("bh"))
-      .groupBy(col("doc_id"))
-      .agg(minCols.head, minCols.tail: _*)
-  }
-
-  /** The signature aggregates `h0..h{numHashes-1}` over a base-hash
-    * column `bh` — duplicate-insensitive mins. */
-  private def minhashMins(numHashes: Int): Seq[org.apache.spark.sql.Column] = {
+    * The row counts distinct KEYS, so two shingles of one doc that share a
+    * key count once (p ≈ n²/2⁶¹ per doc); the DuckDB oracles join on the
+    * same key and count shingles, and differ only there. */
+  private def docRows(sh: DataFrame, numHashes: Int,
+      keys: Boolean = true): DataFrame = {
     require(numHashes <= 64, s"numHashes $numHashes > 64: minhashAB precomputes 64 seed constants")
-    (0 until numHashes).map(s =>
+    val mins = (0 until numHashes).map(s =>
       min((col("bh") * minhashA(s) + minhashB(s)) % MinhashP).as(s"h$s"))
+    val aggs = (if (keys) Seq(collect_set(col("sk")).as("ks")) else Nil) ++ mins
+    sh.select(col("doc_id"), hashedShingleKey.as("sk"))
+      .select(col("doc_id"), col("sk"), (col("sk") % MinhashP).as("bh"))
+      .groupBy(col("doc_id"))
+      .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** UNCAPPED banded minhash bucket rows — one row per (doc, band). The
-    * persisted index stores these raw (cap applied at probe time over the
-    * whole stored union — see `crossNearDupIndexed`), so row volume is
-    * exactly docs × bands regardless of boilerplate density. */
-  private def bandBuckets(
-      sh: DataFrame,
-      numHashes: Int,
-      bandSize: Int): DataFrame =
-    bands(minhashSigsWide(sh, numHashes), numHashes, bandSize)
+  /** [[docRows]] of a `(doc_id, text)` frame: one shingle scan. */
+  private def docRowsOf(docs: DataFrame, n: Int, numHashes: Int): DataFrame =
+    docRows(shingles(docs.select(col("doc_id"), col("text")), n, dedup = false),
+      numHashes)
 
-  /** Band rows (doc_id, band, sig) of wide per-doc signatures
-    * (doc_id, h0..h{numHashes-1}): one narrow explode, no aggregate. */
-  private def bands(sigs: DataFrame, numHashes: Int, bandSize: Int): DataFrame = {
+  /** Band rows (doc_id, band, sig) of per-doc rows carrying
+    * `h0..h{numHashes-1}`: one narrow explode, no aggregate. UNCAPPED —
+    * the persisted index stores these raw (the cap is applied at probe
+    * time over the whole stored union, see `crossNearDupIndexed`), so row
+    * volume is exactly docs × bands regardless of boilerplate density. */
+  private def bands(rows: DataFrame, numHashes: Int, bandSize: Int): DataFrame = {
     val bandCols = (0 until numHashes / bandSize).map { b =>
       struct(lit(b.toLong).as("band"),
         concat_ws("|", (0 until bandSize).map(i => col(s"h${b * bandSize + i}")): _*).as("sig"))
     }
-    sigs
+    rows
       .select(col("doc_id"), explode(array(bandCols: _*)).as("k"))
       .select(col("doc_id"), col("k.band"), col("k.sig"))
   }
+
+  /** Banded buckets with oversized buckets dropped — the blocking key
+    * shared by the self-join candidate generator ([[bucketPairs]]) and the
+    * cross-corpus one ([[crossCandidates]]). */
+  private def cappedBands(rows: DataFrame, numHashes: Int, bandSize: Int,
+      maxBucket: Int): DataFrame =
+    capBuckets(bands(rows, numHashes, bandSize), maxBucket)
 
   /** Drop oversized buckets via a broadcast anti-join against the tiny
     * OVERSIZED list (the count aggregate is map-side combined; only
@@ -335,6 +317,57 @@ object Dedup {
     buckets.join(broadcast(tooBig), Seq("band", "sig"), "left_anti")
   }
 
+  /** Candidate pairs (doc_a < doc_b) sharing ≥ 1 capped bucket. */
+  private def bucketPairs(capped: DataFrame): DataFrame =
+    capped.as("a")
+      .join(capped.as("b"),
+        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+
+  /** THE overlap kernel. Each pair (columns `a`, `b`) meets both docs'
+    * [[docRows]] (aliased `ra`, `rb`) and yields
+    * `n_inter = |ka ∩ kb|`, `n_a = |ka|` and `n_b = |kb|` (BIGINT); Jaccard
+    * ([[jaccardOf]]) and containment ([[containmentOf]]) are projections
+    * of these counts. Every doc has a row, so a pair that shares no key
+    * scores 0 without a spine join. `gate` filters the joined pairs
+    * before the counts and may read both rows (`ra.h0`, `rb.h0`, …). */
+  private def overlap(pairs: DataFrame, rowsA: DataFrame, rowsB: DataFrame,
+      a: String = "doc_a", b: String = "doc_b",
+      gate: org.apache.spark.sql.Column = lit(true)): DataFrame =
+    withRows(pairs, rowsA, rowsB, a, b)
+      .where(gate)
+      .select(col(a), col(b),
+        size(array_intersect(col("ra.ks"), col("rb.ks"))).cast("long").as("n_inter"),
+        size(col("ra.ks")).cast("long").as("n_a"),
+        size(col("rb.ks")).cast("long").as("n_b"))
+
+  /** `pairs` joined to each side's per-doc row, aliased `ra` and `rb`. */
+  private def withRows(pairs: DataFrame, rowsA: DataFrame, rowsB: DataFrame,
+      a: String = "doc_a", b: String = "doc_b"): DataFrame =
+    pairs.join(rowsA.as("ra"), col(a) === col("ra.doc_id"))
+      .join(rowsB.as("rb"), col(b) === col("rb.doc_id"))
+
+  /** Unrounded Jaccard of [[overlap]]'s counts. */
+  private def jaccardRatio: org.apache.spark.sql.Column =
+    col("n_inter") / (col("n_a") + col("n_b") - col("n_inter"))
+
+  /** Jaccard of [[overlap]]'s counts, rounded to 6 decimals. */
+  private def jaccardOf: org.apache.spark.sql.Column = round(jaccardRatio, 6)
+
+  /** Both containment directions of [[overlap]]'s counts. */
+  private def containmentOf: Seq[org.apache.spark.sql.Column] = Seq(
+    round(col("n_inter") / col("n_a"), 6).as("cont_a"),
+    round(col("n_inter") / col("n_b"), 6).as("cont_b"))
+
+  /** Number of the `numHashes` minhash mins on which `ra` and `rb` agree —
+    * an unbiased Jaccard estimate, read from the rows [[withRows]] joins. */
+  private def agreement(numHashes: Int): org.apache.spark.sql.Column =
+    (0 until numHashes)
+      .map(s => when(col(s"ra.h$s") === col(s"rb.h$s"), 1).otherwise(0))
+      .reduce(_ + _)
+
   /** Cross-corpus near-dedup — "dedupe today's batch against the standing
     * corpus", the operational counterpart of `nearDupScores` the same way
     * `exactIncrement` is the operational counterpart of `exact` (and the
@@ -345,19 +378,19 @@ object Dedup {
     * docs. Doc-id spaces of the two sides are independent — sides never
     * mix, so no disjointness requirement.
     *
-    * Scale: both sides reduce to banded minhash buckets (one narrow
-    * aggregate each — map-side combined, O(docs × numHashes × 8B) shuffle
-    * independent of text size); candidates come from ONE equi-join on
-    * (band, sig), batch-side broadcast when the batch is small (AQE
-    * decides from runtime sizes). Within-side pairs are never generated —
-    * vs running `nearDupScores` over corpus ∪ batch, which would re-pair
-    * the standing corpus against itself every increment. Both sides'
-    * oversized buckets are dropped (boilerplate cap, same argument as
-    * `lshCandidatePairs`: a giant bucket means near-identical boilerplate —
-    * cap + route to a dedicated pass rather than exploding the join).
-    * Scoring joins run on hashed-shingle keys (8-byte `sk`, not shingle
-    * text) over candidate-pruned shingle sets — the `pairOverlapStats`
-    * cost model with a side-tagged twist. */
+    * Scale: each side reduces to its per-doc rows ([[docRows]]: one
+    * shingle scan into one aggregate carrying the key set and the minhash
+    * mins); candidates come from ONE equi-join of the two sides' banded
+    * buckets on (band, sig), batch-side broadcast when the batch is small
+    * (AQE decides from runtime sizes). Within-side pairs are never
+    * generated — vs running `nearDupScores` over corpus ∪ batch, which
+    * would re-pair the standing corpus against itself every increment.
+    * Both sides' oversized buckets are dropped (boilerplate cap, same
+    * argument as `lshCandidatePairs`: a giant bucket means near-identical
+    * boilerplate — cap + route to a dedicated pass rather than exploding
+    * the join). Candidate pairs score through the [[overlap]] kernel on
+    * key sets; the corpus rows are semi-pruned to candidate docs first, so
+    * only those meet the pair spine. */
   def crossNearDup(
       corpus: DataFrame,
       batch: DataFrame,
@@ -367,39 +400,25 @@ object Dedup {
       bandSize: Int = 2,
       maxBucket: Int = 1000): DataFrame = {
     val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // One shingle scan per side feeds both its bucket aggregate and its
-    // scoring joins (persist-and-release, the operator-owned-cache
-    // contract).
-    val shC = shingles(corpus.select(col("doc_id"), col("text")), n).persist(sl)
-    val shB = shingles(batch.select(col("doc_id"), col("text")), n).persist(sl)
-    // The candidate set feeds three consumers (both prunes + the pair
-    // spine) — persist so the two-sided band chain runs once, not thrice.
+    // each side's row feeds both its buckets and the kernel
+    // (persist-and-release, the operator-owned-cache contract)
+    val rowsC = docRowsOf(corpus, n, numHashes).persist(sl)
+    val rowsB = docRowsOf(batch, n, numHashes).persist(sl)
+    // the candidate set feeds the corpus prune and the pair spine
     val cand = crossCandidates(
-      cappedBandBuckets(shB, numHashes, bandSize, maxBucket),
-      cappedBandBuckets(shC, numHashes, bandSize, maxBucket)).persist(sl)
-    // Candidate-prune each side's shingles before the intersection join
-    // (candidates ≪ corpus — the point of LSH), then join on the 8-byte
-    // hashed-shingle key.
-    def pruned(sh: DataFrame, ids: DataFrame): DataFrame =
-      sh.join(ids, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), hashedShingleKey.as("sk"))
-    val skB = pruned(shB, cand.select(col("batch_id").as("doc_id")).distinct()).persist(sl)
-    val skC = pruned(shC, cand.select(col("corpus_id").as("doc_id")).distinct()).persist(sl)
-    val scored = scoreCrossCandidates(cand, skB, skC, threshold)
-    materializeThenRelease(scored, shC, shB, skB, skC, cand)
+      cappedBands(rowsB, numHashes, bandSize, maxBucket),
+      cappedBands(rowsC, numHashes, bandSize, maxBucket)).persist(sl)
+    val candC = rowsC.join(candidateCorpusIds(cand), Seq("doc_id"), "left_semi")
+    materializeThenRelease(crossScores(cand, rowsB, candC, threshold),
+      rowsC, rowsB, cand)
   }
 
-  /** The 8-byte hashed-shingle scoring key (15-hex md5 prefix as BIGINT) —
-    * shared by the in-memory and persisted-index cross-dedup forms. */
+  /** The 8-byte hashed-shingle key (15-hex md5 prefix as BIGINT): the
+    * element type of every key set and of the index's `shingle_keys`.
+    * The DuckDB oracles join on the identical hash
+    * (`('0x' || substr(md5(shingle), 1, 15))::BIGINT`). */
   private def hashedShingleKey: org.apache.spark.sql.Column =
     conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long")
-
-  /** Rounded Jaccard of the per-doc key-set columns `ka`, `kb` — the
-    * [[ngramJaccardFromShingles]] ratio, counted by array intersection. */
-  private def keySetJaccard: org.apache.spark.sql.Column = {
-    val inter = size(array_intersect(col("ka"), col("kb")))
-    round(inter / (size(col("ka")) + size(col("kb")) - inter), 6)
-  }
 
   /** Cross-side candidate pairs: the two sides' capped band buckets joined
     * on (band, sig) — never within a side. */
@@ -410,34 +429,28 @@ object Dedup {
       .select(col("b.doc_id").as("batch_id"), col("c.doc_id").as("corpus_id"))
       .distinct()
 
-  /** Shared scoring tail of the cross-dedup forms: exact Jaccard over
-    * hashed-shingle keys for every candidate cross pair, thresholded.
-    * `skB`/`skC` must carry the FULL shingle-key set of every candidate
-    * doc (sizes are per-doc totals, so overlap-pruned inputs would inflate
-    * the scores). */
-  private def scoreCrossCandidates(
-      cand: DataFrame, skB: DataFrame, skC: DataFrame, threshold: Double): DataFrame = {
-    val inter = cand
-      .join(skB.as("sb"), col("batch_id") === col("sb.doc_id"))
-      .join(skC.as("sc"), col("corpus_id") === col("sc.doc_id") &&
-        col("sb.sk") === col("sc.sk"))
-      .groupBy(col("batch_id"), col("corpus_id"))
-      .agg(count(lit(1)).as("n_inter"))
-    val sizesB = skB.groupBy(col("doc_id")).agg(count(lit(1)).as("n_b"))
-    val sizesC = skC.groupBy(col("doc_id")).agg(count(lit(1)).as("n_c"))
-    // Left join back to the candidate spine (pairOverlapStats convention):
-    // a band collision with zero true shingle overlap scores 0.0, so the
-    // "every candidate pair scoring >= threshold" contract holds at
-    // threshold 0.0 too.
-    cand
-      .join(inter, Seq("batch_id", "corpus_id"), "left")
-      .na.fill(0L, Seq("n_inter"))
-      .join(sizesB.select(col("doc_id").as("batch_id"), col("n_b")), Seq("batch_id"))
-      .join(sizesC.select(col("doc_id").as("corpus_id"), col("n_c")), Seq("corpus_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        round(col("n_inter") / (col("n_b") + col("n_c") - col("n_inter")), 6).as("jaccard"))
+  /** The corpus-side doc ids of a cross candidate set, as `doc_id`. */
+  private def candidateCorpusIds(cand: DataFrame): DataFrame =
+    cand.select(col("corpus_id").as("doc_id"))
+
+  /** Scoring tail of the cross-dedup forms: every candidate cross pair
+    * through the [[overlap]] kernel, thresholded on the rounded Jaccard.
+    * `rowsC` must hold each candidate corpus doc's FULL key set. */
+  private def crossScores(cand: DataFrame, rowsB: DataFrame, rowsC: DataFrame,
+      threshold: Double): DataFrame =
+    overlap(cand, rowsB, rowsC, "batch_id", "corpus_id")
+      .select(col("batch_id"), col("corpus_id"), jaccardOf.as("jaccard"))
       .where(col("jaccard") >= threshold)
-  }
+
+  /** Key-set rows (doc_id, ks) of an index's candidate corpus docs: the
+    * stored `shingle_keys` semi-pruned to the candidates and aggregated
+    * back to sets (a replayed append's duplicate rows collapse in it). */
+  private def indexKeySets(spark: SparkSession, dir: String,
+      cand: DataFrame): DataFrame =
+    spark.read.schema("doc_id LONG, sk LONG").parquet(s"$dir/shingle_keys")
+      .join(candidateCorpusIds(cand), Seq("doc_id"), "left_semi")
+      .groupBy(col("doc_id"))
+      .agg(collect_set(col("sk")).as("ks"))
 
   /** Build the PERSISTED form of the standing-corpus side of `crossNearDup`
     * — the "index once, probe per batch" layout a production ingest stream
@@ -496,27 +509,31 @@ object Dedup {
 
   private def writeIndexSide(docs: DataFrame, dir: String, n: Int,
       numHashes: Int, bandSize: Int, overwrite: Boolean): Unit = {
-    val mode = if (overwrite) "overwrite" else "append"
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sh = shingles(
-      docs.select(col("doc_id").cast("long").as("doc_id"), col("text")), n)
-      .persist(sl)
-    try {
-      // Buckets are stored UNCAPPED (probes cap over the stored union, so
-      // the cap is exact however the index was grown — no increment-local
-      // cap decision is ever baked in). Write order is crash-shaped:
-      // shingle_keys first, buckets second. A failure between the two
-      // jobs leaves docs with keys but no buckets — invisible to probes
-      // (they can never become candidates) — never the reverse, where
-      // bucket rows without keys would silently drop real matches at the
-      // scoring join. A retried append re-writes both; probes dedup rows
-      // (distinct keys, distinct-doc bucket counts, distinct candidate
-      // pairs), so the replay converges instead of corrupting scores.
-      sh.select(col("doc_id"), hashedShingleKey.as("sk"))
-        .write.mode(mode).parquet(s"$dir/shingle_keys")
-      bandBuckets(sh, numHashes, bandSize)
-        .write.mode(mode).parquet(s"$dir/buckets")
-    } finally { sh.unpersist(false); () }
+    val rows = docRowsOf(docs.select(col("doc_id").cast("long").as("doc_id"),
+      col("text")), n, numHashes)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try writeIndexRows(rows, bands(rows, numHashes, bandSize), dir,
+      if (overwrite) "overwrite" else "append")
+    finally { rows.unpersist(false); () }
+  }
+
+  /** THE index-row writer, shared by the build/append verbs and
+    * [[CrossIndexSession.append]]: `shingle_keys` gets `explode(ks)` of the
+    * per-doc rows, `buckets` the rows' UNCAPPED bands (probes cap over the
+    * stored union, so the cap is exact however the index was grown — no
+    * increment-local cap decision is ever baked in). Write order is
+    * crash-shaped: shingle_keys first, buckets second. A failure between
+    * the two jobs leaves docs with keys but no buckets — invisible to
+    * probes (they can never become candidates) — never the reverse, where
+    * bucket rows without keys would silently drop real matches at the
+    * scoring join. A retried append re-writes both; probes dedup rows
+    * (key sets, distinct-doc bucket counts, distinct candidate pairs), so
+    * the replay converges instead of corrupting scores. */
+  private def writeIndexRows(rows: DataFrame, buckets: DataFrame, dir: String,
+      mode: String): Unit = {
+    rows.select(col("doc_id"), explode(col("ks")).as("sk"))
+      .write.mode(mode).parquet(s"$dir/shingle_keys")
+    buckets.write.mode(mode).parquet(s"$dir/buckets")
   }
 
   /** PURGE a doc-id set from a [[buildCrossNearDupIndex]] layout — the
@@ -637,33 +654,25 @@ object Dedup {
     val bucketsC = capBuckets(
       mask(spark.read.schema("doc_id LONG, band LONG, sig STRING")
         .parquet(s"$dir/buckets")), m.maxBucket)
-    val shB = shingles(batch.select(col("doc_id"), col("text")), m.n).persist(sl)
+    val rowsB = docRowsOf(batch, m.n, m.numHashes).persist(sl)
     val cand = crossCandidates(
-      cappedBandBuckets(shB, m.numHashes, m.bandSize, m.maxBucket), bucketsC)
+      cappedBands(rowsB, m.numHashes, m.bandSize, m.maxBucket), bucketsC)
       .persist(sl)
-    val skB = shB
-      .join(cand.select(col("batch_id").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), hashedShingleKey.as("sk")).persist(sl)
-    // Candidate-prune the index's shingle keys the same way the in-memory
-    // form prunes the corpus scan — only candidate corpus docs' keys load.
-    // distinct AFTER the prune: collapses duplicate rows from a replayed
-    // append (and is cheap — candidate docs only).
-    val skC = spark.read.schema("doc_id LONG, sk LONG").parquet(s"$dir/shingle_keys")
-      .join(cand.select(col("corpus_id").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .distinct()
-      .persist(sl)
-    val scored = scoreCrossCandidates(cand, skB, skC, threshold)
-    materializeThenRelease(scored, shB, skB, skC, cand)
+    // only candidate corpus docs' keys load, the same prune the in-memory
+    // form applies to its corpus rows
+    materializeThenRelease(
+      crossScores(cand, rowsB, indexKeySets(spark, dir, cand), threshold),
+      rowsB, cand)
   }
 
   /** Per-batch artifacts of [[CrossIndexSession.scoreBatch]]: the fused
-    * edge set (eagerly checkpointed, output-scale) plus the batch's own
-    * index-side rows — narrow explodes of the checkpointed per-doc batch
-    * row, so [[CrossIndexSession.append]] writes them without
+    * edge set (eagerly checkpointed, output-scale) plus the batch's
+    * checkpointed per-doc rows and their uncapped bands, so
+    * [[CrossIndexSession.append]] writes the index rows without
     * re-shingling the batch. */
   final class BatchScore private[Dedup] (
       val edges: DataFrame,
-      private[Dedup] val sk: DataFrame,
+      private[Dedup] val rows: DataFrame,
       private[Dedup] val buckets: DataFrame)
 
   /** Owner-side SESSION over a [[buildCrossNearDupIndex]] layout — the
@@ -692,14 +701,14 @@ object Dedup {
     *
     * [[scoreBatch]] additionally FUSES the loop's two scorers — cross-
     * vs-index ([[crossNearDupIndexed]]) and within-batch
-    * ([[nearDupScores]] ≥ threshold) — onto ONE per-doc batch row: one
-    * shingle scan into one `doc_id` aggregate carrying the doc's hashed
-    * shingle-key SET and its minhash mins, beside its text hash. Both
-    * candidate generators band that row, both exact scorers intersect key
-    * sets (no per-shingle join), and the index append rides the same row
-    * (the uncapped bucket rows and hashed shingle keys are narrow explodes
-    * [[append]] writes — the `writeIndexSide` rows up to duplicate rows,
-    * same crash discipline). Edge-set identity with the unfused pair is
+    * ([[nearDupScores]] ≥ threshold) — onto ONE per-doc batch row
+    * ([[docRows]] beside the text hash, built over every batch doc). Both
+    * candidate generators band that row, both scorers run the [[overlap]]
+    * kernel, the within-batch half runs the dedup-first body
+    * ([[dedupCtx]], [[dedupFirstOn]]) that `nearDupScores` runs, and
+    * [[append]] writes the row through the index writer
+    * ([[writeIndexRows]], same rows and crash discipline as
+    * `writeIndexSide`). Edge-set identity with the unfused pair is
     * pinned by DedupSpec's fused-equals-unfused case, StreamingSpec's
     * batch-pipeline-convergence asserts and the dd_curation_stream /
     * dd_purge_stream oracles; cap semantics are preserved exactly (batch
@@ -784,11 +793,6 @@ object Dedup {
       * threshold)` as canonical (doc_a, doc_b) rows, eagerly checkpointed.
       * The batch's index rows ride along for [[append]].
       *
-      * Pairs score as `|ka ∩ kb| / (|ka| + |kb| − |ka ∩ kb|)` over per-doc
-      * sets of 60-bit hashed shingle keys. The unfused scorers count
-      * DISTINCT SHINGLES per doc instead; the two agree unless two distinct
-      * shingles of one doc share a key (p ≈ n²/2⁶¹ per doc).
-      *
       * Batch-scale frames — the per-doc row, the cross candidates and the
       * text-hash groups — are eager checkpoints, so every later reference
       * is a plain RDD scan, not a cache query stage nested in the edge
@@ -797,24 +801,14 @@ object Dedup {
       // cast once at the boundary (the writeIndexSide discipline): the
       // index and the loop's label graph are LONG-keyed
       val b = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      // ---- the per-doc batch row (doc_id, ks, h0.., th): one shingle scan
-      // into one aggregate — the key set and the minhash mins both ignore
-      // duplicate shingles, so no distinct shuffle precedes it
-      val mins = minhashMins(m.numHashes)
-      val docs = checkpointed(shingles(b, m.n, dedup = false)
-        .select(col("doc_id"), hashedShingleKey.as("sk"))
-        .select(col("doc_id"), col("sk"), (col("sk") % MinhashP).as("bh"))
-        .groupBy(col("doc_id"))
-        .agg(collect_set(col("sk")).as("ks"), mins: _*)
+      // the per-doc batch row (doc_id, ks, h0.., th) over EVERY batch doc
+      // (the append needs them all)
+      val docs = checkpointed(docRowsOf(b, m.n, m.numHashes)
         .join(b.select(col("doc_id"), md5(col("text")).as("th")), "doc_id"))
       val allBuckets = bands(docs, m.numHashes, m.bandSize)
-      def keySets(side: String) =
-        docs.select(col("doc_id").as(s"doc_$side"), col("ks").as(s"k$side"))
 
       // ---- cross pairs: batch vs the cached standing side under
-      // crossNearDupIndexed's masked read-time cap, scored against the
-      // candidate corpus docs' key sets (one aggregate over the semi-pruned
-      // index keys; a replayed append's duplicate rows collapse in it)
+      // crossNearDupIndexed's masked read-time cap
       val purged = crossIndexPurged(spark, dir)
       val masked = standingBuckets()
         .join(broadcast(purged), Seq("doc_id"), "left_anti")
@@ -824,73 +818,31 @@ object Dedup {
       val bucketsC = masked.join(broadcast(oversizedBuckets(masked)),
         Seq("band", "sig"), "left_anti")
       val cand = checkpointed(
-        crossCandidates(capBuckets(allBuckets, m.maxBucket), bucketsC)
-          .select(col("batch_id").as("doc_a"), col("corpus_id").as("doc_b")))
-      val corpusSets = spark.read.schema("doc_id LONG, sk LONG")
-        .parquet(s"$dir/shingle_keys")
-        .join(cand.select(col("doc_b").as("doc_id")), Seq("doc_id"), "left_semi")
-        .groupBy(col("doc_id").as("doc_b"))
-        .agg(collect_set(col("sk")).as("kb"))
-      val crossEdges = cand.join(keySets("a"), "doc_a").join(corpusSets, "doc_b")
-        .where(keySetJaccard >= threshold)
-        .select(col("doc_a"), col("doc_b"))
+        crossCandidates(capBuckets(allBuckets, m.maxBucket), bucketsC))
+      val crossEdges = crossScores(cand, docs, indexKeySets(spark, dir, cand), threshold)
+        .select(col("batch_id").as("doc_a"), col("corpus_id").as("doc_b"))
 
-      // ---- within-batch REP pairs (dedupPrelude + dedupFirst): one
-      // text-hash aggregate serves BOTH the mega-group cap and rep
-      // selection — the group min is the min over capped rows exactly
-      // because the cap drops whole groups
-      val g = checkpointed(docs.groupBy(col("th"))
-        .agg(count(lit(1)).as("k"), min(col("doc_id")).as("rep")))
-      val bigGroups = g.where(col("k") > m.maxBucket).select(col("th"))
-      val capped = docs.select(col("doc_id"), col("th"))
-        .join(broadcast(bigGroups), Seq("th"), "left_anti")
-      val rep = g.where(col("k") <= m.maxBucket).select(col("th"), col("rep"))
-      // rep buckets are the per-doc rows of `allBuckets` filtered to reps,
-      // capped over REP rows only — dedupPrelude's cap semantics exactly
-      val repBuckets = capBuckets(allBuckets.join(
-        rep.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi"), m.maxBucket)
-      val repOut = repBuckets.as("a")
-        .join(repBuckets.as("b"),
-          col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-        .join(keySets("a"), "doc_a").join(keySets("b"), "doc_b")
-        .where(keySetJaccard >= threshold)
+      // ---- within-batch pairs: the dedup-first body over the batch row.
+      // Rep pairs already name reps only, so the kernel reads the whole
+      // checkpointed row rather than its rep-filtered view.
+      val ctx = dedupCtx(docs.select(col("doc_id"), col("th")),
+        m.numHashes, m.bandSize, m.maxBucket, checkpointed)(
+        reps => docs.join(reps, Seq("doc_id"), "left_semi"))
+      val within = dedupFirstOn(ctx.copy(rows = docs), "jaccard")
+        .where(col("jaccard") >= threshold)
         .select(col("doc_a"), col("doc_b"))
-      // member-pair expansion (dedupFirst's jaccard-mode tail; the carry
-      // is symmetric, and thresholding BEFORE expansion is sound because
-      // expansion carries jaccard unchanged)
-      val crossExp = repOut
-        .join(rep.select(col("rep").as("doc_a"), col("th").as("tha")), "doc_a")
-        .join(rep.select(col("rep").as("doc_b"), col("th").as("thb")), "doc_b")
-        .join(capped.select(col("th").as("tha"), col("doc_id").as("ia")), "tha")
-        .join(capped.select(col("th").as("thb"), col("doc_id").as("ib")), "thb")
-        .select(least(col("ia"), col("ib")).as("doc_a"),
-          greatest(col("ia"), col("ib")).as("doc_b"))
-      // equal-text pairs score 1.0 by identity — they pass any threshold
-      // a 1.0-scoring pair passes (dedupFirst emits lit(1.0))
-      val withinEq = capped.as("x")
-        .join(capped.as("y"),
-          col("x.th") === col("y.th") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .where(lit(1.0) >= threshold)
-      val edges = checkpointed(
-        crossEdges.unionAll(crossExp.unionAll(withinEq)))
-      new BatchScore(edges,
-        docs.select(col("doc_id"), explode(col("ks")).as("sk")), allBuckets)
+      new BatchScore(checkpointed(crossEdges.unionAll(within)), docs, allBuckets)
     }
 
-    /** Write the scored batch's index rows — `writeIndexSide`'s rows and
-      * crash discipline (keys first, buckets second; probes dedup, a
-      * replayed append converges) — then extend the standing-bucket cache
-      * in place with the rows just written. */
+    /** Write the scored batch's index rows through [[writeIndexRows]]
+      * (keys first, buckets second; probes dedup, a replayed append
+      * converges), then extend the standing-bucket cache in place with the
+      * rows just written. */
     def append(score: BatchScore): Unit = {
-      score.sk.write.mode("append").parquet(s"$dir/shingle_keys")
       // materialized apart from the per-doc batch row: the session keeps
       // these narrow rows until the next rebase, never the key sets
       val buckets = checkpointed(score.buckets)
-      buckets.write.mode("append").parquet(s"$dir/buckets")
+      writeIndexRows(score.rows, buckets, dir, "append")
       // touched-only oversize delta (see oversizedBuckets): count the
       // batch's keys on both sides — standing counts semi-pruned to the
       // broadcast touched-key set and excluding the batch's own ids (an
@@ -953,25 +905,20 @@ object Dedup {
     new CrossIndexSession(spark, dir)
 
   /** Exact n-gram Jaccard similarity for given candidate pairs
-    * (`pairs(doc_a, doc_b)`): |A ∩ B| / |A ∪ B| over distinct shingle sets.
+    * (`pairs(doc_a, doc_b)`): |A ∩ B| / |A ∪ B| over the docs' shingle-key
+    * sets.
     *
     * Scale: only candidate pairs (from LSH) are scored — the full O(n²)
-    * similarity matrix never materializes. The two joins are on doc_id
-    * (broadcast-able when the candidate set is small) and shingle.
+    * similarity matrix never materializes (see [[pairOverlapStats]]).
     */
-  def ngramJaccard(docs: DataFrame, pairs: DataFrame, n: Int = 3): DataFrame = {
-    // The shingle set feeds three consumers (both join sides + sizes);
-    // persist so one scan serves all, release once the stats materialize.
-    val sh = shingles(docs, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materializeThenRelease(ngramJaccardFromShingles(sh, pairs), sh)
-  }
+  def ngramJaccard(docs: DataFrame, pairs: DataFrame, n: Int = 3): DataFrame =
+    // the key sets ignore duplicate shingles: no distinct shuffle
+    ngramJaccardFromShingles(shingles(docs, n, dedup = false), pairs)
 
-  /** `ngramJaccard` over a pre-computed (ideally persisted) shingle set. */
+  /** `ngramJaccard` over a pre-computed shingle set. */
   def ngramJaccardFromShingles(sh: DataFrame, pairs: DataFrame): DataFrame =
     pairOverlapStats(sh, pairs)
-      .select(col("doc_a"), col("doc_b"),
-        round(col("n_inter") / (col("n_a") + col("n_b") - col("n_inter")), 6).as("jaccard"))
+      .select(col("doc_a"), col("doc_b"), jaccardOf.as("jaccard"))
 
   /** Asymmetric containment over a shingle set: `n_inter / n_a` ≈ 1 means
     * doc_a's shingles are (almost) a subset of doc_b's — the signal for
@@ -981,23 +928,13 @@ object Dedup {
     * scorer — one shared stats pass (`pairOverlapStats`). */
   def containmentFromShingles(sh: DataFrame, pairs: DataFrame): DataFrame =
     pairOverlapStats(sh, pairs)
-      .select(col("doc_a"), col("doc_b"),
-        round(col("n_inter") / col("n_a"), 6).as("cont_a"),
-        round(col("n_inter") / col("n_b"), 6).as("cont_b"))
+      .select(col("doc_a") +: col("doc_b") +: containmentOf: _*)
 
-  /** Shared per-candidate-pair overlap statistics: distinct-shingle
-    * intersection size and both set sizes — the one expensive pass behind
-    * Jaccard and containment. Prunes the shingle table to candidate docs
-    * before the intersection join (O(candidate shingles), not O(corpus)).
-    *
-    * The intersection join is keyed on a 60-bit shingle hash
-    * (`conv(substring(md5(shingle), 1, 15), 16, 10)` as BIGINT), not the raw
-    * n-gram string: the (doc, shingle) rows are the largest exchange in the
-    * whole dedup chain, and an 8-byte key shuffles several-fold fewer bytes
-    * than 20–40-char shingle text. Deterministic and engine-neutral — the
-    * DuckDB oracles join on the identical hash
-    * (`('0x' || substr(md5(shingle), 1, 15))::BIGINT`), so even a hash
-    * collision (p ≈ n²/2⁶¹) produces the same counts in both engines.
+  /** Per-candidate-pair overlap statistics `(doc_a, doc_b, n_inter, n_a,
+    * n_b)` — the [[overlap]] kernel over the candidate docs' key sets. The
+    * shingle table is pruned to candidate docs and aggregated into
+    * [[docRows]] (keys only), so the cost is O(candidate shingles), not
+    * O(corpus), and no join is keyed on a shingle or its key.
     */
   def pairOverlapStats(sh: DataFrame, pairs: DataFrame): DataFrame = {
     val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1007,33 +944,12 @@ object Dedup {
     // second scorer).
     val callerOwned = pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val p = if (callerOwned) pairs else pairs.persist(sl)
-    // Prune the shingle table to CANDIDATE docs before anything heavy: the
-    // candidate set is ≪ corpus (that's the whole point of LSH), so the
-    // semi-join cuts both intersection-join inputs and the size aggregate
-    // from O(corpus shingles) to O(candidate shingles).
     val candDocs = p.select(col("doc_a").as("doc_id"))
       .union(p.select(col("doc_b").as("doc_id"))).distinct()
-    val shc = sh.join(candDocs, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long").as("sk"))
-      .persist(sl)
-    val sizes = shc.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val inter = p
-      .join(shc.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(shc.as("sb"), col("doc_b") === col("sb.doc_id") &&
-        col("sa.sk") === col("sb.sk"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    val stats = p
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .na.fill(0L, Seq("n_inter"))
-      .join(sizes.select(col("doc_id"), col("n_sh").as("n_a")), col("doc_a") === col("doc_id"))
-      .drop("doc_id")
-      .join(sizes.select(col("doc_id"), col("n_sh").as("n_b")), col("doc_b") === col("doc_id"))
-      .drop("doc_id")
-      .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_a"), col("n_b"))
-    if (callerOwned) materializeThenRelease(stats, shc)
-    else materializeThenRelease(stats, p, shc)
+    val rows = docRows(sh.join(candDocs, Seq("doc_id"), "left_semi"), 0).persist(sl)
+    val stats = overlap(p, rows, rows)
+    if (callerOwned) materializeThenRelease(stats, rows)
+    else materializeThenRelease(stats, p, rows)
   }
 
   /** Dedup-FIRST near-dup scoring — the production composition: exact-dedup
@@ -1064,46 +980,43 @@ object Dedup {
     dedupFirst(docs, n, numHashes, bandSize, maxBucket, mode = "jaccard")
 
   /** EXACT near-dup ground truth — EVERY pair with n-gram Jaccard ≥
-    * `minJaccard`, found by the shared-shingle self-join (a pair with
-    * J > 0 must share a shingle, so the set is complete), in the same
-    * 60-bit hashed-shingle space as [[pairOverlapStats]] so "truth" and
-    * the LSH chain's "found" can never diverge on a hash collision.
+    * `minJaccard`, found by the shared-key self-join (a pair with J > 0
+    * must share a shingle key, so the set is complete) and scored by the
+    * [[overlap]] kernel on the same per-doc key sets the LSH chain scores,
+    * so "truth" and "found" share one key space and can never diverge on
+    * a hash collision.
     *
     * The measuring stick, not the operator (the dedup-side analogue of
     * `sim_recall`'s brute baseline — production dedup runs the LSH
     * operators; this quantifies what their banding loses). EXACT but not
     * naive: prefix filtering (see body) keeps the candidate join off the
-    * hot shingles, so the cost is O(Σ_prefix-shingle docs²) — still
-    * worst-case quadratic on a corpus of mutual near-dups (that is what
-    * "complete truth" costs), but no longer blown up by corpus-wide
-    * boilerplate shingles. */
+    * hot keys, so the cost is O(Σ_prefix-key docs²) — still worst-case
+    * quadratic on a corpus of mutual near-dups (that is what "complete
+    * truth" costs), but no longer blown up by corpus-wide boilerplate
+    * shingles. */
   def exactNearDupTruth(docs: DataFrame, minJaccard: Double,
       n: Int = 3): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1,
       s"minJaccard must be in (0, 1]: $minJaccard")
     val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sh = shingles(docs, n)
-      .select(col("doc_id"),
-        conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long").as("sk"))
-      .persist(sl)
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
+    val rows = docRowsOf(docs, n, numHashes = 0).persist(sl)
+    val sk = rows.select(col("doc_id"), size(col("ks")).as("n_sh"),
+      explode(col("ks")).as("sk"))
     // PREFIX FILTERING (AllPairs/PPJoin, Bayardo 2007 / Xiao 2008) — the
     // candidate join only needs each doc's first |X| − ⌈t·|X|⌉ + 1
-    // shingles under a GLOBAL rarest-first canonical order (df ASC, sk
-    // ASC): a pair with J ≥ t has |A∩B| ≥ t·|A∪B| ≥ ⌈t·max(|A|,|B|)⌉
-    // common shingles, and if none fell in both prefixes the commons
-    // would all sit in a suffix shorter than that — contradiction, so
-    // the prefix join is COMPLETE for J ≥ t. Rarest-first puts the hot
-    // shingles at the END of every doc's order, so the corpus-wide
-    // boilerplate shingles that make the naive self-join quadratic never
-    // enter the candidate join at all; exact scoring then runs on
-    // candidates only (full shingle sets, the pairOverlapStats shape).
-    val dfc = sh.groupBy(col("sk")).agg(count(lit(1)).as("df"))
+    // keys under a GLOBAL rarest-first canonical order (df ASC, sk ASC):
+    // a pair with J ≥ t has |A∩B| ≥ t·|A∪B| ≥ ⌈t·max(|A|,|B|)⌉ common
+    // keys, and if none fell in both prefixes the commons would all sit
+    // in a suffix shorter than that — contradiction, so the prefix join is
+    // COMPLETE for J ≥ t. Rarest-first puts the hot keys at the END of
+    // every doc's order, so the corpus-wide boilerplate shingles that make
+    // the naive self-join quadratic never enter the candidate join at
+    // all; exact scoring then runs the kernel on candidates only.
+    val dfc = sk.groupBy(col("sk")).agg(count(lit(1)).as("df"))
     val byDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("df"), col("sk"))
-    val prefix = sh.join(dfc, "sk")
+    val prefix = sk.join(dfc, "sk")
       .withColumn("rnk", row_number().over(byDoc))
-      .join(sizes, "doc_id")
       .where(col("rnk") <=
         col("n_sh") - ceil(lit(minJaccard) * col("n_sh")) + 1)
       .select(col("doc_id"), col("sk"))
@@ -1112,12 +1025,6 @@ object Dedup {
         col("a.sk") === col("b.sk") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    val inter = cand
-      .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sh.as("sb"),
-        col("doc_b") === col("sb.doc_id") && col("sa.sk") === col("sb.sk"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_inter"))
     // Threshold on the UNROUNDED ratio (round only the emitted column):
     // the prefix-filter completeness theorem holds for true J >= t, so
     // filtering on a 6-decimal rounding would make boundary membership
@@ -1125,15 +1032,10 @@ object Dedup {
     // decimals (a true-J >= t pair could round below t and drop; a
     // just-below pair that rounds up would be included only if it
     // happened to survive the prefix join).
-    val out = inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n_sh").as("n_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b")), "doc_b")
-      .where(col("n_inter") / (col("n_a") + col("n_b") - col("n_inter"))
-        >= minJaccard)
-      .select(col("doc_a"), col("doc_b"),
-        round(col("n_inter") / (col("n_a") + col("n_b") - col("n_inter")), 6)
-          .as("jaccard"))
-    materializeThenRelease(out, sh, prefix)
+    val out = overlap(cand, rows, rows)
+      .where(jaccardRatio >= minJaccard)
+      .select(col("doc_a"), col("doc_b"), jaccardOf.as("jaccard"))
+    materializeThenRelease(out, rows, prefix)
   }
 
   /** Candidate pairs only, dedup-first: the pair set of `lshCandidatePairs`
@@ -1164,16 +1066,15 @@ object Dedup {
     dedupFirst(docs, n, numHashes, bandSize, maxBucket, mode = "containment")
 
   /** [[containmentDedup]] with the `editSimilarityGated` recipe in front
-    * of the overlap-stats pass — the dup-dense-corpus composition for a
+    * of the overlap kernel — the dup-dense-corpus composition for a
     * THRESHOLDED containment contract: candidate pairs must agree on
     * ≥ `minAgree` of the `numHashes` seed minima (an unbiased Jaccard
-    * estimate, values already in hand from the banding aggregate — no
-    * shingle or text I/O), and survivors score through
-    * [[containmentFromShingles]] with a `max(cont_a, cont_b) ≥ minCont`
-    * output floor. The agreement floor cuts the PAIR SPINE before
-    * `pairOverlapStats`' candidate-doc prune, shingle-key persist and
-    * intersection join — the three cost centers of the ungated row —
-    * and the output floor shrinks the member-pair expansion joins.
+    * estimate, read from the same rep rows that carry the key sets — no
+    * second aggregate, no shingle or text I/O), and survivors score
+    * through the kernel with a `max(cont_a, cont_b) ≥ minCont` output
+    * floor. The agreement floor filters the pair spine in the same join
+    * that brings both key sets, before any intersection runs, and the
+    * output floor shrinks the member-pair expansion joins.
     *
     * Contract boundary, stated plainly: seed agreement estimates
     * JACCARD, and a small document contained in a much larger one has
@@ -1198,122 +1099,129 @@ object Dedup {
     require(minAgree >= 0 && minAgree <= numHashes,
       s"minAgree $minAgree outside [0, $numHashes]")
     val ctx = dedupPrelude(docs, n, numHashes, bandSize, maxBucket)
-    val sigs = minhashSigsWide(ctx.sh, numHashes)
-    val agree = (0 until numHashes)
-      .map(s => when(col(s"a.h$s") === col(s"b.h$s"), 1).otherwise(0))
-      .reduce(_ + _)
-    // Materialize the gated spine before the scorer (the dd_edit_gated
-    // lesson: pairOverlapStats reads its pair argument from three plan
-    // branches; a lazy agreement plan would replay the LSH + signature
-    // chain per branch). Output-scale rows only.
-    val agreed = checkpointed(ctx.repPairs
-      .join(sigs.as("a"), col("doc_a") === col("a.doc_id"))
-      .join(sigs.as("b"), col("doc_b") === col("b.doc_id"))
-      .where(agree >= minAgree)
-      .select(col("doc_a"), col("doc_b")))
-    val repOut = containmentFromShingles(ctx.sh, agreed)
+    val repOut = overlap(ctx.repPairs, ctx.rows, ctx.rows,
+        gate = agreement(numHashes) >= minAgree)
+      .select(col("doc_a") +: col("doc_b") +: containmentOf: _*)
       .where(greatest(col("cont_a"), col("cont_b")) >= minCont)
-    // Member-pair expansion with the orientation swap — dedupFirst's
-    // containment-mode tail verbatim (asymmetric carries flip when the
-    // member order flips relative to the rep order).
-    val flipped = col("ia") > col("ib")
+    materializeThenRelease(
+      expand(ctx, repOut, containmentCarry, containmentIdentity),
+      ctx.keyed, ctx.rows)
+  }
+
+  /** The dedup-first state every rep-level consumer shares: `keyed`
+    * (doc_id, th), `rep` (th, rep) for the groups within the cap,
+    * `capped` (doc_id, th) without the mega-groups, the REP rows `rows`
+    * ([[docRows]]) and their LSH candidate pairs `repPairs`. */
+  private final case class DedupCtx(keyed: DataFrame, rep: DataFrame,
+      capped: DataFrame, rows: DataFrame, repPairs: DataFrame)
+
+  /** Rep selection, mega-group cap, banding and the band self-join over
+    * `keyed` (doc_id, th) — the one dedup-first body that
+    * [[dedupPrelude]] (corpus operators) and
+    * [[CrossIndexSession.scoreBatch]] (micro-batch) share. `pin`
+    * materializes the text-hash groups; `repRows` builds the per-doc rows
+    * of the rep ids it is given.
+    *
+    * One text-hash aggregate serves BOTH the cap and rep selection: the
+    * group min is the min over capped rows exactly because the cap drops
+    * whole groups. Pathological-boilerplate guard, mirrored from the
+    * banded chain's bucket cap: text groups above `maxBucket` copies emit
+    * NO pairs — not within their group (a 1M-copy text must not emit 10¹²
+    * pairs) and not via expansion (each cross pair would multiply k×).
+    * `exact` already reports such a group as one (keep_id, n_copies) row;
+    * pair-wise treatment of mega-groups belongs to a dedicated clustering
+    * pass. A mega-group's rep must not enter the LSH graph at all: its
+    * member docs are all excluded from `capped`, so any pair or CC edge it
+    * touched would score/bridge/label docs that never appear in the
+    * output — a mega-group rep winning a component's min would mint a
+    * `cluster_id` that is not a `doc_id` of any emitted row, breaking the
+    * keep = (doc_id == cluster_id) convention. The rep rows' buckets cap
+    * over REP rows only. */
+  private def dedupCtx(keyed: DataFrame, numHashes: Int, bandSize: Int,
+      maxBucket: Int, pin: DataFrame => DataFrame)(
+      repRows: DataFrame => DataFrame): DedupCtx = {
+    val g = pin(keyed.groupBy(col("th"))
+      .agg(count(lit(1)).as("k"), min(col("doc_id")).as("rep")))
+    val bigGroups = g.where(col("k") > maxBucket).select(col("th"))
+    val capped = keyed.join(broadcast(bigGroups), Seq("th"), "left_anti")
+    val rep = g.where(col("k") <= maxBucket).select(col("th"), col("rep"))
+    val rows = repRows(rep.select(col("rep").as("doc_id")))
+    DedupCtx(keyed, rep, capped, rows,
+      bucketPairs(cappedBands(rows, numHashes, bandSize, maxBucket)))
+  }
+
+  /** [[dedupCtx]] over a corpus: one `(doc_id, th)` scan feeds rep
+    * selection, both expansion joins and the within-group self-join, and
+    * the rep rows come from one shingle scan of the reps only (the k× cut
+    * of a k-copy corpus). Callers release `keyed` and `rows`. */
+  private def dedupPrelude(docs: DataFrame, n: Int, numHashes: Int,
+      bandSize: Int, maxBucket: Int, keys: Boolean = true): DedupCtx = {
+    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val keyed = docs.select(col("doc_id"), md5(col("text")).as("th")).persist(sl)
+    dedupCtx(keyed, numHashes, bandSize, maxBucket, identity) { reps =>
+      val repDocs = docs.join(reps, Seq("doc_id"), "left_semi")
+      docRows(shingles(repDocs.select(col("doc_id"), col("text")), n, dedup = false),
+        numHashes, keys).persist(sl)
+    }
+  }
+
+  /** Expand rep-level scores `repOut(doc_a, doc_b, …)` to member doc
+    * pairs: map rep ids back to text hashes, expand each text pair to
+    * every member doc pair (re-canonicalized as (least, greatest) — member
+    * ids need not sort the way rep ids do; `carry` may read `ia`/`ib` to
+    * swap asymmetric columns), then add every within-group pair with the
+    * identity scores `within` (equal texts ⇒ equal key sets). */
+  private def expand(ctx: DedupCtx, repOut: DataFrame,
+      carry: Seq[org.apache.spark.sql.Column],
+      within: Seq[org.apache.spark.sql.Column]): DataFrame = {
     val cross = repOut
       .join(ctx.rep.select(col("rep").as("doc_a"), col("th").as("tha")), "doc_a")
       .join(ctx.rep.select(col("rep").as("doc_b"), col("th").as("thb")), "doc_b")
       .join(ctx.capped.select(col("th").as("tha"), col("doc_id").as("ia")), "tha")
       .join(ctx.capped.select(col("th").as("thb"), col("doc_id").as("ib")), "thb")
-      .select(least(col("ia"), col("ib")).as("doc_a"),
-        greatest(col("ia"), col("ib")).as("doc_b"),
-        when(flipped, col("cont_b")).otherwise(col("cont_a")).as("cont_a"),
-        when(flipped, col("cont_a")).otherwise(col("cont_b")).as("cont_b"))
-    val within = ctx.capped.as("x")
+      .select(least(col("ia"), col("ib")).as("doc_a") +:
+        greatest(col("ia"), col("ib")).as("doc_b") +: carry: _*)
+    val equal = ctx.capped.as("x")
       .join(ctx.capped.as("y"),
         col("x.th") === col("y.th") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(1.0).as("cont_a"), lit(1.0).as("cont_b"))
-    materializeThenRelease(cross.unionAll(within), ctx.keyed, ctx.sh)
+      .select(col("x.doc_id").as("doc_a") +: col("y.doc_id").as("doc_b") +:
+        within: _*)
+    cross.unionAll(equal)
   }
 
-  /** Shared dedup-first prelude: text-hash keying, representative
-    * selection, mega-group cap, representative shingles and LSH candidate
-    * pairs — one corpus scan feeding every dedup-first consumer. */
-  private final case class DedupCtx(keyed: DataFrame, rep: DataFrame,
-      capped: DataFrame, sh: DataFrame, repPairs: DataFrame)
+  /** Containment carried through [[expand]]: when the member order flips
+    * relative to the rep order the asymmetric pair swaps with it. */
+  private def containmentCarry: Seq[org.apache.spark.sql.Column] = {
+    val flipped = col("ia") > col("ib")
+    Seq(when(flipped, col("cont_b")).otherwise(col("cont_a")).as("cont_a"),
+      when(flipped, col("cont_a")).otherwise(col("cont_b")).as("cont_b"))
+  }
 
-  private def dedupPrelude(docs: DataFrame, n: Int, numHashes: Int,
-      bandSize: Int, maxBucket: Int): DedupCtx = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // (doc_id, th): feeds rep selection, both expansion joins, and the
-    // within-group self-join — one corpus scan.
-    val keyed = docs.select(col("doc_id"), md5(col("text")).as("th")).persist(sl)
-    // Pathological-boilerplate guard, mirrored from the banded chain's
-    // bucket cap: text groups above `maxBucket` copies emit NO pairs — not
-    // within their group (a 1M-copy text must not emit 10¹² pairs) and not
-    // via expansion (each cross pair would multiply k×). `exact` already
-    // reports such a group as one (keep_id, n_copies) row; pair-wise
-    // treatment of mega-groups belongs to a dedicated clustering pass.
-    val bigGroups = keyed.groupBy(col("th")).agg(count(lit(1)).as("k"))
-      .where(col("k") > maxBucket).select(col("th"))
-    val capped = keyed.join(broadcast(bigGroups), Seq("th"), "left_anti")
-    // Representatives come from CAPPED groups only. A mega-group's rep must
-    // not enter the LSH graph at all: every one of its member docs
-    // (the rep included) is excluded from `capped`, so any pair or CC edge
-    // it touched would score/bridge/label docs that never appear in the
-    // output — a mega-group rep winning a component's min would mint a
-    // `cluster_id` that is not a `doc_id` of any emitted row, breaking the
-    // keep = (doc_id == cluster_id) convention.
-    val rep = capped.groupBy(col("th")).agg(min(col("doc_id")).as("rep"))
-    val repDocs = docs.join(rep.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-    val sh = shingles(repDocs, n).persist(sl)
-    val repPairs = lshCandidatePairsFromShingles(sh, numHashes, bandSize, maxBucket)
-    DedupCtx(keyed, rep, capped, sh, repPairs)
+  private def containmentIdentity: Seq[org.apache.spark.sql.Column] =
+    Seq(lit(1.0).as("cont_a"), lit(1.0).as("cont_b"))
+
+  /** The dedup-first tail over a [[dedupCtx]]: score the rep pairs with
+    * the [[overlap]] kernel (`mode` jaccard or containment; `none` keeps
+    * the bare pairs) and [[expand]] them to doc pairs. */
+  private def dedupFirstOn(ctx: DedupCtx, mode: String): DataFrame = {
+    def scored(cols: Seq[org.apache.spark.sql.Column]) =
+      overlap(ctx.repPairs, ctx.rows, ctx.rows)
+        .select(col("doc_a") +: col("doc_b") +: cols: _*)
+    mode match {
+      case "jaccard" => expand(ctx, scored(Seq(jaccardOf.as("jaccard"))),
+        Seq(col("jaccard")), Seq(lit(1.0).as("jaccard")))
+      case "containment" => expand(ctx, scored(containmentOf),
+        containmentCarry, containmentIdentity)
+      case "none" => expand(ctx, ctx.repPairs, Nil, Nil)
+      case other => throw new IllegalArgumentException(s"dedupFirst mode: $other")
+    }
   }
 
   private def dedupFirst(docs: DataFrame, n: Int, numHashes: Int,
       bandSize: Int, maxBucket: Int, mode: String): DataFrame = {
-    val ctx = dedupPrelude(docs, n, numHashes, bandSize, maxBucket)
-    val (rep, capped, sh, repPairs) = (ctx.rep, ctx.capped, ctx.sh, ctx.repPairs)
-    val repOut = mode match {
-      case "jaccard"     => ngramJaccardFromShingles(sh, repPairs)
-      case "containment" => containmentFromShingles(sh, repPairs)
-      case "none"        => repPairs
-      case other         => throw new IllegalArgumentException(s"dedupFirst mode: $other")
-    }
-    // Expansion re-canonicalizes member pairs as (least, greatest); when the
-    // member order flips relative to the rep order the ASYMMETRIC carries
-    // must swap orientation with it (jaccard is symmetric — no swap).
-    val flipped = col("ia") > col("ib")
-    val carry = mode match {
-      case "jaccard" => Seq(col("jaccard"))
-      case "containment" => Seq(
-        when(flipped, col("cont_b")).otherwise(col("cont_a")).as("cont_a"),
-        when(flipped, col("cont_a")).otherwise(col("cont_b")).as("cont_b"))
-      case _ => Nil
-    }
-    // Cross-text candidates: map rep ids back to text hashes, expand each
-    // text pair to every member doc pair (order re-canonicalized — member
-    // ids need not sort the same way as rep ids).
-    val cross = repOut
-      .join(rep.select(col("rep").as("doc_a"), col("th").as("tha")), "doc_a")
-      .join(rep.select(col("rep").as("doc_b"), col("th").as("thb")), "doc_b")
-      .join(capped.select(col("th").as("tha"), col("doc_id").as("ia")), "tha")
-      .join(capped.select(col("th").as("thb"), col("doc_id").as("ib")), "thb")
-      .select(least(col("ia"), col("ib")).as("doc_a") +:
-        greatest(col("ia"), col("ib")).as("doc_b") +: carry: _*)
-    // Equal-text candidates: all within-group pairs score as identity, not
-    // measurement (equal texts ⇒ equal shingle sets ⇒ jaccard 1.0,
-    // containment (1.0, 1.0)).
-    val withinCarry = mode match {
-      case "jaccard"     => Seq(lit(1.0).as("jaccard"))
-      case "containment" => Seq(lit(1.0).as("cont_a"), lit(1.0).as("cont_b"))
-      case _             => Nil
-    }
-    val within = capped.as("x")
-      .join(capped.as("y"),
-        col("x.th") === col("y.th") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a") +: col("y.doc_id").as("doc_b") +:
-        withinCarry: _*)
-    materializeThenRelease(cross.unionAll(within), ctx.keyed, ctx.sh)
+    val ctx = dedupPrelude(docs, n, numHashes, bandSize, maxBucket,
+      keys = mode != "none")
+    materializeThenRelease(dedupFirstOn(ctx, mode), ctx.keyed, ctx.rows)
   }
 
   /** Benchmark decontamination: corpus docs sharing ≥ 1 word n-gram with an
@@ -2402,8 +2310,8 @@ object Dedup {
     // skeleton, its distinct, and the score-back join all carry 32-byte
     // hashes only (in a dup-dense corpus the pair set is k²-inflated, so a
     // distinct carrying both bodies per pair was the chain's heaviest
-    // exchange — same family as the hashed-shingle fix in
-    // `pairOverlapStats`). The plan stays LAZY — `keyed` feeds both the
+    // exchange — the reason the near-dup kernel carries 8-byte shingle
+    // keys, not shingle text). The plan stays LAZY — `keyed` feeds both the
     // distinct and the score-back join through Spark's exchange reuse, so
     // no persist/checkpoint barrier serializes the tail (a persisted cut
     // measured 12.3 s vs this version's 11.0 s on the dup-dense 10×
@@ -2544,11 +2452,7 @@ object Dedup {
     // nothing, unlike containment's orientation swap). In a k-copy
     // dup-dense corpus that is a k² cut on every pair-level join — the
     // first cut of this operator was doc-level and paid it everywhere.
-    val ctx = dedupPrelude(docs, n, numHashes, bandSize, maxBucket)
-    val sigs = minhashSigsWide(ctx.sh, numHashes)
-    val agree = (0 until numHashes)
-      .map(s => when(col(s"a.h$s") === col(s"b.h$s"), 1).otherwise(0))
-      .reduce(_ + _)
+    val ctx = dedupPrelude(docs, n, numHashes, bandSize, maxBucket, keys = false)
     // Materialize the gated pair set before the scorer: `editSimilarity`
     // references its `pairs` argument from several plan branches (candidate
     // -doc prune, the keyed skeleton, the distinct), and a LAZY agreement
@@ -2556,26 +2460,14 @@ object Dedup {
     // measured 73 s vs 3.4 s at sf0.1 for this exact operator, ~700
     // concurrent broadcast jobs thrashing 32 cores. The checkpoint is
     // output-scale (surviving rep pairs only).
-    val agreed = checkpointed(ctx.repPairs
-      .join(sigs.as("a"), col("doc_a") === col("a.doc_id"))
-      .join(sigs.as("b"), col("doc_b") === col("b.doc_id"))
-      .where(agree >= minAgree)
+    val agreed = checkpointed(withRows(ctx.repPairs, ctx.rows, ctx.rows)
+      .where(agreement(numHashes) >= minAgree)
       .select(col("doc_a"), col("doc_b")))
     val repScores = editSimilarity(docs, agreed, Some(minSim))
-    val cross = repScores
-      .join(ctx.rep.select(col("rep").as("doc_a"), col("th").as("tha")), "doc_a")
-      .join(ctx.rep.select(col("rep").as("doc_b"), col("th").as("thb")), "doc_b")
-      .join(ctx.capped.select(col("th").as("tha"), col("doc_id").as("ia")), "tha")
-      .join(ctx.capped.select(col("th").as("thb"), col("doc_id").as("ib")), "thb")
-      .select(least(col("ia"), col("ib")).as("doc_a"),
-        greatest(col("ia"), col("ib")).as("doc_b"),
-        col("edit_dist"), col("edit_sim"))
-    val within = ctx.capped.as("x")
-      .join(ctx.capped.as("y"),
-        col("x.th") === col("y.th") && col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        lit(0L).as("edit_dist"), lit(1.0).as("edit_sim"))
-    materializeThenRelease(cross.unionAll(within), ctx.keyed, ctx.sh)
+    materializeThenRelease(
+      expand(ctx, repScores, Seq(col("edit_dist"), col("edit_sim")),
+        Seq(lit(0L).as("edit_dist"), lit(1.0).as("edit_sim"))),
+      ctx.keyed, ctx.rows)
   }
 
   /** Connected components over an undirected near-dup pair graph
@@ -2735,10 +2627,11 @@ object Dedup {
       numHashes: Int = 8,
       bandSize: Int = 2,
       maxBucket: Int = 1000): DataFrame = {
-    val ctx = dedupPrelude(docs, n, numHashes, bandSize, maxBucket)
+    val ctx = dedupPrelude(docs, n, numHashes, bandSize, maxBucket,
+      keys = minJaccard.isDefined)
     val gated = minJaccard match {
-      case Some(t) => ngramJaccardFromShingles(ctx.sh, ctx.repPairs)
-        .where(col("jaccard") >= t).select(col("doc_a"), col("doc_b"))
+      case Some(t) => overlap(ctx.repPairs, ctx.rows, ctx.rows)
+        .where(jaccardOf >= t).select(col("doc_a"), col("doc_b"))
       case None => ctx.repPairs
     }
     val ccRep = connectedComponents(gated)
@@ -2756,7 +2649,7 @@ object Dedup {
       .join(ctx.rep, "th")
       .join(repLabel, "rep")
       .select(col("doc_id"), col("cluster_id"))
-    materializeThenRelease(labeled, ctx.keyed, ctx.sh)
+    materializeThenRelease(labeled, ctx.keyed, ctx.rows)
   }
 
   /** Quality-aware CANONICAL selection over a duplicate labeling — keep

@@ -25,28 +25,23 @@ object SeqReader {
     * (`LASERInputCheckMapper.java:130-136`) becomes one ArrayType column:
     * locus i = tokens[2+3i .. 4+3i].
     */
-  def parse(lines: DataFrame): DataFrame =
-    // Arity-broken rows parse to NULL loci / n_loci instead of throwing
-    // (ANSI element_at): validate() is the reporting channel for them, and
-    // parse-derived aggregates must stay computable on mixed input.
-    lines.select(
-      col("idx"),
-      expr("try_element_at(split(line, '[\\t ]'), 1)").as("pop"),
-      expr("try_element_at(split(line, '[\\t ]'), 2)").as("indiv_id"),
-      expr(
-        """CASE WHEN size(split(line, '[\t ]')) >= 5
-          |       AND (size(split(line, '[\t ]')) - 2) % 3 = 0
-          |  THEN CAST((size(split(line, '[\t ]')) - 2) / 3 AS BIGINT) END""".stripMargin)
-        .as("n_loci"),
-      expr(
-        """CASE WHEN size(split(line, '[\t ]')) >= 5
-          |       AND (size(split(line, '[\t ]')) - 2) % 3 = 0
-          |  THEN transform(sequence(0, CAST((size(split(line, '[\t ]')) - 2) / 3 AS INT) - 1),
-          |    i -> named_struct(
-          |      'a', CAST(element_at(split(line, '[\t ]'), 3 + i * 3) AS DOUBLE),
-          |      'b', CAST(element_at(split(line, '[\t ]'), 4 + i * 3) AS DOUBLE),
-          |      'c', CAST(element_at(split(line, '[\t ]'), 5 + i * 3) AS DOUBLE))) END""".stripMargin)
+  def parse(lines: DataFrame): DataFrame = {
+    // Arity-broken rows parse to NULL loci / n_loci instead of throwing:
+    // `summarize` is the reporting channel for them, and parse-derived
+    // aggregates must stay computable on mixed input. The locus count is
+    // `arity`'s, so the catalog rows and the intake scan share one rule.
+    val nLoci = udf((n: Int) => arity(0L, n).fold(_ => null, k => Long.box(k)))
+    val t = lines.select(col("idx"), split(col("line"), sep).as("t"))
+      .select(col("idx"), col("t"), nLoci(size(col("t"))).as("n_loci"))
+    def field(i: Int) = try_element_at(col("t"), lit(i))
+    t.select(col("idx"), field(1).as("pop"), field(2).as("indiv_id"), col("n_loci"),
+      expr("""transform(sequence(0, CAST(n_loci AS INT) - 1),
+          |  i -> named_struct(
+          |    'a', CAST(element_at(t, 3 + i * 3) AS DOUBLE),
+          |    'b', CAST(element_at(t, 4 + i * 3) AS DOUBLE),
+          |    'c', CAST(element_at(t, 5 + i * 3) AS DOUBLE)))""".stripMargin)
         .as("loci"))
+  }
 
   /** Seq tokens of one line, exactly as `split(line, '[\t ]')` yields them. */
   def tokens(line: String): Array[String] = line.split(sep, -1)

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Ordered line-oriented input: every domain reader consumes a
@@ -28,9 +27,10 @@ object Lines {
 
   /** Read a text file (gzip transparent) preserving line order. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val rdd = spark.read.textFile(path).rdd.zipWithIndex.map {
-      case (l, i) => org.apache.spark.sql.Row(i, l)
-    }
+    val rdd = internalRows(spark.read.textFile(path).toDF())
+      .map(_.getUTF8String(0).toString).zipWithIndex().map {
+        case (l, i) => org.apache.spark.sql.Row(i, l)
+      }
     spark.createDataFrame(rdd, schema)
   }
 
@@ -45,7 +45,14 @@ object Lines {
 
   /** The (idx, line) pairs of a line set; builds no job. */
   def rows(lines: DataFrame): RDD[(Long, String)] =
-    lines.select("idx", "line").rdd.map(r => (r.getLong(0), r.getString(1)))
+    internalRows(lines.select("idx", "line"))
+      .map(r => (r.getLong(0), r.getUTF8String(1).toString))
+
+  /** The physical rows of `df`. `Dataset.rdd` would post an SQL execution
+    * that runs no job (an empty entry for every listener and the UI);
+    * the plan's own RDD posts none. Rows may be reused: copy fields out. */
+  private def internalRows(df: DataFrame): RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    df.queryExecution.toRdd
 
   /** One map-only pass (the reference's map-only input check,
     * `setNumReduceTasks(0)`): `f` folds each partition to a summary on the
@@ -68,6 +75,4 @@ object Lines {
       b0 == 0x1f && b1 == 0x8b
     } finally in.close()
   }
-
-  private[graft] def tokens(sep: String) = split(col("line"), sep)
 }

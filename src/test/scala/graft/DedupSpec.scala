@@ -876,4 +876,72 @@ class DedupSpec extends TestBase {
     assert(rows(dir, "buckets", Seq("doc_id", "band", "sig")) ==
       rows(wantDir, "buckets", Seq("doc_id", "band", "sig")))
   }
+
+  test("one overlap kernel: every near-dup consumer keeps the per-shingle join's rows " +
+      "(zero-overlap pairs, a mega-group, a replayed append)") {
+    // Expected rows were captured from the per-shingle self-join scorers
+    // (pairOverlapStats' inter/sizes/left-join spine, the side-tagged
+    // cross scorer and the in-batch key-set scorer) on this fixture.
+    val T = "the quick brown fox jumps over the lazy dog"
+    val B = "boiler plate text body here" // 4 copies: over the cap of 3
+    val fx = docs(1L -> T, 2L -> s"$T today", 3L -> "the quick brown fox jumps",
+      11L -> T, 4L -> "alpha beta gamma delta epsilon zeta eta",
+      5L -> "alpha beta gamma delta epsilon zeta theta",
+      6L -> B, 7L -> B, 8L -> B, 9L -> B, 10L -> "p q r", 12L -> "tiny",
+      13L -> "la la la la la la")
+    val batch = docs(101L -> s"$T extra", 102L -> "alpha beta gamma delta epsilon zeta",
+      103L -> B, 104L -> "unrelated words entirely here now", 105L -> s"$T extra",
+      106L -> "p q r")
+    // (1,4), (10,12) and (13,1) share no shingle: they must score 0.0
+    val pairs = Seq((1L, 2L), (1L, 3L), (3L, 2L), (4L, 5L), (1L, 4L), (10L, 12L),
+      (6L, 7L), (13L, 1L)).toDF("doc_a", "doc_b")
+    val sh = Dedup.shingles(fx)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    assert(rows(Dedup.pairOverlapStats(sh, pairs)) == Set[Seq[Any]](
+      Seq(10L, 12L, 0L, 1L, 1L), Seq(13L, 1L, 0L, 1L, 7L), Seq(1L, 2L, 7L, 7L, 8L),
+      Seq(1L, 3L, 3L, 7L, 3L), Seq(1L, 4L, 0L, 7L, 5L), Seq(3L, 2L, 3L, 3L, 8L),
+      Seq(4L, 5L, 4L, 5L, 5L), Seq(6L, 7L, 3L, 3L, 3L)))
+    assert(rows(Dedup.ngramJaccardFromShingles(sh, pairs)) == Set[Seq[Any]](
+      Seq(10L, 12L, 0.0), Seq(13L, 1L, 0.0), Seq(1L, 2L, 0.875), Seq(1L, 3L, 0.428571),
+      Seq(1L, 4L, 0.0), Seq(3L, 2L, 0.375), Seq(4L, 5L, 0.666667), Seq(6L, 7L, 1.0)))
+    assert(rows(Dedup.containmentFromShingles(sh, pairs)) == Set[Seq[Any]](
+      Seq(10L, 12L, 0.0, 0.0), Seq(13L, 1L, 0.0, 0.0), Seq(1L, 2L, 1.0, 0.875),
+      Seq(1L, 3L, 0.428571, 1.0), Seq(1L, 4L, 0.0, 0.0), Seq(3L, 2L, 1.0, 0.375),
+      Seq(4L, 5L, 0.8, 0.8), Seq(6L, 7L, 1.0, 1.0)))
+    val nearDup = Set[Seq[Any]](Seq(1L, 11L, 1.0), Seq(1L, 2L, 0.875),
+      Seq(1L, 3L, 0.428571), Seq(2L, 11L, 0.875), Seq(2L, 3L, 0.375),
+      Seq(3L, 11L, 0.428571), Seq(4L, 5L, 0.666667))
+    assert(rows(Dedup.nearDupScores(fx, maxBucket = 3)) == nearDup)
+    val cont = Set[Seq[Any]](Seq(1L, 11L, 1.0, 1.0), Seq(1L, 2L, 1.0, 0.875),
+      Seq(1L, 3L, 0.428571, 1.0), Seq(2L, 11L, 0.875, 1.0), Seq(2L, 3L, 0.375, 1.0),
+      Seq(3L, 11L, 1.0, 0.428571), Seq(4L, 5L, 0.8, 0.8))
+    assert(rows(Dedup.containmentDedup(fx, maxBucket = 3)) == cont)
+    assert(rows(Dedup.containmentDedupGated(fx, minCont = 0.5, minAgree = 4,
+      maxBucket = 3)) == cont)
+    assert(rows(Dedup.clusterDedupFirst(fx, Some(0.5), maxBucket = 3)) == Set[Seq[Any]](
+      Seq(11L, 1L), Seq(1L, 1L), Seq(2L, 1L), Seq(4L, 4L), Seq(5L, 4L)))
+    // truth has no cap: the 4-copy group pairs in full
+    assert(rows(Dedup.exactNearDupTruth(fx, 0.3)) == nearDup ++ Set[Seq[Any]](
+      Seq(6L, 7L, 1.0), Seq(6L, 8L, 1.0), Seq(6L, 9L, 1.0), Seq(7L, 8L, 1.0),
+      Seq(7L, 9L, 1.0), Seq(8L, 9L, 1.0)))
+    val cross = Set[Seq[Any]](Seq(101L, 11L, 0.875), Seq(101L, 1L, 0.875),
+      Seq(101L, 2L, 0.777778), Seq(102L, 4L, 0.8), Seq(102L, 5L, 0.8),
+      Seq(105L, 11L, 0.875), Seq(105L, 1L, 0.875), Seq(105L, 2L, 0.777778),
+      Seq(106L, 10L, 1.0))
+    assert(rows(Dedup.crossNearDup(fx, batch, threshold = 0.1, maxBucket = 3)) == cross)
+    // a replayed append doubles every stored row; probes must not notice
+    val dir = java.nio.file.Files.createTempDirectory("graft-kernel").toString
+    Dedup.buildCrossNearDupIndex(fx, dir, maxBucket = 3)
+    Dedup.appendToCrossNearDupIndex(fx, dir)
+    assert(rows(Dedup.crossNearDupIndexed(spark, dir, batch, threshold = 0.1)) == cross)
+    val session = Dedup.openCrossIndexSession(spark, dir)
+    val score = session.scoreBatch(batch, 0.1)
+    assert(rows(score.edges) == cross.map(_.take(2)) + Seq(101L, 105L))
+    session.append(score)
+    session.append(score)
+    session.close()
+    assert(spark.read.parquet(s"$dir/shingle_keys").distinct().count() == 77)
+    assert(spark.read.parquet(s"$dir/buckets").distinct().count() == 76)
+  }
 }

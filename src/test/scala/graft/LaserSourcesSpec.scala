@@ -20,6 +20,50 @@ class LaserSourcesSpec extends TestBase {
     assert(loci.head.getDouble(0) == 2.0 && loci.head.getDouble(2) == 0.99)
   }
 
+  test("seq parse: arity-broken rows parse to NULL n_loci and loci, one-token rows to NULL indiv_id") {
+    val rows = SeqReader.parse(Lines.of(spark, Fixtures.badSeqLines :+ "lonely"))
+      .orderBy("idx").collect()
+    def loci(i: Int) = Option(rows(i).getSeq[org.apache.spark.sql.Row](4))
+      .map(_.map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))))
+    assert(rows.map(r => (r.getString(1), r.getString(2), Option(r.get(3)))).toSeq == Seq(
+      ("POP1", "ind_001", Some(1L)), ("POP1", "ind_404", Some(1L)), ("POP1", "bad", None),
+      ("POP1", "bad2", None), ("POP1", "ind_005", Some(2L)), ("lonely", null, None)))
+    assert(loci(0).contains(Seq((2.0, 1.0, 0.99))))
+    assert(loci(4).contains(Seq((1.0, 1.0, 0.5), (2.0, 2.0, 0.5))))
+    assert(Seq(2, 3, 5).forall(loci(_).isEmpty))
+  }
+
+  test("ErrorSummary.add: bounded insert keeps the sorted-sample fold's counts and samples") {
+    import graft.domain.{ErrorSummary, ValidationError}
+    // the fold add() replaces: append, stable sort by (line, file, detail), keep k
+    def reference(errs: Seq[ValidationError]): ErrorSummary.Partial =
+      errs.foldLeft(Map.empty: ErrorSummary.Partial)((p, e) =>
+        ErrorSummary.merge(p, Map(e.code -> ErrorSummary.Bounded(1L, Vector(e)))))
+    def bounded(errs: Seq[ValidationError]): ErrorSummary.Partial =
+      errs.foldLeft(Map.empty: ErrorSummary.Partial)((p, e) => ErrorSummary.add(p, e))
+    // descending arrival, two codes, equal lines told apart by file and
+    // detail, and exact duplicates (ties keep the earlier arrival)
+    val desc = (40 to 0 by -1).flatMap { i =>
+      Seq(ValidationError("SEQ_FILE_TOO_FEW_COLUMNS", line = i.toLong, detail = s"d${i % 3}"),
+        ValidationError("SEQ_FILE_MISSING_COLUMNS", file = s"f${i % 2}", line = (i / 4).toLong),
+        ValidationError("SEQ_FILE_MISSING_COLUMNS", file = s"f${i % 2}", line = (i / 4).toLong))
+    }
+    val got = bounded(desc)
+    assert(got == reference(desc))
+    assert(got("SEQ_FILE_TOO_FEW_COLUMNS").cnt == 41L &&
+      got("SEQ_FILE_TOO_FEW_COLUMNS").samples.map(_.line) == (0L to 9L))
+    // every seq row broken: one finding per row through the intake scan
+    val broken = (0 until 5000).map(i => (i.toLong,
+      if (i % 2 == 0) s"only_one_col_$i" else s"POP1 ind_$i 1 2 3 4"))
+    val findings = broken.flatMap { case (i, l) =>
+      SeqReader.arity(i, SeqReader.tokens(l).length).left.toOption }
+    val scanned = SeqReader.summarize(broken.iterator, None).errors
+    assert(scanned == reference(findings))
+    assert(scanned.map { case (c, b) => c -> b.cnt } == Map(
+      "SEQ_FILE_TOO_FEW_COLUMNS" -> 2500L, "SEQ_FILE_MISSING_COLUMNS" -> 2500L))
+    assert(scanned("SEQ_FILE_MISSING_COLUMNS").samples.map(_.line) == (1L to 19L by 2))
+  }
+
   test("seq validate: arity rules and group membership (R12, R13, R14)") {
     val groups = GroupsReader.summarize(Lines.of(spark, Fixtures.groupsLines)).samples
     def findings(seq: Seq[String]) = SeqReader.summarize(

@@ -235,6 +235,44 @@ class PipelinesSpec extends TestBase {
     assert(traceJobs <= 4, s"TracePipeline.run ran $traceJobs Spark jobs")
   }
 
+  test("intake posts no SQL execution that runs no job (warm LASER and TRACE submissions)") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-intake-sql").toFile
+    val seq = gzWrite(tmp, "study.seq.gz", Fixtures.seqLines)
+    val site = gzWrite(tmp, "study.site.gz", Fixtures.siteLines)
+    val panel = gzWrite(tmp, "panel.site.gz", Fixtures.slPanelLines)
+    val groups = gzWrite(tmp, "groups.txt.gz", Fixtures.groupsLines)
+    val vcfs = Seq(gzWrite(tmp, "a.vcf.gz", Fixtures.vcfLines))
+    val chunks = new java.io.File(tmp, "chunks").getAbsolutePath
+    def submissions(): Unit = {
+      assert(LaserPipeline.runFiles(spark, seq, site, panel, Some(groups),
+        Some(chunks), chunkSize = 2).firstError.isEmpty)
+      assert(TracePipeline.run(
+        vcfs.map(f => new java.io.File(f).getName -> Lines.read(spark, f)),
+        Lines.read(spark, panel), Some(Lines.read(spark, groups))).firstError.isEmpty)
+    }
+    submissions() // warm
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val withJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => started.add(s.executionId)
+        case _ => ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => withJobs.add(id.toLong))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // `observed` returns once the bus has delivered every earlier event
+    try observed("intake-sql")(submissions())
+    finally spark.sparkContext.removeSparkListener(listener)
+    val jobless = started.asScala.filterNot(withJobs.contains)
+    assert(jobless.isEmpty, s"${jobless.size} SQL executions ran no job")
+  }
+
   test("chunk writes show in the tasks' output metrics") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-intake-bytes").toFile
     val seq = gzWrite(tmp, "study.seq.gz", Fixtures.seqLines)

@@ -288,20 +288,56 @@ class PlanShapeSpec extends TestBase {
   test("lay_zorder: both box predicates push into the layout scan") {
     // The Z-order claim needs the reader to actually consult footer stats:
     // both columns' range predicates must reach the parquet scan as
-    // PushedFilters (row-group pruning), and the write side must be a
-    // range repartition — not a global sort.
-    val p = planOf("lay_zorder")
+    // PushedFilters (row-group pruning), and the write side must cluster
+    // each file on its own Z-value range without a global sort.
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val p = try planOf("lay_zorder") finally spark.listenerManager.unregister(listener)
     val scanAt = p.indexOf("/tmp/graft-lay-z-")
     assert(scanAt > 0, "query must read the rewritten layout")
     assert(p.contains("GreaterThanOrEqual(l_partkey,100)") &&
       p.contains("LessThanOrEqual(l_suppkey,40)"),
       s"both box predicates must push into the layout scan:\n${p.take(1500)}")
-    val w = graft.operators.Layout
-      .withZValue(Tables(spark, sf(), "lineitem"), Seq("l_partkey", "l_suppkey"))
-      .repartitionByRange(8, org.apache.spark.sql.functions.col("_z"))
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(w.contains("rangepartitioning(_z"),
-      "layout write must range-partition on the Z-value (no global sort)")
+    // the write the row just ran: sorts within each file, never globally,
+    // and never range-shuffles (file bounds are quantiles)
+    import scala.jdk.CollectionConverters._
+    val nodes = seen.asScala.toSeq.flatMap(_.collectWithSubqueries { case n => n })
+      .flatMap {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan.collect { case n => n }
+        case n => Seq(n)
+      }
+    val sorts = nodes.collect { case s: SortExec => s }
+    assert(sorts.nonEmpty && sorts.forall(!_.global),
+      s"layout write must sort within files only: ${sorts.map(_.simpleString(200))}")
+    assert(!nodes.exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }, "layout write must not range-partition")
+    // and each file holds one contiguous, disjoint slice of the curve:
+    // the rows read back carry the Z-value the write ranked them by
+    val zDir = p.substring(scanAt).takeWhile(c => c != ']' && c != ',')
+    val zc = Seq("l_partkey", "l_suppkey")
+    val ranges = graft.operators.Layout
+      .withZValue(spark.read.parquet(zDir), zc)
+      .groupBy(input_file_name().as("f"))
+      .agg(min(col("_z")).as("lo"), max(col("_z")).as("hi"))
+      .orderBy(col("lo")).collect().map(r => (r.getLong(1), r.getLong(2)))
+    assert(ranges.length > 1, s"expected several layout files in $zDir")
+    ranges.sliding(2).foreach { case Array((_, hi), (lo, _)) =>
+      assert(hi < lo, s"file Z-ranges overlap: ${ranges.toSeq}")
+    }
   }
 
   test("scoreAgainstLmIndex: one batch scan, model joins broadcast, no train rescan") {
@@ -481,5 +517,57 @@ class PlanShapeSpec extends TestBase {
       skJoins.map(_.simpleString(200)).mkString("\n"))
     assert(all.exists(_.isInstanceOf[RDDScanExec]),
       "the batch-scale frames must be read as checkpoint scans")
+  }
+
+  test("near-dup scorers: no join keyed on the shingle key in any plan — " +
+      "pairs score by key-set intersection") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.operators.Dedup
+    val d = Tables(spark, sf("sf0.001"), "documents")
+      .select(col("doc_id"), col("text"))
+    val corpus = d.where("doc_id < 60")
+    val batch = d.where("doc_id < 20").select((col("doc_id") + 1000).as("doc_id"),
+      concat(col("text"), lit(" extra")).as("text"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-skjoin")
+      .resolve("index").toString
+    Dedup.buildCrossNearDupIndex(corpus, dir)
+    // every node, through adaptive stages and into the persisted
+    // intermediates the lazy plan scans
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    // lazy plans: the default eager checkpoint would hide the chain
+    spark.conf.set("graft.eagerRelease", "false")
+    try {
+      Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "nearDupScores" -> (() => Dedup.nearDupScores(corpus)),
+        "containmentDedup" -> (() => Dedup.containmentDedup(corpus)),
+        "containmentDedupGated" -> (() => Dedup.containmentDedupGated(corpus)),
+        "crossNearDup" -> (() => Dedup.crossNearDup(corpus, batch)),
+        "crossNearDupIndexed" -> (() => Dedup.crossNearDupIndexed(spark, dir, batch))
+      ).foreach { case (name, op) =>
+        val df = op()
+        df.collect()
+        val all = nodes(df.queryExecution.executedPlan)
+        assert(all.exists(_.isInstanceOf[BaseJoinExec]), s"$name: no join at all?")
+        val skJoins = all.collect {
+          case j: BaseJoinExec
+              if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "sk")) => j
+        }
+        assert(skJoins.isEmpty, s"$name joins on the shingle key:\n" +
+          skJoins.map(_.simpleString(200)).mkString("\n"))
+      }
+    } finally {
+      spark.conf.unset("graft.eagerRelease")
+      spark.catalog.clearCache()
+    }
   }
 }

@@ -106,25 +106,12 @@ object ErrorSummary {
   val sampleK = 10
 
   private def key(e: ValidationError) = (e.line, e.file, e.detail)
-  private val keyOrder = Ordering[(Long, String, String)]
 
   /** Bounded per-code state: complete count + the ≤ k smallest samples by
-    * (line, file, detail), kept sorted. */
+    * (line, file, detail). */
   final case class Bounded(cnt: Long, samples: Seq[ValidationError]) {
     def merge(o: Bounded, k: Int): Bounded =
       Bounded(cnt + o.cnt, (samples ++ o.samples).sortBy(key).take(k))
-
-    /** One more finding: O(k) at most, and O(1) when the list is full and
-      * `e` sorts at or after its last sample (ties keep the earlier
-      * arrival, as the stable sort in `merge` does). */
-    def insert(e: ValidationError, k: Int): Bounded =
-      if (samples.nonEmpty && samples.size >= k &&
-          keyOrder.gteq(key(e), key(samples.last)))
-        copy(cnt = cnt + 1)
-      else {
-        val (before, after) = samples.span(s => keyOrder.lteq(key(s), key(e)))
-        Bounded(cnt + 1, ((before :+ e) ++ after).take(k))
-      }
   }
 
   /** Per-code bounded states: what a task-side scan accumulates and the
@@ -132,8 +119,7 @@ object ErrorSummary {
   type Partial = Map[String, Bounded]
 
   def add(p: Partial, e: ValidationError, k: Int = sampleK): Partial =
-    p.updated(e.code,
-      p.get(e.code).fold(Bounded(1L, Vector(e)))(_.insert(e, k)))
+    merge(p, Map(e.code -> Bounded(1L, Vector(e))), k)
 
   def merge(a: Partial, b: Partial, k: Int = sampleK): Partial =
     b.foldLeft(a) { case (acc, (code, x)) =>

@@ -277,9 +277,10 @@ object Dedup {
   }
 
   /** [[docRows]] of a `(doc_id, text)` frame: one shingle scan. */
-  private def docRowsOf(docs: DataFrame, n: Int, numHashes: Int): DataFrame =
+  private def docRowsOf(docs: DataFrame, n: Int, numHashes: Int,
+      keys: Boolean = true): DataFrame =
     docRows(shingles(docs.select(col("doc_id"), col("text")), n, dedup = false),
-      numHashes)
+      numHashes, keys)
 
   /** Band rows (doc_id, band, sig) of per-doc rows carrying
     * `h0..h{numHashes-1}`: one narrow explode, no aggregate. UNCAPPED —
@@ -331,13 +332,10 @@ object Dedup {
     * `n_inter = |ka ∩ kb|`, `n_a = |ka|` and `n_b = |kb|` (BIGINT); Jaccard
     * ([[jaccardOf]]) and containment ([[containmentOf]]) are projections
     * of these counts. Every doc has a row, so a pair that shares no key
-    * scores 0 without a spine join. `gate` filters the joined pairs
-    * before the counts and may read both rows (`ra.h0`, `rb.h0`, …). */
+    * scores 0 without a spine join. */
   private def overlap(pairs: DataFrame, rowsA: DataFrame, rowsB: DataFrame,
-      a: String = "doc_a", b: String = "doc_b",
-      gate: org.apache.spark.sql.Column = lit(true)): DataFrame =
+      a: String = "doc_a", b: String = "doc_b"): DataFrame =
     withRows(pairs, rowsA, rowsB, a, b)
-      .where(gate)
       .select(col(a), col(b),
         size(array_intersect(col("ra.ks"), col("rb.ks"))).cast("long").as("n_inter"),
         size(col("ra.ks")).cast("long").as("n_a"),
@@ -408,7 +406,8 @@ object Dedup {
     val cand = crossCandidates(
       cappedBands(rowsB, numHashes, bandSize, maxBucket),
       cappedBands(rowsC, numHashes, bandSize, maxBucket)).persist(sl)
-    val candC = rowsC.join(candidateCorpusIds(cand), Seq("doc_id"), "left_semi")
+    val candC = rowsC.join(cand.select(col("corpus_id").as("doc_id")),
+      Seq("doc_id"), "left_semi")
     materializeThenRelease(crossScores(cand, rowsB, candC, threshold),
       rowsC, rowsB, cand)
   }
@@ -429,10 +428,6 @@ object Dedup {
       .select(col("b.doc_id").as("batch_id"), col("c.doc_id").as("corpus_id"))
       .distinct()
 
-  /** The corpus-side doc ids of a cross candidate set, as `doc_id`. */
-  private def candidateCorpusIds(cand: DataFrame): DataFrame =
-    cand.select(col("corpus_id").as("doc_id"))
-
   /** Scoring tail of the cross-dedup forms: every candidate cross pair
     * through the [[overlap]] kernel, thresholded on the rounded Jaccard.
     * `rowsC` must hold each candidate corpus doc's FULL key set. */
@@ -448,7 +443,7 @@ object Dedup {
   private def indexKeySets(spark: SparkSession, dir: String,
       cand: DataFrame): DataFrame =
     spark.read.schema("doc_id LONG, sk LONG").parquet(s"$dir/shingle_keys")
-      .join(candidateCorpusIds(cand), Seq("doc_id"), "left_semi")
+      .join(cand.select(col("corpus_id").as("doc_id")), Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id"))
       .agg(collect_set(col("sk")).as("ks"))
 
@@ -1072,9 +1067,9 @@ object Dedup {
     * estimate, read from the same rep rows that carry the key sets — no
     * second aggregate, no shingle or text I/O), and survivors score
     * through the kernel with a `max(cont_a, cont_b) ≥ minCont` output
-    * floor. The agreement floor filters the pair spine in the same join
-    * that brings both key sets, before any intersection runs, and the
-    * output floor shrinks the member-pair expansion joins.
+    * floor. The agreement floor filters the rep pair spine before the
+    * kernel joins the key sets, so no intersection runs on a pair it
+    * drops, and the output floor shrinks the member-pair expansion joins.
     *
     * Contract boundary, stated plainly: seed agreement estimates
     * JACCARD, and a small document contained in a much larger one has
@@ -1099,8 +1094,10 @@ object Dedup {
     require(minAgree >= 0 && minAgree <= numHashes,
       s"minAgree $minAgree outside [0, $numHashes]")
     val ctx = dedupPrelude(docs, n, numHashes, bandSize, maxBucket)
-    val repOut = overlap(ctx.repPairs, ctx.rows, ctx.rows,
-        gate = agreement(numHashes) >= minAgree)
+    val agreed = withRows(ctx.repPairs, ctx.rows, ctx.rows)
+      .where(agreement(numHashes) >= minAgree)
+      .select(col("doc_a"), col("doc_b"))
+    val repOut = overlap(agreed, ctx.rows, ctx.rows)
       .select(col("doc_a") +: col("doc_b") +: containmentOf: _*)
       .where(greatest(col("cont_a"), col("cont_b")) >= minCont)
     materializeThenRelease(
@@ -1159,9 +1156,8 @@ object Dedup {
     val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val keyed = docs.select(col("doc_id"), md5(col("text")).as("th")).persist(sl)
     dedupCtx(keyed, numHashes, bandSize, maxBucket, identity) { reps =>
-      val repDocs = docs.join(reps, Seq("doc_id"), "left_semi")
-      docRows(shingles(repDocs.select(col("doc_id"), col("text")), n, dedup = false),
-        numHashes, keys).persist(sl)
+      docRowsOf(docs.join(reps, Seq("doc_id"), "left_semi"), n, numHashes, keys)
+        .persist(sl)
     }
   }
 

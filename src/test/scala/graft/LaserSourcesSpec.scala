@@ -33,12 +33,13 @@ class LaserSourcesSpec extends TestBase {
     assert(Seq(2, 3, 5).forall(loci(_).isEmpty))
   }
 
-  test("ErrorSummary.add: bounded insert keeps the sorted-sample fold's counts and samples") {
+  test("ErrorSummary.add: complete counts and the k smallest samples per code") {
     import graft.domain.{ErrorSummary, ValidationError}
-    // the fold add() replaces: append, stable sort by (line, file, detail), keep k
+    // the whole finding list at once: count per code, stable sort by
+    // (line, file, detail), keep k
     def reference(errs: Seq[ValidationError]): ErrorSummary.Partial =
-      errs.foldLeft(Map.empty: ErrorSummary.Partial)((p, e) =>
-        ErrorSummary.merge(p, Map(e.code -> ErrorSummary.Bounded(1L, Vector(e)))))
+      errs.groupBy(_.code).map { case (c, es) => c -> ErrorSummary.Bounded(es.size.toLong,
+        es.sortBy(e => (e.line, e.file, e.detail)).take(ErrorSummary.sampleK)) }
     def bounded(errs: Seq[ValidationError]): ErrorSummary.Partial =
       errs.foldLeft(Map.empty: ErrorSummary.Partial)((p, e) => ErrorSummary.add(p, e))
     // descending arrival, two codes, equal lines told apart by file and

@@ -295,15 +295,22 @@ class PlanShapeSpec extends TestBase {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     import org.apache.spark.sql.util.QueryExecutionListener
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.SparkPlan]()
+    val plans = new java.util.concurrent.LinkedBlockingQueue[
+      (String, org.apache.spark.sql.execution.SparkPlan)]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        seen.add(qe.executedPlan)
+        plans.put(qe.analyzed.output.map(_.name).mkString(",") -> qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    val p = try planOf("lay_zorder") finally spark.listenerManager.unregister(listener)
+    val (p, seen) = try {
+      val p = planOf("lay_zorder")
+      // listener events arrive in order: once the marker query is seen,
+      // every execution of the layout write has been delivered
+      spark.range(1).select(lit(1).as("lay_z_marker")).collect()
+      p -> Iterator.continually(plans.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(e => e != null && e._1 != "lay_z_marker").map(_._2).toVector
+    } finally spark.listenerManager.unregister(listener)
     val scanAt = p.indexOf("/tmp/graft-lay-z-")
     assert(scanAt > 0, "query must read the rewritten layout")
     assert(p.contains("GreaterThanOrEqual(l_partkey,100)") &&
@@ -311,8 +318,7 @@ class PlanShapeSpec extends TestBase {
       s"both box predicates must push into the layout scan:\n${p.take(1500)}")
     // the write the row just ran: sorts within each file, never globally,
     // and never range-shuffles (file bounds are quantiles)
-    import scala.jdk.CollectionConverters._
-    val nodes = seen.asScala.toSeq.flatMap(_.collectWithSubqueries { case n => n })
+    val nodes = seen.flatMap(_.collectWithSubqueries { case n => n })
       .flatMap {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           a.executedPlan.collect { case n => n }

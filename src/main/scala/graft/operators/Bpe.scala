@@ -233,55 +233,6 @@ object Bpe {
       s"WHEN $tokenExpr = '${t.replace("'", "''")}' THEN $i"
     }.mkString("CASE ", " ", " ELSE -1 END")
 
-  /** A production-SCALE synthetic merge list (e.g. 50k entries, the GPT-2
-    * vocabulary's order of magnitude), [[validateMerges]]-conformant BY
-    * CONSTRUCTION: level k extends each level-(k−1) output by one
-    * alphabet char, in deterministic lexicographic order — every operand
-    * is a single char or a strictly earlier output, and outputs are
-    * distinct (each generated string appears exactly once, and levels
-    * have distinct lengths). NOT a learned vocabulary: it exists to
-    * measure and test the kernel against merge-list SIZE, where only the
-    * list's scale and validity matter, not its linguistics (EXPLAIN.md
-    * "BPE kernel cost vs merge-list size"; BpeSpec's 50k-merge case). */
-  def syntheticMerges(n: Int): Seq[(String, String)] = {
-    require(n > 0, s"need a positive merge count, got $n")
-    val az = ('a' to 'z').map(_.toString)
-    val out = Seq.newBuilder[(String, String)]
-    var level: Seq[String] = az
-    var total = 0
-    while (total < n) {
-      val next = Seq.newBuilder[String]
-      val it = level.iterator
-      while (it.hasNext && total < n) {
-        val p = it.next()
-        val cit = az.iterator
-        while (cit.hasNext && total < n) {
-          val c = cit.next()
-          out += (p -> c)
-          next += p + c
-          total += 1
-        }
-      }
-      level = next.result()
-    }
-    out.result()
-  }
-
-  /** The SEQUENTIAL rank-order replace-chain semantics of [[encodeCol]]
-    * replayed in plain driver-side Scala, one word at a time — usable at
-    * vocabulary sizes where a 50k-deep codegen'd replace chain is not.
-    * BpeSpec's 50k-merge case runs the kernel against THIS at the big
-    * vocab, extending the fixture-scale path-agreement pin. */
-  private[graft] def encodeWordSequential(w: String,
-      merges: Seq[(String, String)]): Seq[String] = {
-    if (w.isEmpty) return Seq.empty
-    val rendered = w.map(c => s"$Sep$c$Sep").mkString
-    val enc = merges.foldLeft(rendered) { case (e, (x, y)) =>
-      e.replace(s"$Sep$x$Sep$Sep$y$Sep", s"$Sep$x$y$Sep")
-    }
-    enc.stripPrefix(Sep).stripSuffix(Sep).split(s"$Sep$Sep").toSeq
-  }
-
   /** Regex pre-tokenizer (GPT-2-style, deterministic): text splits into
     * runs of LETTERS (`\p{L}+` — Unicode, so CJK text forms letter runs
     * exactly as GPT-2's pre-tokenizer treats it), runs of DIGITS, and

@@ -1488,53 +1488,6 @@ object Dedup {
       explode(call_function("winnow_fps", col("text"), lit(k), lit(w))).as("fp"))
   }
 
-  /** The original SQL formulation of `winnowedFingerprints` — kept as the
-    * differential-testing reference for the native `winnow_fps` expression
-    * (spec-pinned equal on every edge) and the A/B arm that measured WHY
-    * the native expression exists (EXPLAIN.md "Round 10: book-length
-    * winnowing was QUADRATIC"): `substring(text, i, k)`
-    * re-walks the string's bytes from position 0 per call, so this form is
-    * O(len²) per doc — 1.7 s at 5 KB docs → 120 s at 50 KB on the same 500
-    * docs. Do not put it on a hot path; it is correct, and quadratic. */
-  def winnowedFingerprintsSql(docs: DataFrame, k: Int = 32, w: Int = 16): DataFrame =
-    docs
-      .select(col("doc_id"), expr(
-        s"""transform(sequence(1, greatest(1, length(text) - ${k - 1})),
-           |  i -> cast(conv(substring(md5(substring(text, i, $k)), 1, 15), 16, 10) as bigint))"""
-          .stripMargin).as("hs"))
-      .select(col("doc_id"), explode(expr(
-        s"""array_distinct(transform(sequence(1, greatest(1, size(hs) - ${w - 1})),
-           |  j -> array_min(slice(hs, j, $w))))""".stripMargin)).as("fp"))
-
-  /** `winnowedFingerprints` re-expressed as explode + sliding window-min —
-    * SAME contract and identical output set (spec-pinned): one row per
-    * char-`k`-gram via `explode(sequence(...))` so the md5 chain runs in a
-    * whole-stage-codegen'd projection, then the `w`-window minimum as a
-    * `rowsBetween(0, w-1)` window aggregate and a per-doc dedup. Built as
-    * the A/B arm testing whether the nested form's cost was
-    * HOF interpretation; the measurement said NO — this form is exactly as
-    * quadratic (32 s at 25 KB docs, same as nested), because the cliff is
-    * `substring(text, i, k)`'s per-call byte-walk, which both share. Kept
-    * as a differential-testing reference for the native `winnow_fps`
-    * expression; not a hot-path candidate. */
-  def winnowedFingerprintsExploded(docs: DataFrame, k: Int = 32, w: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val grams = docs
-      .select(col("doc_id"),
-        greatest(lit(1), length(col("text")) - (k - 1)).as("n"), col("text"))
-      .select(col("doc_id"), col("n"), col("text"),
-        explode(expr("sequence(1, n)")).as("i"))
-      .select(col("doc_id"), col("n"), col("i"),
-        expr(s"cast(conv(substring(md5(substring(text, i, $k)), 1, 15), 16, 10) as bigint)")
-          .as("h"))
-    val wmin = Window.partitionBy(col("doc_id")).orderBy(col("i"))
-      .rowsBetween(Window.currentRow, w - 1)
-    grams
-      .select(col("doc_id"), col("n"), col("i"), min(col("h")).over(wmin).as("fp"))
-      .where(col("i") <= greatest(lit(1), col("n") - (w - 1)))
-      .select(col("doc_id"), col("fp")).dropDuplicates("doc_id", "fp")
-  }
-
   /** Cross-doc substring-duplication pairs: documents sharing ≥ `minShared`
     * winnowed fingerprints, with the shared count — the detector for
     * copied passages across an otherwise-deduplicated corpus.
@@ -1964,10 +1917,7 @@ object Dedup {
     * session caches), so the cache trades the dir-based probe's
     * per-batch REMOTE re-scan for executor-storage residency
     * (MEMORY_AND_DISK — spills, never recomputes through the remote
-    * scan). Deployments whose executor storage cannot hold it set
-    * session conf `graft.loopWindowCache=false`: probes fall back to the
-    * dir-based per-batch scan while keeping the session's manifest cache
-    * and single-pass append. */
+    * scan). */
   final class WindowIndexSession private[operators] (
       spark: SparkSession, dir: String, rebaseEvery: Int = 32) {
     lazy val windowLength: Int = {
@@ -1992,8 +1942,6 @@ object Dedup {
     /** The standing window keys, with a replayed batch's own partition
       * excluded exactly as the dir-based probes exclude it. */
     def standingWindows(excludeIngestBatch: Option[Long]): DataFrame = {
-      if (spark.conf.get("graft.loopWindowCache", "true") == "false")
-        return loadWindowIndex(spark, dir, excludeIngestBatch)._1
       val w = load()
       excludeIngestBatch.fold(w)(id => w.where(col("ingest_batch") =!= id))
         .select(col("m"))
@@ -2010,18 +1958,6 @@ object Dedup {
       val keys = distinctWindowKeys(newDocs, windowLength).localCheckpoint(true)
       keys.write.mode("overwrite")
         .parquet(s"$dir/windows/ingest_batch=$ingestBatch")
-      // honor the cache opt-out here too: when probes fall back to the
-      // dir-based per-batch scan, materializing (and folding) the full
-      // standing window set in executor storage is exactly the blowup
-      // the flag exists to avoid — the partition write above is all the
-      // uncached shape needs. DROP any earlier cache as well: if the
-      // flag flips back on later, a stale fold missing this batch's
-      // keys would serve false novelty — force the next cached probe to
-      // reload from disk instead.
-      if (spark.conf.get("graft.loopWindowCache", "true") == "false") {
-        windows = null
-        return
-      }
       windows = load().where(col("ingest_batch") =!= ingestBatch)
         .unionAll(keys.select(col("m"), lit(ingestBatch).as("ingest_batch")))
       extensions += 1
@@ -2108,7 +2044,7 @@ object Dedup {
     * before counting: the distinct is batch-window-scale (bounded by the
     * batch's own windows × duplication), never index-scale. Join strategy
     * is [[exactCrossDupIndexed]]'s guarded broadcast — batch windows
-    * broadcast under `graft.exactIndexedBroadcastMaxChars` total batch
+    * broadcast under [[ExactIndexedBroadcastMaxChars]] total batch
     * chars, forced shuffle-hash above it — so the index only ever
     * STREAMS. `excludeIngestBatch` prunes one partition at file level
     * (the streaming loop excludes its own micro-batch id so a replay
@@ -2128,7 +2064,7 @@ object Dedup {
 
   /** Shared (manifest, windows, exclusion) prelude of the dir-based
     * window-index probes. */
-  private def loadWindowIndex(spark: SparkSession, dir: String,
+  private[graft] def loadWindowIndex(spark: SparkSession, dir: String,
       excludeIngestBatch: Option[Long]): (DataFrame, Int) = {
     val l = spark.read.json(s"$dir/manifest").collect()(0)
       .getAs[Long]("l").toInt
@@ -2140,18 +2076,12 @@ object Dedup {
     (sWins, l)
   }
 
-  private def windowNoveltyFrom(spark: SparkSession, sWins: DataFrame,
-      l: Int, batch: DataFrame): DataFrame = {
+  private[graft] def windowNoveltyFrom(spark: SparkSession, sWins: DataFrame,
+      l: Int, batch: DataFrame,
+      maxChars: Long = ExactIndexedBroadcastMaxChars): DataFrame = {
     graft.functions.GraftFunctions.ensure(spark)
     val (bWins, members) = batchWindowPrelude(batch, l)
-    val batchChars = batch
-      .agg(coalesce(sum(length(col("text"))), lit(0L))).collect()(0).getLong(0)
-    val maxChars = spark.conf
-      .getOption("graft.exactIndexedBroadcastMaxChars")
-      .map(_.toLong).getOrElse(4000000L)
-    val matchedPos = (if (batchChars <= maxChars)
-        sWins.join(broadcast(bWins), Seq("m"))
-      else sWins.join(bWins.hint("shuffle_hash"), Seq("m")))
+    val matchedPos = probeWindows(sWins, bWins, batch, maxChars)
       .select(col("doc_id"), col("pos")).distinct()
     val matched = matchedPos.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_matched"))
@@ -2180,8 +2110,8 @@ object Dedup {
     * The broadcast is GUARDED, not assumed: the batch's window table is
     * ~24 bytes per batch character (far larger in the driver's hashed
     * relation), so a micro-batch beyond
-    * `graft.exactIndexedBroadcastMaxChars` total characters (default
-    * 4e6 ≈ low-hundreds-of-MB hashed) falls back to a FORCED
+    * [[ExactIndexedBroadcastMaxChars]] total characters
+    * (≈ low-hundreds-of-MB hashed) falls back to a FORCED
     * shuffle-hash join on the window key, batch side as build — slower
     * (the index side shuffles once) but correct at any batch size, and
     * forced rather than stats-decided because the batch window table is
@@ -2201,24 +2131,34 @@ object Dedup {
     exactCrossDupFrom(batch.sparkSession,
       session.standingWindows(excludeIngestBatch), session.windowLength, batch)
 
-  private def exactCrossDupFrom(spark: SparkSession, sWins: DataFrame,
-      l: Int, batch: DataFrame): DataFrame = {
+  private[graft] def exactCrossDupFrom(spark: SparkSession, sWins: DataFrame,
+      l: Int, batch: DataFrame,
+      maxChars: Long = ExactIndexedBroadcastMaxChars): DataFrame = {
     graft.functions.GraftFunctions.ensure(spark)
     val (bWins, members) = batchWindowPrelude(batch, l)
-    val batchChars = batch
-      .agg(coalesce(sum(length(col("text"))), lit(0L))).collect()(0).getLong(0)
-    val maxChars = spark.conf
-      .getOption("graft.exactIndexedBroadcastMaxChars")
-      .map(_.toLong).getOrElse(4000000L)
-    // inner join, batch side broadcast when it fits: the index scan
-    // streams through the broadcast hash map and never shuffles or
-    // aggregates; an oversized batch demotes to a shuffle-hash join
-    // (batch side still the build side, now per-partition) instead of
-    // blowing the broadcast/driver limits
-    val marked = (if (batchChars <= maxChars) sWins.join(broadcast(bWins), Seq("m"))
-      else sWins.join(bWins.hint("shuffle_hash"), Seq("m")))
+    val marked = probeWindows(sWins, bWins, batch, maxChars)
       .select(col("doc_id"), col("pos"))
     materializeThenRelease(expandSpans(mergeSpans(marked, l), members))
+  }
+
+  /** Total batch characters above which the window-index probes stop
+    * broadcasting the batch's window table (~24 bytes per character,
+    * far more once hashed on the driver). */
+  val ExactIndexedBroadcastMaxChars: Long = 4000000L
+
+  /** The window-index probe join: inner join on the window key, batch
+    * side broadcast when its total text fits `maxChars` — the index scan
+    * streams through the broadcast hash map and never shuffles or
+    * aggregates — and a forced shuffle-hash join (batch side still the
+    * build side, now per-partition) above it, instead of blowing the
+    * broadcast/driver limits. The size check is one batch-scale
+    * aggregate. */
+  private def probeWindows(sWins: DataFrame, bWins: DataFrame,
+      batch: DataFrame, maxChars: Long): DataFrame = {
+    val batchChars = batch
+      .agg(coalesce(sum(length(col("text"))), lit(0L))).collect()(0).getLong(0)
+    if (batchChars <= maxChars) sWins.join(broadcast(bWins), Seq("m"))
+    else sWins.join(bWins.hint("shuffle_hash"), Seq("m"))
   }
 
   /** Cut [[exactSubstringSpans]]-style spans out of their documents:
@@ -2293,14 +2233,6 @@ object Dedup {
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
     val cand = docs.join(candDocs, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), md5(col("text")).as("h"), col("text"))
-    // Deployment escape hatch (`graft.editShuffleBodies=true`): the
-    // pre-r7 body-carrying shape, measurably faster on a SINGLE NODE with
-    // small bodies (honest A/B below: 9.0 s vs 11.0 s at 300 B bodies —
-    // three fewer joins, and a local "exchange" is memory bandwidth, not
-    // a network). The hash-keyed default wins wherever exchanges are real
-    // bytes on wires; both regimes are first-class and hash-identical.
-    if (docs.sparkSession.conf.get("graft.editShuffleBodies", "false").toBoolean)
-      return editSimilarityBodies(cand, pairs, minSim)
     // Text bodies appear in exactly ONE exchange: the per-distinct-text
     // (hash, text) side table — O(distinct candidate texts) rows. The pair
     // skeleton, its distinct, and the score-back join all carry 32-byte
@@ -2370,45 +2302,6 @@ object Dedup {
           .where(col("edit_sim") >= t)
     }
     keyed
-      .join(floored, Seq("ha", "hb"))
-      .select(col("doc_a"), col("doc_b"), col("edit_dist"), col("edit_sim"))
-  }
-
-  /** The pre-r7 body-carrying edit scorer (`graft.editShuffleBodies`):
-    * texts ride the pair skeleton into the per-distinct-text-pair DP —
-    * O(candidate pairs × 2 bodies) exchange volume, vs the default shape's
-    * O(distinct candidate texts × body). Right when the "exchange" is one
-    * JVM's memory bus or bodies are smaller than two hash keys; wrong at
-    * cluster scale on KB bodies with k²-inflated pair sets. Results are
-    * hash-identical to the default shape (DedupSpec pins both). */
-  private def editSimilarityBodies(
-      cand: DataFrame, pairs: DataFrame, minSim: Option[Double]): DataFrame = {
-    val withTexts = pairs
-      .join(cand.select(col("doc_id").as("doc_a"), col("h").as("ha"), col("text").as("ta")), "doc_a")
-      .join(cand.select(col("doc_id").as("doc_b"), col("h").as("hb"), col("text").as("tb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("ha"), col("hb"), col("ta"), col("tb"))
-    val lev = when(col("ta") === col("tb"), lit(0L))
-      .otherwise(levenshtein(col("ta"), col("tb")).cast("long"))
-    val distinctTexts = withTexts.select(col("ha"), col("hb"), col("ta"), col("tb"))
-      .distinct()
-    // Same length-bound gate as the hash-keyed shape (lengths computed in
-    // place — bodies already rode the skeleton here by design).
-    val gated = minSim.fold(distinctTexts)(t => distinctTexts
-      .where(lit(1.0) - abs(length(col("ta")) - length(col("tb"))).cast("double") /
-        greatest(length(col("ta")), length(col("tb"))) >= lit(t - 1e-6)))
-    def project(df: DataFrame): DataFrame = df.select(col("ha"), col("hb"),
-      lev.as("edit_dist"),
-      round(lit(1.0) - lev.cast("double") /
-        greatest(length(col("ta")), length(col("tb"))), 6).as("edit_sim"))
-    // same spread-then-materialize rationale as the hash-keyed shape
-    val floored = minSim match {
-      case None => project(gated)
-      case Some(t) =>
-        val parts = cand.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-        checkpointed(project(gated.repartition(parts)))
-          .where(col("edit_sim") >= t)
-    }
-    withTexts.select(col("doc_a"), col("doc_b"), col("ha"), col("hb"))
       .join(floored, Seq("ha", "hb"))
       .select(col("doc_a"), col("doc_b"), col("edit_dist"), col("edit_sim"))
   }
@@ -2489,21 +2382,29 @@ object Dedup {
     *
     * Hybrid local finish: each distributed round costs a fixed scheduler +
     * checkpoint round-trip, so once the (contracting) edge set fits one
-    * task — `count ≤ graft.ccLocalEdges`, default 1M — the remaining
+    * task — `count ≤` [[CcLocalEdges]] (1M) — the remaining
     * rounds are replaced by a single-task union-find over the edges
     * (union-by-min + path compression: the component root is the min id
     * regardless of edge order, so the labels are deterministic and
     * identical to the distributed fixpoint). A 100 TB pair graph starts
     * far above the threshold and runs distributed rounds; the moment star
     * contraction brings it under, the driver stops paying per-round
-    * latency. `graft.ccLocalEdges=0` forces pure distributed (exercised by
-    * DedupSpec both ways). Memory bound: one task holds ≤ 2×threshold
-    * parent-map entries (~100 MB at the default) — size the threshold to
-    * the executor, not the cluster.
+    * latency. Memory bound: one task holds ≤ 2×threshold parent-map
+    * entries (~100 MB at 1M) — the threshold is sized to one executor,
+    * not the cluster.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    val localMax =
-      pairs.sparkSession.conf.get("graft.ccLocalEdges", "1000000").toLong
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame =
+    connectedComponents(pairs, maxIter, CcLocalEdges)
+
+  /** Edge count at or below which [[connectedComponents]] finishes in one
+    * task's union-find instead of more distributed rounds. */
+  val CcLocalEdges: Long = 1000000L
+
+  /** [[connectedComponents]] with the local-finish threshold as a
+    * parameter: `localMax = 0` runs pure distributed rounds (DedupSpec
+    * pins both paths to the same labels). */
+  private[graft] def connectedComponents(pairs: DataFrame, maxIter: Int,
+      localMax: Long): DataFrame = {
     // Oriented canonical edges (u > v), self-loops dropped.
     var e = checkpointed(pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("u"),
@@ -2559,7 +2460,7 @@ object Dedup {
       s"connectedComponents did not converge in $maxIter rounds")
   }
 
-  /** Single-task union-find finish for a small (≤ `graft.ccLocalEdges`)
+  /** Single-task union-find finish for a small (≤ [[CcLocalEdges]])
     * edge set — see `connectedComponents`. Union-by-min: the larger root is
     * always attached under the smaller, so every component's final root is
     * its minimum id independent of edge order (deterministic); path
@@ -2728,7 +2629,7 @@ object Dedup {
     * two semi/anti joins on cluster_id against the (small) affected-label
     * list and one on doc_id against the batch's endpoint set. Measured
     * (EXPLAIN.md "Cluster formation"): 2.8× over full CC at 32M standing
-    * pairs, flat in standing-pair count — but BELOW `graft.ccLocalEdges`
+    * pairs, flat in standing-pair count — but BELOW [[CcLocalEdges]]
     * the full recompute is one local union-find task and wins; use this
     * operator in the large-graph regime it targets. */
   def incrementalClusters(labels: DataFrame, newPairs: DataFrame): DataFrame = {

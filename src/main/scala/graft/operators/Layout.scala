@@ -79,7 +79,7 @@ object Layout {
     * normalization (the per-file box model only needs monotonicity, not
     * uniformity; rank ties just coarsen the curve). Degenerate dimensions
     * (min == max) rank constant 0. */
-  private def scaledRank(c: Column, mn: Double, mx: Double, bits: Int): Column = {
+  private[graft] def scaledRank(c: Column, mn: Double, mx: Double, bits: Int): Column = {
     val top = (1L << bits) - 1
     val span = mx - mn
     if (!(span > 0) || span.isNaN) lit(0L)
@@ -90,7 +90,7 @@ object Layout {
   /** Per-column (min, max) of `zcols` — ONE metadata-scale aggregate
     * (2·k values to the driver); all-null/empty dimensions degenerate to
     * (0, 0) = constant rank 0. */
-  private def computeScaling(df: DataFrame, zcols: Seq[String])
+  private[graft] def computeScaling(df: DataFrame, zcols: Seq[String])
       : Seq[(String, Double, Double)] = {
     require(zcols.nonEmpty, "zcols must be non-empty")
     // the persisted _graft_zmeta format is whitespace-delimited
@@ -111,22 +111,11 @@ object Layout {
     * time); everything else casts to double directly (ints, floats,
     * timestamps). Strings have no meaningful linear order for a box
     * model — hash them to a numeric key first. */
-  private def numKey(df: DataFrame, c: String): Column =
+  private[graft] def numKey(df: DataFrame, c: String): Column =
     df.schema(c).dataType match {
       case org.apache.spark.sql.types.DateType => unix_date(col(c)).cast("double")
       case _ => col(c).cast("double")
     }
-
-  /** `df` plus a `_z` Z-value column over `zcols` (ints, floats and
-    * timestamps cast to double; DATE columns are converted to
-    * days-since-epoch internally; hash strings to a numeric key first).
-    * Costs one metadata-scale min/max aggregate plus a codegen'd
-    * projection. */
-  def withZValue(df: DataFrame, zcols: Seq[String], bits: Int = 16): DataFrame = {
-    val ranks = computeScaling(df, zcols)
-      .map { case (c, mn, mx) => scaledRank(numKey(df, c), mn, mx, bits) }
-    df.withColumn("_z", zValue(ranks, bits))
-  }
 
   /** Rewrite `df` as `files` parquet files clustered along the Z-order
     * curve of `zcols`. Range-partitioning on the Z-value keeps files
@@ -536,15 +525,6 @@ object Layout {
       .write.mode(if (overwrite) "overwrite" else "append").parquet(outDir)
   }
 
-  /** Baseline for comparison: the same table linearly sorted by
-    * `sortCols` into `files` files (perfect pruning on the leading
-    * column, none on the rest). */
-  def linearWrite(df: DataFrame, sortCols: Seq[String], outDir: String,
-      files: Int): Unit =
-    df.repartitionByRange(files, sortCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode("overwrite").parquet(outDir)
-
   private def log2Exact(n: Int, what: String): Int = {
     require(n > 0 && (n & (n - 1)) == 0, s"$what must be a power of two, got $n")
     java.lang.Integer.numberOfTrailingZeros(n)
@@ -579,7 +559,8 @@ object Layout {
 
   /** [[binnedZorderWrite]]'s linear baseline: `fid` = top log₂(bins)
     * bits of the LEADING column's rank — equal-width bins on one
-    * dimension, the deterministic analogue of [[linearWrite]].
+    * dimension, the deterministic analogue of a range-partitioned
+    * linear sort.
     *
     * MIGRATION NOTE: layouts written by versions of this method BEFORE
     * the `linear-bin` meta tag existed carry `curve: zorder` in their

@@ -2,24 +2,24 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-/** Keyed state for `Streams.runningUserTotals` — top-level because the
-  * state encoder's generated code needs a publicly constructible class. */
-final case class RunningState(n: Long, total: Double)
-
-/** Structured Streaming surface over the `events` table shape
-  * (`TESTDATA.md`): watermarked tumbling/sliding/session windows, stateful
-  * dedup, and a custom `mapGroupsWithState` sessionizer. The reference is
-  * batch-only MapReduce (SURVEY §2.2 "Streaming: none"), so this whole
-  * module is engine extension surface.
+/** Structured Streaming surface. The reference is batch-only MapReduce
+  * (SURVEY §2.2 "Streaming: none"), so this whole module is engine
+  * extension surface, in two parts:
   *
-  * Each windowed aggregation has a *batch twin* in `StreamQueries` that the
-  * DuckDB oracle checks; the streaming plans themselves are exercised
-  * end-to-end (file source → availableNow trigger → memory sink) by
-  * `StreamingSpec`, asserting stream results equal the batch twin — the
-  * t1-smoke strategy from SURVEY §5.
+  *   - the declared event-stream operators over the `events` table shape
+  *     (`TESTDATA.md`, SURVEY §2.2): watermarks, tumbling/sliding windows,
+  *     session windows, stateful `dropDuplicates` and late-data discard.
+  *     Each windowed aggregation has a *batch twin* in `StreamQueries`
+  *     that the DuckDB oracle checks; the streaming plans themselves run
+  *     end-to-end (file source → availableNow trigger → memory sink) in
+  *     `StreamingSpec`, asserting stream results equal the batch twin —
+  *     the t1-smoke strategy from SURVEY §5;
+  *   - the `foreachBatch` loops over a document or media stream that run
+  *     a batch operator per micro-batch against standing state (ingest,
+  *     monitors, the curation and signature-dedup loops and their
+  *     takedowns), each behind a catalog row or perfbench workload.
   */
 object Streams {
 
@@ -101,143 +101,6 @@ object Streams {
     * not O(stream length). */
   def dedupStream(events: DataFrame): DataFrame =
     events.withWatermark("ts", "10 minutes").dropDuplicates("event_id", "ts")
-
-  /** Stream-stream interval join: each click joined to purchases by the
-    * same user within the preceding hour. Both sides carry watermarks so
-    * the join state is bounded — Spark evicts buffered rows once the
-    * interval condition can no longer match under the watermark. */
-  def clickPurchaseJoin(events: DataFrame): DataFrame = {
-    val clicks = events.where(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "10 minutes")
-    val purchases = events.where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user_id"), col("ts").as("purchase_ts"), col("value"))
-      .withWatermark("purchase_ts", "10 minutes")
-    clicks.join(purchases,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
-        col("purchase_ts") <= col("click_ts"))
-      .select(col("click_id"), col("user_id"), col("purchase_ts"), col("value"))
-  }
-
-  /** Watermark-bounded dedup WITHOUT the event time in the key
-    * (`dropDuplicatesWithinWatermark`): re-deliveries whose timestamps
-    * JITTER within the watermark delay still collapse — the
-    * at-least-once-ingestion dedup pattern `dropDuplicates(id, ts)` can't
-    * express (it keys on the exact timestamp). State bounded by the
-    * watermark horizon. */
-  def dedupJittered(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-static join: enrich the stream with a batch dimension table —
-    * no streaming state at all (the static side is re-planned per
-    * micro-batch, so slowly-changing dims refresh for free); broadcast
-    * keeps the big stream shuffle-free, the same join discipline as the
-    * batch side. */
-  def enrichWithStatic(events: DataFrame, dim: DataFrame,
-      key: String = "user_id"): DataFrame =
-    events.join(broadcast(dim), Seq(key), "left")
-
-  final case class UserAgg(user_id: Long, n: Long, total: Double)
-
-  /** Custom keyed state via mapGroupsWithState: running per-user event count
-    * and value sum (the KeyValueGroupedDataset custom-state API surface). */
-  def runningUserTotals(events: DataFrame): Dataset[UserAgg] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id"), col("value")).as[(Long, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, Double)], state: GroupState[RunningState]) =>
-          val prev = state.getOption.getOrElse(RunningState(0L, 0.0))
-          var n = prev.n; var tot = prev.total
-          rows.foreach { r => n += 1; tot += r._2 }
-          state.update(RunningState(n, tot))
-          UserAgg(uid, n, tot)
-      }
-  }
-
-  /** Per-micro-batch running-total DELTAS via flatMapGroupsWithState —
-    * the zero-or-more-rows-per-group custom-state API (vs
-    * `mapGroupsWithState`'s exactly-one): only users touched in the batch
-    * emit, unchanged users stay silent. Append-compatible. */
-  def userTotalDeltas(events: DataFrame): Dataset[UserAgg] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col("user_id"), col("value")).as[(Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, Double)], state: GroupState[RunningState]) =>
-          // With NoTimeout the function only fires for keys present in the
-          // batch, so `rows` is never empty — untouched users stay silent
-          // by framework contract, no emit-suppression needed here.
-          val prev = state.getOption.getOrElse(RunningState(0L, 0.0))
-          var n = prev.n; var tot = prev.total
-          rows.foreach { r => n += 1; tot += r._2 }
-          state.update(RunningState(n, tot))
-          Iterator.single(UserAgg(uid, n, tot))
-      }
-  }
-
-  final case class CdcState(tsUs: Long, eventId: Long, eventType: String,
-      value: Double)
-  final case class ChangeRecord(user_id: Long, change: String,
-      old_type: String, new_type: String)
-
-  /** Streaming CDC — the micro-batch twin of `operators/SnapshotDiff`:
-    * keyed state holds each key's latest `(ts, event_id)`-ordered
-    * `(event_type, value)`; every batch, keys TOUCHED by the batch emit
-    * the change between their pre-batch and post-batch states — `insert`
-    * (no prior live state), `update`, `unchanged` (the batch only
-    * replayed older/equal events), or `delete` (latest event now carries
-    * the `tombstone` type). Untouched keys stay silent by framework
-    * contract (NoTimeout + Append) — the batch equivalence is therefore
-    * `SnapshotDiff.diff(t0, t1)` MINUS its `unchanged` rows for keys with
-    * no events in (t0, t1), which the spec asserts exactly.
-    *
-    * State is max-merged, never blindly overwritten, so a replayed or
-    * late micro-batch cannot regress a key's state (the at-least-once
-    * discipline of the other stateful ops here). Scale: state is one
-    * small record per key, the per-batch work is one max per touched key
-    * — the same single-aggregate shape as the batch operator. */
-  def cdcStream(events: DataFrame,
-      tombstone: Option[String] = None): Dataset[ChangeRecord] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"), col("value"))
-      .as[(Long, Long, Long, String, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, Long, Long, String, Double)],
-            state: GroupState[CdcState]) =>
-          val newest = rows.maxBy(r => (r._2, r._3))
-          val cur = CdcState(newest._2, newest._3, newest._4, newest._5)
-          val prev = state.getOption
-          val next = prev match {
-            case Some(p) if p.tsUs > cur.tsUs ||
-              (p.tsUs == cur.tsUs && p.eventId >= cur.eventId) => p
-            case _ => cur
-          }
-          state.update(next)
-          def live(s: CdcState): Option[CdcState] =
-            Some(s).filterNot(x => tombstone.contains(x.eventType))
-          val o = prev.flatMap(live)
-          val n = live(next)
-          val change = (o, n) match {
-            case (None, None) => None // dead before, dead after: not a change
-            case (None, Some(_)) => Some("insert")
-            case (Some(_), None) => Some("delete")
-            case (Some(a), Some(b)) =>
-              if (a.eventType != b.eventType || a.value != b.value) Some("update")
-              else Some("unchanged")
-          }
-          change.map(c => ChangeRecord(uid, c,
-            o.map(_.eventType).orNull, n.map(_.eventType).orNull)).iterator
-      }
-  }
 
   /** Document-stream schema (`TESTDATA.md` `documents`). */
   val documentSchema: StructType = StructType(Seq(
@@ -325,64 +188,6 @@ object Streams {
       else math.max(acc,
         scala.util.Try(spark.read.parquet(s).rdd.getNumPartitions).getOrElse(0))
     }
-
-  /** Streaming near-dedup against a standing corpus — the operational
-    * streaming form of `Dedup.crossNearDup`: each arriving micro-batch of
-    * documents is LSH-scored against the static `corpus`, appending cross
-    * matches `(batch_id, corpus_id, jaccard, micro_batch)` to `matchDir`
-    * and the surviving (match-free) batch docs to `keepDir`.
-    *
-    * Why `foreachBatch` and not a declarative streaming plan: the LSH
-    * chain runs two aggregation passes (minhash signatures, bucket-cap
-    * counts) plus joins over its own derived sets — beyond append-mode's
-    * single-stateful-aggregation budget — so the full BATCH operator runs
-    * per micro-batch. Because `crossNearDup` scores each batch doc against
-    * the corpus independently (never batch-vs-batch), the union of
-    * per-micro-batch results EQUALS the one-shot batch result over the
-    * same docs — micro-batch boundaries cannot change the answer
-    * (`StreamingSpec` asserts this equivalence).
-    *
-    * Delivery: parquet `append` inside `foreachBatch` is at-least-once —
-    * a replayed micro-batch after crash re-appends. Both outputs carry
-    * the `micro_batch` id column so downstream reads collapse replays
-    * idempotently (max-one-file-set per id), the standard batchId-keyed
-    * sink discipline. No stream state at all: recovery is checkpoint
-    * offset replay, memory is O(micro-batch).
-    *
-    * Scale: per-batch cost is `crossNearDup`'s — the corpus side's band
-    * buckets are recomputed per micro-batch here; a high-frequency
-    * production stream would materialize the corpus bucket table once and
-    * join each batch against THAT (same plan, corpus side loaded not
-    * computed). */
-  def nearDupAgainstCorpus(
-      docs: DataFrame,
-      corpus: DataFrame,
-      threshold: Double,
-      matchDir: String,
-      keepDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    nearDupForeachBatch(docs, matchDir, keepDir, checkpointDir,
-      b => graft.operators.Dedup.crossNearDup(corpus, b, threshold),
-      // the body recomputes the corpus side's band buckets per batch —
-      // corpus-scale shuffles, so the floor is the corpus scan itself
-      _ => corpus.rdd.getNumPartitions)
-
-  /** `nearDupAgainstCorpus` probing a PREBUILT corpus index
-    * (`Dedup.buildCrossNearDupIndex`) — the high-frequency production
-    * shape: per micro-batch, only the batch's own LSH chain runs and only
-    * candidate corpus docs' index rows load; the standing corpus is never
-    * re-scanned. */
-  def nearDupAgainstIndex(
-      docs: DataFrame,
-      indexDir: String,
-      threshold: Double,
-      matchDir: String,
-      keepDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    nearDupForeachBatch(docs, matchDir, keepDir, checkpointDir,
-      b => graft.operators.Dedup.crossNearDupIndexed(b.sparkSession, indexDir, b, threshold),
-      // capBuckets aggregates the stored bucket table — standing-scale
-      s => standingScanParts(s, s"$indexDir/buckets", s"$indexDir/shingle_keys"))
 
   /** Streaming EXACT-substring ingest: per micro-batch of arriving
     * documents,
@@ -1148,47 +953,6 @@ object Streams {
     versions.dropRight(2).foreach(p => fs.delete(p, true))
   }
 
-  private def nearDupForeachBatch(
-      docs: DataFrame,
-      matchDir: String,
-      keepDir: String,
-      checkpointDir: String,
-      score: DataFrame => DataFrame,
-      standingParts: SparkSession => Int): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        withBatchParallelism(batch, standingParts(batch.sparkSession)) {
-        val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // Force eager materialize-and-release for the scorer call: the
-          // wrapper consumes the result twice and owns no handle on the
-          // operator's internal caches, so the lazy plan-inspection mode
-          // (graft.eagerRelease=false, set e.g. by graft.Explain) must not
-          // leak into per-micro-batch execution — it would recompute the
-          // LSH chain per consumer and strand five cached intermediates
-          // every micro-batch.
-          val spark = batch.sparkSession
-          val prevEager = spark.conf.getOption("graft.eagerRelease")
-          spark.conf.set("graft.eagerRelease", "true")
-          val matches =
-            try score(b.select(col("doc_id"), col("text")))
-            finally prevEager match {
-              case Some(v) => spark.conf.set("graft.eagerRelease", v)
-              case None => spark.conf.unset("graft.eagerRelease")
-            }
-          matches.withColumn("micro_batch", lit(batchId))
-            .write.mode("append").parquet(matchDir)
-          b.join(matches.select(col("batch_id").as("doc_id")).distinct(),
-              Seq("doc_id"), "left_anti")
-            .withColumn("micro_batch", lit(batchId))
-            .write.mode("append").parquet(keepDir)
-        } finally { b.unpersist(false); () }
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
   /** Streaming maintenance of a KEYED Z-ordered layout
     * ([[graft.operators.Layout.initKeyedLayout]]): each arriving
     * micro-batch curve-clusters with the layout's persisted scaling and
@@ -1441,18 +1205,5 @@ object Streams {
       .start()
     releaseOnTermination(media.sparkSession, query, () => sigIndex.close())
     query
-  }
-
-  /** Run any of the above to completion over the existing files and return
-    * the final result as a batch DataFrame (availableNow trigger → memory
-    * sink). Used by tests and the batch-twin comparisons. */
-  def runToCompletion(spark: SparkSession, streamed: DataFrame, name: String,
-      outputMode: OutputMode = OutputMode.Append): DataFrame = {
-    val q = streamed.writeStream
-      .format("memory").queryName(name).outputMode(outputMode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
   }
 }

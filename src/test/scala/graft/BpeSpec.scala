@@ -128,7 +128,7 @@ class BpeSpec extends TestBase {
     // replay of encodeCol's contract (EXPLAIN.md "BPE kernel cost vs
     // merge-list size" records the same check over the full corpus
     // vocabulary plus a 2k distinct-word sample)
-    val big = Bpe.syntheticMerges(50000)
+    val big = BpeSpec.syntheticMerges(50000)
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).limit(20)
     val texts = d.as[(Long, String)].collect().toMap
@@ -137,7 +137,7 @@ class BpeSpec extends TestBase {
     assert(got.nonEmpty)
     got.foreach { case (id, toks) =>
       val want = texts(id).split(" ", -1).toSeq
-        .map(w => Bpe.encodeWordSequential(w, big))
+        .map(w => BpeSpec.encodeWordSequential(w, big))
         .reduce((a, b) => a ++ Seq(" ") ++ b)
       assert(toks == want, s"doc $id kernel/sequential disagree at 50k merges")
     }
@@ -271,5 +271,57 @@ class BpeSpec extends TestBase {
       .agg(count(lit(1)).as("n_pretok"), sum(col("t")).as("bpe_tokens"))
       .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(kernel == colSide)
+  }
+}
+
+/** Spec-side references for the BPE kernel at production vocabulary size. */
+object BpeSpec {
+  import graft.operators.Bpe.Sep
+
+  /** A production-SCALE synthetic merge list (e.g. 50k entries, the GPT-2
+    * vocabulary's order of magnitude), `Bpe.validateMerges`-conformant BY
+    * CONSTRUCTION: level k extends each level-(k−1) output by one
+    * alphabet char, in deterministic lexicographic order — every operand
+    * is a single char or a strictly earlier output, and outputs are
+    * distinct (each generated string appears exactly once, and levels
+    * have distinct lengths). NOT a learned vocabulary: it exists to
+    * test the kernel against merge-list SIZE, where only the list's
+    * scale and validity matter, not its linguistics (EXPLAIN.md
+    * "BPE kernel cost vs merge-list size"). */
+  def syntheticMerges(n: Int): Seq[(String, String)] = {
+    require(n > 0, s"need a positive merge count, got $n")
+    val az = ('a' to 'z').map(_.toString)
+    val out = Seq.newBuilder[(String, String)]
+    var level: Seq[String] = az
+    var total = 0
+    while (total < n) {
+      val next = Seq.newBuilder[String]
+      val it = level.iterator
+      while (it.hasNext && total < n) {
+        val p = it.next()
+        val cit = az.iterator
+        while (cit.hasNext && total < n) {
+          val c = cit.next()
+          out += (p -> c)
+          next += p + c
+          total += 1
+        }
+      }
+      level = next.result()
+    }
+    out.result()
+  }
+
+  /** The SEQUENTIAL rank-order replace-chain semantics of `Bpe.encodeCol`
+    * replayed in plain driver-side Scala, one word at a time — usable at
+    * vocabulary sizes where a 50k-deep codegen'd replace chain is not. */
+  def encodeWordSequential(w: String,
+      merges: Seq[(String, String)]): Seq[String] = {
+    if (w.isEmpty) return Seq.empty
+    val rendered = w.map(c => s"$Sep$c$Sep").mkString
+    val enc = merges.foldLeft(rendered) { case (e, (x, y)) =>
+      e.replace(s"$Sep$x$Sep$Sep$y$Sep", s"$Sep$x$y$Sep")
+    }
+    enc.stripPrefix(Sep).stripSuffix(Sep).split(s"$Sep$Sep").toSeq
   }
 }

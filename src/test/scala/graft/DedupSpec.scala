@@ -104,14 +104,11 @@ class DedupSpec extends TestBase {
     val expected = Set(
       (1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L), (6L, 1L),
       (10L, 10L), (11L, 10L), (12L, 10L), (20L, 20L), (21L, 20L))
-    def run() = Dedup.connectedComponents(p).as[(Long, Long)].collect().toSet
-    assert(run() == expected) // default threshold ≫ edges → single-task finish
-    val old = spark.conf.getOption("graft.ccLocalEdges")
-    try {
-      spark.conf.set("graft.ccLocalEdges", "0") // force pure distributed
-      assert(run() == expected)
-    } finally old.fold(spark.conf.unset("graft.ccLocalEdges"))(
-      spark.conf.set("graft.ccLocalEdges", _))
+    def run(localMax: Long) =
+      Dedup.connectedComponents(p, 50, localMax).as[(Long, Long)].collect().toSet
+    // default threshold ≫ edges → single-task finish
+    assert(Dedup.connectedComponents(p).as[(Long, Long)].collect().toSet == expected)
+    assert(run(0) == expected) // force pure distributed
   }
 
   test("connectedComponents: mid-loop handoff from distributed rounds to local finish") {
@@ -121,13 +118,9 @@ class DedupSpec extends TestBase {
     val nodes = 100L to 111L
     val p = (for { a <- nodes; b <- nodes if a < b } yield (a, b))
       .toDF("doc_a", "doc_b")
-    val old = spark.conf.getOption("graft.ccLocalEdges")
-    try {
-      spark.conf.set("graft.ccLocalEdges", "20")
-      val got = Dedup.connectedComponents(p).as[(Long, Long)].collect().toSet
-      assert(got == nodes.map(x => (x, 100L)).toSet)
-    } finally old.fold(spark.conf.unset("graft.ccLocalEdges"))(
-      spark.conf.set("graft.ccLocalEdges", _))
+    val got = Dedup.connectedComponents(p, 50, localMax = 20)
+      .as[(Long, Long)].collect().toSet
+    assert(got == nodes.map(x => (x, 100L)).toSet)
   }
 
   test("operators release every cache they register (r4 leak regression)") {
@@ -179,7 +172,7 @@ class DedupSpec extends TestBase {
     // The :157 test exercises `materializeThenRelease`'s reliable branch but
     // its tiny graphs finish in the single-task union-find — the PER-ROUND
     // checkpoint inside the large-star/small-star loop never runs. Force
-    // pure distributed rounds (ccLocalEdges=0) under graft.checkpointDir on
+    // pure distributed rounds (localMax = 0) under graft.checkpointDir on
     // a path graph (needs several contraction rounds) and require BOTH:
     // labels identical to default local-checkpoint mode, and new reliable
     // checkpoint files on disk.
@@ -188,22 +181,17 @@ class DedupSpec extends TestBase {
     val expected = Dedup.connectedComponents(p).as[(Long, Long)].collect().toSet
     assert(expected == (1L to 40L).map(x => (x, 1L)).toSet)
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-cc").toString
-    val oldLocal = spark.conf.getOption("graft.ccLocalEdges")
     spark.conf.set("graft.checkpointDir", dir)
-    spark.conf.set("graft.ccLocalEdges", "0")
     try {
-      val got = Dedup.connectedComponents(p).as[(Long, Long)].collect().toSet
+      val got = Dedup.connectedComponents(p, 50, localMax = 0)
+        .as[(Long, Long)].collect().toSet
       assert(got == expected)
       val wrote = scala.util.Using.resource(
         java.nio.file.Files.walk(java.nio.file.Paths.get(dir)))(
         _.filter(pp => java.nio.file.Files.isRegularFile(pp)).count())
       // ≥ 1 file per checkpointed round; a 39-edge path needs several rounds
       assert(wrote >= 2, s"expected per-round reliable checkpoints under $dir, found $wrote files")
-    } finally {
-      spark.conf.unset("graft.checkpointDir")
-      oldLocal.fold(spark.conf.unset("graft.ccLocalEdges"))(
-        spark.conf.set("graft.ccLocalEdges", _))
-    }
+    } finally spark.conf.unset("graft.checkpointDir")
   }
 
   test("graft.eagerRelease=false returns the lazy plan and transfers cache ownership") {
@@ -580,23 +568,6 @@ class DedupSpec extends TestBase {
     assert(got((1L, 3L)) == ((0L, 1.0)))
   }
 
-  test("edit similarity: body-carrying single-node shape is result-identical") {
-    // graft.editShuffleBodies=true routes to the pre-r7 body-carrying plan
-    // (faster on one JVM with small bodies); both regimes must agree
-    // row-for-row — the flag changes exchange shape, never results.
-    val d = docs(1L -> "kitten", 2L -> "sitting", 3L -> "kitten",
-      4L -> "a completely different text")
-    val pairs = Seq((1L, 2L), (1L, 3L), (2L, 4L)).toDF("doc_a", "doc_b")
-    val hashKeyed = Dedup.editSimilarity(d, pairs)
-      .as[(Long, Long, Long, Double)].collect().toSet
-    spark.conf.set("graft.editShuffleBodies", "true")
-    try {
-      val bodies = Dedup.editSimilarity(d, pairs)
-        .as[(Long, Long, Long, Double)].collect().toSet
-      assert(bodies == hashKeyed)
-    } finally spark.conf.unset("graft.editShuffleBodies")
-  }
-
   test("winnowing: shared long passage detected, disjoint docs silent, short docs ok") {
     val passage = "the quick brown fox jumps over the lazy dog while carrying " +
       "a remarkably heavy dictionary of winnowed fingerprints across the yard"
@@ -659,8 +630,8 @@ class DedupSpec extends TestBase {
         "well past the gram width with 日本語 characters mixed in too"))
     for ((k, w) <- Seq((32, 16), (8, 4))) {
       val a = Dedup.winnowedFingerprints(d, k, w)
-      val b = Dedup.winnowedFingerprintsSql(d, k, w)
-      val c = Dedup.winnowedFingerprintsExploded(d, k, w)
+      val b = DedupSpec.winnowedFingerprintsSql(d, k, w)
+      val c = DedupSpec.winnowedFingerprintsExploded(d, k, w)
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         s"native vs nested-SQL disagree at k=$k w=$w")
       assert(a.exceptAll(c).count() == 0 && c.exceptAll(a).count() == 0,
@@ -682,11 +653,6 @@ class DedupSpec extends TestBase {
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(floored == full.filter(_._4 >= 0.5))
     assert(floored.map(r => (r._1, r._2)) == Set((1L, 2L), (1L, 3L))) // non-vacuous
-    // body-carrying regime honors the same floored contract
-    spark.conf.set("graft.editShuffleBodies", "true")
-    try assert(Dedup.editSimilarity(d, pairs, Some(0.5))
-      .as[(Long, Long, Long, Double)].collect().toSet == floored)
-    finally spark.conf.unset("graft.editShuffleBodies")
   }
 
   test("gated edit: agreement floor drops template collisions, keeps near-dups") {
@@ -943,5 +909,55 @@ class DedupSpec extends TestBase {
     session.close()
     assert(spark.read.parquet(s"$dir/shingle_keys").distinct().count() == 77)
     assert(spark.read.parquet(s"$dir/buckets").distinct().count() == 76)
+  }
+}
+
+/** Spec-side references for the native `winnow_fps` expression behind
+  * `Dedup.winnowedFingerprints`: the two SQL formulations it replaced,
+  * kept as differential-testing arms. */
+object DedupSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** The original SQL formulation of `winnowedFingerprints` — the A/B arm
+    * that measured WHY the native expression exists (EXPLAIN.md "Round 10:
+    * book-length winnowing was QUADRATIC"): `substring(text, i, k)`
+    * re-walks the string's bytes from position 0 per call, so this form is
+    * O(len²) per doc — 1.7 s at 5 KB docs → 120 s at 50 KB on the same 500
+    * docs. Correct, and quadratic. */
+  def winnowedFingerprintsSql(docs: DataFrame, k: Int = 32, w: Int = 16): DataFrame =
+    docs
+      .select(col("doc_id"), expr(
+        s"""transform(sequence(1, greatest(1, length(text) - ${k - 1})),
+           |  i -> cast(conv(substring(md5(substring(text, i, $k)), 1, 15), 16, 10) as bigint))"""
+          .stripMargin).as("hs"))
+      .select(col("doc_id"), explode(expr(
+        s"""array_distinct(transform(sequence(1, greatest(1, size(hs) - ${w - 1})),
+           |  j -> array_min(slice(hs, j, $w))))""".stripMargin)).as("fp"))
+
+  /** `winnowedFingerprints` re-expressed as explode + sliding window-min —
+    * SAME contract and identical output set: one row per char-`k`-gram
+    * via `explode(sequence(...))` so the md5 chain runs in a
+    * whole-stage-codegen'd projection, then the `w`-window minimum as a
+    * `rowsBetween(0, w-1)` window aggregate and a per-doc dedup. Built as
+    * the A/B arm testing whether the nested form's cost was
+    * HOF interpretation; the measurement said NO — this form is exactly as
+    * quadratic (32 s at 25 KB docs, same as nested), because the cliff is
+    * `substring(text, i, k)`'s per-call byte-walk, which both share. */
+  def winnowedFingerprintsExploded(docs: DataFrame, k: Int = 32, w: Int = 16): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val grams = docs
+      .select(col("doc_id"),
+        greatest(lit(1), length(col("text")) - (k - 1)).as("n"), col("text"))
+      .select(col("doc_id"), col("n"), col("text"),
+        explode(expr("sequence(1, n)")).as("i"))
+      .select(col("doc_id"), col("n"), col("i"),
+        expr(s"cast(conv(substring(md5(substring(text, i, $k)), 1, 15), 16, 10) as bigint)")
+          .as("h"))
+    val wmin = Window.partitionBy(col("doc_id")).orderBy(col("i"))
+      .rowsBetween(Window.currentRow, w - 1)
+    grams
+      .select(col("doc_id"), col("n"), col("i"), min(col("h")).over(wmin).as("fp"))
+      .where(col("i") <= greatest(lit(1), col("n") - (w - 1)))
+      .select(col("doc_id"), col("fp")).dropDuplicates("doc_id", "fp")
   }
 }

@@ -6,7 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** The README module map is a registry of the engine's `main` objects; it
   * must come from the code. A new `object … { def main(` without a README
-  * entry fails here, and so does an entry naming a file that is gone. */
+  * entry fails here, and so does an entry naming a file that is gone.
+  * README's "Cache ownership" paragraph is the same kind of registry for
+  * the `graft.*` session-conf keys the engine reads. */
 class EntryPointsSpec extends AnyFunSuite {
 
   private val srcRoot = Paths.get("src/main/scala/graft")
@@ -52,6 +54,23 @@ class EntryPointsSpec extends AnyFunSuite {
     val (_, named) = readmeEntryPoints
     val missing = named.filterNot(n => Files.isRegularFile(srcRoot.resolve(n)))
     assert(missing.isEmpty, s"README module map names deleted files: $missing")
+  }
+
+  test("graft.* conf keys in src/main == the keys README's Cache ownership paragraph names") {
+    val key = """\bgraft\.[a-z]\w*""".r
+    val inCode = scalaFiles.flatMap { f =>
+      """"(graft\.[a-z]\w*)"""".r
+        .findAllMatchIn(new String(Files.readAllBytes(f), "UTF-8")).map(_.group(1))
+    }.toSet
+    val readme = new String(Files.readAllBytes(Paths.get("README.md")), "UTF-8")
+    val paragraph = readme.split("\n- ").find(_.startsWith("**Cache ownership"))
+      .getOrElse(fail("README.md lost its 'Cache ownership' paragraph"))
+    val documented = key.findAllIn(paragraph).toSet
+    assert(inCode.nonEmpty)
+    assert((inCode -- documented).isEmpty,
+      s"conf keys read in src/main but not documented: ${inCode -- documented}")
+    assert((documented -- inCode).isEmpty,
+      s"documented conf keys no code reads: ${documented -- inCode}")
   }
 
   test("Probe: an unknown or missing sub-command fails with a usage line naming both") {

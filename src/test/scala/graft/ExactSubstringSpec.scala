@@ -217,12 +217,10 @@ class ExactSubstringSpec extends TestBase {
       .orderBy("doc_id").collect().toSeq
     assert(dup == want, "duplicate index keys must not double-count matches")
     // the forced shuffle-hash fallback (oversized-batch path) agrees too
-    spark.conf.set("graft.exactIndexedBroadcastMaxChars", "1")
-    try {
-      val sh = Dedup.windowNoveltyIndexed(spark, s"$root/idx", batch)
-        .orderBy("doc_id").collect().toSeq
-      assert(sh == want, "shuffle-hash fallback must agree with broadcast path")
-    } finally spark.conf.unset("graft.exactIndexedBroadcastMaxChars")
+    val (sWins, l) = Dedup.loadWindowIndex(spark, s"$root/idx", None)
+    val sh = Dedup.windowNoveltyFrom(spark, sWins, l, batch, maxChars = 1)
+      .orderBy("doc_id").collect().toSeq
+    assert(sh == want, "shuffle-hash fallback must agree with broadcast path")
   }
 
   test("window_md5: matches the SQL 15-hex-prefix universe exactly") {
@@ -392,24 +390,20 @@ class ExactSubstringSpec extends TestBase {
     // auto-broadcast, so the lock is ShuffledHashJoin presence: absent by
     // default (everything broadcasts), present once the batch exceeds the
     // threshold
+    val (sWins, l) = Dedup.loadWindowIndex(spark, idx, None)
+    def demotedProbe() = Dedup.exactCrossDupFrom(spark, sWins, l, probe, maxChars = 10)
     spark.conf.set("graft.eagerRelease", "false") // inspect the REAL plan
     try {
-      def planStr() = Dedup.exactCrossDupIndexed(spark, idx, probe)
-        .queryExecution.executedPlan.toString
-      assert(!planStr().contains("ShuffledHashJoin"),
+      assert(!Dedup.exactCrossDupIndexed(spark, idx, probe)
+        .queryExecution.executedPlan.toString.contains("ShuffledHashJoin"),
         "under-threshold batch must broadcast the probe join")
-      spark.conf.set("graft.exactIndexedBroadcastMaxChars", "10")
-      val demotedPlan = planStr()
+      val demotedPlan = demotedProbe().queryExecution.executedPlan.toString
       assert(demotedPlan.contains("ShuffledHashJoin"),
         s"over-threshold batch must demote the probe join to a " +
           s"shuffle-hash join:\n$demotedPlan")
-      spark.conf.set("graft.eagerRelease", "true")
-      val demoted = Dedup.exactCrossDupIndexed(spark, idx, probe)
-      assert(demoted.as[(Long, Long, Long)].collect().toSet == want,
-        "shuffle fallback must produce the identical spans")
-    } finally {
-      spark.conf.unset("graft.exactIndexedBroadcastMaxChars")
-      spark.conf.set("graft.eagerRelease", "true")
-    }
+    } finally spark.conf.set("graft.eagerRelease", "true")
+    val demoted = demotedProbe()
+    assert(demoted.as[(Long, Long, Long)].collect().toSet == want,
+      "shuffle fallback must produce the identical spans")
   }
 }

@@ -151,7 +151,7 @@ class LayoutSpec extends TestBase {
     val zc = Seq("l_partkey", "l_suppkey")
     val li = Tables(spark, sf("sf0.01"), "lineitem")
     Layout.zorderWrite(li, zc, s"$dir/z", 16)
-    Layout.linearWrite(li, zc, s"$dir/lin", 16)
+    LayoutSpec.linearWrite(li, zc, s"$dir/lin", 16)
     val zr = Layout.fileRanges(spark, s"$dir/z", zc)
     val lr = Layout.fileRanges(spark, s"$dir/lin", zc)
     // trailing-column predicate: linear layout cannot prune at all (every
@@ -460,7 +460,7 @@ class LayoutSpec extends TestBase {
     val back = spark.read.parquet(dir)
     assert(back.count() == li.count())
     // withZValue on the date dim alone is monotone in the date
-    val z = Layout.withZValue(li.select("d").distinct(), Seq("d"), 8)
+    val z = LayoutSpec.withZValue(li.select("d").distinct(), Seq("d"), 8)
       .orderBy("d").select("_z").as[Long].collect()
     assert(z.toSeq == z.sorted.toSeq, "date rank must be monotone in the date")
     // a one-quarter date box prunes most files (dates span ~7 years);
@@ -518,13 +518,38 @@ class LayoutSpec extends TestBase {
 
   test("withZValue: degenerate and all-null dimensions rank constant 0") {
     val df = Seq((1L, 7L), (2L, 7L), (3L, 7L)).toDF("a", "b")
-    val z = Layout.withZValue(df, Seq("a", "b"), 4)
+    val z = LayoutSpec.withZValue(df, Seq("a", "b"), 4)
     // b is constant -> contributes 0 bits; z is monotone in a alone
     val got = z.orderBy("a").select("_z").as[Long].collect()
     assert(got.toSeq == got.sorted.toSeq && got.distinct.length == 3)
     val nulls = Seq((Some(1L), Option.empty[Long]), (Some(2L), None))
       .toDF("a", "b")
-    val zn = Layout.withZValue(nulls, Seq("a", "b"), 4)
+    val zn = LayoutSpec.withZValue(nulls, Seq("a", "b"), 4)
     assert(zn.select("_z").as[Long].collect().forall(_ >= 0L))
   }
+}
+
+/** Spec-side layout references: the Z-value column alone and the linear
+  * baseline the curve layouts are measured against. */
+object LayoutSpec {
+  import org.apache.spark.sql.DataFrame
+
+  /** `df` plus a `_z` Z-value column over `zcols` (ints, floats and
+    * timestamps cast to double; DATE columns are converted to
+    * days-since-epoch internally; hash strings to a numeric key first),
+    * ranked with the scaling `Layout.zorderWrite` persists. */
+  def withZValue(df: DataFrame, zcols: Seq[String], bits: Int = 16): DataFrame = {
+    val ranks = Layout.computeScaling(df, zcols)
+      .map { case (c, mn, mx) => Layout.scaledRank(Layout.numKey(df, c), mn, mx, bits) }
+    df.withColumn("_z", Layout.zValue(ranks, bits))
+  }
+
+  /** Baseline for comparison: the same table linearly sorted by
+    * `sortCols` into `files` files (perfect pruning on the leading
+    * column, none on the rest). */
+  def linearWrite(df: DataFrame, sortCols: Seq[String], outDir: String,
+      files: Int): Unit =
+    df.repartitionByRange(files, sortCols.map(col): _*)
+      .sortWithinPartitions(sortCols.map(col): _*)
+      .write.mode("overwrite").parquet(outDir)
 }

@@ -335,8 +335,7 @@ class PlanShapeSpec extends TestBase {
     // the rows read back carry the Z-value the write ranked them by
     val zDir = p.substring(scanAt).takeWhile(c => c != ']' && c != ',')
     val zc = Seq("l_partkey", "l_suppkey")
-    val ranges = graft.operators.Layout
-      .withZValue(spark.read.parquet(zDir), zc)
+    val ranges = LayoutSpec.withZValue(spark.read.parquet(zDir), zc)
       .groupBy(input_file_name().as("f"))
       .agg(min(col("_z")).as("lo"), max(col("_z")).as("hi"))
       .orderBy(col("lo")).collect().map(r => (r.getLong(1), r.getLong(2)))

@@ -2,7 +2,7 @@ package graft
 
 import graft.streaming.Streams
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import scala.jdk.CollectionConverters._
 
 /** t1 smoke for the Structured Streaming surface (SURVEY §5.1): every
   * streaming plan runs end-to-end (file source → availableNow → memory
@@ -19,6 +19,19 @@ class StreamingSpec extends TestBase {
     dir.toString
   }
   private lazy val batchEvents = Tables(spark, sf(), "events")
+
+  /** Run a streaming plan to completion over the existing files and return
+    * the final result as a batch DataFrame (availableNow trigger → memory
+    * sink, append mode). */
+  private def runToCompletion(streamed: org.apache.spark.sql.DataFrame,
+      name: String): org.apache.spark.sql.DataFrame = {
+    val q = streamed.writeStream
+      .format("memory").queryName(name).outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    spark.table(name)
+  }
 
   /** Final watermark with slack: append-mode streams only emit windows the
     * watermark has closed, so the batch side is filtered to windows whose
@@ -40,9 +53,8 @@ class StreamingSpec extends TestBase {
   }
 
   test("tumbling window stream == batch twin (finalized windows)") {
-    val streamed = Streams.runToCompletion(spark,
-      Streams.tumblingCounts(Streams.eventsStream(spark, eventsPath)),
-      "t_tumbling")
+    val streamed = runToCompletion(
+      Streams.tumblingCounts(Streams.eventsStream(spark, eventsPath)), "t_tumbling")
     val batch = batchEvents
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 6).as("v"))
@@ -52,9 +64,8 @@ class StreamingSpec extends TestBase {
   }
 
   test("sliding window stream == batch twin (finalized windows)") {
-    val streamed = Streams.runToCompletion(spark,
-      Streams.slidingCounts(Streams.eventsStream(spark, eventsPath)),
-      "t_sliding")
+    val streamed = runToCompletion(
+      Streams.slidingCounts(Streams.eventsStream(spark, eventsPath)), "t_sliding")
     val batch = batchEvents
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
@@ -64,9 +75,8 @@ class StreamingSpec extends TestBase {
   }
 
   test("session window stream == batch twin (finalized sessions)") {
-    val streamed = Streams.runToCompletion(spark,
-      Streams.sessionCounts(Streams.eventsStream(spark, eventsPath)),
-      "t_sessions")
+    val streamed = runToCompletion(
+      Streams.sessionCounts(Streams.eventsStream(spark, eventsPath)), "t_sessions")
     val batch = batchEvents
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
@@ -113,30 +123,33 @@ class StreamingSpec extends TestBase {
     } finally q.stop()
   }
 
-  test("stream-stream interval join matches the batch join") {
-    val streamed = Streams.runToCompletion(spark,
-      Streams.clickPurchaseJoin(Streams.eventsStream(spark, eventsPath)),
-      "t_ssjoin")
-    val clicks = batchEvents.where(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-    val purchases = batchEvents.where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user_id"), col("ts").as("purchase_ts"), col("value"))
-    val batch = clicks.join(purchases,
-      col("user_id") === col("p_user_id") &&
-        col("purchase_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
-        col("purchase_ts") <= col("click_ts"))
-      .select(col("click_id"), col("user_id"), col("purchase_ts"), col("value"))
-    assert(streamed.count() > 0)
-    // inner stream-stream join emits matches as both sides arrive; over a
-    // bounded input every batch match must be emitted exactly once
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  test("stateful dedup keeps all distinct event ids") {
+    val streamed = runToCompletion(
+      Streams.dedupStream(Streams.eventsStream(spark, eventsPath)), "t_dedup")
+    assert(streamed.count() == batchEvents.dropDuplicates("event_id", "ts").count())
   }
 
-  test("stateful dedup keeps all distinct event ids") {
-    val streamed = Streams.runToCompletion(spark,
-      Streams.dedupStream(Streams.eventsStream(spark, eventsPath)),
-      "t_dedup")
-    assert(streamed.count() == batchEvents.dropDuplicates("event_id", "ts").count())
+  test("dedupStream over an int64-nanos events file: exact re-delivery collapses") {
+    // eventsStream normalizes nanos-as-long ts to TimestampType; the
+    // exact re-delivery collapses while the +1 min jittered one is a new
+    // (event_id, ts) key
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-nanos")
+    val base = 1700000000L * 1000000000L // epoch nanos
+    val m = 60L * 1000000000L
+    Seq(
+      (1L, base, 10L, "click", 1.0, "{}"),
+      (1L, base + m, 10L, "click", 1.0, "{}"),      // ts jitter +1min
+      (2L, base + 2 * m, 11L, "view", 2.0, "{}"),
+      (2L, base + 2 * m, 11L, "view", 2.0, "{}"),   // exact re-delivery
+      (3L, base + 3 * m, 12L, "click", 3.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(dir.resolve("events.parquet").toString)
+    val got = runToCompletion(Streams.dedupStream(Streams.eventsStream(spark,
+      dir.resolve("events.parquet").toString)), "t_nanos")
+    assert(got.count() == 4)
+    assert(got.agg(min(col("ts"))).head().getTimestamp(0) ==
+      new java.sql.Timestamp(base / 1000000L))
   }
 
   test("streaming writes to a parquet file sink with checkpointing") {
@@ -150,63 +163,6 @@ class StreamingSpec extends TestBase {
     q.awaitTermination()
     val back = spark.read.parquet(outDir.resolve("data").toString)
     assert(back.count() == batchEvents.dropDuplicates("event_id", "ts").count())
-  }
-
-  test("mapGroupsWithState running totals converge to the batch aggregate") {
-    val streamed = Streams.runToCompletion(spark,
-      Streams.runningUserTotals(Streams.eventsStream(spark, eventsPath)).toDF(),
-      "t_state", OutputMode.Update())
-    // final state per user (last update) must equal the batch group-by
-    val finalState = streamed.groupBy("user_id")
-      .agg(max(col("n")).as("n"))
-    val batch = batchEvents.groupBy("user_id").agg(count(lit(1)).as("n"))
-    assert(finalState.exceptAll(batch).isEmpty && batch.exceptAll(finalState).isEmpty)
-  }
-
-  test("dropDuplicatesWithinWatermark collapses re-deliveries with jittered timestamps") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-jitter")
-    val base = 1700000000L * 1000000000L // epoch nanos
-    val m = 60L * 1000000000L
-    Seq(
-      (1L, base, 10L, "click", 1.0, "{}"),
-      (1L, base + m, 10L, "click", 1.0, "{}"),      // re-delivery, ts jitter +1min
-      (2L, base + 2 * m, 11L, "view", 2.0, "{}"),
-      (2L, base + 2 * m, 11L, "view", 2.0, "{}"),   // exact re-delivery
-      (3L, base + 3 * m, 12L, "click", 3.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.parquet(dir.resolve("events.parquet").toString)
-    val got = Streams.runToCompletion(spark,
-      Streams.dedupJittered(Streams.eventsStream(spark,
-        dir.resolve("events.parquet").toString)),
-      "t_jitter")
-    // 5 inputs, 3 distinct event_ids — the jittered duplicate collapses
-    // even though dropDuplicates("event_id", "ts") would keep it
-    assert(got.select("event_id").distinct().count() == 3)
-    assert(got.count() == 3)
-  }
-
-  test("stream-static join enriches every event, matches the batch join") {
-    // static dim derived from the batch side: user → cohort
-    val dim = batchEvents.select(col("user_id")).distinct()
-      .withColumn("cohort", concat(lit("c"), pmod(col("user_id"), lit(4))))
-    val streamed = Streams.runToCompletion(spark,
-      Streams.enrichWithStatic(Streams.eventsStream(spark, eventsPath), dim)
-        .select("event_id", "user_id", "cohort"),
-      "t_static_join")
-    val batch = batchEvents.join(dim, Seq("user_id"), "left")
-      .select("event_id", "user_id", "cohort")
-    assert(streamed.count() == batchEvents.count())
-    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
-  }
-
-  test("flatMapGroupsWithState deltas converge to the batch aggregate") {
-    val streamed = Streams.runToCompletion(spark,
-      Streams.userTotalDeltas(Streams.eventsStream(spark, eventsPath)).toDF(),
-      "t_deltas", OutputMode.Append())
-    val finalState = streamed.groupBy("user_id").agg(max(col("n")).as("n"))
-    val batch = batchEvents.groupBy("user_id").agg(count(lit(1)).as("n"))
-    assert(finalState.exceptAll(batch).isEmpty && batch.exceptAll(finalState).isEmpty)
   }
 
   /** Stage a dataframe as one flat parquet file in `dir` (the file-stream
@@ -270,74 +226,6 @@ class StreamingSpec extends TestBase {
     Layout.appendZOrderedKeyed(drop1, root, "batch=1", files = 2)
     assert(spark.read.parquet(root).count() == n,
       "replayed micro-batch must overwrite, not duplicate")
-  }
-
-  test("foreachBatch near-dedup stream: micro-batch union == one-shot batch operator") {
-    // Cross-only semantics make micro-batch boundaries invisible: each
-    // arriving doc is scored against the standing corpus independently, so
-    // the union over N micro-batches must equal one batch call on the
-    // union. Two file drops + maxFilesPerTrigger=1 force >= 2 micro-batches.
-    val corpus = Tables(spark, sf(), "documents").select(col("doc_id"), col("text"))
-    val arriving1 = corpus.where(col("doc_id") < 10)
-      .select((col("doc_id") + 1000).as("doc_id"),
-        concat(col("text"), lit(" extra")).as("text"))       // near-dups
-    val arriving2 = corpus.where(col("doc_id") >= 10 && col("doc_id") < 20)
-      .select((col("doc_id") + 2000).as("doc_id"),
-        upper(col("text")).as("text"))                       // disjoint shingles
-    // The file source lists FILES, not Spark output directories — stage
-    // each drop as a single flat parquet file (the eventsPath pattern).
-    val inDir = java.nio.file.Files.createTempDirectory("graft-neardup-in")
-    dropAsFile(arriving1, inDir, "b1.parquet")
-    dropAsFile(arriving2, inDir, "b2.parquet")
-    val out = java.nio.file.Files.createTempDirectory("graft-neardup-out")
-    val (matchDir, keepDir) =
-      (out.resolve("matches").toString, out.resolve("keeps").toString)
-
-    // The staged files carry only (doc_id, text); the library reader's
-    // wider document schema null-pads the absent columns, which the
-    // dedup path never touches.
-    val stream = Streams.documentsStream(spark, inDir.toString, maxFilesPerTrigger = 1)
-    val q = Streams.nearDupAgainstCorpus(stream, corpus, threshold = 0.5,
-      matchDir, keepDir, out.resolve("ckpt").toString)
-    q.awaitTermination()
-
-    val matches = spark.read.parquet(matchDir)
-    val keeps = spark.read.parquet(keepDir)
-    // Multi-micro-batch execution actually happened (else the equivalence
-    // claim is vacuous): every doc lands in matches or keeps tagged with
-    // its micro-batch, so the union must carry >= 2 distinct batch ids.
-    assert(matches.select("micro_batch")
-      .unionAll(keeps.select("micro_batch")).distinct().count() >= 2)
-    val oneShot = graft.operators.Dedup
-      .crossNearDup(corpus, arriving1.unionAll(arriving2), threshold = 0.5)
-    val streamedPairs = matches.select("batch_id", "corpus_id", "jaccard")
-    assert(streamedPairs.exceptAll(oneShot).isEmpty &&
-      oneShot.exceptAll(streamedPairs).isEmpty,
-      "per-micro-batch union must equal the one-shot batch result")
-    // keeps = exactly the arriving docs with no match ≥ threshold; the
-    // upper-cased drop (disjoint shingles) must survive in full.
-    val matchedIds = matches.select(col("batch_id")).distinct()
-      .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSet
-    val keptIds = keeps.select(col("doc_id"))
-      .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSet
-    val allIds = (0L until 10L).map(_ + 1000).toSet ++ (10L until 20L).map(_ + 2000)
-    assert((matchedIds & keptIds).isEmpty && (matchedIds | keptIds) == allIds)
-    assert((10L until 20L).map(_ + 2000).toSet.subsetOf(keptIds))
-
-    // The index-probing variant over the same drops must emit the same
-    // matches — the corpus side loaded from a prebuilt index instead of
-    // recomputed per micro-batch.
-    val idxDir = out.resolve("index").toString
-    graft.operators.Dedup.buildCrossNearDupIndex(corpus, idxDir)
-    val matchDir2 = out.resolve("matches2").toString
-    val stream2 = Streams.documentsStream(spark, inDir.toString, maxFilesPerTrigger = 1)
-    val q2 = Streams.nearDupAgainstIndex(stream2, idxDir, threshold = 0.5,
-      matchDir2, out.resolve("keeps2").toString, out.resolve("ckpt2").toString)
-    q2.awaitTermination()
-    val viaIndex = spark.read.parquet(matchDir2).select("batch_id", "corpus_id", "jaccard")
-    assert(viaIndex.exceptAll(streamedPairs).isEmpty &&
-      streamedPairs.exceptAll(viaIndex).isEmpty,
-      "index-probing stream must equal the corpus-recompute stream")
   }
 
   test("exactDedupIngest: arrival-order precedence; union == sequential batch computation") {
@@ -621,6 +509,65 @@ class StreamingSpec extends TestBase {
     assert(replayed == expected, "replaying every batch must be a fixpoint")
     assert(spark.read.parquet(s"$idxDir/shingle_keys")
       .select("doc_id").distinct().count() == indexed)
+  }
+
+  test("curationLoop's conf brackets stay on the stream's session, never the caller's") {
+    // withBatchParallelism (spark.sql.shuffle.partitions) and the
+    // graft.eagerRelease bracket set and restore conf on
+    // batch.sparkSession. That is safe only while that session is the
+    // stream's own clone: on the caller's session the set would race
+    // every other query sharing it.
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val caller = spark.newSession()
+    // distinct from any batch-sized parallelism the body picks (≤ 4 here)
+    caller.conf.set("spark.sql.shuffle.partitions", "7")
+    val corpus = Tables(spark, sf(), "documents").where(col("doc_id") < 20)
+      .select(col("doc_id"), col("text"))
+    val st = java.nio.file.Files.createTempDirectory("graft-conf-bracket")
+    val (idxDir, lblDir) = (st.resolve("index").toString, st.resolve("labels").toString)
+    Streams.seedCurationState(corpus, idxDir, lblDir, threshold = 0.8)
+    val inDir = java.nio.file.Files.createTempDirectory("graft-conf-bracket-in")
+    dropAsFile(corpus.where(col("doc_id") < 5)
+      .select((col("doc_id") + 1000).as("doc_id"),
+        concat(col("text"), lit(" extra")).as("text")), inDir, "b1.parquet")
+    def callerConf() = (caller.conf.get("spark.sql.shuffle.partitions"),
+      caller.conf.getOption("graft.eagerRelease"))
+    val before = callerConf()
+    // A stream's session clones the caller's listeners, so this one also
+    // hears every execution of the loop body, tagged with its session.
+    val seen = new java.util.concurrent.LinkedBlockingQueue[(String, AnyRef)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.put(qe.logical.toString -> qe.sparkSession)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    caller.listenerManager.register(listener)
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val during = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[String])]()
+    val poll = new Thread(() =>
+      while (running.get()) { during.add(callerConf()); Thread.sleep(2) })
+    val body = try {
+      poll.start()
+      try Streams.curationLoop(
+          Streams.documentsStream(caller, inDir.toString),
+          idxDir, lblDir, threshold = 0.8, st.resolve("ckpt").toString)
+        .awaitTermination()
+      finally { running.set(false); poll.join() }
+      // listener events arrive in order: once the marker query is seen,
+      // every execution of the loop body has been delivered
+      caller.range(1).select(lit(1).as("conf_bracket_marker")).collect()
+      Iterator.continually(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile(e => e != null && !e._1.contains("conf_bracket_marker"))
+        .filter(_._1.contains(s"$lblDir/edges")).map(_._2).toVector
+    } finally caller.listenerManager.unregister(listener)
+    assert(body.nonEmpty, "the loop body's edge write was not observed")
+    assert(body.forall(s => (s ne caller) && (s ne spark)),
+      "foreachBatch must hand the body the stream's own session")
+    assert(during.size() > 0)
+    assert(during.asScala.forall(_ == before),
+      s"the caller's conf moved during the run: ${during.asScala.toSet - before}")
+    assert(callerConf() == before && before == (("7", None)))
   }
 
   test("curation loop takedown: purged state == seeded-and-grown-without; registry refuses re-ingest") {
@@ -959,81 +906,6 @@ class StreamingSpec extends TestBase {
     assert(replayed == expected, "replaying every batch must be a fixpoint")
     assert(Multimodal.standingDHashes(spark, idxDir).count() ==
       standing.count() + b1.count() + b2.count())
-  }
-
-  test("cdcStream: two-batch emissions == SnapshotDiff between the same as-of points") {
-    import graft.operators.SnapshotDiff
-    import spark.implicits._
-    val bounds = SnapshotDiff.defaultBounds(batchEvents).head()
-    val (t0, t1) = (bounds.getLong(0), bounds.getLong(1))
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-stream")
-    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-    dropAsFile(batchEvents.where(unix_micros(col("ts")) < t0).select(cols.map(col): _*),
-      dir, "b1.parquet")
-    val schema = batchEvents.select(cols.map(col): _*).schema
-    val q = Streams.cdcStream(
-        spark.readStream.schema(schema).parquet(dir.toString))
-      .writeStream.format("memory").queryName("t_cdc").outputMode("append")
-      .start()
-    try {
-      q.processAllAvailable()
-      val b1 = spark.table("t_cdc").collect().toSeq
-      // batch 1 cold-starts every pre-t0 key as an insert
-      assert(b1.forall(_.getString(1) == "insert"))
-      assert(b1.size == batchEvents.where(unix_micros(col("ts")) < t0)
-        .select("user_id").distinct().count())
-
-      dropAsFile(batchEvents.where(unix_micros(col("ts")) >= t0).select(cols.map(col): _*),
-        dir, "b2.parquet")
-      q.processAllAvailable()
-      val b2 = spark.table("t_cdc").collect().toSeq.diff(b1)
-      // keys the second batch touched report exactly the batch-operator
-      // classification; untouched keys are its `unchanged` rows (silent
-      // here by framework contract) — so compare the non-unchanged sets
-      val streamed = b2.filter(_.getString(1) != "unchanged")
-        .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2), r.getString(3))))
-        .toMap
-      val batch = SnapshotDiff.diff(
-          batchEvents.crossJoin(broadcast(SnapshotDiff.defaultBounds(batchEvents))),
-          col("user_id"), col("t0"), col("t1"))
-        .where(col("change").isin("insert", "update"))
-        .collect()
-        .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2), r.getString(3))))
-        .toMap
-      assert(streamed == batch,
-        s"streamed CDC must equal the batch operator: ${streamed.size} vs ${batch.size}")
-    } finally q.stop()
-  }
-
-  test("cdcStream: tombstones delete; replayed stale events cannot regress state") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cdc-tomb")
-    def write(name: String, rows: Seq[(Long, Long, Long, String, Double)]): Unit =
-      dropAsFile(rows.toDF("event_id", "tsus", "user_id", "event_type", "value")
-        .select(col("event_id"), timestamp_micros(col("tsus")).as("ts"),
-          col("user_id"), col("event_type"), col("value")), dir, name)
-    write("b1.parquet", Seq((1L, 1000000L, 7L, "click", 1.0)))
-    val schema = spark.read.parquet(dir.resolve("b1.parquet").toString).schema
-    val q = Streams.cdcStream(
-        spark.readStream.schema(schema).parquet(dir.toString),
-        tombstone = Some("gone"))
-      .writeStream.format("memory").queryName("t_cdc_tomb").outputMode("append")
-      .start()
-    try {
-      q.processAllAvailable()
-      write("b2.parquet", Seq((2L, 2000000L, 7L, "gone", 0.0)))
-      q.processAllAvailable()
-      val rows = spark.table("t_cdc_tomb").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3))).toSeq
-      assert(rows.contains((7L, "insert", null, "click")))
-      assert(rows.contains((7L, "delete", "click", null)), s"got $rows")
-      // replay an OLDER event: max-merged state keeps the tombstone, and a
-      // dead-before/dead-after key emits nothing
-      write("b3.parquet", Seq((1L, 1000000L, 7L, "click", 1.0)))
-      q.processAllAvailable()
-      assert(spark.table("t_cdc_tomb").count() == 2,
-        "a stale replay must not resurrect a tombstoned key")
-    } finally q.stop()
   }
 
   test("releaseMonitor: per-batch funnel == batch kernel against the " +

@@ -61,17 +61,24 @@ object Descriptors {
       s""""Shared loci":$sharedLoci,"Format":"$format"}"""
 
   /** Write each descriptor row as its own exactly-named file with
-    * `"%d\t%s\n"` framing. Distributed: each task writes its partition's
-    * files (same discipline as `ChunkSink`) — the reference's driver loop
+    * `"%d\t%s\n"` framing, under `outDir`. */
+  def writeKeyed(df: DataFrame, outDir: String, jsonCol: String = "json"): Unit =
+    writeRouted(df.select(col("key"), col(jsonCol).as("json"), col("file"),
+      lit(outDir).as("dir")))
+
+  /** `writeKeyed` for rows `(key, json, file, dir)` that each name their
+    * own directory, so descriptor sets bound for several directories go
+    * out in one job. Distributed: each task writes its partition's files
+    * (same discipline as `ChunkSink`) — the reference's driver loop
     * (`LASERInputValidator.java:168-182`) serializes 1 file per chunk
     * through one process, which stops scaling at the 10⁶–10⁷ chunk counts
     * the chunking design note targets. */
-  def writeKeyed(df: DataFrame, outDir: String, jsonCol: String = "json"): Unit = {
+  def writeRouted(df: DataFrame): Unit = {
     // session Hadoop conf, not executor-default (see HadoopConf)
     val hconf = graft.sources.HadoopConf.of(df)
-    df.select(col("key"), col(jsonCol), col("file"))
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(hconf.value)
+    // the plan's own RDD: rows go to the tasks without a deserializer
+    df.select(col("key"), col("json"), col("file"), col("dir")).queryExecution.toRdd
+      .foreachPartition { rows =>
         // Attempt-unique temp + rename (ChunkSink's commit discipline):
         // speculative/retried attempts of the same task must never race a
         // direct create(overwrite) on the exact name — a reader could see a
@@ -83,12 +90,15 @@ object Descriptors {
           .map(_.taskAttemptId()).getOrElse(0L)
         var files, bytes = 0L
         rows.foreach { r =>
-          val target = new org.apache.hadoop.fs.Path(outDir, r.getString(2))
-          val tmp = new org.apache.hadoop.fs.Path(outDir,
-            s".${r.getString(2)}.$attempt.tmp")
+          val (key, json, file) =
+            (r.getLong(0), r.getUTF8String(1).toString, r.getUTF8String(2).toString)
+          val dir = new org.apache.hadoop.fs.Path(r.getUTF8String(3).toString)
+          val fs = dir.getFileSystem(hconf.value)
+          val target = new org.apache.hadoop.fs.Path(dir, file)
+          val tmp = new org.apache.hadoop.fs.Path(dir, s".$file.$attempt.tmp")
           try {
             val out = fs.create(tmp, true)
-            val content = s"${r.getLong(0)}\t${r.getString(1)}\n".getBytes("UTF-8")
+            val content = s"$key\t$json\n".getBytes("UTF-8")
             try out.write(content)
             finally out.close()
             files += 1

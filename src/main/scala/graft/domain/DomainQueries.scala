@@ -63,9 +63,8 @@ object DomainQueries {
          | FROM site s""".stripMargin
     ) { (s, _) =>
       import s.implicits._
-      val panel = PanelReader.broadcast(Lines.of(s, Fixtures.slPanelLines))
-      val site = try SharedLoci.site(Lines.of(s, Fixtures.slSiteLines), panel)
-        finally panel.destroy()
+      val site = PanelReader.withLookup(Lines.of(s, Fixtures.slPanelLines))(panel =>
+        Lines.fold(Lines.of(s, Fixtures.slSiteLines))(SharedLoci.site(_, panel.value))(_ ++ _))
       Seq((site.total, site.shared)).toDF("total", "shared")
     },
 

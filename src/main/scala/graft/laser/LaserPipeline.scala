@@ -1,9 +1,10 @@
 package graft.laser
 
-import graft.domain.{ErrorSummary, Errors, ValidationError}
+import graft.domain.{Descriptors, ErrorSummary, Errors, ValidationError}
 import graft.operators.{ChunkSink, SharedLoci}
 import graft.sources._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 
 /** The LASER input-check workflow (`LASERInputValidator.run`,
   * `LASERInputCheckMapper.java:272-301`): validate groups → seq → site
@@ -40,16 +41,24 @@ object LaserPipeline {
     def ok: Boolean = firstError.isEmpty && gateMessages.isEmpty
   }
 
+  /** One partition's fold, tagged by the input it read. */
+  private sealed trait Part
+  private final case class GroupsPart(s: GroupsReader.Summary) extends Part
+  private final case class SitePart(s: SharedLoci.Scan) extends Part
+  private final case class SeqPart(s: SeqReader.Summary) extends Part
+
   /** Core shared by the file pipeline and the inline-fixture queries: all
     * inputs already as line sets. `chunksOut = None` skips the chunk write.
     *
-    * One map-only Spark job per file, no shuffle (the reference's
-    * `setNumReduceTasks(0)` input check, `LASERInputCheckMapper.java:121-162`):
-    * groups (R5, sample set), panel lookup, site (header, TOTAL, SHARED) and
-    * seq, whose one pass checks every row, collects individuals and locus
-    * counts and stages the chunks. The driver merges the bounded summaries,
-    * adds the R20 cross-check, and promotes the chunks only when no error
-    * was found. */
+    * One map-only Spark job, no shuffle (the reference's
+    * `setNumReduceTasks(0)` input check, `LASERInputCheckMapper.java:121-162`),
+    * plus one to build the panel lookup when it is not cached
+    * (`PanelReader.withLookup`). The job folds every partition of every
+    * input, each tagged by its input: groups (R5, sample set), site
+    * (header, TOTAL, SHARED) and seq, whose pass checks every row, records
+    * each individual's rows and the locus counts and stages the chunks. The
+    * driver merges the bounded summaries, adds the group-membership and R20
+    * cross-checks, and promotes the chunks only when no error was found. */
   def run(
       seqLines: DataFrame,
       siteLines: DataFrame,
@@ -61,18 +70,24 @@ object LaserPipeline {
 
     val sc = seqLines.sparkSession.sparkContext
     val conf = sc.hadoopConfiguration
-    val groups = groupsLines.map(GroupsReader.summarize)
-    val samples = groups.map(g => sc.broadcast(g.samples))
-    val panel = PanelReader.broadcast(panelLines)
     val staging = chunksOut.map(ChunkSink.staging)
     try {
-      val site = SharedLoci.site(siteLines, panel)
-      val seq = ChunkSink.scan(seqLines, staging, chunkSize)(
-        rows => SeqReader.summarize(rows, samples.map(_.value)))
+      val parts = PanelReader.withLookup(panelLines) { panel =>
+        sc.union(groupsLines.toSeq.map(
+            Lines.folds[Part](_)(rows => GroupsPart(GroupsReader.summarize(rows)))) ++ Seq(
+          Lines.folds[Part](siteLines)(rows => SitePart(SharedLoci.site(rows, panel.value))),
+          ChunkSink.scan[Part](seqLines, staging, chunkSize)(rows =>
+            SeqPart(SeqReader.summarize(rows))))).collect()
+      }
+      val groups = groupsLines.map(_ => parts.collect { case GroupsPart(g) => g }
+        .foldLeft(GroupsReader.summarize(Iterator.empty))(_ ++ _))
+      val site = parts.collect { case SitePart(x) => x }.foldLeft(SharedLoci.Scan.empty)(_ ++ _)
+      val seq = parts.collectFirst { case SeqPart(x) => x }
+        .getOrElse(SeqReader.summarize(Iterator.empty))
 
       val siteErrs = site.header.toSeq.flatMap(h => SiteReader.validateHeader(h._2))
-      val rowErrs = ErrorSummary.merge(
-        groups.fold(Map.empty: ErrorSummary.Partial)(_.errors), seq.findings)
+      val rowErrs = ErrorSummary.merge(groups.fold(Map.empty: ErrorSummary.Partial)(_.errors),
+        seq.findings(groups.map(_.samples)))
       val fileSum = ErrorSummary.fromPartial(siteErrs.foldLeft(rowErrs)(ErrorSummary.add(_, _)))
       // R20: site row count must equal the seq locus count — only when the
       // site file itself validated (the reference aborts the site scan on a
@@ -91,30 +106,25 @@ object LaserPipeline {
       }
       Result(all.firstError, all.samples, all.counts,
         seq.individuals.size.toLong, site.total, site.shared, chunks)
-    } finally {
-      staging.foreach(ChunkSink.discard(_, conf))
-      panel.destroy()
-      samples.foreach(_.destroy())
-    }
+    } finally staging.foreach(ChunkSink.discard(_, conf))
   }
 
   /** Post-gate descriptor emission (`LASERInputValidator.java:157-183`):
     * ONE reference-PCA descriptor plus one study-PCA descriptor per chunk,
     * written only for a fully successful run — the same position in the
     * workflow as the reference (after the gates, before the seq delete).
-    * Distributed via `Descriptors.writeKeyed` (exact names). */
+    * Both sets go out in one `Descriptors.writeRouted` job (exact names),
+    * each row carrying its directory. */
   def emitJobs(spark: SparkSession, result: Result, chunksDir: String,
       siteFile: String, reference: String, referencePc: String,
       dim: Int, dimHigh: Int, referenceJobDir: String, studyJobDir: String): Boolean = {
     if (!result.ok) false
     else {
-      graft.domain.Descriptors.writeKeyed(
-        graft.domain.Descriptors.referencePca(spark, reference, referencePc, dim),
-        referenceJobDir)
-      graft.domain.Descriptors.writeKeyed(
-        graft.domain.Descriptors.laserStudyPca(spark, result.chunks, chunksDir,
-          siteFile, reference, referencePc, dim, dimHigh),
-        studyJobDir)
+      Descriptors.writeRouted(
+        Descriptors.referencePca(spark, reference, referencePc, dim)
+          .withColumn("dir", lit(referenceJobDir))
+          .unionByName(Descriptors.laserStudyPca(spark, result.chunks, chunksDir,
+            siteFile, reference, referencePc, dim, dimHigh).withColumn("dir", lit(studyJobDir))))
       true
     }
   }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.sources.{HadoopConf, Lines}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.io.{BufferedWriter, IOException, OutputStreamWriter}
@@ -40,13 +41,15 @@ object ChunkSink {
     new Path(out.getParent, s".${out.getName}.staging-${java.util.UUID.randomUUID()}").toString
   }
 
-  /** One map-only pass over `lines` in idx order: every row goes to
-    * `visit`, and into `<idx / chunkSize>.chunk.seq.gz` under `staging`
-    * when one is given. Fails if an idx is not the next one (0, 1, 2, …).
-    * Returns what `visit` returned; the bytes written count as the task's
+  /** One pass over `lines` in idx order: every row goes to `visit`, and
+    * into `<idx / chunkSize>.chunk.seq.gz` under `staging` when one is
+    * given. Fails if an idx is not the next one (0, 1, 2, …). Builds no
+    * job: the result holds what `visit` returned, in one partition (none
+    * when `lines` has no partition), for the caller to collect with the
+    * submission's other folds. The bytes written count as the task's
     * output metrics. */
   def scan[A: ClassTag](lines: DataFrame, staging: Option[String], chunkSize: Int)(
-      visit: Iterator[(Long, String)] => A): A = {
+      visit: Iterator[(Long, String)] => A): RDD[A] = {
     // session Hadoop conf, not executor-default (see HadoopConf)
     val hconf = HadoopConf.of(lines)
     Lines.rows(lines).coalesce(1).mapPartitions { it =>
@@ -83,7 +86,7 @@ object ChunkSink {
       } finally if (writer != null) { // a failed pass: the driver discards the staging
         try writer.close() catch { case _: IOException => () }
       }
-    }.collect().headOption.getOrElse(visit(Iterator.empty))
+    }
   }
 
   /** Moves the staged chunk files to their exact names under `outDir` and

@@ -1,8 +1,6 @@
 package graft.operators
 
-import graft.sources.{Lines, PanelReader, SiteReader}
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.DataFrame
+import graft.sources.{PanelReader, SiteReader}
 
 /** THE reference query (R15+R16+R17): count study loci and how many match
   * the reference panel on `chr:pos` with **order-sensitive,
@@ -11,9 +9,9 @@ import org.apache.spark.sql.DataFrame
   * duplicate logic `TRACEInputCheckMapper.java:221-255`).
   *
   * Shape: the reference's per-task heap HashMap. The panel lookup is
-  * broadcast (`PanelReader.broadcast`) and every study row probes it inside
-  * the same map-only pass that reads the file's header — no join, no
-  * exchange, one Spark job per study file set.
+  * broadcast (`PanelReader.withLookup`) and every study row probes it inside
+  * the submission's one map-only pass, which also reads the file's header
+  * and folds every other input of the submission — no join, no exchange.
   */
 object SharedLoci {
 
@@ -53,8 +51,7 @@ object SharedLoci {
     Scan(header, total, shared)
   }
 
-  /** A LASER site file — header at idx 0, one locus per later row — in one
-    * map-only pass. */
-  def site(lines: DataFrame, panel: Broadcast[PanelReader.Lookup]): Scan =
-    Lines.fold(lines)(scan(_, panel.value)(_._1 == 0, _._1 > 0))(_ ++ _)
+  /** Rows of a LASER site file: header at idx 0, one locus per later row. */
+  def site(rows: Iterator[(Long, String)], panel: PanelReader.Lookup): Scan =
+    scan(rows, panel)(_._1 == 0, _._1 > 0)
 }

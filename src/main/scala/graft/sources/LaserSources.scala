@@ -1,15 +1,19 @@
 package graft.sources
 
 import graft.domain.{ErrorSummary, ValidationError}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.util.Try
 
 /** Readers + row rules for the LASER input formats (`SURVEY.md §1.2`).
   *
-  * Each file is validated in one map-only pass that folds its rows into a
-  * bounded summary (`summarize`; the pipelines merge the per-partition
-  * summaries on the driver). The reference's row-at-a-time
+  * Each reader folds one partition's rows into a bounded summary
+  * (`summarize`); a pipeline runs the folds of every input of a submission
+  * in one map-only job and merges the per-partition summaries on the
+  * driver. The reference's row-at-a-time
   * short-circuiting (`LASERInputCheckMapper.java:121-144`) is reproduced at
   * the *reporting* layer by min-ordinal precedence (`Errors.firstError`).
   */
@@ -43,8 +47,23 @@ object SeqReader {
         .as("loci"))
   }
 
-  /** Seq tokens of one line, exactly as `split(line, '[\t ]')` yields them. */
-  def tokens(line: String): Array[String] = line.split(sep, -1)
+  /** The column count of a seq line and its second column (the
+    * individual; null below two columns), exactly as `split(line, '[\t ]')`
+    * yields them, without building the 3-per-locus columns. */
+  def columns(line: String): (Int, String) = {
+    var n = 1
+    var start, i = 0
+    var second: String = null
+    while (i < line.length) {
+      val c = line.charAt(i)
+      if (c == '\t' || c == ' ') {
+        n += 1
+        if (n == 2) start = i + 1 else if (n == 3) second = line.substring(start, i)
+      }
+      i += 1
+    }
+    (n, if (n == 2) line.substring(start) else second)
+  }
 
   /** R12/R13 for a row at `idx` with `n` tokens: its arity error, or its
     * locus count.
@@ -58,45 +77,61 @@ object SeqReader {
       Left(ValidationError("SEQ_FILE_MISSING_COLUMNS", line = idx, detail = s"$n columns"))
     else Right((n - 2) / 3L)
 
-  /** What one pass over seq rows yields: bounded per-code findings, the
-    * distinct individuals (INDIVIDUALS, `:146,176`), the distinct locus
-    * counts of the arity-valid rows and the row count. */
-  final case class Summary(errors: ErrorSummary.Partial, individuals: Set[String],
+  /** One individual's arity-valid rows: how many, and the ≤ `sampleK`
+    * smallest of their idx values. */
+  final case class Rows(count: Long, firstIdx: Vector[Long])
+
+  /** What one pass over seq rows yields: bounded per-code findings, every
+    * individual (INDIVIDUALS, `:146,176`) with its arity-valid rows, the
+    * distinct locus counts of the arity-valid rows and the row count. */
+  final case class Summary(errors: ErrorSummary.Partial, individuals: Map[String, Rows],
       loci: Set[Long], rows: Long) {
-    /** Row findings plus R14, which only the whole file decides: more than
-      * one distinct locus count → SEQ_FILE_INCONSISTENT_COLUMNS (`:170-174`). */
-    def findings: ErrorSummary.Partial =
-      if (loci.size <= 1) errors
-      else ErrorSummary.add(errors, ValidationError("SEQ_FILE_INCONSISTENT_COLUMNS",
+    /** Row findings plus the rules only the whole submission decides:
+      * - more than one distinct locus count → SEQ_FILE_INCONSISTENT_COLUMNS
+      *   (`:170-174`);
+      * - each arity-valid row of an individual ∉ `groups` →
+      *   SEQ_SAMPLE_NOT_IN_GROUP (`:138-144`), counted in full, sampled
+      *   at its smallest lines. A failed row aborts the reference's scan
+      *   before the membership check (`:124-144`), so only arity-valid
+      *   rows count. */
+    def findings(groups: Option[Set[String]]): ErrorSummary.Partial = {
+      val missing = for {
+        g <- groups.toSeq
+        (id, r) <- individuals if r.count > 0 && !g.contains(id)
+      } yield Map("SEQ_SAMPLE_NOT_IN_GROUP" -> ErrorSummary.Bounded(r.count,
+        r.firstIdx.map(i => ValidationError("SEQ_SAMPLE_NOT_IN_GROUP", line = i, detail = id))))
+      val rowErrs = missing.foldLeft(errors)(ErrorSummary.merge(_, _))
+      if (loci.size <= 1) rowErrs
+      else ErrorSummary.add(rowErrs, ValidationError("SEQ_FILE_INCONSISTENT_COLUMNS",
         detail = s"${loci.size} distinct locus counts"))
+    }
     /** Locus-count consensus: TreeSet-min semantics
       * (`LASERInputCheckMapper.java:254-258` uses `.first()`). */
     def minLoci: Long = loci.minOption.getOrElse(0L)
   }
 
-  /** The seq rules (R12–R14) over one partition's rows. Locus counts and
-    * group membership (individual ∉ `groups` → SEQ_SAMPLE_NOT_IN_GROUP,
-    * `:138-144`) only count rows that passed arity: a failed row aborts the
-    * reference's scan before either (`:124-144`). */
-  def summarize(rows: Iterator[(Long, String)], groups: Option[Set[String]]): Summary = {
+  /** The seq row rules (R12, R13) over one partition's rows, in ascending
+    * idx order (the order of the chunking scan), recording each
+    * individual's arity-valid rows for the membership check. */
+  def summarize(rows: Iterator[(Long, String)]): Summary = {
     var errors: ErrorSummary.Partial = Map.empty
-    val individuals = scala.collection.mutable.HashSet.empty[String]
+    val individuals = scala.collection.mutable.HashMap.empty[String, Rows]
     val loci = scala.collection.mutable.HashSet.empty[Long]
     var n = 0L
     rows.foreach { case (idx, line) =>
-      val t = tokens(line)
-      if (t.length >= 2) individuals += t(1)
-      arity(idx, t.length) match {
+      val (cols, id) = columns(line)
+      if (cols >= 2 && !individuals.contains(id)) individuals(id) = Rows(0L, Vector.empty)
+      arity(idx, cols) match {
         case Left(e) => errors = ErrorSummary.add(errors, e)
         case Right(k) =>
           loci += k
-          if (groups.exists(g => !g.contains(t(1))))
-            errors = ErrorSummary.add(errors,
-              ValidationError("SEQ_SAMPLE_NOT_IN_GROUP", line = idx, detail = t(1)))
+          val r = individuals(id)
+          individuals(id) = Rows(r.count + 1,
+            if (r.firstIdx.size < ErrorSummary.sampleK) r.firstIdx :+ idx else r.firstIdx)
       }
       n += 1
     }
-    Summary(errors, individuals.toSet, loci.toSet, n)
+    Summary(errors, individuals.toMap, loci.toSet, n)
   }
 }
 
@@ -146,8 +181,8 @@ object GroupsReader {
       Summary(ErrorSummary.merge(errors, o.errors), samples ++ o.samples)
   }
 
-  /** One map-only pass over the groups file. */
-  def summarize(lines: DataFrame): Summary = Lines.fold(lines) { rows =>
+  /** R5 over one partition's rows, with the samples seen. */
+  def summarize(rows: Iterator[(Long, String)]): Summary = {
     var errors: ErrorSummary.Partial = Map.empty
     val samples = scala.collection.mutable.HashSet.empty[String]
     rows.foreach { case (idx, line) =>
@@ -156,7 +191,7 @@ object GroupsReader {
       samples += t(0)
     }
     Summary(errors, samples.toSet)
-  }(_ ++ _)
+  }
 }
 
 /** Reference ancestry panel: site layout, header skipped blindly
@@ -164,15 +199,72 @@ object GroupsReader {
   * last-occurrence-wins (HashMap.put overwrite, `:66-69`).
   *
   * The reference loads the whole panel into every mapper's heap via the
-  * distributed cache; here one map-only pass builds the same lookup on the
-  * driver and broadcasts it to the scans that count shared loci — the data
-  * movement of a broadcast hash join (`SURVEY.md §4.2`) without its
-  * planning and exchange jobs.
+  * distributed cache (`:27,267-270`); here one map-only pass builds the same
+  * lookup on the driver and broadcasts it to the scans that count shared
+  * loci — the data movement of a broadcast hash join (`SURVEY.md §4.2`)
+  * without its planning and exchange jobs.
+  *
+  * A panel read from a file (`Lines.read`) is looked up once per
+  * `SparkContext`: the last lookup built stays cached, keyed by the context,
+  * the qualified path, the file's length and modification time and
+  * `Version`, so every later submission against the same unchanged file
+  * skips the build. Nothing outlives the JVM.
   */
 object PanelReader {
 
   /** (chr, pos) → "REF/ALT". */
   type Lookup = Map[(String, String), String]
+
+  /** Part of the cache key: bump it whenever the lookup a file builds
+    * changes. */
+  private val Version = 1
+
+  private final case class Key(sc: SparkContext, path: String, length: Long,
+      modified: Long, version: Int)
+
+  /** The one cached lookup; guarded by `this`. */
+  private var cached: Option[(Key, Broadcast[Lookup])] = None
+
+  /** Runs `body` with the panel lookup of `lines`. A lookup of a file-backed
+    * panel comes from, or goes to, the cache and stays alive after `body`;
+    * any other is destroyed when `body` returns. */
+  def withLookup[A](lines: DataFrame)(body: Broadcast[Lookup] => A): A =
+    key(lines) match {
+      case Some(k) => body(cachedLookup(k, lines))
+      case None =>
+        val b = broadcast(lines)
+        try body(b) finally b.destroy()
+    }
+
+  /** The cache key of a panel frame still exactly as `Lines.read` returned
+    * it, when its path names one file. */
+  private def key(lines: DataFrame): Option[Key] = Lines.source(lines).flatMap { path =>
+    val sc = lines.sparkSession.sparkContext
+    val p = new Path(path)
+    val fs = p.getFileSystem(sc.hadoopConfiguration)
+    // a glob or a missing path has no status; a directory's mtime misses
+    // edits to the files under it
+    Try(fs.getFileStatus(p)).toOption.filter(_.isFile).map(st =>
+      Key(sc, fs.makeQualified(p).toString, st.getLen, st.getModificationTime, Version))
+  }
+
+  /** The cached lookup for `k`, built from `lines` on a miss. Builds run
+    * one at a time, so concurrent submissions against one panel build it
+    * once. A replaced lookup may still be read by a submission that got it
+    * earlier: it is unpersisted without blocking (its executor copies go;
+    * the driver copy serves any task that still reads it) and left to the
+    * `ContextCleaner`, which destroys it once nothing refers to it. */
+  private def cachedLookup(k: Key, lines: DataFrame): Broadcast[Lookup] = synchronized {
+    cached match {
+      case Some((`k`, b)) => b
+      case old =>
+        for ((ok, ob) <- old if !ok.sc.isStopped) ob.unpersist(false)
+        cached = None
+        val b = broadcast(lines)
+        cached = Some(k -> b)
+        b
+    }
+  }
 
   private type Indexed = Map[(String, String), (Long, String)]
 
@@ -182,8 +274,8 @@ object PanelReader {
     }
 
   /** The panel lookup, last occurrence (highest idx) winning, built in one
-    * job and broadcast; the caller destroys it when done. */
-  def broadcast(lines: DataFrame): Broadcast[Lookup] = {
+    * job and broadcast. */
+  private def broadcast(lines: DataFrame): Broadcast[Lookup] = {
     val lookup = Lines.fold[Indexed](lines) { rows =>
       val m = scala.collection.mutable.HashMap.empty[(String, String), (Long, String)]
       rows.foreach { case (idx, line) =>

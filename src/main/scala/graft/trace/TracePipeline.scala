@@ -1,9 +1,9 @@
 package graft.trace
 
 import graft.domain.{Descriptors, ErrorSummary, Errors, ValidationError}
-import graft.operators.{RangeBatch, SharedLoci}
+import graft.operators.SharedLoci
 import graft.sources._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** The TRACE workflow (`TRACEInputValidator.run` +
   * `TRACEInputCheckMapper.java:301-340`): per-VCF validation against the
@@ -32,20 +32,25 @@ object TracePipeline {
       Descriptors.studyMetaJson(individuals, totalLoci, sharedLoci, format)
   }
 
+  /** One partition's fold: of the groups file, or of a VCF with its id. */
+  private type Part = Either[GroupsReader.Summary, (String, SharedLoci.Scan)]
+
   /** Multi-file run: format dispatch (R7), per-file stats, cross-file
     * individual-count agreement (TreeSet-size check,
     * `TRACEInputValidator.java:230-233`), `sharedLoci <= 100` gate (`:235-238`).
     *
-    * ONE pass over every VCF — the reference validates every VCF inside a
-    * single map-only MapReduce job with per-file counter groups
-    * (`TRACEInputCheckMapper.java:267-269`); a file-at-a-time loop would run
-    * O(#files) Spark jobs. Shape: each partition of each file folds to its
-    * first non-`##` line (by idx), its body row count and its shared-loci
-    * count against the broadcast panel lookup; the driver merges those per
-    * file (#files rows of metadata), runs the header rules and the sample
-    * membership check on the header strings, and discards the counts of
-    * every file that errored. With the groups summary and the panel lookup,
-    * a submission costs three Spark jobs for any number of files. */
+    * ONE pass over every VCF and the groups file — the reference validates
+    * every VCF inside a single map-only MapReduce job with per-file counter
+    * groups (`TRACEInputCheckMapper.java:267-269`); a file-at-a-time loop
+    * would run O(#files) Spark jobs. Shape: each partition of each file
+    * folds to its first non-`##` line (by idx), its body row count and its
+    * shared-loci count against the broadcast panel lookup, and each
+    * partition of the groups file to its R5 findings and samples; the
+    * driver merges those per file (#files rows of metadata), runs the
+    * header rules and the sample membership check on the header strings,
+    * and discards the counts of every file that errored. A submission costs
+    * one Spark job for any number of files, plus one to build the panel
+    * lookup when it is not cached (`PanelReader.withLookup`). */
   def run(files: Seq[(String, DataFrame)], panelLines: DataFrame,
       groupsLines: Option[DataFrame], format: String = "vcf"): Result = {
 
@@ -68,17 +73,20 @@ object TracePipeline {
         Seq("Too few loci shared between study and reference panel! PCA will not be informative!"))
 
     val sc = panelLines.sparkSession.sparkContext
-    val groups = groupsLines.map(GroupsReader.summarize)
-    val groupSum = groups.fold(ErrorSummary.empty)(g => ErrorSummary.fromPartial(g.errors))
-
-    val panel = PanelReader.broadcast(panelLines)
-    val scans: Map[String, SharedLoci.Scan] =
-      try sc.union(files.map { case (id, df) =>
-          Lines.rows(df).mapPartitions(rows => Iterator.single(id ->
+    val parts = PanelReader.withLookup(panelLines) { panel =>
+      sc.union(groupsLines.toSeq.map(Lines.folds[Part](_)(rows =>
+          Left(GroupsReader.summarize(rows)))) ++
+        files.map { case (id, df) =>
+          Lines.folds[Part](df)(rows => Right(id ->
             SharedLoci.scan(rows, panel.value)(r => !VcfReader.isMeta(r._2),
               r => VcfReader.isBody(r._2))))
-        }).collect().groupMapReduce(_._1)(_._2)(_ ++ _)
-      finally panel.destroy()
+        }).collect()
+    }
+    val groups = groupsLines.map(_ => parts.collect { case Left(g) => g }
+      .foldLeft(GroupsReader.summarize(Iterator.empty))(_ ++ _))
+    val groupSum = groups.fold(ErrorSummary.empty)(g => ErrorSummary.fromPartial(g.errors))
+    val scans: Map[String, SharedLoci.Scan] =
+      parts.collect { case Right(s) => s }.groupMapReduce(_._1)(_._2)(_ ++ _)
 
     val headers: Seq[(String, Option[String])] =
       files.map { case (id, _) => id -> scans.get(id).flatMap(_.header).map(_._2) }
@@ -124,12 +132,4 @@ object TracePipeline {
 
     Result(firstErr, errs.samples, errs.counts, stats, gates)
   }
-
-  /** R25 + R24: the TRACEJobGenerator step — emit vcf2geno + study-PCA
-    * descriptor pairs for `1..nIndividuals` in `batchSize` windows. */
-  def generateJobs(spark: SparkSession, nIndividuals: Long, batchSize: Int,
-      reference: String, referencePc: String, studyVcf: String,
-      studyGeno: String, dim: Int, dimHigh: Int): DataFrame =
-    Descriptors.traceBatches(RangeBatch.batches(spark, nIndividuals, batchSize),
-      reference, referencePc, studyVcf, studyGeno, dim, dimHigh)
 }

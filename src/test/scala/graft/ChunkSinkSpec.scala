@@ -26,7 +26,7 @@ class ChunkSinkSpec extends TestBase {
     val conf = spark.sparkContext.hadoopConfiguration
     val staging = ChunkSink.staging(out.getAbsolutePath)
     val lines = Lines.of(spark, (0 until n).map(i => s"row$i"))
-    assert(ChunkSink.scan(lines, Some(staging), chunkSize)(_.size) == n)
+    assert(ChunkSink.scan(lines, Some(staging), chunkSize)(_.size).collect().sum == n)
     val count = try ChunkSink.promote(staging, out.getAbsolutePath, conf)
       finally ChunkSink.discard(staging, conf)
     assert(root.list().toSeq == (if (count == 0) Nil else Seq("chunks")),
@@ -74,7 +74,7 @@ class ChunkSinkSpec extends TestBase {
   test("scan fails loudly on a line set whose idx is not contiguous") {
     val gappy = Lines.of(spark, (0 until 10).map(i => s"row$i"))
       .where(org.apache.spark.sql.functions.col("idx") =!= 4)
-    val e = intercept[Exception](ChunkSink.scan(gappy, None, 3)(_.size))
+    val e = intercept[Exception](ChunkSink.scan(gappy, None, 3)(_.size).collect())
     assert(e.getMessage.contains("not contiguous and ascending"), e.getMessage)
   }
 }

@@ -9,6 +9,10 @@ import graft.sources._
   * rather than sampled, since the space is tiny). */
 class LaserSourcesSpec extends TestBase {
 
+  /** (idx, line) rows of a line list, as a scan's partition yields them. */
+  private def indexed(lines: Seq[String]): Iterator[(Long, String)] =
+    lines.zipWithIndex.iterator.map { case (l, i) => (i.toLong, l) }
+
   test("seq parse: tab-or-space tokenizer, loci array (R2, §1.2.1)") {
     val parsed = SeqReader.parse(Lines.of(spark, Fixtures.seqLines))
       .orderBy("idx").collect()
@@ -57,8 +61,8 @@ class LaserSourcesSpec extends TestBase {
     val broken = (0 until 5000).map(i => (i.toLong,
       if (i % 2 == 0) s"only_one_col_$i" else s"POP1 ind_$i 1 2 3 4"))
     val findings = broken.flatMap { case (i, l) =>
-      SeqReader.arity(i, SeqReader.tokens(l).length).left.toOption }
-    val scanned = SeqReader.summarize(broken.iterator, None).errors
+      SeqReader.arity(i, l.split("[\t ]", -1).length).left.toOption }
+    val scanned = SeqReader.summarize(broken.iterator).errors
     assert(scanned == reference(findings))
     assert(scanned.map { case (c, b) => c -> b.cnt } == Map(
       "SEQ_FILE_TOO_FEW_COLUMNS" -> 2500L, "SEQ_FILE_MISSING_COLUMNS" -> 2500L))
@@ -66,9 +70,8 @@ class LaserSourcesSpec extends TestBase {
   }
 
   test("seq validate: arity rules and group membership (R12, R13, R14)") {
-    val groups = GroupsReader.summarize(Lines.of(spark, Fixtures.groupsLines)).samples
-    def findings(seq: Seq[String]) = SeqReader.summarize(
-      seq.zipWithIndex.iterator.map { case (l, i) => (i.toLong, l) }, Some(groups)).findings
+    val groups = GroupsReader.summarize(indexed(Fixtures.groupsLines)).samples
+    def findings(seq: Seq[String]) = SeqReader.summarize(indexed(seq)).findings(Some(groups))
     val errs = findings(Fixtures.badSeqLines)
     assert(errs.keySet == Set("SEQ_FILE_TOO_FEW_COLUMNS", "SEQ_FILE_MISSING_COLUMNS",
       "SEQ_FILE_INCONSISTENT_COLUMNS", "SEQ_SAMPLE_NOT_IN_GROUP"))
@@ -76,6 +79,12 @@ class LaserSourcesSpec extends TestBase {
     assert(errs("SEQ_SAMPLE_NOT_IN_GROUP").samples.map(_.line) == Seq(1L, 4L))
     // a clean file yields no errors
     assert(findings(Fixtures.seqLines).isEmpty)
+    // the column scan agrees with the tokenizer, empty columns included
+    for (l <- Fixtures.seqLines ++ Fixtures.badSeqLines ++
+        Seq("", "a", "a b", " a", "a ", "a\t\tb", "a b\tc ", "\t \t")) {
+      val t = l.split("[\t ]", -1)
+      assert(SeqReader.columns(l) == (t.length, if (t.length >= 2) t(1) else null), l)
+    }
   }
 
   test("site header validation: positional, one code per column (R10)") {
@@ -90,24 +99,22 @@ class LaserSourcesSpec extends TestBase {
   }
 
   test("groups validate: exactly two columns (R5)") {
-    val g = GroupsReader.summarize(Lines.of(spark, Fixtures.badGroupsLines))
+    val g = GroupsReader.summarize(indexed(Fixtures.badGroupsLines))
     val errs = g.errors.values.flatMap(_.samples).map(e => (e.code, e.line)).toSet
     assert(errs == Set(("GROUPS_FILE_MISSING_COLUMNS", 2L), ("GROUPS_FILE_TOO_MANY_COLUMNS", 3L)))
     assert(g.samples == Set("ind_001", "ind_005", "orphan", "a"))
   }
 
   test("panel parse: last occurrence wins on duplicate chr:pos (R4)") {
-    val panel = PanelReader.broadcast(Lines.of(spark, Fixtures.slPanelLines))
-    try {
+    PanelReader.withLookup(Lines.of(spark, Fixtures.slPanelLines)) { panel =>
       assert(panel.value.get(("1", "500")).contains("T/T")) // A/C overwritten
       assert(panel.value.get(("1", "600")).contains("g/C")) // T/T overwritten
-    } finally panel.destroy()
+    }
   }
 
-  private def shared(site: Seq[String], panel: Seq[String]): SharedLoci.Scan = {
-    val p = PanelReader.broadcast(Lines.of(spark, panel))
-    try SharedLoci.site(Lines.of(spark, site), p) finally p.destroy()
-  }
+  private def shared(site: Seq[String], panel: Seq[String]): SharedLoci.Scan =
+    PanelReader.withLookup(Lines.of(spark, panel))(p =>
+      Lines.fold(Lines.of(spark, site))(SharedLoci.site(_, p.value))(_ ++ _))
 
   test("shared loci: case-insensitive, order-sensitive (R15-R17)") {
     val s = shared(Fixtures.slSiteLines, Fixtures.slPanelLines)

@@ -1,8 +1,9 @@
 package graft
 
-import graft.domain.Fixtures
+import graft.domain.{Descriptors, Fixtures}
 import graft.laser.LaserPipeline
-import graft.sources.Lines
+import graft.operators.{Par, RangeBatch}
+import graft.sources.{Lines, PanelReader}
 import graft.trace.TracePipeline
 
 /** End-to-end workflow parity (SURVEY §3): error precedence, threshold
@@ -201,7 +202,7 @@ class PipelinesSpec extends TestBase {
   }
 
   test("trace job generation: batch descriptor pairs (R25)") {
-    val jobs = TracePipeline.generateJobs(spark, nIndividuals = 250, batchSize = 100,
+    val jobs = Descriptors.traceBatches(RangeBatch.batches(spark, 250, 100),
       "HGDP", "HGDP.pc", "study.vcf.gz", "study.geno", 4, 20)
     val rows = jobs.orderBy("key").collect()
     assert(rows.length == 3) // 3 batches, each carrying a vcf2geno + study-PCA pair
@@ -211,28 +212,125 @@ class PipelinesSpec extends TestBase {
     assert(last.getAs[String]("study_pca_json").contains("\"batch\":\"00002\""))
   }
 
-  test("intake job count: LASER runFiles <= 5 jobs, TRACE run <= 4 (one map-only pass per file)") {
+  test("intake job count: LASER runFiles cold <= 2 jobs, warm <= 1; emitJobs 1; TRACE run cold <= 2, warm <= 1") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-intake-jobs").toFile
     val seq = gzWrite(tmp, "study.seq.gz", Fixtures.seqLines)
     val site = gzWrite(tmp, "study.site.gz", Fixtures.siteLines)
     val panel = gzWrite(tmp, "panel.site.gz", Fixtures.slPanelLines)
+    // a second file, so the first TRACE run builds its lookup
+    val tracePanel = gzWrite(tmp, "trace-panel.site.gz", Fixtures.slPanelLines)
     val groups = gzWrite(tmp, "groups.txt.gz", Fixtures.groupsLines)
     val vcf2 = Fixtures.vcfLines.map(_.replace("ind_00", "ind_10"))
     val vcfs = Seq(gzWrite(tmp, "a.vcf.gz", Fixtures.vcfLines), gzWrite(tmp, "b.vcf.gz", vcf2))
     val groups2 = gzWrite(tmp, "groups2.txt.gz",
       Fixtures.groupsLines ++ Seq("ind_101\tCEU", "ind_102\tYRI"))
-    val chunks = new java.io.File(tmp, "chunks").getAbsolutePath
 
-    val (laser, laserJobs, _) = observed("intake-laser")(LaserPipeline.runFiles(spark,
-      seq, site, panel, Some(groups), Some(chunks), chunkSize = 2))
-    assert(laser.firstError.isEmpty && laser.chunks == 2)
-    assert(laserJobs <= 5, s"LaserPipeline.runFiles ran $laserJobs Spark jobs")
+    def laser(run: String) = observed(s"intake-laser-$run")(LaserPipeline.runFiles(spark,
+      seq, site, panel, Some(groups), Some(new java.io.File(tmp, s"chunks-$run").getPath),
+      chunkSize = 2))
+    val (cold, coldJobs, _) = laser("cold")
+    val (warm, warmJobs, _) = laser("warm")
+    assert(cold.firstError.isEmpty && cold.chunks == 2 && warm == cold)
+    assert(coldJobs <= 2, s"cold LaserPipeline.runFiles ran $coldJobs Spark jobs")
+    assert(warmJobs <= 1, s"warm LaserPipeline.runFiles ran $warmJobs Spark jobs")
+    // the gates want > 100 shared loci; the descriptors only a clean result
+    val (emitted, emitJobs, _) = observed("intake-emit")(LaserPipeline.emitJobs(spark,
+      warm.copy(sharedLoci = 101), new java.io.File(tmp, "chunks-warm").getPath, site,
+      "HGDP", "HGDP.pc", 4, 20, new java.io.File(tmp, "ref").getPath,
+      new java.io.File(tmp, "study").getPath))
+    assert(emitted && emitJobs == 1, s"LaserPipeline.emitJobs ran $emitJobs Spark jobs")
+    def batches(dir: String) = new java.io.File(tmp, dir).list().filter(_.endsWith(".batch")).toSet
+    assert(batches("ref") == Set("reference_pca_job.batch"))
+    assert(batches("study") == Set("0.batch", "1.batch"))
 
-    val (trace, traceJobs, _) = observed("intake-trace")(TracePipeline.run(
+    def trace(run: String) = observed(s"intake-trace-$run")(TracePipeline.run(
       vcfs.map(f => new java.io.File(f).getName -> Lines.read(spark, f)),
-      Lines.read(spark, panel), Some(Lines.read(spark, groups2))))
-    assert(trace.firstError.isEmpty && trace.perFile.map(_.totalLoci) == Seq(2L, 2L))
-    assert(traceJobs <= 4, s"TracePipeline.run ran $traceJobs Spark jobs")
+      Lines.read(spark, tracePanel), Some(Lines.read(spark, groups2))))
+    val (traceCold, traceColdJobs, _) = trace("cold")
+    val (traceWarm, traceWarmJobs, _) = trace("warm")
+    assert(traceCold.firstError.isEmpty && traceCold.perFile.map(_.totalLoci) == Seq(2L, 2L))
+    assert(traceWarm == traceCold)
+    assert(traceColdJobs <= 2, s"cold TracePipeline.run ran $traceColdJobs Spark jobs")
+    assert(traceWarmJobs <= 1, s"warm TracePipeline.run ran $traceWarmJobs Spark jobs")
+  }
+
+  test("panel lookup cache: a rewritten panel, a second path and an inline panel each get their own lookup") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-panel-cache").toFile
+    val vcf = gzWrite(tmp, "a.vcf.gz", Fixtures.vcfLines)
+    // plain text, so an equal-length rewrite keeps the file length
+    def write(name: String, lines: Seq[String]): String = {
+      val f = new java.io.File(tmp, name)
+      java.nio.file.Files.writeString(f.toPath, lines.mkString("", "\n", "\n"))
+      f.getAbsolutePath
+    }
+    val header = "CHR\tPOS\tID\tREF\tALT"
+    val first = "1\t10583\tx\tG\tA"     // the fixture's first body locus
+    val second = "22\t16050075\tx\tA\tG" // and its second
+    def lookupId(panel: String): Long = PanelReader.withLookup(Lines.read(spark, panel))(_.id)
+    def shared(panel: org.apache.spark.sql.DataFrame): Long =
+      TracePipeline.run(Seq("a" -> Lines.read(spark, vcf)), panel, None).sharedLoci
+    // each file-backed submission counts what an inline panel of the same
+    // lines counts
+    def check(path: String, lines: Seq[String], expected: Long): Long = {
+      assert(shared(Lines.of(spark, lines)) == expected)
+      assert(shared(Lines.read(spark, path)) == expected, s"$path: ${lines.mkString(" | ")}")
+      lookupId(path)
+    }
+
+    val p1 = write("p1.site", Seq(header, first))
+    val id1 = check(p1, Seq(header, first), 1L)
+    assert(lookupId(p1) == id1, "an unchanged panel reuses its lookup")
+
+    // same path, new contents and length
+    write("p1.site", Seq(header, first, second))
+    val id2 = check(p1, Seq(header, first, second), 2L)
+    assert(id2 != id1)
+
+    // same path and length, one allele changed: the explicit mtime tells
+    val f1 = new java.io.File(p1)
+    val (len, mtime) = (f1.length, f1.lastModified)
+    val swapped = Seq(header, first, second.replace("A\tG", "G\tA"))
+    write("p1.site", swapped)
+    assert(f1.length == len, "the case needs an equal-length rewrite")
+    assert(f1.setLastModified(mtime + 10000L))
+    val id3 = check(p1, swapped, 1L)
+    assert(id3 != id2)
+
+    // a second path
+    val p2 = write("p2.site", Seq(header, second))
+    val id4 = check(p2, Seq(header, second), 1L)
+    assert(id4 != id3)
+
+    // an inline panel is built per call, destroyed after it, never cached
+    val inline = (1 to 2).map(_ =>
+      PanelReader.withLookup(Lines.of(spark, Seq(header, second)))(identity))
+    assert(inline.map(_.id).distinct.size == 2 && !inline.map(_.id).contains(id4))
+    inline.foreach(b => intercept[org.apache.spark.SparkException](b.value))
+    assert(lookupId(p2) == id4, "an inline panel leaves the cached lookup in place")
+    // a frame derived from a read is not the file's contents any more
+    val firstOnly = Lines.read(spark, p1).where(org.apache.spark.sql.functions.col("idx") < 2)
+    assert(shared(firstOnly) == 1L && lookupId(p2) == id4)
+  }
+
+  test("panel lookup cache: concurrent submissions against two panels match their serial results") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-panel-race").toFile
+    val header = "CHR\tPOS\tID\tREF\tALT"
+    val panels = Seq(
+      gzWrite(tmp, "p1.site.gz", Seq(header, "1\t10583\tx\tG\tA")),
+      gzWrite(tmp, "p2.site.gz", Seq(header, "1\t10583\tx\tG\tA", "22\t16050075\tx\tA\tG")))
+    val vcfs = (0 until 8).map(i => gzWrite(tmp, s"v$i.vcf.gz", Fixtures.vcfLines))
+    def submit(panel: String): TracePipeline.Result = TracePipeline.run(
+      vcfs.map(f => new java.io.File(f).getName -> Lines.read(spark, f)),
+      Lines.read(spark, panel), None)
+    val serial = panels.map(submit)
+    assert(serial.map(_.sharedLoci) == Seq(8L, 16L))
+    // every thread asks for the panel the previous one replaced, so the one
+    // cached lookup changes while submissions that got the old one still run
+    val order = Seq(0, 1, 0, 1)
+    (1 to 6).foreach { round =>
+      val got = Par.run(order.map(i => () => submit(panels(i))))
+      assert(got == order.map(serial), s"round $round")
+    }
   }
 
   test("intake posts no SQL execution that runs no job (warm LASER and TRACE submissions)") {
